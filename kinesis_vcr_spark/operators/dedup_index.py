@@ -71,13 +71,6 @@ _META_SCHEMA = (
 # near_dup_against_bucketed_index) and appends must match it
 _BQ_META_SCHEMA = _META_SCHEMA + ", n_buckets int"
 
-#: Fresh builds write the shingles artifact first and derive band rows
-#: from the written files (one shingle projection per build instead of
-#: two). Module-level seam so the volatile-rig A/B protocol can flip
-#: the build shape per rep in one session.
-_WRITE_FIRST = True
-
-
 def _rm_recursive(spark: SparkSession, path: str) -> None:
     """Delete a storage path through the Hadoop FileSystem API (works
     for any scheme the session can write, same pattern as
@@ -188,12 +181,11 @@ def build_near_dup_index(
     # persist; the signature pipeline is identical over identical rows).
     # Only for OVERWRITE writes: an unlabeled append accumulates into
     # ``ingest=_appends``, where a read-back would see prior appends'
-    # rows and double-write their bands. ``_WRITE_FIRST`` is the
-    # module-level A/B seam (volatile-rig protocol).
+    # rows and double-write their bands.
     with_sh = shingle_frame(
         df, id_col, text_col, shingle_size, char_ngrams
     ).withColumnRenamed(id_col, "id")
-    write_first = _WRITE_FIRST and mode == "overwrite"
+    write_first = mode == "overwrite"
     if write_first:
         with_sh.write.mode(mode).parquet(f"{index_path}/shingles/{scope}")
         sh_src = spark.read.parquet(
@@ -375,13 +367,6 @@ def build_near_dup_index_bucketed(
     # Appends keep the direct lineage — reading the table back after an
     # append would see the whole accumulated corpus and double-write
     # every prior batch's bands.
-    # NOTE (ADVICE r14): unlike the parquet path, the shingles table is
-    # written before the bands UNCONDITIONALLY here (saveAsTable order
-    # is fixed by this block), so flipping ``_WRITE_FIRST=False`` on
-    # the bucketed path only switches the signature SOURCE back to the
-    # lazy lineage (shingle projection runs twice) — it does not
-    # reorder the writes. The seam's A/B compares read-back vs
-    # recompute on both paths; write ORDER is parquet-path-only.
     with _one_file_per_bucket(spark, n_buckets):
         (
             with_sh.repartition(n_buckets, "id")
@@ -393,7 +378,7 @@ def build_near_dup_index_bucketed(
         )
         sh_src = (
             spark.table(f"{table_prefix}_shingles").select("id", "shingles")
-            if not append and _WRITE_FIRST
+            if not append
             else with_sh
         )
         sigs = minhash_signature_agg(sh_src, "id", num_hashes)

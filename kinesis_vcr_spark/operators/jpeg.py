@@ -382,8 +382,7 @@ def jpeg_decode(payload: bytes) -> tuple[int, int, np.ndarray]:
             continue
         if pos + 4 > len(payload):
             # struct.error here would escape the ValueError-catching
-            # malformed-media quarantine paths (sample_avi_frames,
-            # decode-and-skip loops)
+            # malformed-media quarantine paths (decode-and-skip loops)
             raise ValueError("JPEG segment truncated")
         seglen = struct.unpack_from(">H", payload, pos + 2)[0]
         seg = payload[pos + 4 : pos + 2 + seglen]

@@ -517,12 +517,9 @@ def decode_audio(payload: bytes) -> dict[str, Any]:
 
 def real_decode(kind: str, payload: bytes) -> dict[str, Any]:
     """Decoder dispatching to the REAL codecs above by media kind.
-    MJPEG-in-AVI video decodes for real via
-    :mod:`kinesis_vcr_spark.operators.avi` (RIFF demux + the in-repo
-    JPEG decoder per frame; ``sample_avi_frames`` is the real-codec
-    instantiation of :func:`sample_frames`); every other video codec
-    stays the ffmpeg slot — use ``fake_decode`` or the fixed-frame
-    model for plumbing tests."""
+    Video decode stays the ffmpeg slot (MP4 and WebM raise with their
+    parsed metadata) — use ``fake_decode`` or the fixed-frame model for
+    plumbing tests."""
     if kind == "image":
         return decode_image(payload)
     if kind == "audio":

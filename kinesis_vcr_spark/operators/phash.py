@@ -250,13 +250,11 @@ def near_dup_pairs_phash(
 
 
 # ---------------------------------------------------------------------------
-# persisted perceptual-hash index (incremental / streaming image dedup)
+# persisted perceptual-hash index (incremental image dedup)
 # ---------------------------------------------------------------------------
 #
-# The daily-ingest member of the E95 family, completing the triple
-# every retrieval family in this engine carries (batch operator +
-# persisted index + streaming loop — near-dup, ANN, exact-span,
-# search). A crawl ingests a daily batch of images; re-hashing the
+# The daily-ingest member of the E95 family (batch operator + persisted
+# index, as for near-dup, ANN, exact-span and search). A crawl ingests a daily batch of images; re-hashing the
 # accumulated corpus to find "which new images are perceptual dups of
 # anything seen" is O(corpus) decode work for an O(batch) question.
 # Instead the corpus's pigeonhole BLOCK rows are persisted once:
@@ -435,13 +433,3 @@ def phash_probe_index(
         )
         .where(F.col("hamming") <= max_hamming)
     )
-
-
-def compact_phash_index(spark, index_path: str) -> None:
-    """Collapse per-ingest block scopes into one ``ingest=_compacted``
-    scope, preserving the ``block_idx`` physical partitioning — probe
-    results identical before/after (the content-exact
-    compact_scoped_state contract); drained/paused streams only."""
-    from kinesis_vcr_spark.operators.compaction import compact_scoped_state
-
-    compact_scoped_state(spark, f"{index_path}/blocks", ("block_idx",))

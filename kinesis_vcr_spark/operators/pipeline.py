@@ -32,19 +32,6 @@ STATUS_EXACT = "dropped_exact"
 STATUS_NEAR = "dropped_near_dup"
 STATUS_QUALITY = "dropped_quality"
 
-#: Whether the lsh_components branch also materializes the exact-dedup
-#: survivor set. The r12/r14 PERSIST A/Bs measured no win there (fewer
-#: lineage consumers than the verified branch), but the seam's switch
-#: to localCheckpoint changed the calculus — plan truncation was never
-#: part of that adjudication, and with it the branch's consumers (band
-#: pipeline, singleton join, status joins) stop re-analyzing the
-#: extract/URL-window tree per action: llm_prep_spans_lsh measured
-#: 14.96–17.3 s lazy vs 11.95–14.25 s materialized (4/4 adjacent
-#: pairs, ~17%, calibration 2.36→1.86 across the run, parity-checked).
-#: Module-level seam for the A/B protocol.
-_MATERIALIZE_LSH = True
-
-
 def _materialize_survivors(
     df: DataFrame, checkpoint_dir: str | None = None
 ) -> DataFrame:
@@ -314,20 +301,17 @@ def llm_prep_corpus(
     # branch — measured 5.2 s → 30 s median at sf0.1 from the
     # multiplicative recompute alone.
     exact_kept = dedup_exact(s1, ["__text"], id_col)
-    if near_dup == "verified":
-        # Materialize the survivor set for the verified branch's many
-        # lineage consumers (breaker count, band join, verify sides,
-        # s2/labeled status joins) — measured 2.06× at sf1 (r13,
-        # BASELINE addendum 2; caller-owned lifetime, see below). The
-        # lsh_components branch deliberately does NOT materialize:
-        # r14 A/B (4 sessions, sf0.1 + sf1, volatile-rig protocol)
-        # found no win there — it has fewer lineage consumers (no
-        # breaker, no verify join) and the persist cost offsets the
-        # saved extract passes.
-        exact_kept = _materialize_survivors(exact_kept, checkpoint_dir)
-        if cache_registry is not None:
-            cache_registry.append(exact_kept)
-    elif near_dup == "lsh_components" and _MATERIALIZE_LSH:
+    if near_dup in ("verified", "lsh_components"):
+        # Materialize the survivor set for its many lineage consumers.
+        # verified: breaker count, band join, verify sides, s2/labeled
+        # status joins — measured 2.06× at sf1 (r13, BASELINE addendum
+        # 2; caller-owned lifetime, see below). lsh_components: the
+        # r12/r14 PERSIST A/Bs found no win (fewer consumers), but under
+        # the localCheckpoint seam the win is plan TRUNCATION — the band
+        # pipeline, singleton join and status joins stop re-analyzing
+        # the extract/URL-window tree per action: llm_prep_spans_lsh
+        # 14.96–17.3 s lazy vs 11.95–14.25 s materialized (r14, 4/4
+        # adjacent pairs, parity-checked).
         exact_kept = _materialize_survivors(exact_kept, checkpoint_dir)
         if cache_registry is not None:
             cache_registry.append(exact_kept)
@@ -380,12 +364,7 @@ def llm_prep_corpus(
     elif near_dup == "lsh_components":
         from kinesis_vcr_spark.operators.dedup import lsh_band_components
 
-        # Materialized ABOVE through the same localCheckpoint seam as
-        # the verified branch (gated on _MATERIALIZE_LSH). History: the
-        # r12/r14 PERSIST A/Bs measured no win here and the branch
-        # stayed lazy; the r14 session-3 switch to localCheckpoint
-        # flipped the verdict (see _MATERIALIZE_LSH) because the win is
-        # plan TRUNCATION, not data reuse.
+        # exact_kept was materialized above, as in the verified branch.
         comp = lsh_band_components(
             exact_kept, id_col, "__text",
             shingle_size=shingle_size, checkpoint_dir=checkpoint_dir,

@@ -341,7 +341,10 @@ def _full_starts(votes: DataFrame, m: int) -> DataFrame:
     each occurrence of the term in the phrase is a distinct offset),
     so the plain count equals the distinct count and the
     distinct-aggregation's extra expand + exchange disappears from
-    both the batch operator and the index probe."""
+    both the batch operator and the index probe. Uniqueness needs each
+    token row ``(doc_id, p, term)`` once: true of a tokenized frame,
+    and made true in :func:`phrase_probe_index`, whose positions may
+    hold a document under two ingest scopes."""
     return (
         votes.groupBy("doc_id", "s")
         .agg(F.count(F.lit(1)).alias("__n"))
@@ -402,7 +405,11 @@ def phrase_probe_index(
     )
     if exclude_ingest is not None:
         toks = toks.where(F.col("ingest") != exclude_ingest)
-    votes = _phrase_votes(toks.select("doc_id", "p", "term"), phrase)
+    # distinct: a document appended under two ingest labels would
+    # otherwise vote twice per offset and miss the count == m test
+    votes = _phrase_votes(
+        toks.select("doc_id", "p", "term").distinct(), phrase
+    )
     starts = _full_starts(votes, len(phrase))
     return starts.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_occurrences")

@@ -35,16 +35,10 @@ Spark shape (all JVM, zero Python, no pair join anywhere):
    equality of grams and results stay bit-identical to raw-gram
    keying — measured at sf100 this halves the dominant exchange:
    40-char grams are 40+ bytes per position where the digest is 16);
-2. ``groupBy(digest).count`` → grams occurring ≥ 2 times (map-side
-   partial counts absorb boilerplate-gram skew — and column pruning
-   means this exchange carries the digest alone, no positions; an
-   equi-join back tags positions — deliberately NOT a
-   count-over-window, which would buffer each gram's whole partition
-   in one task. The dup set is persisted, counted, and BROADCAST
-   under ``DUP_BROADCAST_MAX`` so the position table streams straight
-   off the scan with no exchange — AQE alone won't do it, its 10 MB
-   threshold is crossed by ~1M dup digests — with a shuffled hash
-   join as the over-gate fallback);
+2. ``count(*) over (partition by digest) >= 2`` tags the positions
+   of duplicated grams in one exchange of the position rows — the gram
+   explode runs once, nothing is persisted or broadcast (see
+   :func:`duplicated_spans` for the measured trade);
 3. per-doc gaps-and-islands: running max of span ends flags island
    starts, a running sum numbers them, one groupBy emits
    ``(span_start, span_end)`` — the classic SQL idiom, identical in
@@ -78,45 +72,14 @@ from pyspark.sql.types import BinaryType
 #: while staying far above chance 30-gram collisions in real text.
 DEFAULT_MIN_SPAN = 30
 
-#: broadcast the dup-gram set into the position-tagging join only while
-#: it holds at most this many digests (the same bounded-broadcast
-#: discipline as kcore's BROADCAST_REMOVED_MAX): under the gate the
-#: position table streams straight off the parquet scan with NO
-#: exchange — measured at sf10 this removes ~60% of the query's
-#: shuffled bytes (6.3 GB → 2.5 GB). Over the gate (a truly
-#: dup-saturated corpus) the join falls back to a plain shuffled hash
-#: join — correct and linear, but it ships EVERY position row (28 B
-#: each), which is the disk bill the broadcast exists to avoid: at
-#: sf100 the fallback's ~35 GB position exchange on top of the ~28 GB
-#: digest-agg exchange is exactly what overran a 55 GB spill budget
-#: when this gate sat at 10 M and the measured sf100 dup set came in
-#: at 10.82 M. Sizing: 24 M × 16 B ≈ 384 MB serialized, ~3-4× that as
-#: the in-heap build map — needs ≥4 GB executors, the repo's working
-#: floor; the memory cost is per-executor and corpus-independent,
-#: while the fallback's cost grows with the corpus, so the gate sits
-#: as high as the executor floor allows.
-#: The gate needs the dup set counted, so it is persisted and the
-#: count doubles as its materialization; the caller owns the cache
-#: lifecycle (bench clears cache between samples — the same documented
-#: contract as the spans persist in queries/dedup.py).
+#: :func:`span_probe_index` broadcasts the batch's grams and its dup set
+#: only while the batch holds at most this many positions (the same
+#: bounded-broadcast discipline as kcore's BROADCAST_REMOVED_MAX); over
+#: the gate both joins fall back to shuffled joins instead of OOMing on
+#: an unbounded broadcast. Sizing: 24 M × 16 B ≈ 384 MB serialized,
+#: ~3-4× that as the in-heap build map — needs ≥4 GB executors, the
+#: repo's working floor.
 DUP_BROADCAST_MAX = 24_000_000
-
-# bounded-liveness cache tracking for the dup-gram persist (ADVICE
-# r09): each duplicated_spans call evicts the previous call's cached
-# dup set — see kinesis_vcr_spark/cacheutil.py for the contract.
-_CACHE_SCOPE = "spandedup"
-
-
-def _persist_tracked(df: DataFrame) -> DataFrame:
-    from kinesis_vcr_spark.cacheutil import persist_tracked
-
-    return persist_tracked(_CACHE_SCOPE, df)
-
-
-def _evict_tracked() -> None:
-    from kinesis_vcr_spark.cacheutil import evict_tracked
-
-    evict_tracked(_CACHE_SCOPE)
 
 
 def _require_binary_grams(stored: DataFrame, index_path: str) -> None:
@@ -165,28 +128,6 @@ def _gram_positions(
     )
 
 
-#: How ``duplicated_spans`` tags duplicated positions (r15 A/B seam).
-#:
-#: ``True`` (one-pass window): the position rows are exchanged ONCE on
-#: the gram digest and the dup test is ``count(*) over (partition by
-#: gram) >= 2`` — the gram explode (posexplode + md5 per position, the
-#: batch operator's CPU-heavy part) runs exactly once, and the agg →
-#: persist → gate-count → broadcast machinery disappears (two fewer
-#: jobs, no Θ(dup-grams) executor-memory broadcast). Shuffle bytes: the
-#: one exchange carries (id, p, digest) ≈ 28 B/position, vs the old
-#: shape's digest-agg exchange at ≈ 24 B/row TIMES mostly-distinct
-#: grams (high-entropy text barely combines map-side) — measured at
-#: sf100 those were 35 GB vs 28 GB, i.e. ~1.25× the shuffle for half
-#: the gram-compute CPU and no broadcast build. Skew: a viral gram's
-#: positions land in one window group (spillable WindowExec buffer);
-#: the old broadcast shape never moved them — the documented trade.
-#:
-#: ``False`` (r14 shape): explode twice, digest-only aggregation
-#: exchange, persisted + counted dup set broadcast under
-#: :data:`DUP_BROADCAST_MAX` into the position-tagging join.
-_ONE_PASS_WINDOW = True
-
-
 def duplicated_spans(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -197,37 +138,26 @@ def duplicated_spans(
     ``(id_col, span_start, span_end)``, 1-based inclusive character
     ranges — exactly the union of all substrings of length ≥
     ``min_len`` occurring more than once in the corpus (see module
-    docstring for the equivalence proof)."""
-    _evict_tracked()
+    docstring for the equivalence proof).
+
+    The position rows are exchanged ONCE on the gram digest and the dup
+    test is ``count(*) over (partition by gram) >= 2``: the gram explode
+    (posexplode + md5 per position, this operator's CPU-heavy part) runs
+    exactly once, with no persisted dup set and no broadcast build.
+    Shuffle bytes: the one exchange carries (id, p, digest) ≈ 28
+    B/position — measured at sf100 ~1.25× the exchange of a digest-only
+    aggregation joined back by broadcast, for half that shape's
+    gram-compute CPU (r15). Skew: a viral gram's positions land in one
+    window group, a spillable WindowExec buffer (dup-saturated case
+    pinned in tests/test_spandedup.py)."""
     grams = _gram_positions(df, id_col, text_col, min_len)
-    if _ONE_PASS_WINDOW:
-        w = Window.partitionBy("gram")
-        covered = (
-            grams.withColumn("__n", F.count(F.lit(1)).over(w))
-            .where(F.col("__n") >= 2)
-            .select(id_col, "p")
-        )
-        return _merge_covered_to_spans(covered, id_col, min_len)
-    dup_grams = _persist_tracked(
-        grams.groupBy("gram")
-        .agg(F.count(F.lit(1)).alias("__n"))
+    w = Window.partitionBy("gram")
+    covered = (
+        grams.withColumn("__n", F.count(F.lit(1)).over(w))
         .where(F.col("__n") >= 2)
-        .select("gram")
+        .select(id_col, "p")
     )
-    covered = grams.join(
-        _maybe_broadcast(dup_grams), "gram"
-    ).select(id_col, "p")
     return _merge_covered_to_spans(covered, id_col, min_len)
-
-
-def _maybe_broadcast(digests: DataFrame) -> DataFrame:
-    """Broadcast a (persisted) digest set when it is under
-    :data:`DUP_BROADCAST_MAX` — the count materializes the cache, so
-    the producing aggregation runs exactly once either way. Used for
-    both the dup set and the probe batch's gram set; see the
-    constant's comment for the measured effect and the fallback."""
-    n = digests.count()
-    return F.broadcast(digests) if n <= DUP_BROADCAST_MAX else digests
 
 
 def _merge_covered_to_spans(
@@ -505,9 +435,9 @@ def span_probe_index(
       the layout comment above for why a day-sized batch mathematically
       cannot prune) — filtered by a broadcast semi-join on the batch's
       raw position grams, then aggregated to batch-sized dup rows;
-    - unlike :func:`duplicated_spans`, the position-tagging join needs
-      NO corpus-gated machinery: the dup set is bounded by the BATCH's
-      digests, so it broadcasts under the same position-count gate.
+    - the dup set is bounded by the BATCH's digests, so the
+      position-tagging join broadcasts it under the same
+      position-count gate.
       Nothing is persisted and no distinct is computed — the fastest
       measured variant at sf0.1-sf1 (BASELINE r10 addendum).
     """

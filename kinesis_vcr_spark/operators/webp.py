@@ -759,8 +759,8 @@ def still_webp(stream: bytes, fourcc: bytes = b"VP8L") -> bytes:
 
 def sample_webp_frames(media, every_n: int = 4):
     """REAL frame sampling over animated-WebP payloads: same schema and
-    ``mapInPandas`` shape as multimodal.sample_frames and
-    avi.sample_avi_frames (media_id, frame_idx, frame, frame_bytes),
+    ``mapInPandas`` shape as multimodal.sample_frames
+    (media_id, frame_idx, frame, frame_bytes),
     each output ``frame`` a standalone still-WebP file decodable
     downstream by ``webp_decode``. Narrow 1→N fan-out, no shuffle;
     non-WebP / frameless payloads yield no rows (quarantine upstream

@@ -143,6 +143,11 @@ def kinesis_partition_writer(
     ProvisionedThroughputExceeded storms. ``bucket_factory`` overrides
     bucket construction (tests inject a virtual clock); it is invoked
     on the executor, once per partition.
+
+    Returns the partition's undelivered record count: give-ups after
+    the retry budget plus oversize records (over ``max_bytes``), which
+    are dropped with a warning as in the reference and so must not be
+    reported as delivered.
     """
 
     def write_partition(rows) -> int:
@@ -156,7 +161,15 @@ def kinesis_partition_writer(
             bucket = TokenBucket(rate_limit_bytes_per_s)
         payloads = (row["data"] for row in rows)
         failed = 0
-        for batch in iter_batches(payloads, max_count, max_bytes):
+
+        def drop(payload: bytes) -> None:
+            nonlocal failed
+            failed += 1
+            logger.warning(
+                "dropping oversize record: %d bytes > max %d", len(payload), max_bytes
+            )
+
+        for batch in iter_batches(payloads, max_count, max_bytes, on_drop=drop):
             entries = make_entries(batch)
             if bucket is not None:
                 # budget data + partition-key bytes (what AWS counts);

@@ -1,7 +1,7 @@
 """Streaming seasonal anomaly detection — the E113 seasonal med/MAD
 detector (operators/seasonal.py) as a continuously-ingesting stream.
 
-Per micro-batch (the streaming/noveltystream.py loop shape): reduce
+Per micro-batch (the streaming twins' loop shape): reduce
 the batch to per-(key, day) EXACT-DECIMAL delta sums, append them as
 an ingest-scoped state partition, merge the accumulated deltas into
 the current daily table, score it with the batch operator's own
@@ -11,13 +11,12 @@ table's mergeable sufficient statistic — O(keys × days) regardless of
 event volume, so re-scoring per batch is driver-cheap even when the
 ingested stream is not.
 
-Ordering contract — WEAKER than the novelty stream's: decimal sums
-are commutative and associative, so batches may arrive in ANY order
-(late data for an old day simply merges into that day's total and the
-next snapshot re-scores it). Contrast streaming/noveltystream.py,
-whose first-seen semantics force monotone ingest ids; the seasonal
-twin has no such guard because it needs none — pinned by the
-out-of-order test.
+Ordering contract: decimal sums are commutative and associative, so
+batches may arrive in ANY order (late data for an old day simply
+merges into that day's total and the next snapshot re-scores it). A
+first-seen stream would need monotone ingest ids; the seasonal twin
+has no such guard because it needs none — pinned by the out-of-order
+test.
 
 Exactness contract (tests/test_seasonalstream.py): after the stream
 drains, the LATEST snapshot equals ``seasonal_scores`` over the union

@@ -1,7 +1,5 @@
-"""Persisted perceptual-hash index + streaming image dedup
-(operators/phash.py index half, streaming/phashstream.py): probe ==
-batch operator restricted to the batch, layout guard, crash-replay
-idempotence, compaction parity, drained-stream union parity."""
+"""Persisted perceptual-hash index (operators/phash.py index half):
+probe == batch operator restricted to the batch, layout guard."""
 
 from __future__ import annotations
 
@@ -11,16 +9,9 @@ from pyspark.sql import functions as F
 from kinesis_vcr_spark.operators.dedup import near_dup_pairs_hash64
 from kinesis_vcr_spark.operators.phash import (
     append_phash_index,
-    compact_phash_index,
     fake_pixels,
     perceptual_hashes,
     phash_probe_index,
-)
-from kinesis_vcr_spark.streaming.phashstream import (
-    apply_phash_batch,
-    compact_phash_state,
-    read_phash_progress,
-    streaming_phash_dedup,
 )
 from kinesis_vcr_spark.tables import load_table
 
@@ -88,92 +79,3 @@ def test_layout_guard_and_missing_index(spark, tmp_path):
         phash_probe_index(
             _media(docs), idx, pixel_fn=fake_pixels, max_hamming=4
         )
-
-
-def test_streaming_drain_union_parity_and_replay(spark, sf_dir, tmp_path):
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "source", "lang", "text"
-    )
-    src = str(tmp_path / "src")
-    for i in range(3):
-        docs.where(F.pmod("doc_id", F.lit(3)) == i).coalesce(1).write.parquet(
-            f"{src}/f{i}.parquet"
-        )
-    state = str(tmp_path / "state")
-    ckpt = str(tmp_path / "ckpt")
-    pairs_path = str(tmp_path / "pairs")
-    stream = (
-        spark.readStream.schema(
-            "doc_id long, source string, lang string, text string"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src + "/*")
-    )
-    media = _media(stream)
-    q = streaming_phash_dedup(
-        media, state, ckpt, pairs_path, pixel_fn=fake_pixels
-    )
-    q.awaitTermination(300)
-
-    emitted = _pairs(spark.read.parquet(pairs_path).drop("ingest"))
-    hashes = perceptual_hashes(_media(docs), fake_pixels)
-    expected = _pairs(near_dup_pairs_hash64(hashes, "media_id", "phash", 3))
-    assert expected, "fixture degenerated: no corpus pairs"
-    assert emitted == expected
-
-    progress = read_phash_progress(state, spark)
-    assert progress["media_indexed"] == docs.count()
-    assert progress["pairs_emitted"] == spark.read.parquet(
-        pairs_path
-    ).count()
-
-    # crash replay: re-apply the LAST batch (progress already bumped →
-    # no-op) and a forced re-run with the watermark rolled back (scope
-    # overwrite → identical pair rows)
-    last = docs.where(F.pmod("doc_id", F.lit(3)) == 2)
-    before = _pairs(spark.read.parquet(pairs_path).drop("ingest"))
-    apply_phash_batch(
-        _media(last), 2, state, pairs_path, pixel_fn=fake_pixels
-    )
-    assert _pairs(spark.read.parquet(pairs_path).drop("ingest")) == before
-
-    # compaction parity: pair rows and a later probe unchanged
-    probe_docs = docs.limit(20)
-    p_before = _pairs(
-        phash_probe_index(_media(probe_docs), f"{state}/index",
-                          pixel_fn=fake_pixels)
-    )
-    compact_phash_state(spark, state, pairs_path)
-    assert _pairs(spark.read.parquet(pairs_path).drop("ingest")) == before
-    p_after = _pairs(
-        phash_probe_index(_media(probe_docs), f"{state}/index",
-                          pixel_fn=fake_pixels)
-    )
-    assert p_after == p_before
-
-
-def test_compact_preserves_block_partitioning(spark, tmp_path):
-    import os
-
-    docs = spark.createDataFrame(
-        [(i, "s", "en", f"payload body {i % 2}") for i in range(6)],
-        "doc_id long, source string, lang string, text string",
-    )
-    idx = str(tmp_path / "index")
-    append_phash_index(
-        _media(docs.where("doc_id < 3")), idx, pixel_fn=fake_pixels,
-        ingest_label="b0",
-    )
-    append_phash_index(
-        _media(docs.where("doc_id >= 3")), idx, pixel_fn=fake_pixels,
-        ingest_label="b1",
-    )
-    compact_phash_index(spark, idx)
-    scopes = os.listdir(f"{idx}/blocks")
-    assert [s for s in scopes if s.startswith("ingest=")] == [
-        "ingest=_compacted"
-    ]
-    inner = os.listdir(f"{idx}/blocks/ingest=_compacted")
-    assert sorted(d for d in inner if d.startswith("block_idx=")) == [
-        f"block_idx={b}" for b in range(4)
-    ]

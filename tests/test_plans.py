@@ -389,21 +389,12 @@ def test_chi2_no_python_cells_tiny(spark, sf_dir):
 
 
 def test_span_dedup_positions_never_shuffled_under_gate(spark):
-    """Span-dedup plan pins, both seam postures (r15).
-
-    Default one-pass window shape: NO join anywhere — the gram explode
-    runs once into a single hashpartitioning(gram) exchange, the dup
-    test is a window count on top of it, and the only other hash
-    exchange is the per-doc islands window. Exactly two hash exchanges,
-    zero Python, zero cached relations.
-
-    Legacy broadcast shape (seam False — the r09 posture kept for
-    dup-saturated corpora): with the dup set under DUP_BROADCAST_MAX
-    the position-tagging join is a BroadcastHashJoin — the position
-    table streams off the scan and never shuffles (the
-    6.3-GB-at-sf10 / ENOSPC-at-sf100 shape the gate exists to prevent,
-    BASELINE round-9 addendum 2)."""
-    from kinesis_vcr_spark.operators import spandedup
+    """Span-dedup plan pin (r15 one-pass window shape): NO join
+    anywhere — the gram explode runs once into a single
+    hashpartitioning(gram) exchange, the dup test is a window count on
+    top of it, and the only other hash exchange is the per-doc islands
+    window. Exactly two hash exchanges, zero Python, zero cached
+    relations."""
     from kinesis_vcr_spark.operators.spandedup import duplicated_spans
 
     docs = spark.createDataFrame(
@@ -418,36 +409,11 @@ def test_span_dedup_positions_never_shuffled_under_gate(spark):
             df.explain()
         return buf.getvalue()
 
-    # default: one-pass window — one gram exchange + one islands
-    # exchange, no join, no Python, nothing persisted
     plan = plan_of(duplicated_spans(docs, min_len=20))
     assert "Join" not in plan, plan
     assert "InMemoryRelation" not in plan, plan
     assert plan.count("Exchange hashpartitioning") == 2, plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-
-    old_seam = spandedup._ONE_PASS_WINDOW
-    try:
-        spandedup._ONE_PASS_WINDOW = False
-        plan = plan_of(duplicated_spans(docs, min_len=20))
-        assert "BroadcastHashJoin" in plan
-        # the gate's count already materialized the dup-set cache, so
-        # the live plan may shuffle ONLY for the per-doc islands window
-        # — any second hash exchange means the position table got
-        # shuffled. (the InMemoryRelation section re-renders the cached
-        # agg's own exchange; it already ran, so cut it before
-        # counting)
-        live = plan.split("InMemoryRelation")[0]
-        assert live.count("Exchange hashpartitioning") <= 1, plan
-        assert (
-            "BatchEvalPython" not in live
-            and "ArrowEvalPython" not in live
-        )
-    finally:
-        spandedup._ONE_PASS_WINDOW = old_seam
-        from kinesis_vcr_spark.cacheutil import evict_tracked
-
-        evict_tracked("spandedup")
 
 
 def test_span_probe_stored_side_never_shuffled(spark, tmp_path):
@@ -740,18 +706,3 @@ def test_seasonal_row_single_data_shuffle(spark, sf_dir):
     plan = _formatted_plan(events_seasonal_anomaly(spark, sf_dir))
     assert "EvalPython" not in plan
     assert "HashAggregate" in plan
-
-
-def test_container_stats_single_stage_no_shuffle(spark):
-    """container_stats is one narrow Arrow stage over the media scan:
-    exactly one Python eval (MapInPandas), zero Exchanges."""
-    from kinesis_vcr_spark.operators.mediainfo import container_stats
-    from kinesis_vcr_spark.operators.multimodal import MEDIA_SCHEMA
-
-    media = spark.createDataFrame(
-        [(1, "audio", b"RIFF\x00\x00\x00\x00WAVE", None)], MEDIA_SCHEMA
-    )
-    plan = _formatted_plan(container_stats(media))
-    assert "Exchange" not in plan
-    assert plan.count("MapInPandas (") == 1  # the tree's single node
-    assert "BatchEvalPython" not in plan

@@ -4,15 +4,19 @@ from __future__ import annotations
 
 from datetime import datetime, timedelta
 
+from kinesis_vcr_spark.config import MAX_BATCH_BYTES
 from kinesis_vcr_spark.play import replay
 from kinesis_vcr_spark.sinks.kinesis import kinesis_partition_writer
 from kinesis_vcr_spark.sources.archive import write_archive
 from tests.test_archive import make_records
 
 
-def _replay(spark, tmp_path, writer, n=25):
+def _replay(spark, tmp_path, writer, n=25, oversize=0):
     path = str(tmp_path / "arc")
     write_archive(make_records(spark, n=n, day="2024-03-05"), path)
+    if oversize:
+        big = b"\x01" * (MAX_BATCH_BYTES + 1)
+        write_archive(make_records(spark, n=oversize, payload=big, day="2024-03-05"), path)
     return replay(
         spark,
         path,
@@ -74,7 +78,9 @@ def test_replay_surfaces_writer_failures(spark, tmp_path):
 
 def test_replay_with_kinesis_fake_sink(spark, tmp_path):
     """End-to-end through the real batcher+retry writer with an
-    injectable put_records that always succeeds."""
+    injectable put_records that always succeeds. The one archived record
+    over the 1 MB batch cap is dropped by the batcher and must count as
+    failed, not delivered."""
 
     def fake_put_factory():
         def put(StreamName, Records):
@@ -83,9 +89,10 @@ def test_replay_with_kinesis_fake_sink(spark, tmp_path):
         return put
 
     writer = kinesis_partition_writer("target", fake_put_factory)
-    result = _replay(spark, tmp_path, writer)
-    assert result.records_attempted == 25
-    assert result.records_failed == 0
+    result = _replay(spark, tmp_path, writer, oversize=1)
+    assert result.records_attempted == 26
+    assert result.records_failed == 1
+    assert result.records_delivered == 25
 
 
 def test_replay_dedup_drops_duplicate_payloads(spark, tmp_path):

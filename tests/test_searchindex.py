@@ -278,6 +278,15 @@ def test_phrase_probe_equals_batch_over_union(spark, sf_dir, tmp_path):
     }
     assert after == got
 
+    # the same docs again under a second ingest label: each position
+    # must still vote once, so the occurrence counts do not change
+    append_position_index(docs, idx, ingest_label="batch")
+    twice = {
+        (r["doc_id"], r["n_occurrences"])
+        for r in phrase_probe_index(spark, idx, phrase).collect()
+    }
+    assert twice == got
+
 
 def test_probe_requires_terms(spark, sf_dir, tmp_path):
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")

@@ -78,6 +78,20 @@ def test_crafted_cases(spark):
     assert 4 not in got_spans and 6 not in got_spans
     assert got_clean[4] == texts[4] and got_clean[6] == texts[6]
 
+    # dup-saturated ("viral gram") corpus: every doc shares one long
+    # paragraph, so each of its grams lands in a single window group
+    # holding one position per doc — the skew case
+    viral = (
+        "This paragraph was syndicated to every page of the crawl, "
+        "word for word, and carries no information of its own. "
+    ) * 3
+    texts = {d: f"doc {d} lead. " + viral + f"tail of doc {d}." for d in range(24)}
+    exp_spans, exp_clean = _brute(texts, L)
+    got_spans, got_clean = _run(spark, texts, L)
+    assert got_spans == exp_spans
+    assert got_clean == exp_clean
+    assert all(len(v) == 1 for v in got_spans.values())
+
 
 def test_random_small_alphabet(spark):
     """Tiny alphabet forces chance gram repeats, overlapping extents,

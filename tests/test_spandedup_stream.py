@@ -217,42 +217,18 @@ def test_string_keyed_legacy_index_fails_loudly(spark, tmp_path):
 
 def test_probe_cache_footprint_stays_bounded(spark, sf_dir, tmp_path):
     """ADVICE r09: repeated probes in one session must not accumulate
-    persisted dup/batch-gram relations — results stay correct with a
-    bounded (r15 one-pass window: EMPTY) tracked-cache footprint.
-
-    r15: the default ``_ONE_PASS_WINDOW`` shape tags duplicated
-    positions with one window count over a single position exchange —
-    no dup-set persist exists at all, so the batch operator tracks
-    NOTHING. The legacy broadcast shape (seam False) still persists one
-    tracked dup set per call and must evict its predecessor's; both
-    postures are pinned here."""
+    persisted dup/batch-gram relations — results stay correct with an
+    EMPTY tracked-cache footprint: the batch operator tags duplicated
+    positions with one window count over a single position exchange
+    (r15), and the probe persists nothing either."""
     from kinesis_vcr_spark import cacheutil
-    from kinesis_vcr_spark.operators import spandedup
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     idx = str(tmp_path / "index")
     append_gram_index(docs, idx, min_len=L)
     expected = _spans(duplicated_spans(docs, min_len=L))
-    # one-pass window shape: nothing persisted, nothing tracked
     assert cacheutil._TRACKED.get("spandedup", []) == []
     for _ in range(3):
         assert _spans(span_probe_index(docs, idx, min_len=L)) == expected
         # probes persist nothing either
         assert cacheutil._TRACKED.get("spandedup", []) == []
-    # legacy broadcast shape (seam False): tracks exactly one dup set
-    # per call, evicting the previous call's
-    old_seam = spandedup._ONE_PASS_WINDOW
-    try:
-        spandedup._ONE_PASS_WINDOW = False
-        assert _spans(duplicated_spans(docs, min_len=L)) == expected
-        first_dup = cacheutil._TRACKED.get("spandedup", [None])[0]
-        assert first_dup is not None and first_dup.storageLevel.useMemory
-        # Different min_len: DataFrame.storageLevel is LOGICAL-PLAN-
-        # keyed, so an identical second call would re-cache the same
-        # plan and make the eviction invisible to the handle.
-        _spans(duplicated_spans(docs, min_len=L + 5))
-        assert not first_dup.storageLevel.useMemory  # evicted
-        assert len(cacheutil._TRACKED["spandedup"]) == 1
-    finally:
-        spandedup._ONE_PASS_WINDOW = old_seam
-        cacheutil.evict_tracked("spandedup")
