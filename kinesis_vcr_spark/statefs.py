@@ -1,14 +1,15 @@
 """Filesystem-agnostic streaming-state plumbing (Hadoop FileSystem API
 via the JVM gateway).
 
-The streaming ingest loops (urlstream, graph, neardup, annstream,
-searchstream, spanstream) keep two kinds of tiny driver-side state next
-to their parquet scopes:
+The streaming ingest loops (annstream, graph's triangle and snapshot
+loops, htmlstream, neardup, searchstream, seasonalstream, spanstream,
+tarstream, urlstream, warcstream — all driven by streaming/ingest.py)
+keep two kinds of tiny driver-side state next to their parquet scopes:
 
 - a JSON progress watermark (``progress.json``), written atomically so
   a crash can never expose a torn file;
 - the list of ``ingest=<scope>`` child directories, read at probe time
-  to exclude the replaying batch's own scope.
+  to exclude the replaying batch's own scope (:func:`read_scopes`).
 
 Both were plain ``os`` calls before round 8 — correct locally, dead on
 a real cluster where this state lives on S3/HDFS (the r07 verdict's
@@ -48,7 +49,7 @@ import json
 import logging
 from typing import Any
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 _LOG = logging.getLogger(__name__)
 
@@ -70,11 +71,6 @@ def _is_not_found(exc: Exception) -> bool:
     return name.endswith("FileNotFoundException")
 
 
-def path_exists(spark: SparkSession, path: str) -> bool:
-    fs, hpath, _ = _fs(spark, path)
-    return bool(fs.exists(hpath))
-
-
 def list_ingest_scopes(spark: SparkSession, root: str) -> list[str] | None:
     """Sorted ``ingest=<label>`` child-directory NAMES of ``root``.
 
@@ -94,6 +90,28 @@ def list_ingest_scopes(spark: SparkSession, root: str) -> list[str] | None:
         for s in statuses
         if s.isDirectory() and s.getPath().getName().startswith("ingest=")
     )
+
+
+def read_scopes(
+    spark: SparkSession, root: str, exclude_label: str | None = None
+) -> DataFrame | None:
+    """Parquet scan of every ``ingest=`` scope under ``root`` except
+    ``ingest={exclude_label}`` — the replaying batch's own scope must
+    not see itself. ``None`` when no such scope exists.
+
+    The scan names the scope paths explicitly rather than the root:
+    ``InMemoryFileIndex`` equality is by root paths alone, so two reads
+    of the same root in one session canonicalize to the SAME plan even
+    after new scopes landed in between, and a cached derivation of the
+    first read would silently answer the second. Distinct path sets per
+    batch keep each batch's plan distinct."""
+    scopes = list_ingest_scopes(spark, root)
+    if scopes is None:
+        return None
+    scopes = [d for d in scopes if d != f"ingest={exclude_label}"]
+    if not scopes:
+        return None
+    return spark.read.parquet(*[f"{root}/{d}" for d in scopes])
 
 
 def read_text(spark: SparkSession, path: str) -> str | None:

@@ -29,11 +29,8 @@ its edges arrive in the same micro-batch. Every new edge gets a unique
 rank (row_number over the canonical edge order; accumulated old edges
 rank −1), and a triangle is credited only to its HIGHEST-ranked new
 edge: for new edge ``(u, v)`` with rank r, count nodes ``w`` where
-both ``(u, w)`` and ``(v, w)`` exist with rank < r. Deterministic,
-integer-only, and restart-safe: the state table records the last
-applied micro-batch id, so a replayed batch (foreachBatch is
-at-least-once on restart) is skipped — the same idempotence discipline
-as the record sink (streaming/record.py).
+both ``(u, w)`` and ``(v, w)`` exist with rank < r. Deterministic and
+integer-only, so a replayed batch recomputes the identical delta.
 
 Scale posture: per trigger the work is |batch| joined twice against
 the accumulated edge table on node keys — proportional to the batch's
@@ -44,11 +41,6 @@ offline. Degree-skew note: unlike the batch operator's degree
 orientation, delta joins key on the new edge's endpoints; a hub
 endpoint concentrates its delta work, which AQE skew-join splitting
 handles (the per-batch join is sized by the batch, not the graph).
-
-State plumbing is FS-agnostic (statefs.py): scope discovery and the
-progress watermark go through the Hadoop FileSystem API, so state_dir
-may be any Spark-writable URI (file:, hdfs:, s3a:) — the object-store
-contract the 100 TB posture requires (r07 verdict missing-item 2).
 """
 
 from __future__ import annotations
@@ -58,40 +50,17 @@ from pyspark.sql import functions as F
 
 from kinesis_vcr_spark import statefs
 from kinesis_vcr_spark.operators.triangles import _simple_undirected
-
-
-def _state_paths(state_dir: str) -> tuple[str, str]:
-    return f"{state_dir}/edges", f"{state_dir}/progress.json"
-
-
-def _read_edges(spark, edges_path: str, exclude_ingest: str | None = None):
-    """The accumulated canonical edge table ``(a, b)`` (None if no
-    batch has committed yet). Edges live under per-batch
-    ``ingest=b{id}`` partition scopes; ``exclude_ingest`` drops one
-    scope — the replay-safety read path.
-
-    The scan is built from the EXPLICIT per-scope paths, not the state
-    root: ``InMemoryFileIndex`` equality is by root paths alone, so two
-    reads of the same root in one session canonicalize to the SAME
-    plan even after new scopes landed in between — and any ``batch_fn``
-    that ``persist()``s a derivation of the scan (k-core caches its
-    columnar edge base) would silently get the PREVIOUS trigger's
-    cached data back from the CacheManager instead of the new edges.
-    Distinct path sets per trigger make each trigger's plan distinct.
-    (Exclusion also becomes path-level: the replaced scope is never
-    even listed.)"""
-    scopes = statefs.list_ingest_scopes(spark, edges_path)
-    if scopes is None:  # missing root = no batch committed yet; any
-        return None  # other listing failure raised loudly in statefs
-    if exclude_ingest is not None:
-        scopes = [d for d in scopes if d != f"ingest={exclude_ingest}"]
-    if not scopes:
-        return None
-    paths = [f"{edges_path}/{d}" for d in scopes]
-    return spark.read.parquet(*paths).select("a", "b")
-
+from kinesis_vcr_spark.streaming import ingest
 
 _DEFAULT_PROGRESS = {"last_batch_id": -1, "triangles": 0}
+
+
+def _read_edges(spark, edges_path: str, exclude_label: str | None = None):
+    """The accumulated canonical edge table ``(a, b)``, or None before
+    any batch committed; ``exclude_label`` drops the replaying batch's
+    own scope."""
+    edges = statefs.read_scopes(spark, edges_path, exclude_label)
+    return None if edges is None else edges.select("a", "b")
 
 
 def triangle_delta(batch: DataFrame, old: DataFrame) -> DataFrame:
@@ -139,7 +108,6 @@ def streaming_triangle_count(
     dst_col: str,
     state_dir: str,
     checkpoint_dir: str,
-    available_now: bool = True,
 ):
     """Maintain the exact global triangle count over an edge stream.
 
@@ -149,25 +117,17 @@ def streaming_triangle_count(
     edge ever streamed (batch/stream parity, pinned in
     tests/test_streaming_graph.py).
     """
-    edges_path, progress_path = _state_paths(state_dir)
+    edges_path = f"{state_dir}/edges"
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
+    def step(batch_df, label, progress):
         spark = batch_df.sparkSession
-        progress = statefs.read_json_state(
-            spark, progress_path, _DEFAULT_PROGRESS
-        )
-        if batch_id <= progress["last_batch_id"]:
-            return  # replayed batch after restart — already applied
         canon = _simple_undirected(batch_df, src_col, dst_col)
-        # edges are stored per-batch under ingest=b{id} scopes and each
-        # batch OVERWRITES its own scope (ADVICE r06): a crash after the
-        # edge write but before the progress bump replays the batch,
-        # which must NOT see its own half-committed edges in `old` — it
-        # would compute fresh=∅, delta=0, and silently lose the batch's
-        # triangles forever. Excluding the scope makes the replayed
-        # delta bit-identical to the lost one.
-        label = f"b{batch_id}"
-        old = _read_edges(spark, edges_path, exclude_ingest=label)
+        # a crash after the edge write but before the progress bump
+        # replays the batch, which must NOT see its own half-committed
+        # edges in `old` — it would compute fresh=∅, delta=0, and
+        # silently lose the batch's triangles forever. Excluding the
+        # scope makes the replayed delta bit-identical to the lost one.
+        old = _read_edges(spark, edges_path, exclude_label=label)
         if old is None:
             old = spark.createDataFrame([], canon.schema)
             fresh = canon
@@ -177,38 +137,21 @@ def streaming_triangle_count(
         fresh = fresh.persist()
         try:
             row = triangle_delta(fresh, old).collect()[0]
-            fresh.write.mode("overwrite").parquet(
-                f"{edges_path}/ingest={label}"
-            )
+            ingest.write_scope(fresh, edges_path, label)
         finally:
             fresh.unpersist()
-        progress = {
-            "last_batch_id": batch_id,
-            "triangles": progress["triangles"] + row["delta"],
-        }
-        # atomic (statefs staged rename): crash keeps old state
-        statefs.write_json_state(spark, progress_path, progress)
+        return {"triangles": row["delta"]}
 
-    writer = (
-        edges.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return ingest.start(edges, checkpoint_dir, lambda b, i: ingest.apply(
+        b, i, state_dir, _DEFAULT_PROGRESS, step
+    ))
 
 
 def read_triangle_count(
     state_dir: str, spark: SparkSession | None = None
 ) -> int:
-    """The maintained global triangle count (0 before any batch).
-    FS-agnostic (statefs): ``state_dir`` may be any Hadoop URI."""
-    spark = spark or SparkSession.getActiveSession()
-    if spark is None:
-        raise RuntimeError("read_triangle_count needs an active SparkSession")
-    _, progress_path = _state_paths(state_dir)
-    return statefs.read_json_state(spark, progress_path, _DEFAULT_PROGRESS)[
+    """The maintained global triangle count (0 before any batch)."""
+    return ingest.read_progress(state_dir, _DEFAULT_PROGRESS, spark)[
         "triangles"
     ]
 
@@ -223,8 +166,9 @@ def compact_edge_state(spark, state_dir: str, target_files: int = 1) -> None:
     the scope names."""
     from kinesis_vcr_spark.operators.compaction import compact_scoped_state
 
-    edges_path, _ = _state_paths(state_dir)
-    compact_scoped_state(spark, edges_path, target_files=target_files)
+    compact_scoped_state(
+        spark, f"{state_dir}/edges", target_files=target_files
+    )
 
 
 def streaming_graph_snapshot(
@@ -235,7 +179,6 @@ def streaming_graph_snapshot(
     checkpoint_dir: str,
     out_path: str,
     batch_fn,
-    available_now: bool = True,
 ):
     """The GENERIC re-run-per-window shape for the iterative graph ops
     (the module-docstring guidance as executable code): per
@@ -259,38 +202,23 @@ def streaming_graph_snapshot(
     batch-id watermark is per-query state, so sharing one edge store
     across queries would cross their replay accounting.
     """
-    edges_path, progress_path = _state_paths(state_dir)
+    edges_path = f"{state_dir}/edges"
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
+    def step(batch_df, label, progress):
         spark = batch_df.sparkSession
-        progress = statefs.read_json_state(
-            spark, progress_path, _DEFAULT_PROGRESS
-        )
-        if batch_id <= progress["last_batch_id"]:
-            return
         canon = _simple_undirected(batch_df, src_col, dst_col)
-        label = f"b{batch_id}"
-        old = _read_edges(spark, edges_path, exclude_ingest=label)
+        old = _read_edges(spark, edges_path, exclude_label=label)
         fresh = (
             canon if old is None else canon.join(old, ["a", "b"], "left_anti")
         )
-        # same scoped-overwrite discipline as streaming_triangle_count:
-        # a replayed batch replaces its own scope instead of appending a
-        # duplicate edge set into the accumulated state
-        fresh.write.mode("overwrite").parquet(f"{edges_path}/ingest={label}")
+        ingest.write_scope(fresh, edges_path, label)
         all_edges = _read_edges(spark, edges_path)
         batch_fn(all_edges).write.mode("overwrite").parquet(out_path)
-        progress = {**progress, "last_batch_id": batch_id}
-        statefs.write_json_state(spark, progress_path, progress)
+        return {}
 
-    writer = (
-        edges.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return ingest.start(edges, checkpoint_dir, lambda b, i: ingest.apply(
+        b, i, state_dir, _DEFAULT_PROGRESS, step
+    ))
 
 
 def streaming_connected_components(
@@ -300,7 +228,6 @@ def streaming_connected_components(
     state_dir: str,
     checkpoint_dir: str,
     labels_path: str,
-    available_now: bool = True,
     max_iter: int = 25,
 ):
     """Components over an edge stream — the thin
@@ -311,7 +238,6 @@ def streaming_connected_components(
     return streaming_graph_snapshot(
         edges, src_col, dst_col, state_dir, checkpoint_dir, labels_path,
         lambda e: connected_components(e, "a", "b", max_iter=max_iter),
-        available_now=available_now,
     )
 
 
@@ -323,7 +249,6 @@ def streaming_kcore(
     checkpoint_dir: str,
     nodes_path: str,
     k: int,
-    available_now: bool = True,
     max_iterations: int = 50,
 ):
     """k-core membership snapshots over an edge stream — the
@@ -336,7 +261,6 @@ def streaming_kcore(
     return streaming_graph_snapshot(
         edges, src_col, dst_col, state_dir, checkpoint_dir, nodes_path,
         lambda e: kcore_nodes(e, "a", "b", k, max_iterations),
-        available_now=available_now,
     )
 
 
@@ -347,7 +271,6 @@ def streaming_pagerank(
     state_dir: str,
     checkpoint_dir: str,
     ranks_path: str,
-    available_now: bool = True,
     iterations: int = 10,
 ):
     """Exact-integer PageRank snapshots over an edge stream — the
@@ -366,5 +289,5 @@ def streaming_pagerank(
 
     return streaming_graph_snapshot(
         edges, src_col, dst_col, state_dir, checkpoint_dir, ranks_path,
-        fn, available_now=available_now,
+        fn,
     )

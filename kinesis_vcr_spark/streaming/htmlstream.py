@@ -19,12 +19,8 @@ semantics), then routed:
 
 Unlike the dedup loops this one needs NO cross-batch probe state —
 scoring is per-document — so the loop is the minimal instance of the
-shared ingest discipline: a batch-id watermark (skip re-delivered
-batches whole) plus per-batch ``ingest=b{id}`` overwrite scopes (a
-crash between the two writes and the watermark bump replays into
-identical bytes). State plumbing is FS-agnostic (statefs.py): the
-watermark goes through the Hadoop FileSystem API, so ``state_dir`` may
-be any Spark-writable URI (file:, hdfs:, s3a:).
+shared ingest discipline (streaming/ingest.py): two scope writes and
+no probe.
 
 100 TB posture: the verdict projection is one narrow
 whole-stage-codegen select (regexp chain + stopword-profile
@@ -43,13 +39,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kinesis_vcr_spark import statefs
 from kinesis_vcr_spark.functions.html import html_to_text
 from kinesis_vcr_spark.functions.text import (
     canonicalize_text,
     predicted_lang,
     quality_score,
 )
+from kinesis_vcr_spark.streaming import ingest
 
 VERDICT_KEPT = "kept"
 VERDICT_INVALID = "quarantined_invalid"
@@ -64,21 +60,12 @@ _DEFAULT_PROGRESS = {
 }
 
 
-def _progress_path(state_dir: str) -> str:
-    return f"{state_dir}/progress.json"
-
-
 def read_html_progress(
     state_dir: str, spark: SparkSession | None = None
 ) -> dict:
     """Cumulative counters: last applied batch id, docs scored, docs
-    kept, docs quarantined. FS-agnostic (statefs)."""
-    spark = spark or SparkSession.getActiveSession()
-    if spark is None:
-        raise RuntimeError("read_html_progress needs an active SparkSession")
-    return statefs.read_json_state(
-        spark, _progress_path(state_dir), _DEFAULT_PROGRESS
-    )
+    kept, docs quarantined."""
+    return ingest.read_progress(state_dir, _DEFAULT_PROGRESS, spark)
 
 
 def html_quality_verdicts(
@@ -134,6 +121,29 @@ def html_quality_verdicts(
     )
 
 
+def route_verdicts(
+    verdicts: DataFrame, out_dir: str, kept_dir: str, label: str,
+    kept_cols: tuple, quarantine_cols: tuple,
+) -> tuple[int, int]:
+    """Write kept rows to ``{out_dir}/{kept_dir}`` and every other row
+    to ``{out_dir}/quarantine``, both under the batch's ``label`` scope;
+    returns the (kept, quarantined) row counts. A ``"reason"`` entry in
+    ``quarantine_cols`` is the verdict. Shared by the verdict loops
+    (html, warc, tar)."""
+    kept = F.col("verdict") == VERDICT_KEPT
+    n_kept = ingest.write_scope(
+        verdicts.where(kept).select(*kept_cols), f"{out_dir}/{kept_dir}", label
+    )["rows"]
+    n_quar = ingest.write_scope(
+        verdicts.where(~kept).select(*[
+            F.col("verdict").alias(c) if c == "reason" else c
+            for c in quarantine_cols
+        ]),
+        f"{out_dir}/quarantine", label,
+    )["rows"]
+    return n_kept, n_quar
+
+
 def apply_html_batch(
     batch_df: DataFrame,
     batch_id: int,
@@ -149,37 +159,24 @@ def apply_html_batch(
     clean scope and rejected docs (with reason) to the quarantine
     scope — both ``ingest=b{batch_id}`` overwrites — then bump the
     watermark. Public so tests can drive crash-replays directly."""
-    spark = batch_df.sparkSession
-    progress_path = _progress_path(state_dir)
-    progress = statefs.read_json_state(
-        spark, progress_path, _DEFAULT_PROGRESS
-    )
-    if batch_id <= progress["last_batch_id"]:
-        return  # re-delivered after restart: both writes already landed
-    label = f"b{batch_id}"
-    verdicts = html_quality_verdicts(
-        batch_df, id_col, html_col,
-        keep_lang=keep_lang, quality_threshold=quality_threshold,
-    )
-    kept = F.col("verdict") == VERDICT_KEPT
-    verdicts.where(kept).select(id_col, "text", "pred_lang", "q").write.mode(
-        "overwrite"
-    ).parquet(f"{out_dir}/clean/ingest={label}")
-    verdicts.where(~kept).select(
-        id_col, F.col("verdict").alias("reason"), "pred_lang", "q"
-    ).write.mode("overwrite").parquet(f"{out_dir}/quarantine/ingest={label}")
-    # counters from the landed files (what actually persisted), not the
-    # in-flight frame — same discipline as the urlstream loop
-    n_kept = spark.read.parquet(f"{out_dir}/clean/ingest={label}").count()
-    n_quar = spark.read.parquet(
-        f"{out_dir}/quarantine/ingest={label}"
-    ).count()
-    statefs.write_json_state(spark, progress_path, {
-        "last_batch_id": batch_id,
-        "docs_seen": progress["docs_seen"] + int(n_kept + n_quar),
-        "docs_kept": progress["docs_kept"] + int(n_kept),
-        "docs_quarantined": progress["docs_quarantined"] + int(n_quar),
-    })
+
+    def step(batch_df, label, progress):
+        verdicts = html_quality_verdicts(
+            batch_df, id_col, html_col,
+            keep_lang=keep_lang, quality_threshold=quality_threshold,
+        )
+        n_kept, n_quar = route_verdicts(
+            verdicts, out_dir, "clean", label,
+            (id_col, "text", "pred_lang", "q"),
+            (id_col, "reason", "pred_lang", "q"),
+        )
+        return {
+            "docs_seen": n_kept + n_quar,
+            "docs_kept": n_kept,
+            "docs_quarantined": n_quar,
+        }
+
+    ingest.apply(batch_df, batch_id, state_dir, _DEFAULT_PROGRESS, step)
 
 
 def compact_html_state(spark, out_dir: str) -> None:
@@ -204,25 +201,12 @@ def streaming_html_ingest(
     html_col: str = "html",
     keep_lang: str = "en",
     quality_threshold: float = 0.6,
-    available_now: bool = True,
 ):
     """Start the extract→score→quarantine loop over a streaming crawl
     frame. Clean docs land under ``{out_dir}/clean``, rejects under
     ``{out_dir}/quarantine``; a re-delivered batch is skipped whole via
     the batch-id watermark."""
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        apply_html_batch(
-            batch_df, batch_id, state_dir, out_dir,
-            id_col=id_col, html_col=html_col,
-            keep_lang=keep_lang, quality_threshold=quality_threshold,
-        )
-
-    writer = (
-        docs.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return ingest.start(docs, checkpoint_dir, lambda b, i: apply_html_batch(
+        b, i, state_dir, out_dir, id_col=id_col, html_col=html_col,
+        keep_lang=keep_lang, quality_threshold=quality_threshold,
+    ))

@@ -19,28 +19,21 @@ band's PREFIX population at probe time, so cap decisions are
 arrival-order-dependent — leave the cap off for parity-critical runs,
 or accept the documented LSH-style bounded divergence.
 
-Restart safety: foreachBatch is at-least-once on restart; the progress
-file records the last applied batch id (same idempotence discipline as
-streaming/graph.py and the record sink), so a replayed batch neither
-re-emits its pairs nor double-appends its documents to the index.
+Probe-then-append: the probe excludes the batch's own index scope, so
+a replay after the index append but before the watermark bump probes
+the index the lost run probed instead of pairing the batch with itself.
 
 Scale posture: per trigger the work is the batch's LSH (linear) + an
 equi-join against the stored band table + verification joins against
 the stored shingle sets pruned to candidate ids — the index grows by
 exactly the batch, and nothing ever re-hashes the accumulated corpus.
-
-State plumbing is FS-agnostic (statefs.py): scope discovery and the
-progress watermark go through the Hadoop FileSystem API, so state_dir
-may be any Spark-writable URI (file:, hdfs:, s3a:) — the object-store
-contract the 100 TB posture requires (r07 verdict missing-item 2).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from kinesis_vcr_spark import statefs
-
+from kinesis_vcr_spark.fsutil import path_exists
 from kinesis_vcr_spark.operators.dedup import (
     DEFAULT_BAND_MEMBER_CAP,
     near_dup_pairs_minhash,
@@ -50,11 +43,7 @@ from kinesis_vcr_spark.operators.dedup_index import (
     load_near_dup_index,
     near_dup_against_index,
 )
-
-
-def _progress_path(state_dir: str) -> str:
-    return f"{state_dir}/progress.json"
-
+from kinesis_vcr_spark.streaming import ingest
 
 _DEFAULT_PROGRESS = {"last_batch_id": -1, "pairs_emitted": 0, "docs_indexed": 0}
 
@@ -64,12 +53,7 @@ def read_neardup_progress(
 ) -> dict:
     """Cumulative counters: last applied batch id, pairs emitted, docs
     indexed."""
-    spark = spark or SparkSession.getActiveSession()
-    if spark is None:
-        raise RuntimeError("read_neardup_progress needs an active SparkSession")
-    return statefs.read_json_state(
-        spark, _progress_path(state_dir), _DEFAULT_PROGRESS
-    )
+    return ingest.read_progress(state_dir, _DEFAULT_PROGRESS, spark)
 
 
 def compact_neardup_state(spark, state_dir: str, pairs_path: str) -> None:
@@ -105,7 +89,6 @@ def streaming_near_dup(
     bands: int = 16,
     char_ngrams: bool = False,
     band_member_cap: int | None = DEFAULT_BAND_MEMBER_CAP,
-    available_now: bool = True,
 ):
     """Start the probe-then-append loop over a streaming document
     frame. The index lives under ``{state_dir}/index``; emitted pairs
@@ -115,21 +98,14 @@ def streaming_near_dup(
     watermark, but duplicate ids ACROSS batches are the caller's
     contract, exactly as for the batch index."""
     index_path = f"{state_dir}/index"
-    progress_path = _progress_path(state_dir)
+    params = dict(
+        shingle_size=shingle_size, num_hashes=num_hashes,
+        bands=bands, char_ngrams=char_ngrams,
+    )
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
+    def step(batch_df, label, progress):
         spark = batch_df.sparkSession
-        progress = statefs.read_json_state(
-            spark, progress_path, _DEFAULT_PROGRESS
-        )
-        if batch_id <= progress["last_batch_id"]:
-            return  # replayed after restart — pairs + append already done
-        label = f"b{batch_id}"
-        params = dict(
-            shingle_size=shingle_size, num_hashes=num_hashes,
-            bands=bands, char_ngrams=char_ngrams,
-        )
-        if not statefs.path_exists(spark, f"{index_path}/meta"):
+        if not path_exists(spark, f"{index_path}/meta"):
             # first batch: within-batch pairs via the batch pipeline
             # (identical expressions → identical pairs), then the
             # initial index build
@@ -150,33 +126,13 @@ def streaming_near_dup(
                 threshold=threshold, band_member_cap=band_member_cap,
             )
             append = True
-        # every write below is scoped to THIS batch's ingest label and
-        # OVERWRITES it — a replayed batch (crash between any of the
-        # three writes and the progress bump) replaces its own rows
-        # instead of duplicating them
-        pairs.write.mode("overwrite").parquet(f"{pairs_path}/ingest={label}")
+        n_pairs = ingest.write_scope(pairs, pairs_path, label)["rows"]
         build_near_dup_index(
             batch_df, index_path, id_col, text_col,
             append=append, ingest_label=label, **params,
         )
-        n_docs = batch_df.count()
-        # count only THIS batch's emitted pairs (its own overwrite scope
-        # — idempotent under replay) and accumulate; re-counting the
-        # whole sink every trigger is O(all pairs ever) per micro-batch
-        # and its file listing grows without bound over a stream's life
-        n_pairs = spark.read.parquet(f"{pairs_path}/ingest={label}").count()
-        progress = {
-            "last_batch_id": batch_id,
-            "pairs_emitted": progress["pairs_emitted"] + int(n_pairs),
-            "docs_indexed": progress["docs_indexed"] + int(n_docs),
-        }
-        statefs.write_json_state(spark, progress_path, progress)
+        return {"pairs_emitted": n_pairs, "docs_indexed": batch_df.count()}
 
-    writer = (
-        docs.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return ingest.start(docs, checkpoint_dir, lambda b, i: ingest.apply(
+        b, i, state_dir, _DEFAULT_PROGRESS, step
+    ))

@@ -24,16 +24,10 @@ of every ingested event, bit-for-bit — the delta state stores
 unrounded ``DECIMAL`` partials and rounding happens once at score
 time, exactly where the batch operator rounds.
 
-Restart safety: foreachBatch is at-least-once; the progress file
-records the last applied batch id, state and snapshot writes are both
-scoped to ``ingest=b{id}`` and OVERWRITE their own scope, and the
-merge reads ALL scopes including the current one (overwrite-then-read
-is self-correcting) — so a crash between the state append and the
-progress bump replays to identical output (the ADVICE r06
-discipline). Delta scopes are cast to DECIMAL(38,4) before writing so
-every scope — including a compacted one — carries one stable schema.
-
-State plumbing is FS-agnostic (statefs.py): any Spark-writable URI.
+Append-then-merge: the merge reads ALL delta scopes including the
+batch's own (overwrite-then-read is self-correcting under replay).
+Delta scopes are cast to DECIMAL(38,4) before writing so every scope —
+including a compacted one — carries one stable schema.
 
 No reference counterpart; additive engine layer.
 """
@@ -45,8 +39,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kinesis_vcr_spark import statefs
 from kinesis_vcr_spark.operators.seasonal import EPOCH, scores_from_daily
+from kinesis_vcr_spark.streaming import ingest
 
 _DEFAULT_PROGRESS = {
     "last_batch_id": -1,
@@ -54,19 +48,10 @@ _DEFAULT_PROGRESS = {
 }
 
 
-def _progress_path(state_dir: str) -> str:
-    return f"{state_dir}/progress.json"
-
-
 def read_seasonal_progress(
     state_dir: str, spark: SparkSession | None = None
 ) -> dict:
-    spark = spark or SparkSession.getActiveSession()
-    if spark is None:
-        raise RuntimeError("read_seasonal_progress needs an active SparkSession")
-    return statefs.read_json_state(
-        spark, _progress_path(state_dir), _DEFAULT_PROGRESS
-    )
+    return ingest.read_progress(state_dir, _DEFAULT_PROGRESS, spark)
 
 
 def _daily_path(state_dir: str) -> str:
@@ -137,7 +122,6 @@ def streaming_seasonal(
     *,
     ts_col: str = "ts",
     value_col: str = "value",
-    available_now: bool = True,
 ):
     """Start the merge-then-score seasonal loop over a streaming event
     frame. Delta state lives under ``{state_dir}/state/daily``
@@ -146,17 +130,8 @@ def streaming_seasonal(
     land under ``{scores_path}/ingest=b{N}``."""
     keys = list(key_cols)
     daily_path = _daily_path(state_dir)
-    progress_path = _progress_path(state_dir)
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        progress = statefs.read_json_state(
-            spark, progress_path, _DEFAULT_PROGRESS
-        )
-        if batch_id <= progress["last_batch_id"]:
-            return  # fully applied before a restart
-        label = f"b{batch_id}"
-
+    def step(batch_df, label, progress):
         delta = (
             batch_df.groupBy(
                 *keys, F.to_date(F.col(ts_col)).alias("d")
@@ -167,34 +142,16 @@ def streaming_seasonal(
                 .alias("delta")
             )
         )
-        delta.write.mode("overwrite").parquet(f"{daily_path}/ingest={label}")
-
+        ingest.write_scope(delta, daily_path, label)
         scores = scores_from_daily(
-            merged_daily(spark, state_dir, keys), keys
+            merged_daily(batch_df.sparkSession, state_dir, keys), keys
         )
-        scores.write.mode("overwrite").parquet(
-            f"{scores_path}/ingest={label}"
-        )
+        ingest.write_scope(scores, scores_path, label)
+        return {"events_ingested": batch_df.count()}
 
-        n_events = batch_df.count()
-        statefs.write_json_state(
-            spark,
-            progress_path,
-            {
-                "last_batch_id": batch_id,
-                "events_ingested": progress["events_ingested"]
-                + int(n_events),
-            },
-        )
-
-    writer = (
-        events.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return ingest.start(events, checkpoint_dir, lambda b, i: ingest.apply(
+        b, i, state_dir, _DEFAULT_PROGRESS, step
+    ))
 
 
 __all__ = [

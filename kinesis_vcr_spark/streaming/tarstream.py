@@ -19,11 +19,9 @@ MALFORMED_ERRORS quarantine contract), and every sample is routed:
   malformed-stream contract (``quarantined_undecodable``) — lands
   under ``{out_dir}/quarantine/ingest=b{id}`` with its reason.
 
-Replay safety is the shared ingest contract: a batch-id watermark
-(statefs progress JSON) skips re-delivered batches whole, and the two
-scope writes are per-batch ``ingest=b{id}`` overwrites, so a crash
-between the writes and the watermark bump replays into identical
-bytes (pinned in tests/test_tarstream.py, same as test_warcstream.py).
+Replay safety is the shared ingest contract (streaming/ingest.py),
+pinned in tests/test_tarstream.py: no cross-batch state, two scope
+writes.
 
 100 TB posture: the sample explosion + decode is ONE Arrow
 mapInPandas stage whose parallelism is the shard-file count
@@ -50,12 +48,13 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from kinesis_vcr_spark import statefs
 from kinesis_vcr_spark.operators.multimodal import (
     MALFORMED_ERRORS,
     real_decode,
 )
 from kinesis_vcr_spark.operators.webarchive import tar_members
+from kinesis_vcr_spark.streaming import ingest
+from kinesis_vcr_spark.streaming.htmlstream import route_verdicts
 
 VERDICT_KEPT = "kept"
 VERDICT_NON_MEDIA = "quarantined_non_media"
@@ -96,21 +95,12 @@ _DEFAULT_PROGRESS = {
 }
 
 
-def _progress_path(state_dir: str) -> str:
-    return f"{state_dir}/progress.json"
-
-
 def read_tar_progress(
     state_dir: str, spark: SparkSession | None = None
 ) -> dict:
     """Cumulative counters: last applied batch id, samples seen /
-    kept / quarantined. FS-agnostic (statefs)."""
-    spark = spark or SparkSession.getActiveSession()
-    if spark is None:
-        raise RuntimeError("read_tar_progress needs an active SparkSession")
-    return statefs.read_json_state(
-        spark, _progress_path(state_dir), _DEFAULT_PROGRESS
-    )
+    kept / quarantined."""
+    return ingest.read_progress(state_dir, _DEFAULT_PROGRESS, spark)
 
 
 def tar_sample_verdicts(files: DataFrame, decoder=real_decode) -> DataFrame:
@@ -195,40 +185,22 @@ def apply_tar_batch(
     everything else (with reason) to the quarantine scope — both
     ``ingest=b{id}`` overwrites — then bump the watermark. Public so
     tests can drive crash-replays directly."""
-    from pyspark.sql import functions as F  # noqa: PLC0415
 
-    spark = batch_df.sparkSession
-    progress_path = _progress_path(state_dir)
-    progress = statefs.read_json_state(
-        spark, progress_path, _DEFAULT_PROGRESS
-    )
-    if batch_id <= progress["last_batch_id"]:
-        return  # re-delivered after restart: both writes already landed
-    label = f"b{batch_id}"
-    verdicts = tar_sample_verdicts(batch_df, decoder=decoder)
-    kept = F.col("verdict") == VERDICT_KEPT
-    verdicts.where(kept).select(
-        "source_file", "key", "ext", "kind", "payload_bytes",
-        "width", "height", "mean_value",
-    ).write.mode("overwrite").parquet(f"{out_dir}/features/ingest={label}")
-    verdicts.where(~kept).select(
-        "source_file", "key", "ext", "kind", "payload_bytes",
-        F.col("verdict").alias("reason"),
-    ).write.mode("overwrite").parquet(f"{out_dir}/quarantine/ingest={label}")
-    # counters from the landed files (what actually persisted), not
-    # the in-flight frame — same discipline as the other loops
-    n_kept = spark.read.parquet(f"{out_dir}/features/ingest={label}").count()
-    n_quar = spark.read.parquet(
-        f"{out_dir}/quarantine/ingest={label}"
-    ).count()
-    statefs.write_json_state(spark, progress_path, {
-        "last_batch_id": batch_id,
-        "samples_seen": progress["samples_seen"] + int(n_kept + n_quar),
-        "samples_kept": progress["samples_kept"] + int(n_kept),
-        "samples_quarantined": (
-            progress["samples_quarantined"] + int(n_quar)
-        ),
-    })
+    def step(batch_df, label, progress):
+        verdicts = tar_sample_verdicts(batch_df, decoder=decoder)
+        n_kept, n_quar = route_verdicts(
+            verdicts, out_dir, "features", label,
+            ("source_file", "key", "ext", "kind", "payload_bytes",
+             "width", "height", "mean_value"),
+            ("source_file", "key", "ext", "kind", "payload_bytes", "reason"),
+        )
+        return {
+            "samples_seen": n_kept + n_quar,
+            "samples_kept": n_kept,
+            "samples_quarantined": n_quar,
+        }
+
+    ingest.apply(batch_df, batch_id, state_dir, _DEFAULT_PROGRESS, step)
 
 
 def compact_tar_state(spark, out_dir: str) -> None:
@@ -250,7 +222,6 @@ def streaming_tar_ingest(
     out_dir: str,
     *,
     decoder=real_decode,
-    available_now: bool = True,
 ):
     """Start the shards→samples→decode→quarantine loop over a
     streaming ``binaryFile`` frame watching a landing directory for
@@ -264,17 +235,6 @@ def streaming_tar_ingest(
     Decoded features land under ``{out_dir}/features``, every other
     sample under ``{out_dir}/quarantine``; a re-delivered batch is
     skipped whole via the batch-id watermark."""
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        apply_tar_batch(
-            batch_df, batch_id, state_dir, out_dir, decoder=decoder
-        )
-
-    writer = (
-        files.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return ingest.start(files, checkpoint_dir, lambda b, i: apply_tar_batch(
+        b, i, state_dir, out_dir, decoder=decoder
+    ))

@@ -12,12 +12,10 @@ representative), and emits one verdict row per URL occurrence:
 own canonical groups are then APPENDED under an ``ingest=b{batch_id}``
 overwrite scope.
 
-Crash-safety is the neardup.py probe-shape: the seen-set is loaded
-EXCLUDING the current batch's own scope, so a crash between the
-verdict write / seen-set append / progress bump replays into identical
-bytes (every write is an overwrite of this batch's scopes; the seen
-store accumulates (canon, keep-candidate) rows and the probe takes the
-min across scopes, so re-appending the same rows is harmless anyway).
+Probe-then-append: the seen-set is loaded EXCLUDING the current
+batch's own scope, so a replay probes exactly the state the lost run
+probed. Re-appending the same (canon, keep-candidate) rows would be
+harmless anyway, because the probe takes the min across scopes.
 
 Semantics contract (pinned in tests/test_urlstream.py): prefix
 dedup — ``keep_doc_id`` for an occurrence in batch i is the smallest
@@ -27,11 +25,6 @@ arrive in ascending doc-id order the union of emissions matches the
 batch ``url_dedup_groups`` verdict over the full corpus exactly; a
 later batch with a smaller id does NOT retro-patch earlier verdicts
 (same prefix contract as the ANN/span ingest sinks).
-
-State plumbing is FS-agnostic (statefs.py): scope discovery and the
-progress watermark go through the Hadoop FileSystem API, so state_dir
-may be any Spark-writable URI (file:, hdfs:, s3a:) — the object-store
-contract the 100 TB posture requires (r07 verdict missing-item 2).
 """
 
 from __future__ import annotations
@@ -41,42 +34,15 @@ from pyspark.sql import functions as F
 
 from kinesis_vcr_spark import statefs
 from kinesis_vcr_spark.operators.urldedup import url_occurrences
+from kinesis_vcr_spark.streaming import ingest
 
 _DEFAULT_PROGRESS = {"last_batch_id": -1, "urls_seen": 0, "dups_emitted": 0}
 
 
-def _progress_path(state_dir: str) -> str:
-    return f"{state_dir}/progress.json"
-
-
 def read_url_progress(state_dir: str, spark: SparkSession | None = None) -> dict:
     """Cumulative counters: last applied batch id, URL occurrences
-    processed, duplicate occurrences emitted. FS-agnostic (statefs):
-    ``state_dir`` may be any Hadoop-resolvable URI."""
-    spark = spark or SparkSession.getActiveSession()
-    if spark is None:
-        raise RuntimeError("read_url_progress needs an active SparkSession")
-    return statefs.read_json_state(
-        spark, _progress_path(state_dir), _DEFAULT_PROGRESS
-    )
-
-
-def _load_seen(spark, state_dir: str, exclude_label: str | None):
-    """Accumulated (canon_url, keep_doc_id) — min across every ingest
-    scope except ``exclude_label`` (the replaying batch's own scope
-    must not see itself). Returns None when no prior scope exists."""
-    root = f"{state_dir}/seen"
-    scopes = statefs.list_ingest_scopes(spark, root)
-    if scopes is None:  # root missing = genuinely no prior state;
-        return None  # any OTHER listing failure raised in statefs
-    if exclude_label is not None:
-        scopes = [d for d in scopes if d != f"ingest={exclude_label}"]
-    if not scopes:
-        return None
-    df = spark.read.parquet(*[f"{root}/{d}" for d in scopes])
-    return df.groupBy("canon_url").agg(
-        F.min("keep_doc_id").alias("seen_keep")
-    )
+    processed, duplicate occurrences emitted."""
+    return ingest.read_progress(state_dir, _DEFAULT_PROGRESS, spark)
 
 
 def compact_url_state(spark, state_dir: str, verdicts_path: str) -> None:
@@ -105,51 +71,47 @@ def apply_url_batch(
     verdict rows and the batch's (canon, keep) groups into the batch's
     own overwrite scopes, bump the watermark. Public so tests can
     drive crash-replays directly."""
-    spark = batch_df.sparkSession
-    progress_path = _progress_path(state_dir)
-    progress = statefs.read_json_state(spark, progress_path, _DEFAULT_PROGRESS)
-    if batch_id <= progress["last_batch_id"]:
-        return  # re-delivered after restart: both writes already landed
-    label = f"b{batch_id}"
-    occ = url_occurrences(batch_df, id_col, text_col)
-    batch_groups = occ.groupBy("canon_url").agg(
-        F.min(id_col).alias("batch_keep")
-    )
-    seen = _load_seen(spark, state_dir, exclude_label=label)
-    merged = batch_groups if seen is None else (
-        batch_groups.join(seen, "canon_url", "left")
-    )
-    if seen is None:
-        merged = merged.withColumn("keep_doc_id", F.col("batch_keep"))
-    else:
-        merged = merged.withColumn(
-            "keep_doc_id",
-            F.least(F.coalesce("seen_keep", "batch_keep"), F.col("batch_keep")),
+
+    def step(batch_df, label, progress):
+        occ = url_occurrences(batch_df, id_col, text_col)
+        batch_groups = occ.groupBy("canon_url").agg(
+            F.min(id_col).alias("batch_keep")
         )
-    verdicts = (
-        occ.join(
-            merged.select("canon_url", "keep_doc_id"), "canon_url"
+        seen = statefs.read_scopes(
+            batch_df.sparkSession, f"{state_dir}/seen", exclude_label=label
         )
-        .withColumn("is_dup", F.col(id_col) != F.col("keep_doc_id"))
-        .select(id_col, "raw_url", "canon_url", "keep_doc_id", "is_dup")
-    )
-    verdicts.write.mode("overwrite").parquet(
-        f"{verdicts_path}/ingest={label}"
-    )
-    # seen-set append: the batch's keep CANDIDATES (min across scopes
-    # at probe time makes duplicate candidate rows harmless)
-    batch_groups.select(
-        "canon_url", F.col("batch_keep").alias("keep_doc_id")
-    ).write.mode("overwrite").parquet(f"{state_dir}/seen/ingest={label}")
-    emitted = spark.read.parquet(f"{verdicts_path}/ingest={label}")
-    n_urls = emitted.count()
-    n_dups = emitted.where("is_dup").count()
-    progress = {
-        "last_batch_id": batch_id,
-        "urls_seen": progress["urls_seen"] + int(n_urls),
-        "dups_emitted": progress["dups_emitted"] + int(n_dups),
-    }
-    statefs.write_json_state(spark, progress_path, progress)
+        if seen is None:
+            merged = batch_groups.withColumn("keep_doc_id", F.col("batch_keep"))
+        else:
+            seen = seen.groupBy("canon_url").agg(
+                F.min("keep_doc_id").alias("seen_keep")
+            )
+            merged = batch_groups.join(seen, "canon_url", "left").withColumn(
+                "keep_doc_id", F.least(
+                    F.coalesce("seen_keep", "batch_keep"), F.col("batch_keep")
+                ),
+            )
+        verdicts = (
+            occ.join(
+                merged.select("canon_url", "keep_doc_id"), "canon_url"
+            )
+            .withColumn("is_dup", F.col(id_col) != F.col("keep_doc_id"))
+            .select(id_col, "raw_url", "canon_url", "keep_doc_id", "is_dup")
+        )
+        n = ingest.write_scope(
+            verdicts, verdicts_path, label, dups=F.count_if("is_dup")
+        )
+        # seen-set append: the batch's keep CANDIDATES (min across scopes
+        # at probe time makes duplicate candidate rows harmless)
+        ingest.write_scope(
+            batch_groups.select(
+                "canon_url", F.col("batch_keep").alias("keep_doc_id")
+            ),
+            f"{state_dir}/seen", label,
+        )
+        return {"urls_seen": n["rows"], "dups_emitted": n["dups"]}
+
+    ingest.apply(batch_df, batch_id, state_dir, _DEFAULT_PROGRESS, step)
 
 
 def streaming_url_dedup(
@@ -160,25 +122,12 @@ def streaming_url_dedup(
     *,
     id_col: str = "doc_id",
     text_col: str = "text",
-    available_now: bool = True,
 ):
     """Start the probe-then-append loop over a streaming document
     frame. Seen-set scopes live under ``{state_dir}/seen``; per-batch
     verdicts append to ``verdicts_path``. Document ids must be unique
     across the stream — a re-delivered batch is skipped whole via the
     batch-id watermark."""
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        apply_url_batch(
-            batch_df, batch_id, state_dir, verdicts_path,
-            id_col=id_col, text_col=text_col,
-        )
-
-    writer = (
-        docs.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return ingest.start(docs, checkpoint_dir, lambda b, i: apply_url_batch(
+        b, i, state_dir, verdicts_path, id_col=id_col, text_col=text_col
+    ))

@@ -16,11 +16,9 @@ record is routed:
   responses, and extraction/language/quality rejects — lands under
   ``{out_dir}/quarantine/ingest=b{id}`` with its reason.
 
-Replay safety is the shared ingest contract: a batch-id watermark
-(statefs progress JSON) skips re-delivered batches whole, and the two
-scope writes are per-batch ``ingest=b{id}`` overwrites, so a crash
-between the writes and the watermark bump replays into identical
-bytes (pinned in tests/test_warcstream.py, same as every other loop).
+Replay safety is the shared ingest contract (streaming/ingest.py),
+pinned in tests/test_warcstream.py: no cross-batch state, two scope
+writes.
 
 100 TB posture: the record explosion is one Arrow mapInPandas stage
 whose parallelism is the archive-file count (~64k files per Common
@@ -40,11 +38,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kinesis_vcr_spark import statefs
 from kinesis_vcr_spark.operators.webarchive import warc_records
+from kinesis_vcr_spark.streaming import ingest
 from kinesis_vcr_spark.streaming.htmlstream import (
-    VERDICT_KEPT,
     html_quality_verdicts,
+    route_verdicts,
 )
 
 #: quarantine vocabulary beyond htmlstream's (which this module reuses
@@ -59,21 +57,12 @@ _DEFAULT_PROGRESS = {
 }
 
 
-def _progress_path(state_dir: str) -> str:
-    return f"{state_dir}/progress.json"
-
-
 def read_warc_progress(
     state_dir: str, spark: SparkSession | None = None
 ) -> dict:
     """Cumulative counters: last applied batch id, WARC records seen,
-    documents kept, records quarantined. FS-agnostic (statefs)."""
-    spark = spark or SparkSession.getActiveSession()
-    if spark is None:
-        raise RuntimeError("read_warc_progress needs an active SparkSession")
-    return statefs.read_json_state(
-        spark, _progress_path(state_dir), _DEFAULT_PROGRESS
-    )
+    documents kept, records quarantined."""
+    return ingest.read_progress(state_dir, _DEFAULT_PROGRESS, spark)
 
 
 def warc_clean_verdicts(
@@ -146,39 +135,25 @@ def apply_warc_batch(
     (with reason) to the quarantine scope — both ``ingest=b{id}``
     overwrites — then bump the watermark. Public so tests can drive
     crash-replays directly."""
-    spark = batch_df.sparkSession
-    progress_path = _progress_path(state_dir)
-    progress = statefs.read_json_state(
-        spark, progress_path, _DEFAULT_PROGRESS
-    )
-    if batch_id <= progress["last_batch_id"]:
-        return  # re-delivered after restart: both writes already landed
-    label = f"b{batch_id}"
-    verdicts = warc_clean_verdicts(
-        batch_df, keep_lang=keep_lang, quality_threshold=quality_threshold,
-    )
-    kept = F.col("verdict") == VERDICT_KEPT
-    verdicts.where(kept).select(
-        "source_file", "record_idx", "target_uri", "text", "pred_lang", "q"
-    ).write.mode("overwrite").parquet(f"{out_dir}/clean/ingest={label}")
-    verdicts.where(~kept).select(
-        "source_file", "record_idx", "target_uri",
-        F.col("verdict").alias("reason"), "pred_lang", "q",
-    ).write.mode("overwrite").parquet(f"{out_dir}/quarantine/ingest={label}")
-    # counters from the landed files (what actually persisted), not
-    # the in-flight frame — same discipline as the other loops
-    n_kept = spark.read.parquet(f"{out_dir}/clean/ingest={label}").count()
-    n_quar = spark.read.parquet(
-        f"{out_dir}/quarantine/ingest={label}"
-    ).count()
-    statefs.write_json_state(spark, progress_path, {
-        "last_batch_id": batch_id,
-        "records_seen": progress["records_seen"] + int(n_kept + n_quar),
-        "docs_kept": progress["docs_kept"] + int(n_kept),
-        "records_quarantined": (
-            progress["records_quarantined"] + int(n_quar)
-        ),
-    })
+
+    def step(batch_df, label, progress):
+        verdicts = warc_clean_verdicts(
+            batch_df, keep_lang=keep_lang, quality_threshold=quality_threshold,
+        )
+        n_kept, n_quar = route_verdicts(
+            verdicts, out_dir, "clean", label,
+            ("source_file", "record_idx", "target_uri", "text",
+             "pred_lang", "q"),
+            ("source_file", "record_idx", "target_uri", "reason",
+             "pred_lang", "q"),
+        )
+        return {
+            "records_seen": n_kept + n_quar,
+            "docs_kept": n_kept,
+            "records_quarantined": n_quar,
+        }
+
+    ingest.apply(batch_df, batch_id, state_dir, _DEFAULT_PROGRESS, step)
 
 
 def compact_warc_state(spark, out_dir: str) -> None:
@@ -201,7 +176,6 @@ def streaming_warc_ingest(
     *,
     keep_lang: str = "en",
     quality_threshold: float = 0.6,
-    available_now: bool = True,
 ):
     """Start the archives→records→extract→quarantine loop over a
     streaming ``binaryFile`` frame watching a landing directory for
@@ -215,18 +189,7 @@ def streaming_warc_ingest(
     Clean docs land under ``{out_dir}/clean``, every other record
     under ``{out_dir}/quarantine``; a re-delivered batch is skipped
     whole via the batch-id watermark."""
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        apply_warc_batch(
-            batch_df, batch_id, state_dir, out_dir,
-            keep_lang=keep_lang, quality_threshold=quality_threshold,
-        )
-
-    writer = (
-        files.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return ingest.start(files, checkpoint_dir, lambda b, i: apply_warc_batch(
+        b, i, state_dir, out_dir,
+        keep_lang=keep_lang, quality_threshold=quality_threshold,
+    ))

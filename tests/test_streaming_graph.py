@@ -80,7 +80,7 @@ def _run_stream(spark, src_dir, state_dir, ckpt_dir):
         .parquet(src_dir + "/*")
     )
     q = streaming_triangle_count(
-        stream, "a", "b", state_dir, ckpt_dir, available_now=True
+        stream, "a", "b", state_dir, ckpt_dir
     )
     q.awaitTermination(300)
     return q
