@@ -17,7 +17,7 @@ from datetime import datetime
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kinesis_vcr_spark.sources.archive import archive_listing
+from kinesis_vcr_spark.sources.archive import list_archive_files
 from kinesis_vcr_spark.timeparse import humanize_minutes
 
 
@@ -63,7 +63,9 @@ class Estimate:
 
 
 def estimate_agg(listing: DataFrame) -> DataFrame:
-    """count(files) + sum(bytes) in ONE pass (A1+A2, KinesisVcr.java:75-82).
+    """count(files) + sum(bytes) in ONE pass (A1+A2, KinesisVcr.java:75-82)
+    over an :func:`~kinesis_vcr_spark.sources.archive.archive_listing`
+    DataFrame.
 
     The reference makes one pass with a side-effecting counter; Spark does
     both aggregates in a single partial-agg plan.
@@ -99,6 +101,11 @@ def estimate_replay_time(
     Pass ``open_shards`` directly, or ``describe_stream`` +
     ``target_stream`` to count them from the control plane like the
     reference (KinesisPlayer.java:77-83).
+
+    The listing's tuples (one per file in range) are already in this
+    process, so the count and sum run in Python: the estimate launches
+    no Spark job and no Python worker (the same totals as
+    ``estimate_agg(archive_listing(...))``).
     """
     if open_shards is None:
         if describe_stream is None or target_stream is None:
@@ -108,12 +115,12 @@ def estimate_replay_time(
         open_shards = count_open_shards(describe_stream, target_stream)
     if open_shards <= 0:
         raise ValueError("open_shards must be positive")
-    listing = archive_listing(spark, archive_path, start, end)
-    row = estimate_agg(listing).collect()[0]
-    minutes = replay_minutes(row["total_bytes"], open_shards)
+    files = list_archive_files(spark, archive_path, start, end)
+    total_bytes = sum(size for _dt, _path, size, _mtime in files)
+    minutes = replay_minutes(total_bytes, open_shards)
     return Estimate(
-        file_count=row["file_count"],
-        total_bytes=row["total_bytes"],
+        file_count=len(files),
+        total_bytes=total_bytes,
         open_shards=open_shards,
         minutes=minutes,
         human=humanize_minutes(minutes),

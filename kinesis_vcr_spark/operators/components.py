@@ -12,8 +12,10 @@ Scale posture:
 
 - each round is one equi-join (edges ⋈ labels, keyed on node id) + one
   groupBy-min with full map-side combine — no cross joins, no driver
-  data paths; the convergence check is a 1-row ``limit(1).count()``
-  probe, not a collect of labels.
+  data paths; the convergence check is one full ``count()`` of the
+  changed labels per round, which also materializes the round's lazy
+  ``localCheckpoint`` (one job per round; with ``checkpoint_dir`` the
+  round's checkpoint stays eager), not a collect of labels.
 - ``localCheckpoint`` truncates lineage every round; without it the plan
   doubles per iteration and the job DAG explodes by round 10 (the
   classic iterative-Spark failure mode).

@@ -3,17 +3,21 @@
 The reference's replay is an Rx dataflow: day-pruned listing → GET +
 line-split + base64-decode → 500-record/1 MB batching → putRecords with
 partial-failure retry, on a 10-thread pool (KinesisPlayer.java:90-117).
-Spark-first, that is one batch job::
+Spark-first, that is one batch job of one stage::
 
-    read_archive(...)                       # pruned + filtered + decoded scan
-      .repartition(parallelism)             # writer concurrency (was: 10 threads)
-      .foreachPartition(batcher + sink)     # procedural edge, per-partition
+    read_archive(...).select("data")        # pruned + filtered + decoded scan
+      .coalesce(parallelism)                # cap on concurrent writers (was: 10 threads)
+      .mapInArrow(batcher + sink)           # procedural edge, per-partition
 
 There is deliberately NO ordering or shard-affinity preservation — the
 reference randomizes partition keys per replayed record
 (KinesisPlayer.java:101, SURVEY.md §1.4), which makes replay
 embarrassingly parallel: at 100 TB the only knobs are scan split size and
-``parallelism`` (number of concurrent sink writers).
+``parallelism``. ``coalesce`` merges scan splits without a shuffle, so
+``parallelism`` is an upper bound, like the reference's "up to 10
+concurrent putRecords": an archive with fewer splits runs fewer writers.
+Payloads cross into Python as Arrow batches, bounded by
+``spark.sql.execution.arrow.maxBytesPerBatch``.
 """
 
 from __future__ import annotations
@@ -133,14 +137,17 @@ def replay(
     mtime_filter: bool = True,
     dedup: bool = False,
 ) -> ReplayResult:
-    """Full replay: pruned scan → repartition → per-partition writer.
+    """Full replay: pruned scan → coalesce → per-partition writer.
 
-    ``writer`` takes an iterator of Rows — build one with
+    ``writer`` takes an iterator of Rows whose ``row["data"]`` is the
+    payload bytes — build one with
     :func:`kinesis_vcr_spark.sinks.kinesis.kinesis_partition_writer` for a
     live stream, or any callable for tests. A writer may return the
     number of records it FAILED to deliver (None ⇒ 0).
     ``parallelism`` maps the reference's fixed 10-thread put pool
-    (KinesisPlayer.java:58) to partition count.
+    (KinesisPlayer.java:58) to the MAXIMUM number of writer partitions:
+    the scan splits are coalesced into at most that many, with no
+    shuffle, and fewer splits mean fewer writers.
 
     ``dedup=True`` drops duplicate payload bytes before writing —
     SURVEY.md §7.4 item 4: the reference's record side is at-least-once
@@ -152,32 +159,40 @@ def replay(
     distinct records would also collapse — hence opt-in.
 
     Returns :class:`ReplayResult`. Counting rides the same job as the
-    writes via ``mapPartitions`` (one (attempted, failed) row per
-    partition — exactly-once per partition result, unlike accumulators
-    which double-count on task retry).
+    writes (one (attempted, failed) row per partition — exactly-once per
+    partition result, unlike accumulators which double-count on task
+    retry).
     """
-    records = read_archive(spark, archive_path, start, end, mtime_filter)
+    records = read_archive(
+        spark, archive_path, start, end, mtime_filter
+    ).select("data")
     if dedup:
         records = records.dropDuplicates(["data"])
 
-    def run_partition(rows):
+    def run_partition(batches):
+        import pyarrow as pa
+        from pyspark.sql import Row
+
         attempted = 0
 
-        def counting(it):
+        def counting():
             nonlocal attempted
-            for row in it:
-                attempted += 1
-                yield row
+            for batch in batches:
+                for data in batch.column(0).to_pylist():
+                    attempted += 1
+                    yield Row(data=data)
 
-        failed = writer(counting(rows))
-        yield (attempted, int(failed or 0))
+        failed = writer(counting())
+        yield pa.RecordBatch.from_pydict(
+            {"attempted": [attempted], "failed": [int(failed or 0)]}
+        )
 
     counts = (
-        records.repartition(parallelism)
-        .rdd.mapPartitions(run_partition)
+        records.coalesce(parallelism)
+        .mapInArrow(run_partition, "attempted long, failed long")
         .collect()
     )
     return ReplayResult(
-        records_attempted=sum(c[0] for c in counts),
-        records_failed=sum(c[1] for c in counts),
+        records_attempted=sum(c["attempted"] for c in counts),
+        records_failed=sum(c["failed"] for c in counts),
     )

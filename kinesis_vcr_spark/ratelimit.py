@@ -98,7 +98,12 @@ def per_writer_rate(
     random partition keys (T5) every writer spreads uniformly over all
     shards, so the per-writer share is the aggregate divided evenly.
     The same arithmetic as the reference's estimate, inverted into a
-    budget (functions/estimate.py:77)."""
+    budget (functions/estimate.py:77).
+
+    ``parallelism`` is the CAP on replay writers (``replay`` coalesces
+    the scan splits into at most that many partitions). With fewer scan
+    splits than ``parallelism`` fewer writers run, so the paced total
+    stays below the stream limit — never above it."""
     if open_shards <= 0 or parallelism <= 0:
         raise ValueError("open_shards and parallelism must be positive")
     return open_shards * per_shard_bytes_per_s / parallelism

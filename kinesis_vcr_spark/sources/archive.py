@@ -139,19 +139,20 @@ def write_archive(
     )
 
 
-def archive_listing(
+def list_archive_files(
     spark: SparkSession,
     archive_path: str,
     start: datetime,
     end: datetime | None = None,
     mtime_filter: bool = True,
-) -> DataFrame:
+) -> list[tuple]:
     """Metadata-only listing of archive files in range — never reads rows.
 
     The estimate path (KinesisVcr.java:74-82) must stay O(files): this
     uses the Hadoop FileSystem listing (same pruned day enumeration as the
     reference's per-day prefix listing, KinesisPlayer.java:234-260) and
-    returns a small DataFrame ``(dt, file_path, file_size, file_mtime)``.
+    returns plain Python tuples ``(dt, file_path, file_size,
+    file_mtime_s)`` in day order. No Spark job runs.
 
     Listing cost is proportional to files in range only; at 100 TB with
     ~100 MB objects a single-day range is ~10^4 keys — driver-trivial, and
@@ -218,6 +219,20 @@ def archive_listing(
     with ThreadPoolExecutor(max_workers=min(len(days), 16)) as pool:
         for day_rows in pool.map(list_day, days):  # deterministic order
             rows.extend(day_rows)
+    return rows
+
+
+def archive_listing(
+    spark: SparkSession,
+    archive_path: str,
+    start: datetime,
+    end: datetime | None = None,
+    mtime_filter: bool = True,
+) -> DataFrame:
+    """:func:`list_archive_files` as a small DataFrame
+    ``(dt, file_path, file_size, file_mtime_s)``, for joins and
+    aggregates over the listing."""
     return spark.createDataFrame(
-        rows, "dt date, file_path string, file_size long, file_mtime_s long"
+        list_archive_files(spark, archive_path, start, end, mtime_filter),
+        "dt date, file_path string, file_size long, file_mtime_s long",
     )

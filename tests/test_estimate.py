@@ -42,8 +42,11 @@ def test_estimate_counts_and_sums_listing(spark, tmp_path):
 
 
 def test_estimate_end_to_end(spark, tmp_path):
+    import uuid
+
     path = str(tmp_path / "arc2")
     write_archive(make_records(spark, n=10, day="2024-03-05"), path)
+    write_archive(make_records(spark, n=7, day="2024-03-06"), path)
     est = estimate_replay_time(
         spark, path, datetime(2024, 3, 4), datetime(2024, 3, 7), open_shards=2
     )
@@ -51,11 +54,25 @@ def test_estimate_end_to_end(spark, tmp_path):
     assert est.file_count == 0 and est.total_bytes == 0
     assert est.human == "0 mins"
 
-    est2 = estimate_replay_time(
-        spark, path, datetime(2024, 3, 4), datetime(2099, 1, 1), open_shards=2
-    )
-    assert est2.file_count >= 1
+    # the listing is summed in Python: no Spark job, and the same
+    # totals as the listing aggregate over the same range
+    start, end = datetime(2024, 3, 4), datetime(2099, 1, 1)
+    sc = spark.sparkContext
+    group = f"estimate-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        est2 = estimate_replay_time(spark, path, start, end, open_shards=2)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert est2.file_count >= 2
     assert est2.total_bytes > 0
+    row = estimate_agg(archive_listing(spark, path, start, end)).collect()[0]
+    assert (est2.file_count, est2.total_bytes) == (
+        row["file_count"],
+        row["total_bytes"],
+    )
 
 
 def test_estimate_rejects_bad_shards(spark, tmp_path):

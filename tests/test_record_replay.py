@@ -127,36 +127,61 @@ def test_replay_batch_plan_matches_iter_batches(spark):
 
 
 def test_replay_foreachpartition_writer(spark, tmp_path):
-    """replay() drives a per-partition writer over the pruned scan."""
+    """replay() drives a per-partition writer over the pruned scan, in
+    one job of one stage: the scan splits are coalesced into at most
+    ``parallelism`` writer partitions, with no shuffle. The second
+    archive has more scan splits than ``parallelism``."""
+    import uuid
+
     from kinesis_vcr_spark.sources.archive import write_archive
     from tests.test_archive import make_records
 
-    path = str(tmp_path / "arc")
-    write_archive(make_records(spark, n=25, day="2024-03-05"), path)
-    out_dir = tmp_path / "collected"
-    out_dir.mkdir()
-    out = str(out_dir)
-
-    def writer(rows):
-        import os
-        import uuid
-
-        n = sum(1 for _ in rows)
-        if n:
-            with open(os.path.join(out, f"{uuid.uuid4()}.cnt"), "w") as fh:
-                fh.write(str(n))
-
-    replay(
-        spark,
-        path,
-        datetime(2024, 3, 5),
-        datetime(2024, 3, 6),
-        writer,
-        parallelism=3,
-        mtime_filter=False,
+    start, end = datetime(2024, 3, 5), datetime(2024, 3, 6)
+    one_file = str(tmp_path / "arc")
+    write_archive(make_records(spark, n=25, day="2024-03-05"), one_file)
+    many_files = str(tmp_path / "arc16")
+    write_archive(
+        make_records(spark, n=40, day="2024-03-05").repartition(16), many_files
     )
-    total = sum(int(open(f).read()) for f in out_dir.glob("*.cnt"))
-    assert total == 25
+    splits = read_archive(spark, many_files, start, end, mtime_filter=False)
+    assert splits.rdd.getNumPartitions() > 3
+
+    sc = spark.sparkContext
+    for path, n in ((one_file, 25), (many_files, 40)):
+        out_dir = tmp_path / f"collected-{uuid.uuid4().hex}"
+        out_dir.mkdir()
+        out = str(out_dir)
+
+        def writer(rows, out=out):
+            import os
+            import uuid
+
+            from pyspark import TaskContext
+
+            n = sum(1 for _ in rows)
+            pid = TaskContext.get().partitionId()
+            with open(os.path.join(out, f"{uuid.uuid4()}.cnt"), "w") as fh:
+                fh.write(f"{pid} {n}")
+
+        group = f"replay-shape-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            result = replay(
+                spark, path, start, end, writer, parallelism=3,
+                mtime_filter=False,
+            )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+        assert len(jobs) == 1
+        stages = sc.statusTracker().getJobInfo(jobs[0]).stageIds
+        assert len(stages) == 1
+        assert sc.statusTracker().getStageInfo(stages[0]).numTasks <= 3
+
+        calls = [f.read_text().split() for f in out_dir.glob("*.cnt")]
+        assert sum(int(c) for _, c in calls) == n == result.records_attempted
+        assert 1 <= len({pid for pid, _ in calls}) == len(calls) <= 3
 
 
 def test_kinesis_reader_options_contract():
