@@ -11,19 +11,25 @@ result as a recursive CTE (reachability needs no aggregate inside the
 recursion — ``UNION`` dedups (node, depth) pairs and a final GROUP BY
 MIN(depth) runs outside it).
 
-Spark shape per hop: the frontier (nodes discovered last hop) is
-node-sized, so it broadcasts onto the edge table — edges never
-shuffle; the per-hop exchanges are the candidate ``distinct`` and the
-anti-join against already-visited nodes, both node-sized.
-``localCheckpoint`` per hop truncates the iterative lineage. Early
-exit: expansion stops when a hop discovers nothing new, so
-``max_depth`` is a cap, not a fixed cost.
+Spark shape per hop: the frontier (nodes discovered last hop) and the
+visited set are node-sized, so while their exact counts are within
+:data:`kinesis_vcr_spark.cacheutil.BROADCAST_ROWS_MAX` they broadcast
+onto the edge table — edges never shuffle; the per-hop exchanges are
+the candidate ``distinct`` and the anti-join against already-visited
+nodes, both node-sized. Each hop is one
+:func:`kinesis_vcr_spark.cacheutil.settle` of the visited set, counting
+the nodes it just discovered, which are the next frontier (the round
+rule of the iterative graph loops is stated there). Early exit:
+expansion stops when a hop discovers nothing new, so ``max_depth`` is
+a cap, not a fixed cost.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from kinesis_vcr_spark.cacheutil import broadcast_if_small, settle
 
 
 def bfs_distances(
@@ -33,43 +39,39 @@ def bfs_distances(
     seeds: DataFrame,
     seed_col: str,
     max_depth: int = 4,
-    broadcast_frontier: bool = True,
 ) -> DataFrame:
     """``(node, distance)`` — min hop count from any seed, for every
     node within ``max_depth`` directed hops (seeds themselves at 0).
 
     ``seeds`` is a DataFrame (one column ``seed_col``); duplicate seeds
     are fine. Unreachable nodes are absent from the result.
-    ``broadcast_frontier=False`` switches to co-partitioned shuffle
-    joins for frontiers beyond broadcast size.
     """
     if max_depth < 0:
         raise ValueError(f"max_depth must be >= 0, got {max_depth}")
     e = edges.select(F.col(src).alias("__s"), F.col(dst).alias("__d"))
-    visited = (
+    visited, n_new = settle(
         seeds.select(F.col(seed_col).alias("node"))
         .distinct()
-        .withColumn("distance", F.lit(0).cast("long"))
-        .localCheckpoint()
+        .withColumn("distance", F.lit(0).cast("long")),
+        "bfs", 0,
     )
-    frontier = visited.select("node")
+    n_visited = n_new
     for depth in range(1, max_depth + 1):
-        f_in = F.broadcast(frontier) if broadcast_frontier else frontier
-        v_in = F.broadcast(visited) if broadcast_frontier else visited
-        # lazy checkpoint + FULL count in one job (r15, the
-        # components-loop fold): the count materializes every frontier
-        # partition — the old eager-checkpoint job + take(1) probe pair
-        # for the same expansion work
+        frontier = visited.where(F.col("distance") == depth - 1)
+        f_in = broadcast_if_small(frontier.select("node"), n_new)
+        v_in = broadcast_if_small(visited.select("node"), n_visited)
         fresh = (
             e.join(f_in, e["__s"] == f_in["node"])
             .select(F.col("__d").alias("node"))
             .distinct()
-            .join(v_in.select("node"), "node", "left_anti")
+            .join(v_in, "node", "left_anti")
             .withColumn("distance", F.lit(depth).cast("long"))
-            .localCheckpoint(eager=False)
         )
-        if fresh.count() == 0:  # frontier exhausted: early exit
+        visited, n_new = settle(
+            visited.unionByName(fresh), "bfs", depth, prev=visited,
+            where=F.col("distance") == depth,
+        )
+        if n_new == 0:  # frontier exhausted: early exit
             break
-        visited = visited.unionByName(fresh).localCheckpoint()
-        frontier = fresh.select("node")
+        n_visited += n_new
     return visited

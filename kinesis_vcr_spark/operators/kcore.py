@@ -12,13 +12,15 @@ survives is the k-core regardless of deletion order.
 Spark shape (mirrors the iterative-family discipline of
 operators/components.py and pagerank.py):
 
-- the degree table is NODE-sized; while the cumulative removed set
-  stays under :data:`BROADCAST_REMOVED_MAX` both anti-joins broadcast
-  it — the edge table never shuffles. On graphs where peeling removes
-  a large node fraction the hint is dropped past that bound and the
-  planner falls back to a shuffle anti-join (a bounded broadcast, not
-  an 8 GB-limit / driver-OOM wall);
-- ``localCheckpoint`` per round truncates the iterative lineage;
+- the degree table is NODE-sized; both anti-joins against the
+  cumulative removed set go through
+  :func:`kinesis_vcr_spark.cacheutil.broadcast_if_small` with its exact
+  count, so the edge table never shuffles while the set is bounded and
+  the planner falls back to a shuffle anti-join past the bound (not an
+  8 GB-limit / driver-OOM wall);
+- each peel round is one :func:`kinesis_vcr_spark.cacheutil.settle` of
+  the removed set (the round rule of the iterative graph loops is
+  stated there);
 - iteration count is the graph's peeling depth (≤ its degeneracy
   ordering rounds, typically ≪ node count); ``max_iterations`` is a
   loud-failure guard, which the oracle-paired query relies on — the
@@ -35,16 +37,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kinesis_vcr_spark.cacheutil import broadcast_if_small, release, settle
 from kinesis_vcr_spark.operators.triangles import _simple_undirected
-
-# The removed-node set is CUMULATIVE, so on graphs where peeling deletes
-# a large node fraction it is not "small" in any useful sense — an
-# unconditional broadcast hint would grow without bound (Spark's 8 GB
-# broadcast hard limit / driver OOM). Below this many removed node ids
-# (~hundreds of MB of long ids at worst) the broadcast anti-join is the
-# strictly better plan (edge table never shuffles); above it the hint is
-# dropped so the planner falls back to a shuffle anti-join.
-BROADCAST_REMOVED_MAX = 5_000_000
 
 
 def _degrees(edges: DataFrame) -> DataFrame:
@@ -86,37 +80,25 @@ def kcore_edges(
     removed: DataFrame | None = None  # schema follows the node id type
     removed_count = 0  # maintained exactly: bad-set counts are disjoint
 
-    def alive(rm: DataFrame | None) -> DataFrame:
+    def alive(rm: DataFrame | None, rows: int) -> DataFrame:
         if rm is None:
             return base
-        # broadcast only while the cumulative set is provably bounded;
-        # past BROADCAST_REMOVED_MAX let the planner pick (shuffle
-        # anti-join) instead of forcing an unbounded broadcast.
-        hint = F.broadcast if removed_count <= BROADCAST_REMOVED_MAX else (
-            lambda df: df
-        )
-        return base.join(
-            hint(rm.select(F.col("node").alias("a"))), "a", "left_anti"
-        ).join(
-            hint(rm.select(F.col("node").alias("b"))), "b", "left_anti"
-        )
+        out = base
+        for c in ("a", "b"):
+            side = broadcast_if_small(rm.select(F.col("node").alias(c)), rows)
+            out = out.join(side, c, "left_anti")
+        return out
 
     for i in range(max_iterations + 1):  # +1: the final fixpoint check
-        cur = alive(removed)
+        cur = alive(removed, removed_count)
         bad = _degrees(cur).where(F.col("deg") < k).select("node")
-        # ONE job per peel round (r15, the components-loop fold): the
-        # cumulative peeled set is checkpointed LAZILY and counted in
-        # full — the count materializes every partition (degree pass
-        # included), and because bad is disjoint from prior removals
-        # the round's progress is just the count delta. The old shape
-        # paid a bad-persist count job PLUS an eager checkpoint job per
-        # round for the same degree pass.
-        new_removed = (
-            bad if removed is None else removed.unionByName(bad)
-        ).localCheckpoint(eager=False)
-        total = new_removed.count()
-        n_bad = total - removed_count
-        if n_bad == 0:
+        # the cumulative peeled set is the round's checkpoint; bad is
+        # disjoint from prior removals, so progress is the count delta
+        new_removed, total = settle(
+            bad if removed is None else removed.unionByName(bad), "kcore", i
+        )
+        if total == removed_count:
+            # cur reads `removed`, which new_removed only repeats. The
             # lineage of cur is already shallow (source + two
             # anti-joins against the checkpointed node set) — no
             # edge-sized checkpoint of the result, which would
@@ -130,13 +112,13 @@ def kcore_edges(
             # one k-core per trigger) would be served this call's
             # stale cached edges — and accumulates an edge-sized cache
             # entry per call besides.
+            release(new_removed)
             base.unpersist()
             return cur
-        if i == max_iterations:
-            base.unpersist()
-            break  # out of peel budget and still not converged
-        removed = new_removed
-        removed_count = total  # bad is disjoint from prior removals
+        if removed is not None:
+            release(removed)
+        removed, removed_count = new_removed, total
+    base.unpersist()  # out of peel budget and still not converged
     raise RuntimeError(
         f"{k}-core peeling did not converge within {max_iterations} "
         "iterations — raise max_iterations (and, for an oracle-paired "

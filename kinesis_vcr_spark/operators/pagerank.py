@@ -20,13 +20,15 @@ a textbook float PageRank:
   data-dependent stopping rule could diverge across engines).
 
 Spark shape per iteration: ranks and out-degrees are NODE-sized, so
-they broadcast onto the edge table — the edges (the big side at scale)
-are never shuffled; the only exchange is the node-sized groupBy(dst).
-Lineage is truncated with ``localCheckpoint`` every few iterations
-(the components-operator discipline — without it, iteration i re-plans
-all i−1 predecessors). For graphs whose NODE table itself outgrows
-broadcast (≳100 M nodes), pass ``broadcast_ranks=False`` to switch to
-co-partitioned shuffle joins on the edge key.
+while the exact node count is within
+:data:`kinesis_vcr_spark.cacheutil.BROADCAST_ROWS_MAX` they broadcast
+onto the edge table — the edges (the big side at scale) are never
+shuffled; the only exchange is the node-sized groupBy(dst). Past that
+bound the planner picks co-partitioned shuffle joins on the edge key.
+Every :data:`CHECKPOINT_EVERY` iterations (and after the last) the
+ranks are one :func:`kinesis_vcr_spark.cacheutil.settle` (the round
+rule of the iterative graph loops is stated there) — without lineage
+truncation, iteration i re-plans all i−1 predecessors.
 
 Dangling nodes (outdeg 0) keep only their teleport share — their mass
 leaks rather than redistributing, deterministically on both engines
@@ -39,7 +41,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kinesis_vcr_spark.cacheutil import (
+    broadcast_if_small, release, settle, truncate,
+)
+
 DEFAULT_UNIT = 1_000_000
+#: iterations between lineage truncations of the ranks
+CHECKPOINT_EVERY = 3
 
 
 def pagerank_micro(
@@ -50,8 +58,6 @@ def pagerank_micro(
     iterations: int = 10,
     damping_pct: int = 85,
     unit: int = DEFAULT_UNIT,
-    broadcast_ranks: bool = True,
-    checkpoint_every: int = 3,
 ) -> DataFrame:
     """``(node, rank_micro)`` after ``iterations`` exact-integer
     PageRank steps over the (multi-)edge list.
@@ -76,21 +82,22 @@ def pagerank_micro(
             F.col(dst).alias("__dst"),
             F.col(weight).cast("long").alias("__w"),
         )
-    w = w.localCheckpoint()  # edges feed every iteration: compute once
+    w = truncate(w)  # edges feed every iteration: compute once
 
-    nodes = (
+    nodes, n_nodes = settle(
         w.select(F.col("__src").alias("node"))
         .union(w.select(F.col("__dst").alias("node")))
-        .distinct()
-        .localCheckpoint()
+        .distinct(),
+        "pagerank", 0,
     )
     outdeg = w.groupBy("__src").agg(F.sum("__w").alias("__od"))
+    od_in = broadcast_if_small(outdeg, n_nodes)
 
     teleport = ((100 - damping_pct) * unit) // 100
     ranks = nodes.select("node", F.lit(unit).cast("long").alias("rank_micro"))
-    for i in range(iterations):
-        r_in = F.broadcast(ranks) if broadcast_ranks else ranks
-        od_in = F.broadcast(outdeg) if broadcast_ranks else outdeg
+    checkpointed = None
+    for i in range(1, iterations + 1):
+        r_in = broadcast_if_small(ranks, n_nodes)
         contrib = (
             w.join(r_in, w["__src"] == r_in["node"])
             .join(od_in.withColumnRenamed("__src", "__osrc"),
@@ -116,6 +123,9 @@ def pagerank_micro(
                 + F.lit(teleport)
             ).alias("rank_micro"),
         )
-        if (i + 1) % checkpoint_every == 0 or i == iterations - 1:
-            ranks = ranks.localCheckpoint()
+        if i % CHECKPOINT_EVERY == 0 or i == iterations:
+            ranks, _ = settle(ranks, "pagerank", i, prev=checkpointed)
+            checkpointed = ranks
+    release(nodes)
+    release(w)
     return ranks

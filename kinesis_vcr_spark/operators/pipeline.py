@@ -45,9 +45,8 @@ def _materialize_survivors(
     tree — llm_prep_spans 15.6→12.9 s med, llm_prep_spans_clean
     18.4→13.8 s, llm_prep_pipeline 7.2→6.3 s, results bit-identical
     (guide §3.3/§5: materialize an intermediate to truncate a huge
-    plan). Same materialization barrier and block lifetime as the
-    persist it replaces (blocks free when the last reference is GC'd;
-    ``cache_registry`` callers' ``unpersist()`` becomes a no-op).
+    plan). Same materialization barrier as the persist it replaces;
+    ``cache_registry`` callers free either with ``cacheutil.release``.
     Trade-off: a lost executor cannot recompute a localCheckpointed
     partition, so when the caller signals a fault-prone/long-run
     posture by passing ``checkpoint_dir`` (the same signal
@@ -335,18 +334,11 @@ def llm_prep_corpus(
         # localCheckpoint seam, ADVICE r14): the materialized survivor
         # set also feeds the returned plan's LAZY consumers (band join,
         # verify, the s2 status joins), so it cannot be released here.
-        # Under the default ``checkpoint_dir=None`` posture the seam is
-        # a ``localCheckpoint`` whose RDD blocks are GC-BOUND:
-        # ``.unpersist()`` on the handed-over frame is a no-op, and the
-        # blocks free only when the last reference to the returned
-        # plan is garbage-collected (ContextCleaner). Long-lived
-        # sessions must therefore DROP ALL REFERENCES to the returned
-        # DataFrame (and anything derived from it) when done — that,
-        # not unpersist, is the release mechanism. ``cache_registry``
-        # still receives the materialized frame: with
-        # ``checkpoint_dir`` set the seam is a real ``persist()`` and
-        # ``.unpersist()`` works as before; without it the registry
-        # entry is useful only for dropping the reference.
+        # ``cache_registry`` receives the materialized frame; once the
+        # returned DataFrame is consumed, call ``cacheutil.release`` on
+        # the registry entry to free its blocks under either posture
+        # (``.unpersist()`` frees the ``checkpoint_dir`` posture's
+        # persist but is a no-op on the default localCheckpoint).
         # r13: persist unconditionally — the survivor set's lineage
         # (extraction + URL window + digest group-min) feeds the band
         # join, the verify join's both sides and the s2 status joins

@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 
 import math
 
+from kinesis_vcr_spark.cacheutil import truncate
 from kinesis_vcr_spark.operators.components import connected_components
 from kinesis_vcr_spark.operators.ivf import assign_centroid, train_centroids
 from kinesis_vcr_spark.operators.similarity import pandas_cosine
@@ -124,11 +125,7 @@ def semantic_dedup(
     # cache (id + unit vector + cid) is the slim 2-column verdict
     # input. Materialize that projection, then release the embeddings
     # cache before returning — no session-lifetime leak (ADVICE r03).
-    ids = assigned.select(id_col, "cid")
-    ids = (
-        ids.checkpoint() if checkpoint_dir is not None
-        else ids.localCheckpoint()
-    )
+    ids = truncate(assigned.select(id_col, "cid"), checkpoint_dir)
     assigned.unpersist()
     return (
         ids

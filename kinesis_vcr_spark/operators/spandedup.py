@@ -74,7 +74,7 @@ DEFAULT_MIN_SPAN = 30
 
 #: :func:`span_probe_index` broadcasts the batch's grams and its dup set
 #: only while the batch holds at most this many positions (the same
-#: bounded-broadcast discipline as kcore's BROADCAST_REMOVED_MAX); over
+#: bounded-broadcast discipline as cacheutil.BROADCAST_ROWS_MAX); over
 #: the gate both joins fall back to shuffled joins instead of OOMing on
 #: an unbounded broadcast. Sizing: 24 M × 16 B ≈ 384 MB serialized,
 #: ~3-4× that as the in-heap build map — needs ≥4 GB executors, the

@@ -41,6 +41,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kinesis_vcr_spark.cacheutil import truncate
+
 
 def _simple_undirected(edges: DataFrame, src: str, dst: str) -> DataFrame:
     """Distinct ``(a, b)`` with ``a < b``: self-loops and duplicate /
@@ -193,7 +195,7 @@ def triangle_counts(
         # eager, node-sized: the chunk's wedge shuffle becomes garbage
         # the moment the checkpoint materializes
         partials.append(
-            _counts_from(_close_wedges(chunk, oriented)).localCheckpoint()
+            truncate(_counts_from(_close_wedges(chunk, oriented)))
         )
         # nudge the JVM so the finished chunk's shuffle files are
         # eligible for ContextCleaner removal before the next chunk

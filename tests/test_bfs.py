@@ -66,8 +66,10 @@ def test_seed_rediscovery_keeps_zero(spark):
     assert got == {0: 0, 9: 0}
 
 
-def test_shuffle_join_path_matches_broadcast(spark):
+def test_shuffle_join_path_matches_broadcast(spark, monkeypatch):
     import random
+
+    from kinesis_vcr_spark import cacheutil
 
     rng = random.Random(3)
     edges = spark.createDataFrame(
@@ -76,11 +78,9 @@ def test_shuffle_join_path_matches_broadcast(spark):
     )
     seeds = _seeds(spark, 0, 7)
     a = _dist(bfs_distances(edges, "s", "d", seeds, "seed", 3))
-    b = _dist(
-        bfs_distances(
-            edges, "s", "d", seeds, "seed", 3, broadcast_frontier=False
-        )
-    )
+    # a zero broadcast bound: every frontier / visited join unhinted
+    monkeypatch.setattr(cacheutil, "BROADCAST_ROWS_MAX", 0)
+    b = _dist(bfs_distances(edges, "s", "d", seeds, "seed", 3))
     assert a == b
 
 

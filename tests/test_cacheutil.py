@@ -1,9 +1,21 @@
-"""Bounded-liveness persist tracking (kinesis_vcr_spark/cacheutil.py):
-scope isolation, eviction order, and post-eviction recompute safety."""
+"""Cache and checkpoint lifetime (kinesis_vcr_spark/cacheutil.py):
+tracked-persist scope isolation, eviction order and post-eviction
+recompute safety; the iterative loops' round rule — superseded rounds
+released, one log record per round, no extra jobs."""
 
 from __future__ import annotations
 
+import gc
+import json
+import logging
+
+import pytest
+
 from kinesis_vcr_spark import cacheutil
+from kinesis_vcr_spark.operators.bfs import bfs_distances
+from kinesis_vcr_spark.operators.components import connected_components
+from kinesis_vcr_spark.operators.kcore import kcore_nodes
+from kinesis_vcr_spark.operators.pagerank import pagerank_micro
 
 
 def test_scopes_evict_independently_and_results_survive(spark):
@@ -38,3 +50,108 @@ def test_eviction_tolerates_dead_session_handles(spark):
     cacheutil._TRACKED["scope_x"] = [Boom()]
     cacheutil.evict_tracked("scope_x")  # must not raise
     assert cacheutil._TRACKED["scope_x"] == []
+
+
+def _chain(spark, n, a="src", b="dst"):
+    return spark.createDataFrame(
+        [(i, i + 1) for i in range(n)], f"{a} long, {b} long"
+    )
+
+
+def _k4_tail(spark, n):
+    """K4 on {1..4} with an ``n``-edge path 4-10-11-… hanging off it."""
+    path = [4, *range(10, 10 + n)]
+    return spark.createDataFrame(
+        [(i, j) for i in range(1, 5) for j in range(i + 1, 5)]
+        + list(zip(path, path[1:])),
+        "src long, dst long",
+    )
+
+
+def _pagerank_graph(spark):
+    return spark.createDataFrame(
+        [(i % 13, (i * 7 + 3) % 17) for i in range(40)], "s long, d long"
+    )
+
+
+# loop -> (call(spark, depth), ((depth, jobs before the round helper),)*2)
+LOOPS = {
+    "components": (
+        lambda spark, d: connected_components(_chain(spark, d)),
+        ((3, 28), (12, 82)),
+    ),
+    "kcore": (
+        lambda spark, d: kcore_nodes(_k4_tail(spark, d), "src", "dst", 2),
+        ((2, 18), (8, 42)),
+    ),
+    "bfs": (
+        lambda spark, d: bfs_distances(
+            _chain(spark, d, "s", "d"), "s", "d",
+            spark.createDataFrame([(0,)], "seed long"), "seed", 50,
+        ),
+        ((3, 24), (10, 66)),
+    ),
+    "pagerank": (
+        lambda spark, d: pagerank_micro(
+            _pagerank_graph(spark), "s", "d", iterations=d
+        ),
+        ((3, 19), (9, 47)),
+    ),
+}
+
+
+@pytest.mark.parametrize("loop", list(LOOPS))
+def test_loops_release_superseded_rounds(spark, count_jobs, loop):
+    """After a collected call at most the returned frame's checkpoint
+    stays held, whatever the round count (GC off, so nothing but the
+    loop's own release frees a block), and the call launches no more
+    jobs than before the round helper (15 / 9 / 21 / 5 RDDs were held
+    at the deeper fixtures then)."""
+    call, depths = LOOPS[loop]
+    jsc = spark.sparkContext._jsc.sc()
+    held = []
+    gc.disable()
+    try:
+        for depth, jobs_before in depths:
+            first = jsc.newRddId()
+            jobs, _ = count_jobs(lambda: call(spark, depth).collect())
+            held.append(
+                sum(1 for i in jsc.getRDDStorageInfo() if i.id() > first)
+            )
+            assert jobs <= jobs_before, (depth, jobs)
+    finally:
+        gc.enable()
+    assert held[0] == held[1] <= 1, held
+
+
+def test_settle_logs_one_record_per_round(spark, caplog):
+    caplog.set_level(logging.INFO, logger=cacheutil.__name__)
+    connected_components(_chain(spark, 6)).collect()
+    rounds = [
+        json.loads(r.getMessage())
+        for r in caplog.records
+        if r.name == cacheutil.__name__
+    ]
+    assert [r["round"] for r in rounds] == list(range(1, 8))
+    assert {r["loop"] for r in rounds} == {"components"}
+    assert rounds[-1]["n"] == 0 and all(r["n"] > 0 for r in rounds[:-1])
+
+
+def test_release_frees_cached_and_checkpointed_blocks(spark):
+    jsc = spark.sparkContext._jsc.sc()
+
+    def held(first):
+        return [i.id() for i in jsc.getRDDStorageInfo() if i.id() > first]
+
+    first = jsc.newRddId()
+    ckpt = cacheutil.truncate(spark.range(50).selectExpr("id % 7 AS k"))
+    assert held(first)
+    ckpt.unpersist()  # a no-op on a checkpoint: its RDD is not cached
+    assert held(first)
+    cacheutil.release(ckpt)
+    assert not held(first)
+
+    cached = spark.range(50).persist()
+    assert cached.count() == 50
+    cacheutil.release(cached)
+    assert not cached.is_cached

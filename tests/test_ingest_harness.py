@@ -15,7 +15,6 @@ import datetime
 import json
 import logging
 import shutil
-import uuid
 
 import pyarrow.parquet as pq
 import pytest
@@ -186,19 +185,6 @@ class _Crash(Exception):
     pass
 
 
-def _jobs(spark, fn) -> int:
-    """Spark jobs ``fn`` launches, counted through a fresh job group."""
-    sc = spark.sparkContext
-    group = f"ingest-harness-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def _state(root):
     """Every parquet row under ``root`` keyed by directory, plus the
     progress watermark."""
@@ -212,7 +198,7 @@ def _state(root):
 
 @pytest.mark.parametrize("loop", list(LOOPS))
 def test_crash_points_replay_to_the_uncrashed_run(
-    spark, sf_dir, tmp_path, monkeypatch, caplog, loop
+    spark, sf_dir, tmp_path, monkeypatch, caplog, count_jobs, loop
 ):
     start, frames, ceilings = LOOPS[loop]
     batches = frames(spark, sf_dir, tmp_path)
@@ -223,9 +209,9 @@ def test_crash_points_replay_to_the_uncrashed_run(
 
     # uncrashed run, jobs per applied micro-batch pinned; the crash run
     # resumes from a copy of its state after batch 0
-    jobs = [_jobs(spark, lambda: apply_ref(batches[0], 0))]
+    jobs = [count_jobs(lambda: apply_ref(batches[0], 0))[0]]
     shutil.copytree(ref, run)
-    jobs.append(_jobs(spark, lambda: apply_ref(batches[1], 1)))
+    jobs.append(count_jobs(lambda: apply_ref(batches[1], 1))[0])
     assert all(n <= c for n, c in zip(jobs, ceilings)), (jobs, ceilings)
     expected = _state(ref)
     after_b0 = _state(run)[1]
@@ -252,7 +238,7 @@ def test_crash_points_replay_to_the_uncrashed_run(
     assert _state(run) == expected
 
     # (c) a committed batch replayed: no Spark job, progress unchanged
-    assert _jobs(spark, lambda: apply_run(batches[1], 1)) == 0
+    assert count_jobs(lambda: apply_run(batches[1], 1))[0] == 0
     assert _state(run)[1] == expected[1]
 
     # one structured record per completed batch; none for the crash

@@ -81,15 +81,15 @@ def test_rerun_over_same_path_sees_new_data(spark, tmp_path):
 
 
 def test_broadcast_bound_falls_back_to_shuffle_anti_join(spark, monkeypatch):
-    """With BROADCAST_REMOVED_MAX forced to 0, every post-first-round
+    """With BROADCAST_ROWS_MAX forced to 0, every post-first-round
     anti-join runs WITHOUT the broadcast hint (the unbounded-broadcast
     guard from the r07 memory rework) — the fixpoint must be identical.
     The K4+tail fixture needs two peel rounds, so round 2's alive()
     exercises the fallback path."""
-    import kinesis_vcr_spark.operators.kcore as kc
+    from kinesis_vcr_spark import cacheutil
 
     df = _edges(spark, K4_PLUS_TAIL)
-    monkeypatch.setattr(kc, "BROADCAST_REMOVED_MAX", 0)
+    monkeypatch.setattr(cacheutil, "BROADCAST_ROWS_MAX", 0)
     nodes = {
         r.node: r.core_deg for r in kcore_nodes(df, "src", "dst", 2).collect()
     }

@@ -79,8 +79,10 @@ def test_dangling_mass_leaks_deterministically(spark):
     assert r2 == {0: 150_000, 1: (85 * 150_000) // 100 + 150_000}
 
 
-def test_partitioning_invariance_bit_exact(spark):
+def test_partitioning_invariance_bit_exact(spark, monkeypatch):
     import random
+
+    from kinesis_vcr_spark import cacheutil
 
     rng = random.Random(11)
     edges = [(rng.randrange(30), rng.randrange(30)) for _ in range(200)]
@@ -89,11 +91,9 @@ def test_partitioning_invariance_bit_exact(spark):
     b = _ranks(
         pagerank_micro(df.repartition(13, "d"), "s", "d", iterations=6)
     )
-    c = _ranks(
-        pagerank_micro(
-            df.repartition(7), "s", "d", iterations=6, broadcast_ranks=False
-        )
-    )
+    # a zero broadcast bound: ranks and out-degree joins unhinted
+    monkeypatch.setattr(cacheutil, "BROADCAST_ROWS_MAX", 0)
+    c = _ranks(pagerank_micro(df.repartition(7), "s", "d", iterations=6))
     assert a == b == c  # int64 sums are order-independent
 
 

@@ -119,10 +119,14 @@ def test_llm_prep_cache_registry_hands_over_materialized_survivors(spark):
     truncate the analyzed plan under every downstream consumer,
     measured 15.6→12.9 s on llm_prep_spans). ``cache_registry`` still
     receives the materialized DataFrame; its lineage must be TRUNCATED
-    (an RDD scan, not the extract/URL-window tree) and the legacy
-    ``unpersist()`` call sites must keep working (now a harmless
-    no-op — block lifetime is GC-bound)."""
+    (an RDD scan, not the extract/URL-window tree), the legacy
+    ``unpersist()`` call sites must keep working (a harmless no-op on
+    the checkpoint) and ``cacheutil.release`` on the entry frees its
+    blocks."""
+    from kinesis_vcr_spark.cacheutil import release
     from kinesis_vcr_spark.operators.pipeline import llm_prep_corpus
+
+    jsc = spark.sparkContext._jsc.sc()
 
     wrap = "<p>" + GOOD + "</p>"
     docs = spark.createDataFrame(
@@ -136,6 +140,7 @@ def test_llm_prep_cache_registry_hands_over_materialized_survivors(spark):
     )
     for budget in (1_000_000, None):  # armed and unarmed both materialize
         registry: list = []
+        first = jsc.newRddId()
         out = llm_prep_corpus(
             docs, bench, near_dup_candidate_budget=budget,
             cache_registry=registry,
@@ -149,3 +154,8 @@ def test_llm_prep_cache_registry_hands_over_materialized_survivors(spark):
         assert "RegExpReplace" not in plan  # no extract tree below it
         out.collect()
         cached.unpersist()  # legacy call sites must not raise
+        entry = cached._jdf.queryExecution().analyzed().rdd().id()
+        assert entry > first
+        assert entry in {i.id() for i in jsc.getRDDStorageInfo()}
+        release(cached)
+        assert entry not in {i.id() for i in jsc.getRDDStorageInfo()}
