@@ -1,17 +1,27 @@
-"""Cache and checkpoint lifetime: bounded-liveness persist tracking and
-the round rule of the iterative graph loops.
+"""Cache and checkpoint lifetime: the one module that persists,
+checkpoints or frees a frame, and the round rule of the iterative
+graph loops.
 
-**Tracked persists (ADVICE r09).** Operators that persist an internal
-frame (a dup-digest set, a batch's decoded hashes) have no natural
-place to unpersist it — the caller consumes a lazy DataFrame built over
-the cache. Leaving the handles live accumulates one cached relation per
-call in a long-lived session (bench loops, streaming drivers) with
-nothing but a blanket ``spark.catalog.clearCache()`` to free them. The
-registry here bounds liveness to "the latest call per scope": each
-tracked call first evicts (non-blocking) whatever its scope tracked
-before. A caller that interleaves two calls before consuming either
-only loses the speedup — the evicted plan recomputes — never
-correctness.
+**The lifetime rule.** :func:`hold` bounds a frame's liveness to one
+frame per scope; :func:`release` ends it early and deletes a reliable
+checkpoint's files. Nothing else in the engine calls ``persist``,
+``unpersist``, ``cache``, ``checkpoint`` or ``localCheckpoint``
+(``tests/test_cacheutil.py`` scans for it).
+
+A frame that a lazily returned plan reads (a dup-digest set, a batch's
+decoded hashes, an edge table with three join branches) has no natural
+place to be freed: the caller consumes the plan after the operator has
+returned. So each :func:`hold` first releases what its scope held, then
+persists (or lazily ``localCheckpoint``-s) the new frame and holds it
+until the scope's next call. Release comes first, so a re-persisted
+plan never reuses a stale cache entry (a cached scan over a parquet
+path would otherwise serve the last call's rows to a call over the same
+path with new data). Reading a plan after its scope's next call
+recomputes a persisted frame: only the speedup is lost. A checkpointed
+frame cannot be recomputed, so once an action has materialized it such
+a read fails (``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``): consume a result
+before the next call of its scope. A frame consumed inside its function
+is held and then ended early by :func:`release`.
 
 **Rounds.** ``components``, ``kcore``, ``bfs`` and ``pagerank`` each
 keep their own algorithm and control flow and share one rule per round:
@@ -30,7 +40,8 @@ keep their own algorithm and control flow and share one rule per round:
   runs on the checkpoint's internal row RDD: a DataFrame ``count()``
   adds an aggregation exchange, and so a second job, per round. On the
   durable posture the eager checkpoint write is one more job per round.
-- :func:`release` frees the previous round's blocks as soon as the new
+- :func:`release` frees the previous round's blocks (and, on the
+  durable posture, deletes its ``rdd-*`` directory) as soon as the new
   round is materialized, instead of when GC happens to collect the
   handle. ``DataFrame.unpersist()`` is a no-op on a checkpointed frame;
   the blocks belong to the RDD behind the handle ``localCheckpoint``
@@ -62,23 +73,22 @@ _LOG = logging.getLogger(__name__)
 # broadcast join is the strictly better plan.
 BROADCAST_ROWS_MAX = 5_000_000
 
-_TRACKED: dict[str, list[DataFrame]] = {}
+_HELD: dict[str, DataFrame] = {}
 
 
-def evict_tracked(scope: str) -> None:
-    """Unpersist (non-blocking) everything ``scope`` tracked."""
-    for cached in _TRACKED.get(scope, ()):
+def hold(scope: str, df: DataFrame, checkpoint: bool = False) -> DataFrame:
+    """Release what ``scope`` held, then persist ``df`` (with
+    ``checkpoint`` a lazy ``localCheckpoint``, which also truncates the
+    plan of every consumer) and hold it until the scope's next call.
+    Returns the held frame."""
+    held = _HELD.pop(scope, None)
+    if held is not None:
         try:
-            cached.unpersist(blocking=False)
+            release(held)
         except Exception:  # session already stopped — nothing to free
             pass
-    _TRACKED[scope] = []
-
-
-def persist_tracked(scope: str, df: DataFrame) -> DataFrame:
-    """Persist ``df`` and register it for eviction by the next
-    ``evict_tracked(scope)`` call."""
-    _TRACKED.setdefault(scope, []).append(df.persist())
+    df = df.localCheckpoint(eager=False) if checkpoint else df.persist()
+    _HELD[scope] = df
     return df
 
 
@@ -95,13 +105,28 @@ def truncate(
 
 def release(df: DataFrame) -> None:
     """Free ``df``'s blocks now: unpersist a cached frame, and the RDD
-    behind a checkpoint handle (as returned by :func:`truncate`).
-    ``df`` must not be read afterwards if it is a checkpoint."""
+    behind a checkpoint handle (as returned by :func:`truncate` or
+    :func:`hold`), deleting a reliable checkpoint's directory. A scope
+    holding ``df`` drops it. ``df`` must not be read afterwards if it is
+    a checkpoint."""
+    for scope in [s for s, h in _HELD.items() if h is df]:
+        del _HELD[scope]
     if df.is_cached:
         df.unpersist()
     plan = df._jdf.queryExecution().analyzed()
-    if plan.getClass().getSimpleName() == "LogicalRDD":
-        plan.rdd().unpersist(False)
+    if plan.getClass().getSimpleName() != "LogicalRDD":
+        return
+    rdd = plan.rdd()
+    if not rdd.isCheckpointed():
+        # a lazy checkpoint no action has run yet holds no blocks, and
+        # unpersisting it would make its first read fail
+        return
+    rdd.unpersist(False)
+    path = rdd.getCheckpointFile()
+    if path.isDefined():
+        sc = df.sparkSession.sparkContext
+        p = sc._jvm.org.apache.hadoop.fs.Path(path.get())
+        p.getFileSystem(sc._jsc.hadoopConfiguration()).delete(p, True)
 
 
 def settle(

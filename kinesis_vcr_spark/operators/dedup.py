@@ -30,6 +30,8 @@ import math
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from kinesis_vcr_spark.cacheutil import hold
+
 # ---------------------------------------------------------------------------
 # exact dedup
 # ---------------------------------------------------------------------------
@@ -463,21 +465,10 @@ def _candidate_pairs_from_bands(
         # counted band rows so that pass MATERIALIZES them and the
         # self-join below reads the cache instead of recomputing the
         # whole lineage a second time (measured at sf0.1: the armed
-        # path repeated ~the entire banding cost). Tracked per scope —
-        # the next armed call evicts this one (cacheutil contract);
-        # the band table is Θ(n·bands) id+hash rows, far smaller than
-        # the text/shingle lineage it shields.
-        from kinesis_vcr_spark.cacheutil import (
-            evict_tracked,
-            persist_tracked,
-        )
-
-        # bound liveness to the latest armed call (cacheutil contract —
-        # persist_tracked does NOT self-evict; without this, each armed
-        # call accumulated one cached band table for the session's
-        # lifetime)
-        evict_tracked("dedup_bands")
-        counted = persist_tracked("dedup_bands", counted)
+        # path repeated ~the entire banding cost). The band table is
+        # Θ(n·bands) id+hash rows, far smaller than the text/shingle
+        # lineage it shields.
+        counted = hold("candidate_pairs_from_bands", counted)
         check_candidate_budget(counted, candidate_budget, budget_context)
         exploded = counted.drop("__grp_n")
     else:

@@ -37,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from kinesis_vcr_spark.cacheutil import broadcast_if_small, release, settle
+from kinesis_vcr_spark.cacheutil import broadcast_if_small, hold, release, settle
 from kinesis_vcr_spark.operators.triangles import _simple_undirected
 
 
@@ -76,7 +76,7 @@ def kcore_edges(
     one columnar copy of the edges plus a node set, at any scale."""
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    base = _simple_undirected(edges, src, dst).persist()
+    base = hold("kcore_edges", _simple_undirected(edges, src, dst))
     removed: DataFrame | None = None  # schema follows the node id type
     removed_count = 0  # maintained exactly: bad-set counts are disjoint
 
@@ -103,7 +103,7 @@ def kcore_edges(
             # anti-joins against the checkpointed node set) — no
             # edge-sized checkpoint of the result, which would
             # reintroduce the very materialization this shape exists
-            # to avoid. The base is UNPERSISTED here, costing the
+            # to avoid. The base is RELEASED here, costing the
             # caller's consuming action one re-scan of the source:
             # leaving it cached poisons any LATER call whose scan
             # canonicalizes to the same plan — InMemoryFileIndex
@@ -113,12 +113,12 @@ def kcore_edges(
             # stale cached edges — and accumulates an edge-sized cache
             # entry per call besides.
             release(new_removed)
-            base.unpersist()
+            release(base)
             return cur
         if removed is not None:
             release(removed)
         removed, removed_count = new_removed, total
-    base.unpersist()  # out of peel budget and still not converged
+    release(base)  # out of peel budget and still not converged
     raise RuntimeError(
         f"{k}-core peeling did not converge within {max_iterations} "
         "iterations — raise max_iterations (and, for an oracle-paired "

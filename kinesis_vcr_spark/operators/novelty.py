@@ -33,19 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kinesis_vcr_spark.cacheutil import hold
 from kinesis_vcr_spark.operators.dedup import tokens, word_shingles_from_tokens
-
-# bounded-liveness cache tracking (ADVICE r13): each call evicts the
-# previous call's cached shingle explode instead of leaking one cached
-# relation per call in a long-lived session — cacheutil contract.
-_CACHE_SCOPE = "novelty"
-
-
-def _persist_tracked(df: DataFrame) -> DataFrame:
-    from kinesis_vcr_spark.cacheutil import evict_tracked, persist_tracked
-
-    evict_tracked(_CACHE_SCOPE)
-    return persist_tracked(_CACHE_SCOPE, df)
 
 
 def shingle_edges(
@@ -85,38 +74,31 @@ def doc_ngram_novelty(
     """Per-doc novelty: (id, *carry, total_ngrams, novel_ngrams,
     novelty). ``novelty`` is an exact-integer ratio in double —
     bit-deterministic under any partitioning."""
-    edges = _persist_tracked(shingle_edges(docs, id_col, text_col, n, carry))
-    try:
-        first = ngram_first_seen(edges, id_col)
-        joined = edges.join(first, "shingle")
-        out = (
-            joined.groupBy(id_col, *carry)
-            .agg(
-                F.count("*").alias("total_ngrams"),
-                F.sum(
-                    F.when(F.col("first_seen") == F.col(id_col), 1).otherwise(0)
-                ).alias("novel_ngrams"),
-            )
-            .select(
-                id_col,
-                *carry,
-                "total_ngrams",
-                "novel_ngrams",
-                F.round(
-                    F.col("novel_ngrams").cast("double")
-                    / F.col("total_ngrams").cast("double"),
-                    6,
-                ).alias("novelty"),
-            )
+    edges = hold(
+        "doc_ngram_novelty", shingle_edges(docs, id_col, text_col, n, carry)
+    )
+    first = ngram_first_seen(edges, id_col)
+    return (
+        edges.join(first, "shingle")
+        .groupBy(id_col, *carry)
+        .agg(
+            F.count("*").alias("total_ngrams"),
+            F.sum(
+                F.when(F.col("first_seen") == F.col(id_col), 1).otherwise(0)
+            ).alias("novel_ngrams"),
         )
-        return out
-    finally:
-        # Lazy plan: unpersisting here would drop the cache before the
-        # action runs; the caller's terminal action materializes through
-        # the persisted edges. Liveness is bounded by _persist_tracked:
-        # the NEXT novelty call evicts this cache (cacheutil contract),
-        # so long-lived sessions hold at most one cached explode.
-        pass
+        .select(
+            id_col,
+            *carry,
+            "total_ngrams",
+            "novel_ngrams",
+            F.round(
+                F.col("novel_ngrams").cast("double")
+                / F.col("total_ngrams").cast("double"),
+                6,
+            ).alias("novelty"),
+        )
+    )
 
 
 def novelty_by_group(

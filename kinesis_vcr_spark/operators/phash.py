@@ -50,6 +50,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
+from kinesis_vcr_spark.cacheutil import hold
 from kinesis_vcr_spark.operators.dedup import near_dup_pairs_hash64
 
 #: pHash DCT input size and kept low-frequency block (the standard
@@ -375,9 +376,7 @@ def phash_probe_index(
     ``exclude_ingest`` drops one scope partition-pruned — the
     crash-replay discipline shared with every index in the family.
     The batch's hashes are persisted (they cost a decode per image);
-    liveness is bounded by cacheutil's latest-call eviction."""
-    from kinesis_vcr_spark.cacheutil import evict_tracked, persist_tracked
-
+    liveness is bounded by :func:`kinesis_vcr_spark.cacheutil.hold`."""
     spark = media.sparkSession
     meta = _load_phash_meta(spark, index_path)
     if meta is None:
@@ -385,9 +384,8 @@ def phash_probe_index(
     blocks, hash_col = meta
     if max_hamming >= blocks:
         raise ValueError("max_hamming must be < blocks for exact recall")
-    evict_tracked("phash_index")
-    new_hashes = persist_tracked(
-        "phash_index", perceptual_hashes(media, pixel_fn)
+    new_hashes = hold(
+        "phash_probe_index", perceptual_hashes(media, pixel_fn)
     )
     new_rows = _block_rows(new_hashes, hash_col, blocks)
     stored = spark.read.parquet(f"{index_path}/blocks")

@@ -27,37 +27,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from kinesis_vcr_spark.cacheutil import hold
+
 STATUS_KEPT = "kept"
 STATUS_EXACT = "dropped_exact"
 STATUS_NEAR = "dropped_near_dup"
 STATUS_QUALITY = "dropped_quality"
-
-def _materialize_survivors(
-    df: DataFrame, checkpoint_dir: str | None = None
-) -> DataFrame:
-    """How ``llm_prep_corpus`` materializes the exact-dedup survivor
-    set for its many consumers. ``localCheckpoint(eager=False)``
-    rather than ``persist()`` (r14, measured on a steady rig —
-    interleaved 4-variant A/B, calibration 1.74→1.65 across the run):
-    the checkpoint TRUNCATES the analyzed plan under every downstream
-    consumer (band join, verify sides, breaker count, status joins),
-    so each later action stops re-analyzing the ~1 MB extract/URL-window
-    tree — llm_prep_spans 15.6→12.9 s med, llm_prep_spans_clean
-    18.4→13.8 s, llm_prep_pipeline 7.2→6.3 s, results bit-identical
-    (guide §3.3/§5: materialize an intermediate to truncate a huge
-    plan). Same materialization barrier as the persist it replaces;
-    ``cache_registry`` callers free either with ``cacheutil.release``.
-    Trade-off: a lost executor cannot recompute a localCheckpointed
-    partition, so when the caller signals a fault-prone/long-run
-    posture by passing ``checkpoint_dir`` (the same signal
-    ``connected_components`` uses to pick reliable checkpoints, ADVICE
-    r14) this seam falls back to ``df.persist()`` — recomputable on
-    executor loss, at the plan-analysis cost. The local/bench posture
-    (``checkpoint_dir=None``) keeps the checkpoint."""
-    if checkpoint_dir is not None:
-        return df.persist()
-    return df.localCheckpoint(eager=False)
-
 
 def clean_corpus(
     docs: DataFrame,
@@ -176,7 +151,6 @@ def llm_prep_corpus(
     near_dup: str = "verified",
     text_col: str | None = None,
     near_dup_candidate_budget: int | None = None,
-    cache_registry: list | None = None,
 ) -> DataFrame:
     """The whole training-data preparation flow in one call — the
     integration the pillar operators exist for (r07 verdict item 5).
@@ -184,7 +158,10 @@ def llm_prep_corpus(
     carries the eval set in the same shape (id, html). Output: all
     ``docs`` columns + ``status`` (the FIRST stage that removed the
     doc, mutually exclusive, in production stage order) + ``split``
-    (train/val/test for kept docs, '-' otherwise).
+    (train/val/test for kept docs, '-' otherwise). The survivor set
+    behind the output is held (``cacheutil.hold``, scope
+    ``llm_survivors``) until the next call, which frees it: collect
+    the output before calling again.
 
     Stage order and why (each stage sees only prior survivors):
 
@@ -304,16 +281,21 @@ def llm_prep_corpus(
         # Materialize the survivor set for its many lineage consumers.
         # verified: breaker count, band join, verify sides, s2/labeled
         # status joins — measured 2.06× at sf1 (r13, BASELINE addendum
-        # 2; caller-owned lifetime, see below). lsh_components: the
-        # r12/r14 PERSIST A/Bs found no win (fewer consumers), but under
-        # the localCheckpoint seam the win is plan TRUNCATION — the band
-        # pipeline, singleton join and status joins stop re-analyzing
-        # the extract/URL-window tree per action: llm_prep_spans_lsh
-        # 14.96–17.3 s lazy vs 11.95–14.25 s materialized (r14, 4/4
-        # adjacent pairs, parity-checked).
-        exact_kept = _materialize_survivors(exact_kept, checkpoint_dir)
-        if cache_registry is not None:
-            cache_registry.append(exact_kept)
+        # 2). lsh_components: the r12/r14 PERSIST A/Bs found no win
+        # (fewer consumers), but under the localCheckpoint seam the win
+        # is plan TRUNCATION — the band pipeline, singleton join and
+        # status joins stop re-analyzing the extract/URL-window tree per
+        # action: llm_prep_spans_lsh 14.96–17.3 s lazy vs 11.95–14.25 s
+        # materialized (r14, 4/4 adjacent pairs, parity-checked). A lazy
+        # localCheckpoint rather than persist (r14, interleaved A/B):
+        # the truncation also took llm_prep_spans 15.6→12.9 s med and
+        # llm_prep_pipeline 7.2→6.3 s. A lost executor cannot recompute
+        # a localCheckpointed partition, so the fault-prone posture that
+        # ``checkpoint_dir`` signals persists instead (recomputable, at
+        # the plan-analysis cost).
+        exact_kept = hold(
+            "llm_survivors", exact_kept, checkpoint=checkpoint_dir is None
+        )
     exact_winners = exact_kept.select(id_col).withColumn(
         "__exact_keep", F.lit(True)
     )
@@ -330,21 +312,15 @@ def llm_prep_corpus(
         # while the breaker + band join + verify consumers run —
         # without it the count pass re-executes the whole upstream.
         #
-        # LIFETIME (r13 ADVICE; semantics updated for the r14
-        # localCheckpoint seam, ADVICE r14): the materialized survivor
-        # set also feeds the returned plan's LAZY consumers (band join,
-        # verify, the s2 status joins), so it cannot be released here.
-        # ``cache_registry`` receives the materialized frame; once the
-        # returned DataFrame is consumed, call ``cacheutil.release`` on
-        # the registry entry to free its blocks under either posture
-        # (``.unpersist()`` frees the ``checkpoint_dir`` posture's
-        # persist but is a no-op on the default localCheckpoint).
-        # r13: persist unconditionally — the survivor set's lineage
-        # (extraction + URL window + digest group-min) feeds the band
-        # join, the verify join's both sides and the s2 status joins
-        # even when no budget is armed: measured A/B at sf1, the
-        # persist takes llm_prep_pipeline 32.6 -> 15.8 s med (2.06x;
-        # BASELINE r13 addendum 2). Same caller-owned lifetime.
+        # The materialized survivor set also feeds the returned plan's
+        # LAZY consumers (band join, verify, the s2 status joins), so
+        # it stays held until the next call. r13: materialize
+        # unconditionally — the survivor set's lineage (extraction +
+        # URL window + digest group-min) feeds the band join, the
+        # verify join's both sides and the s2 status joins even when
+        # no budget is armed: measured A/B at sf1, the persist takes
+        # llm_prep_pipeline 32.6 -> 15.8 s med (2.06x; BASELINE r13
+        # addendum 2).
         pairs = near_dup_pairs_minhash(
             exact_kept, id_col, "__text",
             shingle_size=shingle_size, threshold=jaccard_threshold,

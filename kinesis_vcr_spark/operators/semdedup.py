@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 
 import math
 
-from kinesis_vcr_spark.cacheutil import truncate
+from kinesis_vcr_spark.cacheutil import hold, release, truncate
 from kinesis_vcr_spark.operators.components import connected_components
 from kinesis_vcr_spark.operators.ivf import assign_centroid, train_centroids
 from kinesis_vcr_spark.operators.similarity import pandas_cosine
@@ -106,14 +106,14 @@ def semantic_dedup(
         df, k=k_clusters, id_col=id_col, vec_col=vec_col,
         refine_iterations=refine_iterations,
     )
-    # persist: `assigned` feeds BOTH the pair self-join and the final
+    # held: `assigned` feeds BOTH the pair self-join and the final
     # verdict join, which share no exchange — without this the scan +
     # assignment-UDF matmul run once per branch
-    assigned = df.select(
+    assigned = hold("semantic_dedup", df.select(
         F.col(id_col),
         F.col(vec_col).alias("vec"),
         assign_centroid(F.col(vec_col), centroids).alias("cid"),
-    ).persist()
+    ))
     pairs = intra_cluster_pairs(
         assigned, id_col, threshold, max_cluster_members
     )
@@ -126,7 +126,7 @@ def semantic_dedup(
     # input. Materialize that projection, then release the embeddings
     # cache before returning — no session-lifetime leak (ADVICE r03).
     ids = truncate(assigned.select(id_col, "cid"), checkpoint_dir)
-    assigned.unpersist()
+    release(assigned)
     return (
         ids
         .join(comp, id_col, "left")

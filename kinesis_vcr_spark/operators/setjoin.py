@@ -62,6 +62,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from kinesis_vcr_spark.cacheutil import hold
+
 
 def jaccard_join_exact(
     df: DataFrame,
@@ -95,26 +97,21 @@ def jaccard_join_exact(
     """
     if not 0 < threshold_pct <= 100:
         raise ValueError(f"threshold_pct in (0, 100], got {threshold_pct}")
-    # persist: the skinny exploded token table feeds FOUR branches
+    # held: the skinny exploded token table feeds FOUR branches
     # (frequency table, prefix build, and both verification sides);
     # the upstream tokenization (often a shingle transform over the
     # full corpus) must run exactly once. Deliberately NOT the fat
     # array form — 3 skinny columns cache/scan far cheaper.
-    # Lifecycle (ADVICE r05): no unpersist hook exists after a lazily
-    # returned DataFrame's final action; multi-query sessions clear
-    # between queries (bench.py calls spark.catalog.clearCache()),
-    # otherwise storage-LRU eviction bounds the accumulation.
-    toks = (
+    toks = hold(
+        "jaccard_join_exact_tokens",
         df.select(
             F.col(id_col).alias("__id"),
             F.array_distinct(F.col(tokens_col)).alias("__toks"),
-        )
-        .select(
+        ).select(
             "__id",
             F.explode("__toks").alias("__tok"),
             F.size("__toks").alias("__sz"),
-        )
-        .persist()
+        ),
     )
     dfreq = toks.groupBy("__tok").agg(F.count(F.lit(1)).alias("__df"))
     # prefix = the (sz - ceil(sz*pct/100) + 1) globally-rarest tokens;
@@ -125,14 +122,14 @@ def jaccard_join_exact(
         - F.expr(f"(__sz * {threshold_pct} + 99) div 100")
         + 1
     )
-    # persist: `pref` is BOTH sides of the candidate self-join; the
+    # held: `pref` is BOTH sides of the candidate self-join; the
     # frequency join + per-doc window sort otherwise run twice
-    pref = (
+    pref = hold(
+        "jaccard_join_exact_prefix",
         toks.join(dfreq, "__tok")
         .withColumn("__rn", F.row_number().over(w))
         .where(F.col("__rn") <= plen)
-        .select("__id", "__tok", "__sz", "__rn")
-        .persist()
+        .select("__id", "__tok", "__sz", "__rn"),
     )
     a, b = pref.alias("a"), pref.alias("b")
     collisions = a.join(

@@ -41,7 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from kinesis_vcr_spark.cacheutil import truncate
+from kinesis_vcr_spark.cacheutil import hold, release, truncate
 
 
 def _simple_undirected(edges: DataFrame, src: str, dst: str) -> DataFrame:
@@ -109,14 +109,12 @@ def triangles(edges: DataFrame, src: str, dst: str) -> DataFrame:
     triangle ``(x, y, z)``, ordered by ``(degree, node)`` rank within
     the row (x = pivot = lowest rank). Each triangle appears exactly
     once."""
-    # persist: `oriented` feeds three join branches (both wedge sides
-    # and the closing edge list); the upstream dedup + two degree
-    # joins otherwise run once per branch. Lifecycle: no unpersist hook
-    # exists after a lazily returned DataFrame's final action — callers
-    # running many queries per session clear between queries
-    # (bench.py's spark.catalog.clearCache()); otherwise storage-LRU
-    # eviction bounds the cost (MEMORY_AND_DISK default)
-    oriented = _oriented(_simple_undirected(edges, src, dst)).persist()
+    # held: `oriented` feeds three join branches (both wedge sides and
+    # the closing edge list); the upstream dedup + two degree joins
+    # otherwise run once per branch
+    oriented = hold(
+        "triangles", _oriented(_simple_undirected(edges, src, dst))
+    )
     return _close_wedges(oriented, oriented)
 
 
@@ -168,7 +166,9 @@ def triangle_counts(
     ``AUTO_WEDGE_ROWS_PER_CHUNK`` — fixture scales resolve to the
     single-job plan."""
     spark = edges.sparkSession
-    oriented = _oriented(_simple_undirected(edges, src, dst)).persist()
+    oriented = hold(
+        "triangle_counts", _oriented(_simple_undirected(edges, src, dst))
+    )
     if pivot_chunks is None:
         # auto-size from the exact wedge count — one cheap aggregation
         # over the already-cached oriented table (Σ C(out_deg, 2)),
@@ -207,5 +207,5 @@ def triangle_counts(
     result = out.groupBy("node").agg(
         F.sum("triangles").alias("triangles")
     )
-    oriented.unpersist()  # partials are checkpointed; safe to drop
+    release(oriented)  # partials are checkpointed; safe to drop
     return result

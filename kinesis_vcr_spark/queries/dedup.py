@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kinesis_vcr_spark.cacheutil import hold
 from kinesis_vcr_spark.operators.dedup import (
     adaptive_minhash_bands,
     dedup_exact,
@@ -710,9 +711,10 @@ def doc_dup_span_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "text"
     )
     # two consumers (stats + stitching) of one tiny spans table: cache
-    # it so the gram pipeline runs once (documented lifecycle — bench
-    # clears cache between samples, same as setjoin/triangles)
-    spans = duplicated_spans(docs, min_len=SPAN_MIN_LEN).persist()
+    # it so the gram pipeline runs once
+    spans = hold(
+        "doc_dup_span_stats", duplicated_spans(docs, min_len=SPAN_MIN_LEN)
+    )
     # materialize NOW: the stats and stitching branches below otherwise
     # race to populate the cache inside one job and each evaluates the
     # full gram pipeline (measured 2x the query at sf0.1)
@@ -944,7 +946,8 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     # BASELINE r13 addenda.
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", quality_score(F.col("text")).alias("q")
-    ).persist()
+    )
+    docs = hold("dedup_keep_best", docs)
     pairs = near_dup_pairs_minhash(
         docs, "doc_id", "text", shingle_size=3, num_hashes=64, bands=16,
         threshold=J_THRESHOLD,

@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kinesis_vcr_spark.cacheutil import hold
 from kinesis_vcr_spark.functions.text import CONTROL_CHARS, LANGS, STOPWORDS
 from kinesis_vcr_spark.queries import QuerySpec, register
 from kinesis_vcr_spark.tables import load_table
@@ -423,61 +424,38 @@ def llm_prep_spans(
             E2E_SPANS_CANDIDATE_BUDGET if near_dup == "verified" else None
         ),
     )
-    # kept is the small survivor table with the ENTIRE pipeline
-    # (LSH + components + windows) as lineage, and the span stage
-    # reads it three times (gate count, spans, stitch join) — persist
-    # it or every consumer re-executes the pipeline (measured 3x the
-    # query at sf0.1, the same multiplicative-recompute trap the
-    # pipeline's own exact-dedup stage documents)
-    kept = _materialize_kept(
+    return _span_stage(
         out.where(F.col("status") == "kept").select(
             "doc_id",
             "split",
             canonicalize_text(html_to_text(F.col("html"))).alias("__text"),
         )
     )
-    return _span_stage(kept)
-
-
-def _materialize_kept(df: DataFrame) -> DataFrame:
-    """How the spans queries materialize the kept survivor frame for
-    the span stage's three consumers (gate count, spans, stitch join).
-    ``persist()`` — deliberately NOT ``localCheckpoint`` like the
-    pipeline's survivor seam: the decomposed r14 A/B (steady rig,
-    4 variants × 3 cycles) measured checkpointing THIS frame slower
-    (llm_prep_spans 12.9→14.5 s med with kept checkpointed) — the span
-    stage re-scans kept heavily (two gram explodes + the stitch join),
-    and the columnar InMemoryRelation reads beat row-based RDD-scan
-    reads there, while kept's own plan is already truncated by the
-    survivor checkpoint below it. Module-level so the A/B protocol can
-    flip it per rep in one session.
-
-    Tracked under the ``llm_kept`` cacheutil scope (ADVICE r14): each
-    spans-query invocation evicts the previous invocation's kept cache,
-    so a long-lived session holds at most one — bench behavior is
-    unchanged (it already clears cache between samples)."""
-    from kinesis_vcr_spark.cacheutil import evict_tracked, persist_tracked
-
-    evict_tracked("llm_kept")
-    return persist_tracked("llm_kept", df)
 
 
 def _span_stage(kept: DataFrame) -> DataFrame:
-    """Duplicate-span stats + removal over a persisted kept frame
-    (doc_id, split, __text) — the shared tail of ``llm_prep_spans``
-    and ``llm_prep_spans_clean``."""
+    """Duplicate-span stats + removal over the kept frame (doc_id,
+    split, __text) — the shared tail of ``llm_prep_spans`` and
+    ``llm_prep_spans_clean``."""
     from kinesis_vcr_spark.operators.spandedup import (
         duplicated_spans,
         remove_duplicated_spans,
     )
 
+    # kept is the small survivor table with the ENTIRE pipeline
+    # (LSH + components + windows) as lineage, and the span stage
+    # reads it three times (gate count, spans, stitch join) — persist
+    # it or every consumer re-executes the pipeline (measured 3x the
+    # query at sf0.1, the same multiplicative-recompute trap the
+    # pipeline's own exact-dedup stage documents)
+    # persist, not checkpoint: r14 A/B measured llm_prep_spans 12.9→14.5 s
+    kept = hold("llm_prep_spans_kept", kept)
     # one spans table, two consumers (stats + stitching): persist +
-    # materialize so the gram pipeline runs once (the documented
-    # lifecycle of queries/dedup.py's doc_dup_span_stats — bench
-    # clears cache between samples)
-    spans = duplicated_spans(
-        kept, "doc_id", "__text", min_len=E2E_SPAN_L
-    ).persist()
+    # materialize so the gram pipeline runs once
+    spans = hold(
+        "llm_prep_spans_spans",
+        duplicated_spans(kept, "doc_id", "__text", min_len=E2E_SPAN_L),
+    )
     spans.count()
     stats = spans.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_spans"),
@@ -704,12 +682,11 @@ def llm_prep_spans_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
         quality_threshold=E2E_CLEAN_Q, jaccard_threshold=E2E_J,
         decontam_n=E2E_N, split_seed=E2E_SEED, text_col="__clean",
     )
-    kept = _materialize_kept(
+    return _span_stage(
         out.where(F.col("status") == "kept").select(
             "doc_id", "split", F.col("__clean").alias("__text")
         )
     )
-    return _span_stage(kept)
 
 
 register(QuerySpec(

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kinesis_vcr_spark.cacheutil import hold
 from kinesis_vcr_spark.operators.similarity import ann_topk, cosine_topk
 from kinesis_vcr_spark.queries import QuerySpec, register
 from kinesis_vcr_spark.tables import load_table
@@ -495,7 +496,7 @@ def similarity_pq_manifold_rerank(spark: SparkSession, sf_dir: str) -> DataFrame
     # means, encode, ADC scan, re-rank fetch) — persist it or each one
     # re-executes the plant (measured 94 s cold at sf1 unpersisted;
     # the multiplicative-recompute discipline of llm_prep_spans)
-    corpus = corpus.persist()
+    corpus = hold("similarity_pq_manifold_rerank", corpus)
     n = corpus.count()
     r = max(4 * MAN_TOP_K, int(PQ_RERANK_CLUSTER_FACTOR * n / MAN_K) + 1)
     codebook = train_pq(corpus, m=32, ksub=32, refine_iterations=1)

@@ -48,7 +48,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from kinesis_vcr_spark import statefs
+from kinesis_vcr_spark import cacheutil, statefs
 from kinesis_vcr_spark.operators.triangles import _simple_undirected
 from kinesis_vcr_spark.streaming import ingest
 
@@ -134,12 +134,12 @@ def streaming_triangle_count(
         else:
             fresh = canon.join(old, ["a", "b"], "left_anti")
         # one pass computes the delta AND materializes the new edges
-        fresh = fresh.persist()
+        fresh = cacheutil.hold("streaming_triangle_count", fresh)
         try:
             row = triangle_delta(fresh, old).collect()[0]
             ingest.write_scope(fresh, edges_path, label)
         finally:
-            fresh.unpersist()
+            cacheutil.release(fresh)
         return {"triangles": row["delta"]}
 
     return ingest.start(edges, checkpoint_dir, lambda b, i: ingest.apply(

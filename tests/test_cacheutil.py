@@ -1,13 +1,16 @@
-"""Cache and checkpoint lifetime (kinesis_vcr_spark/cacheutil.py):
-tracked-persist scope isolation, eviction order and post-eviction
-recompute safety; the iterative loops' round rule — superseded rounds
-released, one log record per round, no extra jobs."""
+"""Cache and checkpoint lifetime (kinesis_vcr_spark/cacheutil.py): the
+one module that persists, checkpoints or frees; held-scope isolation,
+release order and post-release recompute safety; the iterative loops'
+round rule — superseded rounds released, one log record per round, no
+extra jobs."""
 
 from __future__ import annotations
 
 import gc
 import json
 import logging
+import re
+from pathlib import Path
 
 import pytest
 
@@ -18,38 +21,71 @@ from kinesis_vcr_spark.operators.kcore import kcore_nodes
 from kinesis_vcr_spark.operators.pagerank import pagerank_micro
 
 
-def test_scopes_evict_independently_and_results_survive(spark):
-    a = cacheutil.persist_tracked(
+def test_scopes_release_independently_and_results_survive(spark):
+    a = cacheutil.hold(
         "scope_a", spark.range(100).selectExpr("id", "id * 2 AS v")
     )
-    b = cacheutil.persist_tracked("scope_b", spark.range(50))
+    b = cacheutil.hold("scope_b", spark.range(50))
     assert a.count() == 100 and b.count() == 50
     assert a.storageLevel.useMemory and b.storageLevel.useMemory
 
-    cacheutil.evict_tracked("scope_a")
+    # the scope's next hold releases first, then holds the new frame
+    c = cacheutil.hold("scope_a", spark.range(7))
     assert not a.storageLevel.useMemory  # unpersisted
     assert b.storageLevel.useMemory  # other scope untouched
-    # evicted frames still COMPUTE correctly (cache loss, not data loss)
+    # released frames still COMPUTE correctly (cache loss, not data loss)
     assert a.where("v >= 100").count() == 50
-    assert cacheutil._TRACKED["scope_a"] == []
-
-    # a second tracked call in the same scope evicts-then-tracks one
-    cacheutil.evict_tracked("scope_b")
-    c = cacheutil.persist_tracked("scope_b", spark.range(7))
     assert c.count() == 7
-    assert len(cacheutil._TRACKED["scope_b"]) == 1
-    cacheutil.evict_tracked("scope_b")
+    assert cacheutil._HELD["scope_a"] is c
+
+    # release ends a hold early and the scope stops holding it
+    cacheutil.release(b)
+    assert not b.storageLevel.useMemory
+    assert "scope_b" not in cacheutil._HELD
+    cacheutil.release(c)
 
 
-def test_eviction_tolerates_dead_session_handles(spark):
-    # a handle whose unpersist raises must not break eviction
+def test_hold_tolerates_dead_session_handles(spark):
+    # a held handle whose unpersist raises must not break the next hold
     class Boom:
+        is_cached = True
+
         def unpersist(self, blocking=False):
             raise RuntimeError("session gone")
 
-    cacheutil._TRACKED["scope_x"] = [Boom()]
-    cacheutil.evict_tracked("scope_x")  # must not raise
-    assert cacheutil._TRACKED["scope_x"] == []
+    cacheutil._HELD["scope_x"] = Boom()
+    c = cacheutil.hold("scope_x", spark.range(3))  # must not raise
+    assert cacheutil._HELD["scope_x"] is c
+    cacheutil.release(c)
+
+
+def test_rehold_before_first_read_keeps_lazy_checkpoint_readable(spark):
+    # a lazy checkpoint no action has materialized holds no blocks, so
+    # the scope's next hold leaves it readable instead of breaking it
+    a = cacheutil.hold("scope_y", spark.range(20), checkpoint=True)
+    c = cacheutil.hold("scope_y", spark.range(3), checkpoint=True)
+    assert a.where("id >= 10").count() == 10
+    cacheutil.release(c)
+
+
+LIFETIME_CALL = re.compile(
+    r"\.persist\(|\.unpersist\(|\.cache\(|localCheckpoint\(|"
+    r"\.checkpoint\(|setCheckpointDir"
+)
+
+
+def test_only_cacheutil_persists_checkpoints_or_frees():
+    """One module owns every frame's lifetime: a persist, checkpoint or
+    free anywhere else in the engine bypasses the held scopes and the
+    round rule."""
+    own = Path(cacheutil.__file__).resolve()
+    pkg = own.parent
+    offenders = sorted(
+        str(p.relative_to(pkg))
+        for p in pkg.rglob("*.py")
+        if p.resolve() != own and LIFETIME_CALL.search(p.read_text())
+    )
+    assert offenders == []
 
 
 def _chain(spark, n, a="src", b="dst"):

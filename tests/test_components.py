@@ -75,9 +75,11 @@ def test_random_graphs_match_union_find(spark):
 def test_durable_checkpoint_path(spark, tmp_path, count_jobs):
     """checkpoint_dir switches per-round truncation to reliable
     checkpoint() files (executor-loss-safe at cluster scale); results
-    must be identical to the localCheckpoint path, and the durable
-    posture may cost no more jobs than before the round helper (25 on
-    this fixture: its extra job per round is the checkpoint write)."""
+    must be identical to the localCheckpoint path, the durable posture
+    may cost no more jobs than before the round helper (25 on this
+    fixture: its extra job per round is the checkpoint write), and each
+    call leaves at most the one checkpoint directory its returned frame
+    reads: every superseded round's ``rdd-*`` directory is deleted."""
     import os
 
     ckpt = str(tmp_path / "cc_ckpt")
@@ -92,5 +94,12 @@ def test_durable_checkpoint_path(spark, tmp_path, count_jobs):
     local = connected_components(df).collect()
     assert labels == {r["node"]: r["component"] for r in local}
     assert jobs <= 25, jobs
-    # reliable checkpoint files actually landed in the directory
-    assert any(os.scandir(ckpt))
+    again = connected_components(df, checkpoint_dir=ckpt).collect()
+    assert labels == {r["node"]: r["component"] for r in again}
+    # reliable checkpoint files actually landed in the directory, and
+    # only the returned frames' are left
+    rdd_dirs = [
+        d for _, dirs, _ in os.walk(ckpt) for d in dirs
+        if d.startswith("rdd-")
+    ]
+    assert 1 <= len(rdd_dirs) <= 2, rdd_dirs

@@ -112,21 +112,23 @@ def test_llm_prep_invalid_rows_labeled_and_quarantined(spark):
     assert got[3][0] == STATUS_KEPT
 
 
-def test_llm_prep_cache_registry_hands_over_materialized_survivors(spark):
+def test_llm_prep_survivors_held_until_next_call(spark):
     """The exact-dedup survivor set is materialized unconditionally in
     the verified mode (persist measured 2.06x at sf1 — BASELINE r13
-    addendum 2; r14 switched the seam to ``localCheckpoint`` to also
+    addendum 2; r14 switched it to a lazy ``localCheckpoint`` to also
     truncate the analyzed plan under every downstream consumer,
-    measured 15.6→12.9 s on llm_prep_spans). ``cache_registry`` still
-    receives the materialized DataFrame; its lineage must be TRUNCATED
-    (an RDD scan, not the extract/URL-window tree), the legacy
-    ``unpersist()`` call sites must keep working (a harmless no-op on
-    the checkpoint) and ``cacheutil.release`` on the entry frees its
-    blocks."""
-    from kinesis_vcr_spark.cacheutil import release
+    measured 15.6→12.9 s on llm_prep_spans). It is held under the
+    ``llm_survivors`` scope: its lineage must be TRUNCATED (an RDD
+    scan, not the extract/URL-window tree), ``unpersist()`` stays a
+    harmless no-op on the checkpoint, its blocks stay held after the
+    returned plan is collected, and the next call frees them."""
+    from kinesis_vcr_spark import cacheutil
     from kinesis_vcr_spark.operators.pipeline import llm_prep_corpus
 
     jsc = spark.sparkContext._jsc.sc()
+
+    def held():
+        return {i.id() for i in jsc.getRDDStorageInfo()}
 
     wrap = "<p>" + GOOD + "</p>"
     docs = spark.createDataFrame(
@@ -138,24 +140,23 @@ def test_llm_prep_cache_registry_hands_over_materialized_survivors(spark):
         [Row(doc_id=99, html="<p>benchmark page about nothing shared</p>")],
         "doc_id bigint, html string",
     )
+    prev = None
     for budget in (1_000_000, None):  # armed and unarmed both materialize
-        registry: list = []
         first = jsc.newRddId()
-        out = llm_prep_corpus(
-            docs, bench, near_dup_candidate_budget=budget,
-            cache_registry=registry,
-        )
-        assert len(registry) == 1
-        cached = registry[0]
-        # plan truncated: the handed-over frame scans the checkpointed
-        # RDD; the big upstream tree is gone from its lineage
-        plan = cached._jdf.queryExecution().optimizedPlan().toString()
+        out = llm_prep_corpus(docs, bench, near_dup_candidate_budget=budget)
+        if prev is not None:
+            assert prev not in held()  # this call freed the last one's
+        survivors = cacheutil._HELD["llm_survivors"]
+        # plan truncated: the held frame scans the checkpointed RDD; the
+        # big upstream tree is gone from its lineage
+        plan = survivors._jdf.queryExecution().optimizedPlan().toString()
         assert "ExistingRDD" in plan or "LogicalRDD" in plan
         assert "RegExpReplace" not in plan  # no extract tree below it
         out.collect()
-        cached.unpersist()  # legacy call sites must not raise
-        entry = cached._jdf.queryExecution().analyzed().rdd().id()
+        survivors.unpersist()  # a no-op on the checkpoint, must not raise
+        entry = survivors._jdf.queryExecution().analyzed().rdd().id()
         assert entry > first
-        assert entry in {i.id() for i in jsc.getRDDStorageInfo()}
-        release(cached)
-        assert entry not in {i.id() for i in jsc.getRDDStorageInfo()}
+        assert entry in held()
+        prev = entry
+    cacheutil.release(cacheutil._HELD["llm_survivors"])
+    assert prev not in held()

@@ -1,5 +1,8 @@
 """Exact triangle counting (operators/triangles.py)."""
 
+import gc
+
+import pytest
 from pyspark.sql import functions as F
 
 from kinesis_vcr_spark.operators.triangles import (
@@ -159,3 +162,35 @@ def test_pivot_chunked_counts_identical(spark):
         ).collect()
     }
     assert auto == plain
+
+
+@pytest.mark.parametrize("op", ["triangles", "triangle_counts"])
+def test_calls_hold_one_oriented_relation(spark, op):
+    """Each call holds its oriented edge table for the plan it returns
+    and releases the previous call's: over K4, K5 and K6 in one session
+    (GC off, so nothing else frees a block) one persisted RDD is left,
+    not one per call."""
+    sc = spark.sparkContext
+    first = sc._jsc.sc().newRddId()
+    gc.disable()
+    try:
+        for n in (4, 5, 6):
+            edges = spark.createDataFrame(
+                [(a, b) for a in range(n) for b in range(a + 1, n)],
+                "s long, d long",
+            )
+            if op == "triangles":
+                assert triangles(edges, "s", "d").count() == (
+                    n * (n - 1) * (n - 2) // 6
+                )
+            else:
+                per_node = (n - 1) * (n - 2) // 2
+                assert _counts(
+                    triangle_counts(edges, "s", "d", pivot_chunks=1)
+                ) == {v: per_node for v in range(n)}
+        persisted = [
+            i for i in sc._jsc.getPersistentRDDs().keys() if i > first
+        ]
+    finally:
+        gc.enable()
+    assert len(persisted) == 1, persisted
