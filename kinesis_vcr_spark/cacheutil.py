@@ -99,7 +99,15 @@ def truncate(
     ``checkpoint_dir`` an eager reliable ``checkpoint()`` into it."""
     if checkpoint_dir is None:
         return df.localCheckpoint(eager=eager)
-    df.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
+    sc = df.sparkSession.sparkContext
+    # every setCheckpointDir makes a new UUID directory under
+    # checkpoint_dir: set it only when the current one is elsewhere
+    Path = sc._jvm.org.apache.hadoop.fs.Path
+    want = Path(checkpoint_dir)
+    want = want.getFileSystem(sc._jsc.hadoopConfiguration()).makeQualified(want)
+    current = sc._jsc.sc().getCheckpointDir()
+    if not (current.isDefined() and want.equals(Path(current.get()).getParent())):
+        sc.setCheckpointDir(checkpoint_dir)
     return df.checkpoint()
 
 

@@ -4,6 +4,17 @@ Local test posture is ``local[N]`` (single JVM); production posture is a
 multi-executor cluster — every setting here is chosen to be correct for
 both (AQE on, UTC session timezone, Arrow enabled, shuffle partitions
 sized to cores locally / overridable for a cluster).
+
+Python workers fork from :mod:`kinesis_vcr_spark.pydaemon`
+(``spark.python.daemon.module``) instead of ``pyspark.daemon``. PySpark
+refreshes the import caches on every task, and before CPython 3.12 that
+re-parses all of ``pyspark.zip``'s directory in each zip importer: about
+0.25 CPU-s per task however small the task. The daemon re-reads an
+archive only when it has changed, so every Python task (Arrow and pandas
+UDFs, ``mapInArrow``, RDD functions) sheds that fixed cost. The
+package's parent directory is appended to
+``spark.executorEnv.PYTHONPATH`` so the workers can start the daemon
+whatever the driver's working directory.
 """
 
 from __future__ import annotations
@@ -11,6 +22,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# the directory that holds the package: workers import the daemon from it
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -100,9 +114,15 @@ def get_spark(
             "spark.driver.memory",
             os.environ.get("SPARK_GRAFT_DRIVER_MEM", "4g"),
         )
-    if extra_conf:
-        for k, v in extra_conf.items():
-            builder = builder.config(k, v)
+    # imported here, not at module level: ``python -m`` would otherwise
+    # find the daemon module already imported by the package's __init__
+    from kinesis_vcr_spark import pydaemon  # noqa: PLC0415
+
+    conf = {"spark.python.daemon.module": pydaemon.__name__, **(extra_conf or {})}
+    key = "spark.executorEnv.PYTHONPATH"
+    conf[key] = os.pathsep.join(p for p in (conf.get(key), _PACKAGE_PARENT) if p)
+    for k, v in conf.items():
+        builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -103,3 +103,6 @@ def test_durable_checkpoint_path(spark, tmp_path, count_jobs):
         if d.startswith("rdd-")
     ]
     assert 1 <= len(rdd_dirs) <= 2, rdd_dirs
+    # both calls reuse one checkpoint directory instead of setting a new
+    # UUID directory per round
+    assert len(os.listdir(ckpt)) == 1, os.listdir(ckpt)
