@@ -50,7 +50,16 @@ def main(argv: list[str] | None = None) -> int:
         # mutation a usage-error path has no business making
         from kinesis_vcr_spark.session import get_spark
 
-        return get_spark(f"kinesis-vcr-{verb}")
+        spark = get_spark(f"kinesis-vcr-{verb}")
+        # X5: a mistyped bucket stops every verb before its first job,
+        # instead of recording nowhere or quoting an empty range
+        # (KinesisRecorder.java:38-40, KinesisPlayer.java:70-73)
+        try:
+            config.preflight_archive(spark)
+        except FileNotFoundError as exc:
+            print(exc, file=sys.stderr)
+            raise SystemExit(2) from exc
+        return spark
 
     if verb == "estimate":
         args = list(argv[1:])
@@ -102,6 +111,9 @@ def main(argv: list[str] | None = None) -> int:
 
     if verb == "play":
         start, end = _parse_range(argv[1:], "play")
+        from kinesis_vcr_spark.functions.estimate import (
+            boto3_describe_stream_factory,
+        )
         from kinesis_vcr_spark.play import replay
         from kinesis_vcr_spark.sinks.kinesis import (
             boto3_put_records_factory,
@@ -110,6 +122,14 @@ def main(argv: list[str] | None = None) -> int:
 
         if not config.target_stream:
             print("VCR_TARGET_STREAM is required for play", file=sys.stderr)
+            return 2
+        describe_stream = boto3_describe_stream_factory()
+        try:
+            config.preflight_stream(describe_stream, config.target_stream)
+        except Exception as exc:  # whatever the client raises for a missing stream
+            print(
+                f"target stream {config.target_stream}: {exc}", file=sys.stderr
+            )
             return 2
         spark = get_session()
         writer = kinesis_partition_writer(

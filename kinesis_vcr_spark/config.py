@@ -10,7 +10,7 @@ replay parallelism).
 from __future__ import annotations
 
 import os
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 DEFAULT_BUFFER_SIZE_BYTES = 1024 * 1024 * 100  # 100 MB (VcrConfiguration.java:13)
 DEFAULT_BUFFER_TIME_MILLIS = 60_000  # 60 s (VcrConfiguration.java:15)
@@ -19,9 +19,8 @@ DEFAULT_BUFFER_TIME_MILLIS = 60_000  # 60 s (VcrConfiguration.java:15)
 MAX_BATCH_COUNT = 500
 MAX_BATCH_BYTES = 1_000_000
 
-# Retry budgets (KinesisPlayer.java:52, :250)
+# Put retry budget (KinesisPlayer.java:52)
 PUT_RETRY_BUDGET_SECONDS = 30.0
-LISTING_RETRY_BUDGET_SECONDS = 120.0
 
 # Replay write concurrency (KinesisPlayer.java:58)
 DEFAULT_REPLAY_PARALLELISM = 10
@@ -44,7 +43,6 @@ class VcrConfig:
     buffer_time_millis: int = DEFAULT_BUFFER_TIME_MILLIS
     checkpoint_location: str | None = None
     replay_parallelism: int = DEFAULT_REPLAY_PARALLELISM
-    extra: dict[str, str] = field(default_factory=dict)
 
     def __post_init__(self) -> None:
         # VcrConfiguration.java:37-45 — required values present, limits positive

@@ -17,8 +17,9 @@ from datetime import datetime
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kinesis_vcr_spark.sources.archive import list_archive_files
-from kinesis_vcr_spark.timeparse import humanize_minutes
+from kinesis_vcr_spark.sources.archive import _dt_filter, list_archive_files
+from kinesis_vcr_spark.streaming.record import read_manifest
+from kinesis_vcr_spark.timeparse import default_end, humanize_minutes, validate_range
 
 
 def count_open_shards(
@@ -60,6 +61,21 @@ class Estimate:
     open_shards: int
     minutes: int
     human: str
+
+
+def _estimate(
+    open_shards: int, totals: Callable[[], tuple[int, int]]
+) -> Estimate:
+    """Check the divisor, take ``(file_count, total_bytes)`` from
+    ``totals`` and quote the reference's replay time
+    (KinesisVcr.java:84-98)."""
+    if open_shards <= 0:
+        raise ValueError("open_shards must be positive")
+    file_count, total_bytes = totals()
+    minutes = replay_minutes(total_bytes, open_shards)
+    return Estimate(
+        file_count, total_bytes, open_shards, minutes, humanize_minutes(minutes)
+    )
 
 
 def estimate_agg(listing: DataFrame) -> DataFrame:
@@ -113,18 +129,12 @@ def estimate_replay_time(
                 "pass open_shards, or describe_stream + target_stream"
             )
         open_shards = count_open_shards(describe_stream, target_stream)
-    if open_shards <= 0:
-        raise ValueError("open_shards must be positive")
-    files = list_archive_files(spark, archive_path, start, end)
-    total_bytes = sum(size for _dt, _path, size, _mtime in files)
-    minutes = replay_minutes(total_bytes, open_shards)
-    return Estimate(
-        file_count=len(files),
-        total_bytes=total_bytes,
-        open_shards=open_shards,
-        minutes=minutes,
-        human=humanize_minutes(minutes),
-    )
+
+    def totals() -> tuple[int, int]:
+        files = list_archive_files(spark, archive_path, start, end)
+        return len(files), sum(size for _dt, _path, size, _mtime in files)
+
+    return _estimate(open_shards, totals)
 
 
 def estimate_from_manifest(
@@ -149,25 +159,11 @@ def estimate_from_manifest(
     F3's second-granularity mtime filter — for sub-day bounds prefer
     :func:`estimate_replay_time`.
     """
-    from kinesis_vcr_spark.sources.archive import _dt_filter
-    from kinesis_vcr_spark.streaming.record import read_manifest
-    from kinesis_vcr_spark.timeparse import default_end, validate_range
+    def totals() -> tuple[int, int]:
+        end_ = default_end(start, end)
+        validate_range(start, end_)
+        manifest = read_manifest(spark, manifest_path).where(_dt_filter(start, end_))
+        sizes = manifest.withColumnRenamed("byte_size", "file_size")
+        return tuple(estimate_agg(sizes).collect()[0])
 
-    if open_shards <= 0:
-        raise ValueError("open_shards must be positive")
-    end = default_end(start, end)
-    validate_range(start, end)
-    manifest = read_manifest(spark, manifest_path)
-    pruned = manifest.where(_dt_filter(start, end))
-    row = pruned.agg(
-        F.count("*").alias("file_count"),
-        F.coalesce(F.sum("byte_size"), F.lit(0)).alias("total_bytes"),
-    ).collect()[0]
-    minutes = replay_minutes(row["total_bytes"], open_shards)
-    return Estimate(
-        file_count=row["file_count"],
-        total_bytes=row["total_bytes"],
-        open_shards=open_shards,
-        minutes=minutes,
-        human=humanize_minutes(minutes),
-    )
+    return _estimate(open_shards, totals)

@@ -10,9 +10,9 @@ tool is "completely agnostic to the format of records on the wire").
 Archive layout: the reference writes ``{stream}/{yyyy-MM-dd}/{first}-{last}``
 (InjectableS3Emitter.java:37-42). We keep the queryable content identical
 but use Hive-style partitioning (``dt=yyyy-MM-dd``) so Catalyst's file
-index prunes partitions for free, and record the sequence ranges in a
-sidecar **manifest** table instead of filenames (SURVEY.md §7.4 decision
-1) — same information, idiomatic Spark.
+index prunes partitions for free; the layout itself is defined in
+:mod:`kinesis_vcr_spark.sources.archive`. The sequence ranges are also
+recorded in a sidecar **manifest** table (SURVEY.md §7.4 decision 1).
 """
 
 from __future__ import annotations
@@ -30,48 +30,16 @@ RECORD_SCHEMA = T.StructType(
     ]
 )
 
-#: What the archive text files contain: one base64 line per record,
-#: plus the Hive partition column.
-ARCHIVE_SCHEMA = T.StructType(
-    [
-        T.StructField("value", T.StringType(), False),
-        T.StructField("dt", T.DateType(), False),
-    ]
-)
-
-#: Sidecar manifest, one row per archive file — replaces the reference's
-#: ``{firstSeq}-{lastSeq}`` filename encoding (InjectableS3Emitter.java:63).
+#: Sidecar manifest, one row per ``{firstSeq}-{lastSeq}`` archive file
+#: (InjectableS3Emitter.java:63), as the record path writes it to parquet.
 MANIFEST_SCHEMA = T.StructType(
     [
-        T.StructField("dt", T.DateType(), False),
-        T.StructField("file_path", T.StringType(), False),
+        T.StructField("shard_id", T.StringType(), True),
+        T.StructField("dt", T.DateType(), True),
+        T.StructField("file_path", T.StringType(), True),
         T.StructField("first_seq", T.StringType(), True),
         T.StructField("last_seq", T.StringType(), True),
-        T.StructField("record_count", T.LongType(), False),
-        T.StructField("byte_size", T.LongType(), False),
+        T.StructField("record_count", T.LongType(), True),
+        T.StructField("byte_size", T.LongType(), True),
     ]
 )
-
-DT_FORMAT = "yyyy-MM-dd"  # T7: S3RecorderPipeline.java:25
-
-
-def archive_partition_path(archive_path: str, date_str: str) -> str:
-    """Path of one day's partition, Hive-style.
-
-    Reference equivalent: prefix ``{stream}/{yyyy-MM-dd}``
-    (KinesisPlayer.java:240). ``date_str`` must already be yyyy-MM-dd.
-    """
-    return f"{archive_path.rstrip('/')}/dt={date_str}"
-
-
-def seq_range_file_name(first_seq: str, last_seq: str) -> str:
-    """The reference's exact file naming (InjectableS3Emitter.java:37-42),
-    kept for archives that must be byte-layout compatible."""
-    return f"{first_seq}-{last_seq}"
-
-
-def parse_seq_range(file_name: str) -> tuple[str, str]:
-    """Invert :func:`seq_range_file_name` for foreign (reference-written)
-    archives; sequence numbers are decimal strings, '-'-separated."""
-    first, _, last = file_name.partition("-")
-    return first, last

@@ -1,9 +1,10 @@
 """Count + byte-weight batching (reference B2).
 
 Re-implements the semantics of ``OperatorBufferKinesisBatch.java:19-118``
-as a pure-Python generator used inside ``mapPartitions`` /
-``foreachPartition`` writers — there is no Catalyst surface here; batching
-to sink API limits is procedural by nature (SURVEY.md §4).
+as a pure-Python generator used inside replay's per-partition writer
+(:func:`kinesis_vcr_spark.sinks.kinesis.kinesis_partition_writer`) —
+there is no Catalyst surface here; batching to sink API limits is
+procedural by nature (SURVEY.md §4). It is the only batch cut.
 
 Rules:
 

@@ -36,11 +36,13 @@ The driver never sees a file path or payload.
 
 from __future__ import annotations
 
-import os
-
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from kinesis_vcr_spark.model import MANIFEST_SCHEMA
+from kinesis_vcr_spark.sources.archive import write_shard_files
+
 
 def _seq_order() -> list:
     """Numeric order for decimal-string sequence numbers (unique per
@@ -90,7 +92,9 @@ def compact_archive(
     semantics disabled — it is a full replacement manifest.
     """
     plan = plan_compaction(manifest, target_bytes)
-    passthrough = plan.where(F.col("group_files") == 1).select(*manifest.columns)
+    passthrough = plan.where(F.col("group_files") == 1).select(
+        *MANIFEST_SCHEMA.fieldNames()
+    )
     todo = plan.where(F.col("group_files") > 1)
 
     paths = [r["file_path"] for r in todo.select("file_path").collect()]
@@ -108,69 +112,23 @@ def compact_archive(
         )
     )
     with_meta = todo.select(
-        "shard_id",
-        F.col("dt").cast("string").alias("dt"),
-        "group_id",
-        "file_path",
-        "first_seq",
-        "last_seq",
+        "shard_id", "dt", "group_id", "file_path", "first_seq", "last_seq",
         "record_count",
     ).join(contents, "file_path")
 
-    out_schema = (
-        "shard_id string, dt string, file_path string, first_seq string,"
-        " last_seq string, record_count long, byte_size long"
-    )
-
     def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(
-            by="first_seq", key=lambda s: [(len(x), x) for x in s]
+        rows = write_shard_files(
+            compacted_root,
+            pdf["shard_id"].iat[0],
+            pdf["dt"].iat[0],
+            zip(pdf["first_seq"], pdf["last_seq"], pdf["record_count"], pdf["content"]),
         )
-        shard, dt = pdf["shard_id"].iat[0], pdf["dt"].iat[0]
-        payload = b"".join(pdf["content"])  # files already newline-terminated
-        first = pdf["first_seq"].iat[0]
-        last = pdf["last_seq"].iat[-1]
-        # mirror the recorder's layout (streaming/record.py): the shard
-        # component is already filesystem-safe in manifest paths
-        part_dir = os.path.join(compacted_root, f"dt={dt}", f"shard={shard}")
-        os.makedirs(part_dir, exist_ok=True)
-        path = os.path.join(part_dir, f"{first}-{last}")
-        with open(path, "wb") as fh:  # idempotent: same name ⇒ same bytes
-            fh.write(payload)
-        return pd.DataFrame(
-            {
-                "shard_id": [shard],
-                "dt": [dt],
-                "file_path": [path],
-                "first_seq": [first],
-                "last_seq": [last],
-                "record_count": [int(pdf["record_count"].sum())],
-                "byte_size": [len(payload)],
-            }
-        )
+        return pd.DataFrame(list(rows), columns=MANIFEST_SCHEMA.fieldNames())
 
-    merged = (
-        with_meta.groupBy("shard_id", "dt", "group_id")
-        .applyInPandas(merge, out_schema)
-        .select(
-            "shard_id",
-            F.col("dt").cast("date").alias("dt"),
-            "file_path",
-            "first_seq",
-            "last_seq",
-            "record_count",
-            "byte_size",
-        )
+    merged = with_meta.groupBy("shard_id", "dt", "group_id").applyInPandas(
+        merge, MANIFEST_SCHEMA
     )
-    return passthrough.select(
-        "shard_id",
-        F.col("dt").cast("date").alias("dt"),
-        "file_path",
-        "first_seq",
-        "last_seq",
-        "record_count",
-        "byte_size",
-    ).unionByName(merged)
+    return passthrough.unionByName(merged)
 
 
 def _hadoop_fs(spark: SparkSession, path: str):

@@ -25,92 +25,10 @@ from __future__ import annotations
 from dataclasses import dataclass
 from datetime import datetime
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
+from pyspark.sql import SparkSession
 
-from kinesis_vcr_spark.config import (
-    DEFAULT_REPLAY_PARALLELISM,
-    MAX_BATCH_BYTES,
-    MAX_BATCH_COUNT,
-)
+from kinesis_vcr_spark.config import DEFAULT_REPLAY_PARALLELISM
 from kinesis_vcr_spark.sources.archive import read_archive
-
-REPLAY_BATCH_SCHEMA = T.StructType(
-    [
-        T.StructField("partition_id", T.IntegerType(), False),
-        T.StructField("batch_index", T.IntegerType(), False),
-        T.StructField("record_count", T.IntegerType(), False),
-        T.StructField("byte_count", T.LongType(), False),
-    ]
-)
-
-
-def replay_batch_plan(
-    records: DataFrame,
-    max_count: int = MAX_BATCH_COUNT,
-    max_bytes: int = MAX_BATCH_BYTES,
-) -> DataFrame:
-    """Materialize the batching decision as a DataFrame (AWS-free).
-
-    One row per would-be PutRecords call: (partition_id, batch_index,
-    record_count, byte_count). This is the reference's B2 operator made
-    observable — used by tests (batch-limit invariants) and by the bench
-    (replay throughput without a live stream). Oversize records are
-    dropped exactly as in OperatorBufferKinesisBatch.java:78-81.
-
-    Only record LENGTHS cross into Python (``octet_length`` projected
-    JVM-side, Arrow-batched `mapInPandas`): the r06 sf10 scale run
-    caught the previous shape — full payload bytes through the pickled
-    RDD path just to take ``len()`` — going 18× at 10× data. The
-    greedy two-cap fold is evaluated exactly but VECTORIZED: with
-    oversize records dropped up front, each batch's end is
-    ``min(start + max_count, first index whose prefix-sum exceeds
-    start_bytes + max_bytes)`` — one ``searchsorted`` per emitted
-    batch (~n/max_count iterations), identical output to
-    :func:`~kinesis_vcr_spark.operators.batching.iter_batches`
-    (parity-tested in tests/test_record_replay.py).
-    """
-    import pyspark.sql.functions as F
-
-    sizes = records.select(F.octet_length("data").alias("sz"))
-
-    def plan(batches):
-        import numpy as np
-        import pandas as pd
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        chunks = [pdf["sz"].to_numpy(dtype=np.int64) for pdf in batches]
-        sz = (
-            np.concatenate(chunks) if chunks else np.empty(0, dtype=np.int64)
-        )
-        sz = sz[sz <= max_bytes]  # oversize drop (:78-81)
-        psum = np.concatenate(([0], np.cumsum(sz)))
-        counts: list[int] = []
-        bytes_: list[int] = []
-        s = 0
-        n = len(sz)
-        while s < n:
-            # first index that would push the batch past max_bytes;
-            # flush-before-add semantics (:75-92) — the batch is
-            # [s, e) with e > s guaranteed (every record <= max_bytes)
-            e = int(
-                np.searchsorted(psum, psum[s] + max_bytes, side="right") - 1
-            )
-            e = min(max(e, s + 1), s + max_count, n)
-            counts.append(e - s)
-            bytes_.append(int(psum[e] - psum[s]))
-            s = e
-        yield pd.DataFrame(
-            {
-                "partition_id": np.full(len(counts), pid, dtype=np.int32),
-                "batch_index": np.arange(len(counts), dtype=np.int32),
-                "record_count": np.array(counts, dtype=np.int32),
-                "byte_count": np.array(bytes_, dtype=np.int64),
-            }
-        )
-
-    return sizes.mapInPandas(plan, REPLAY_BATCH_SCHEMA)
 
 
 @dataclass

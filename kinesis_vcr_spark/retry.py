@@ -5,7 +5,7 @@ predicate matches the thrown error, sleeping ``base * 2^n`` seconds per
 attempt, clamped so it never oversleeps the remaining budget; return
 ``None`` when the budget is exhausted.
 
-Used inside ``foreachPartition`` writers (the sink side); Spark task
+Used inside replay's per-partition writers (the sink side); Spark task
 retries (``spark.task.maxFailures``) cover the read side.
 """
 

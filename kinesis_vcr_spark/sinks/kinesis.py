@@ -125,7 +125,8 @@ def kinesis_partition_writer(
     rate_limit_bytes_per_s: float | None = None,
     bucket_factory=None,
 ):
-    """Build a ``foreachPartition`` function writing ``data`` rows to Kinesis.
+    """Build a per-partition :func:`~kinesis_vcr_spark.play.replay` writer
+    that puts ``data`` rows to Kinesis.
 
     ``put_records_factory`` is called once per partition ON THE EXECUTOR
     (boto3 clients aren't picklable); pass e.g.

@@ -1,5 +1,13 @@
-"""Archive read path — pruned scan, time filter, decode (reference S2/S3,
-F2/F3/F7, T3).
+"""The archive format: line encoding, file layout, listing and the read
+path — pruned scan, time filter, decode (reference S2/S3, F2/F3/F7, T2/T3).
+
+Every archive line is ``base64(data)`` (:func:`encode_lines`, decoded by
+:func:`read_archive`). Files live under ``<root>/dt=yyyy-MM-dd/``: the
+text sink writes ``part-*`` files there, and :func:`write_shard_files`
+writes the reference's ``{firstSeq}-{lastSeq}`` names one directory
+down, under ``shard=<id>`` (InjectableS3Emitter.java:37-42). The
+recorder, compaction and :func:`list_archive_files` all go through this
+module for that layout.
 
 The reference replays by enumerating one S3 prefix per day in range
 (KinesisPlayer.java:219-221), filtering objects to
@@ -21,7 +29,10 @@ file split with no driver-side iteration.
 from __future__ import annotations
 
 import calendar
-from datetime import datetime
+import os
+import re
+from collections.abc import Iterable, Iterator
+from datetime import date, datetime
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -113,6 +124,22 @@ def read_archive(
     return lines.select(F.unbase64("value").alias("data"), "dt")
 
 
+def encode_lines(records: DataFrame, *keep: str, dt: Column | None = None) -> DataFrame:
+    """The archive line encoding (T2, S3RecorderPipeline.java:52-57):
+    ``value`` = base64 of ``data``, one line per record, next to its
+    ``dt`` partition date and the ``keep`` columns. :func:`read_archive`
+    decodes it.
+
+    ``dt`` defaults to the WRITE date (processing time), matching
+    ``Clock.systemUTC()`` at flush (InjectableS3Emitter.java:40) — not
+    record event time; a replay range can miss late-recorded data, by
+    design (SURVEY.md §4 quirk 3).
+    """
+    if dt is None:
+        dt = F.to_date(F.current_timestamp())
+    return records.select(F.base64("data").alias("value"), dt.alias("dt"), *keep)
+
+
 def write_archive(
     records: DataFrame,
     archive_path: str,
@@ -122,21 +149,87 @@ def write_archive(
     """Batch-write envelope records as a date-partitioned base64 archive.
 
     Test/backfill counterpart of the streaming record path
-    (:mod:`kinesis_vcr_spark.streaming.record`): encodes ``data`` to one
-    base64 line per record (T2, S3RecorderPipeline.java:52-57) under
-    ``dt=yyyy-MM-dd``. ``dt_from`` names the timestamp column that stands
-    in for write time (the reference stamps processing time,
-    InjectableS3Emitter.java:40).
+    (:mod:`kinesis_vcr_spark.streaming.record`): the text sink's
+    ``part-*`` files under ``dt=yyyy-MM-dd``. ``dt_from`` names the
+    timestamp column that stands in for write time (the reference
+    stamps processing time, InjectableS3Emitter.java:40).
     """
     (
-        records.select(
-            F.base64(F.col("data")).alias("value"),
-            F.to_date(F.col(dt_from)).alias("dt"),
-        )
+        encode_lines(records, dt=F.to_date(F.col(dt_from)))
         .write.mode(mode)
         .partitionBy("dt")
         .text(archive_path)
     )
+
+
+_SHARD_DIR = "shard="
+
+
+def _day_dir(root: str, dt: date) -> str:
+    return f"{root.rstrip('/')}/dt={dt}"
+
+
+def parse_seq_range(file_name: str) -> tuple[str, str]:
+    """Invert a ``{firstSeq}-{lastSeq}`` file name (sequence numbers are
+    decimal strings)."""
+    first, _, last = file_name.partition("-")
+    return first, last
+
+
+def write_shard_files(
+    root: str,
+    shard_id: str | None,
+    dt: date,
+    pieces: Iterable[tuple[str, str, int, bytes]],
+    max_file_bytes: int | None = None,
+) -> Iterator[tuple]:
+    """Write one shard's lines for one day as ``{firstSeq}-{lastSeq}``
+    files and yield each file's manifest row.
+
+    This is the exact-naming writer of InjectableS3Emitter.java:37-42
+    (SURVEY.md §7.4 decision 1). ``pieces`` are ``(first_seq, last_seq,
+    record_count, lines)``, ``lines`` newline-terminated archive lines:
+    one record each from the recorder, one whole file each from
+    compaction. They are written in numeric sequence order (a shorter
+    decimal string is a smaller number). Files go under
+    ``dt=…/shard=<id>/``: Kinesis sequence numbers are unique only PER
+    SHARD, so a shard-less name could collide across shards and silently
+    overwrite (ADVICE r02). Every character of the id outside
+    ``[A-Za-z0-9-]`` becomes ``-``, so the directory is one level deep
+    and visible to Spark's file index (no leading ``_`` or ``.``).
+
+    ``max_file_bytes`` is B1's byte bound (100 MB default in the
+    reference, VcrConfiguration.java:13): pieces are cut into
+    sequence-contiguous files of at most that size. A piece is never
+    split, so one larger than the bound gets its own (oversized) file —
+    the record side never drops data, unlike the replay batcher's 1 MB
+    drop rule.
+
+    Yields ``MANIFEST_SCHEMA`` tuples. Writes with plain file IO — local
+    paths / NFS here; an S3 deployment swaps in a boto3 put.
+    """
+    files: list[list] = []
+    size = 0
+    for piece in sorted(pieces, key=lambda p: (len(p[0]), p[0])):
+        n = len(piece[3])
+        if not files or (max_file_bytes is not None and size + n > max_file_bytes):
+            files.append([])
+            size = 0
+        files[-1].append(piece)
+        size += n
+    part_dir = (
+        f"{_day_dir(root, dt)}/{_SHARD_DIR}"
+        + re.sub(r"[^A-Za-z0-9-]", "-", str(shard_id))
+    )
+    os.makedirs(part_dir, exist_ok=True)
+    for chunk in files:
+        first, last = chunk[0][0], chunk[-1][1]
+        path = f"{part_dir}/{first}-{last}"
+        payload = b"".join(p[3] for p in chunk)
+        with open(path, "wb") as fh:  # idempotent: same name ⇒ same bytes
+            fh.write(payload)
+        count = sum(p[2] for p in chunk)
+        yield (shard_id, dt, path, first, last, count, len(payload))
 
 
 def list_archive_files(
@@ -176,9 +269,7 @@ def list_archive_files(
 
     def list_day(day: datetime) -> list[tuple]:
         day_rows = []
-        path = jvm.org.apache.hadoop.fs.Path(
-            f"{archive_path.rstrip('/')}/dt={day.strftime('%Y-%m-%d')}"
-        )
+        path = jvm.org.apache.hadoop.fs.Path(_day_dir(archive_path, day.date()))
         fs = path.getFileSystem(conf)
         if not fs.exists(path):
             return day_rows
@@ -200,13 +291,13 @@ def list_archive_files(
             )
 
         # explicit two-level walk: flat files (text-sink layout) plus
-        # one level of shard=<id> subdirs (manifest-writer layout).
+        # one level of shard=<id> subdirs (write_shard_files layout).
         # A fully recursive listFiles iterator stats every entry through
         # the RemoteIterator protocol and measured ~2x slower on the
         # flat case — and would happily descend into unrelated nesting.
         for st in fs.listStatus(path):
             if st.isDirectory():
-                if st.getPath().getName().startswith("shard="):
+                if st.getPath().getName().startswith(_SHARD_DIR):
                     for sub in fs.listStatus(st.getPath()):
                         if not sub.isDirectory():
                             add_file(sub)

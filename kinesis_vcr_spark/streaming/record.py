@@ -25,33 +25,49 @@ Semantic deltas, by design (SURVEY.md §7.4):
   (InjectableS3Emitter.java:56-59). Replays of reference-written
   archives can carry duplicates → see
   :func:`kinesis_vcr_spark.operators.dedup.dedup_exact`.
-- Sequence ranges land in a manifest table, not filenames.
+
+Two recorders write the archive. :func:`record_stream` is the shape
+above: Spark's ``part-*`` file names, and no manifest.
+:func:`record_stream_with_manifest` keeps the reference's
+``{firstSeq}-{lastSeq}`` file names under ``dt=…/shard=<id>/`` and
+appends one manifest row per file (:func:`write_archive_with_manifest`).
+The line format and file layout of both belong to
+:mod:`kinesis_vcr_spark.sources.archive`.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from kinesis_vcr_spark.config import VcrConfig
+from kinesis_vcr_spark.model import MANIFEST_SCHEMA
+from kinesis_vcr_spark.sources.archive import encode_lines, write_shard_files
 
 
-def encode_archive_rows(records: DataFrame, filter_expr: Column | None = None) -> DataFrame:
-    """Envelope records → (value=base64(data), dt=processing-time date).
-
-    ``dt`` is the WRITE date (processing time), matching
-    ``Clock.systemUTC()`` at flush (InjectableS3Emitter.java:40) — not
-    record event time; a replay range can miss late-recorded data, by
-    design (SURVEY.md §4 quirk 3).
-    """
-    df = records
-    if filter_expr is not None:  # F1 — the reference's IFilter slot
-        df = df.where(filter_expr)
-    return df.select(
-        F.base64(F.col("data")).alias("value"),
-        F.to_date(F.current_timestamp()).alias("dt"),
-    )
+def _start(
+    writer: DataStreamWriter,
+    config: VcrConfig,
+    trigger_seconds: float | None,
+    available_now: bool,
+) -> StreamingQuery:
+    """Checkpoint the record query and start it: every ``trigger_seconds``
+    (default: the reference's 60 s buffer time), or, with
+    ``available_now=True``, drain a bounded source and stop
+    (test/backfill mode)."""
+    if config.checkpoint_location is None:
+        raise ValueError("checkpoint_location is required for record()")
+    if trigger_seconds is None:
+        trigger_seconds = config.buffer_time_millis / 1000.0
+    writer = writer.option(
+        "checkpointLocation", config.checkpoint_location
+    ).outputMode("append")
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    else:
+        writer = writer.trigger(processingTime=f"{int(trigger_seconds)} seconds")
+    return writer.start()
 
 
 def record_stream(
@@ -66,96 +82,17 @@ def record_stream(
     ``source`` is any streaming DataFrame with a binary ``data`` column —
     the Kinesis DSv2 source in production, a file/rate source in tests
     (the source is pluggable exactly like the reference's connector
-    interfaces). Trigger interval defaults to the reference's buffer time
-    (60 s); ``available_now=True`` drains a bounded source and stops
-    (test/backfill mode).
+    interfaces). ``filter_expr`` is the reference's IFilter slot (F1).
     """
-    if config.checkpoint_location is None:
-        raise ValueError("checkpoint_location is required for record()")
-    if trigger_seconds is None:
-        trigger_seconds = config.buffer_time_millis / 1000.0
-
-    out = encode_archive_rows(source, filter_expr)
+    if filter_expr is not None:
+        source = source.where(filter_expr)
     writer = (
-        out.writeStream.format("text")
+        encode_lines(source)
+        .writeStream.format("text")
         .partitionBy("dt")
         .option("path", config.archive_path)
-        .option("checkpointLocation", config.checkpoint_location)
-        .outputMode("append")
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{int(trigger_seconds)} seconds")
-    return writer.start()
-
-
-def _archive_file_writer(archive_path: str, max_file_bytes: int | None = None):
-    """Per-partition executor function: write one ``{firstSeq}-{lastSeq}``
-    file per (shard_id, dt) group and yield its manifest row.
-
-    This is the exact-naming writer of InjectableS3Emitter.java:37-42
-    (SURVEY.md §7.4 decision 1): buffer order within a shard becomes
-    sequence order within the file. Grouping is by (shard_id, dt), NOT
-    by the shuffle partition: two shards hashed into the same partition
-    must land in separate files, and the shard lives in the path
-    (``dt=…/shard=<id>/first-last``) because Kinesis sequence numbers
-    are unique only PER SHARD — a shard-less ``{first}-{last}`` name
-    could collide across shards and silently overwrite (ADVICE r02).
-    ``max_file_bytes`` is B1's byte bound (100 MB default in the
-    reference, VcrConfiguration.java:13): a shard's batch is split into
-    sequence-contiguous files of at most that payload size — completing
-    the size half of the reference's size-OR-time flush (the time half
-    is the streaming trigger). A single record larger than the bound
-    still gets its own (oversized) file — the record side never drops
-    data, unlike the replay batcher's documented 1 MB drop rule.
-    Writes with plain file IO — local paths / NFS here; an S3 deployment
-    swaps in a boto3 put (same shape as the Kinesis sink factory).
-    """
-
-    def write_rows(rows):
-        import os
-        import re
-        from collections import defaultdict
-
-        groups: dict = defaultdict(list)
-        for r in rows:
-            groups[(r["shard_id"], str(r["dt"]))].append(
-                (r["sequence_number"], r["value"])
-            )
-        for (shard, dt), items in groups.items():
-            # decimal-string sequence numbers → numeric order
-            items.sort(key=lambda t: (len(t[0]), t[0]))
-            # keep the dir name visible to Spark's file index (no leading
-            # '_'/'.') while staying filesystem-safe
-            safe_shard = re.sub(r"[^A-Za-z0-9-]", "-", str(shard))
-            part_dir = os.path.join(
-                archive_path, f"dt={dt}", f"shard={safe_shard}"
-            )
-            os.makedirs(part_dir, exist_ok=True)
-            # greedy sequence-contiguous chunks of ≤ max_file_bytes
-            chunks: list[list] = [[]]
-            chunk_bytes = 0
-            for seq, val in items:
-                line_len = len(val) + 1  # newline per line
-                if (
-                    max_file_bytes is not None
-                    and chunks[-1]
-                    and chunk_bytes + line_len > max_file_bytes
-                ):
-                    chunks.append([])
-                    chunk_bytes = 0
-                chunks[-1].append((seq, val))
-                chunk_bytes += line_len
-            for chunk in chunks:
-                first, last = chunk[0][0], chunk[-1][0]
-                path = os.path.join(part_dir, f"{first}-{last}")
-                payload = ("\n".join(v for _, v in chunk) + "\n").encode()
-                with open(path, "wb") as fh:  # idempotent: same name ⇒ same bytes
-                    fh.write(payload)
-                yield (shard, dt, path, first, last, len(chunk), len(payload))
-
-    return write_rows
+    return _start(writer, config, trigger_seconds, available_now)
 
 
 def write_archive_with_manifest(
@@ -167,39 +104,50 @@ def write_archive_with_manifest(
     """One micro-batch (or batch backfill) → seq-range-named archive
     files + appended MANIFEST_SCHEMA rows.
 
-    Each file holds ONE shard's contiguous ``[firstSeq, lastSeq]`` range
-    under ``dt=…/shard=<id>/`` — the writer groups by (shard_id, dt)
-    like the reference's per-shard KCL buffers (SURVEY.md §1.4). The
-    manifest is written AS A DISTRIBUTED DataFrame straight from the
-    writer's RDD — at 10^6 archive files a ``collect()`` of per-file
-    rows would spike driver memory for no reason (VERDICT r02 item 5).
-    Batch replays can re-run, so manifest readers dedup by ``file_path``
-    (see :func:`read_manifest`).
+    Records are shuffled by shard; each task writes its shards' files
+    with :func:`~kinesis_vcr_spark.sources.archive.write_shard_files`,
+    one (shard_id, dt) group at a time like the reference's per-shard
+    KCL buffers (SURVEY.md §1.4). Two shards hashed into the same
+    partition still land in separate files. Lines reach Python as Arrow
+    batches, and the manifest rows go straight from the writing tasks
+    to parquet — at 10^6 archive files a ``collect()`` of per-file rows
+    would spike driver memory for no reason (VERDICT r02 item 5). Batch
+    replays can re-run, so manifest readers dedup by ``file_path`` (see
+    :func:`read_manifest`).
     """
-    rows = records.select(
-        F.base64(F.col("data")).alias("value"),
-        F.col("sequence_number"),
-        F.date_format(F.current_timestamp(), "yyyy-MM-dd").alias("dt"),
-        "shard_id",
-    ).repartition(F.col("shard_id"))
-    spark = records.sparkSession
-    manifest_df = spark.createDataFrame(
-        rows.rdd.mapPartitions(
-            _archive_file_writer(archive_path, max_file_bytes)
-        ),
-        "shard_id string, dt string, file_path string, first_seq string,"
-        " last_seq string, record_count long, byte_size long",
-    )
+
+    def write_partition(batches):
+        from collections import defaultdict
+
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        groups: dict = defaultdict(list)
+        for batch in batches:
+            lines = batch.column("value").cast(pa.binary()).to_pylist()
+            seqs, dts, shards = (
+                batch.column(c).to_pylist()
+                for c in ("sequence_number", "dt", "shard_id")
+            )
+            for line, seq, dt, shard in zip(lines, seqs, dts, shards):
+                groups[(shard, dt)].append((seq, seq, 1, line + b"\n"))
+        rows = [
+            row
+            for (shard, dt), pieces in groups.items()
+            for row in write_shard_files(
+                archive_path, shard, dt, pieces, max_file_bytes
+            )
+        ]
+        if rows:
+            yield pa.record_batch(
+                [list(col) for col in zip(*rows)],
+                schema=to_arrow_schema(MANIFEST_SCHEMA),
+            )
+
     (
-        manifest_df.select(
-            "shard_id",
-            F.col("dt").cast("date").alias("dt"),
-            "file_path",
-            "first_seq",
-            "last_seq",
-            "record_count",
-            "byte_size",
-        )
+        encode_lines(records, "sequence_number", "shard_id")
+        .repartition(F.col("shard_id"))
+        .mapInArrow(write_partition, MANIFEST_SCHEMA)
         .write.mode("append")
         .parquet(manifest_path)
     )
@@ -215,10 +163,6 @@ def record_stream_with_manifest(
     """Record variant that preserves the reference's sequence-range file
     naming AND emits the manifest table — ``foreachBatch`` wiring of
     :func:`write_archive_with_manifest`."""
-    if config.checkpoint_location is None:
-        raise ValueError("checkpoint_location is required for record()")
-    if trigger_seconds is None:
-        trigger_seconds = config.buffer_time_millis / 1000.0
 
     def handle_batch(batch_df: DataFrame, _epoch_id: int) -> None:
         # B1 complete: byte bound from config (100 MB reference default)
@@ -230,16 +174,8 @@ def record_stream_with_manifest(
             max_file_bytes=config.buffer_size_bytes,
         )
 
-    writer = (
-        source.writeStream.foreachBatch(handle_batch)
-        .option("checkpointLocation", config.checkpoint_location)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{int(trigger_seconds)} seconds")
-    return writer.start()
+    writer = source.writeStream.foreachBatch(handle_batch)
+    return _start(writer, config, trigger_seconds, available_now)
 
 
 def read_manifest(spark, manifest_path: str) -> DataFrame:

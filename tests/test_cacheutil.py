@@ -6,6 +6,7 @@ extra jobs."""
 
 from __future__ import annotations
 
+import ast
 import gc
 import json
 import logging
@@ -86,6 +87,52 @@ def test_only_cacheutil_persists_checkpoints_or_frees():
         if p.resolve() != own and LIFETIME_CALL.search(p.read_text())
     )
     assert offenders == []
+
+
+RDD_DATA_PATH = re.compile(
+    r"mapPartitions\(|\.rdd\.(?:map|flatMap|foreach)|\.parallelize\(|"
+    r"createDataFrame\(\s*[\w.]*\.rdd\b"
+)
+LAYOUT_LITERAL = re.compile(r"(?:^|/)(?:dt|shard)=")
+
+
+def _code_strings(source: str) -> list[str]:
+    """String constants of a module, f-string pieces included,
+    docstrings excluded."""
+    tree = ast.parse(source)
+    docstrings = {
+        id(node.body[0].value)
+        for node in ast.walk(tree)
+        if isinstance(node, (ast.Module, ast.ClassDef, ast.FunctionDef))
+        and node.body
+        and isinstance(node.body[0], ast.Expr)
+    }
+    return [
+        node.value
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Constant)
+        and isinstance(node.value, str)
+        and id(node) not in docstrings
+    ]
+
+
+def test_no_pickled_rdd_path_and_one_archive_layout_owner():
+    """Python executors run on Arrow (``mapInArrow``/``applyInPandas``),
+    never on pickled RDD rows; and only ``sources/archive.py`` spells the
+    archive's ``dt=``/``shard=`` directories, so the recorder,
+    compaction and the listing cannot drift apart."""
+    pkg = Path(cacheutil.__file__).resolve().parent
+    owner = pkg / "sources" / "archive.py"
+    rdd, layout = [], []
+    for p in sorted(pkg.rglob("*.py")):
+        source = p.read_text()
+        name = str(p.relative_to(pkg))
+        if RDD_DATA_PATH.search(source):
+            rdd.append(name)
+        if p != owner and any(map(LAYOUT_LITERAL.search, _code_strings(source))):
+            layout.append(name)
+    assert rdd == []
+    assert layout == []
 
 
 def _chain(spark, n, a="src", b="dst"):

@@ -52,3 +52,65 @@ def test_usage_error_paths_leave_session_conf_alone(spark, monkeypatch):
     with pytest.raises(SystemExit):
         main(["estimate", "not-a-date"])
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
+
+
+def _describe(missing: str | None = None):
+    """describe_stream factory: one open shard, or ``missing`` raises."""
+
+    def describe_stream(StreamName, **_):
+        if StreamName == missing:
+            raise LookupError(f"Stream {StreamName} not found")
+        return {"StreamDescription": {"Shards": [{"ShardId": "s0"}]}}
+
+    return lambda: describe_stream
+
+
+@pytest.fixture
+def cli_env(spark, monkeypatch):
+    """main() on the test session, with a fake control plane."""
+    monkeypatch.setattr("kinesis_vcr_spark.session.get_spark", lambda *a, **k: spark)
+    monkeypatch.setenv("VCR_SOURCE_STREAM", "events")
+    monkeypatch.setenv("VCR_TARGET_STREAM", "target")
+    monkeypatch.setattr(
+        "kinesis_vcr_spark.functions.estimate.boto3_describe_stream_factory",
+        _describe(),
+    )
+    return monkeypatch
+
+
+@pytest.mark.parametrize(
+    "argv", [["estimate", "2024-01-01"], ["play", "2024-01-01"], ["record"]],
+    ids=lambda a: a[0],
+)
+def test_missing_bucket_exits_2_before_any_job(
+    cli_env, tmp_path, count_jobs, capsys, argv
+):
+    """X5 preflight (KinesisRecorder.java:38-40, KinesisPlayer.java:70-73):
+    a mistyped bucket must not estimate or replay an empty range."""
+    cli_env.setenv("VCR_BUCKET", str(tmp_path / "no-such-bucket"))
+
+    def run():
+        with pytest.raises(SystemExit) as exit_:
+            main(argv)
+        return exit_.value.code
+
+    assert count_jobs(run) == (0, 2)
+    assert "archive root does not exist" in capsys.readouterr().err
+
+
+def test_play_missing_target_stream_exits_2(cli_env, tmp_path, count_jobs, capsys):
+    """X5 preflight (KinesisPlayer.java:74-87): the target stream must
+    exist before any record is read."""
+    cli_env.setenv("VCR_BUCKET", str(tmp_path))
+    cli_env.setattr(
+        "kinesis_vcr_spark.functions.estimate.boto3_describe_stream_factory",
+        _describe(missing="target"),
+    )
+    assert count_jobs(lambda: main(["play", "2024-01-01"])) == (0, 2)
+    assert "Stream target not found" in capsys.readouterr().err
+
+
+def test_estimate_runs_after_preflight(cli_env, tmp_path, capsys):
+    cli_env.setenv("VCR_BUCKET", str(tmp_path))
+    assert main(["estimate", "2024-01-01"]) == 0
+    assert capsys.readouterr().out.startswith("Replaying 0 files (0 bytes)")

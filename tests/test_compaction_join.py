@@ -4,6 +4,7 @@ watermarked stream-stream interval join (streaming/windows.py)."""
 from __future__ import annotations
 
 import datetime as dt
+import os
 
 import pytest
 from pyspark.sql import Row
@@ -11,6 +12,7 @@ from pyspark.sql import functions as F
 
 from kinesis_vcr_spark.model import RECORD_SCHEMA
 from kinesis_vcr_spark.operators.compaction import compact_archive, plan_compaction
+from kinesis_vcr_spark.sources.archive import list_archive_files
 from kinesis_vcr_spark.streaming.record import write_archive_with_manifest
 from kinesis_vcr_spark.streaming.windows import interval_join_streams
 
@@ -51,7 +53,11 @@ def test_plan_compaction_groups_are_contiguous_and_bounded(spark, tmp_path):
 
 
 def test_compact_archive_preserves_bytes_and_reduces_files(spark, tmp_path):
-    archive, manifest = _write_small_files(spark, tmp_path)
+    # "shard:1/a" is not a safe directory name: the recorder writes it
+    # as shard=shard-1-a, and compaction must write to the same place
+    archive, manifest = _write_small_files(
+        spark, tmp_path, shards=("s0", "s1", "shard:1/a")
+    )
     m = spark.read.parquet(manifest)
     n_before = m.count()
 
@@ -84,6 +90,20 @@ def test_compact_archive_preserves_bytes_and_reduces_files(spark, tmp_path):
     assert len(merged) > 0
     for _, r in merged.iterrows():
         assert r["file_path"].endswith(f"{r['first_seq']}-{r['last_seq']}")
+
+    # merged files sit in the recorder's shard directory, which the
+    # archive listing walks
+    assert {os.path.basename(os.path.dirname(p)) for p in merged["file_path"]} == {
+        "shard=s0", "shard=s1", "shard=shard-1-a"
+    }
+    now = dt.datetime.utcnow()
+    listed = list_archive_files(
+        spark, new_root, now - dt.timedelta(days=1), now + dt.timedelta(days=1),
+        mtime_filter=False,
+    )
+    assert sorted(p.removeprefix("file:") for _, p, _, _ in listed) == sorted(
+        merged["file_path"]
+    )
 
 
 def test_compact_archive_noop_when_already_big(spark, tmp_path):

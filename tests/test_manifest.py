@@ -10,8 +10,8 @@ from datetime import datetime, timedelta
 from pyspark.sql import functions as F
 
 from kinesis_vcr_spark.config import VcrConfig
-from kinesis_vcr_spark.model import RECORD_SCHEMA, parse_seq_range
-from kinesis_vcr_spark.sources.archive import read_archive
+from kinesis_vcr_spark.model import MANIFEST_SCHEMA, RECORD_SCHEMA
+from kinesis_vcr_spark.sources.archive import parse_seq_range, read_archive
 from kinesis_vcr_spark.streaming.record import (
     read_manifest,
     record_stream_with_manifest,
@@ -60,11 +60,13 @@ def test_batch_write_with_manifest(spark, tmp_path):
     assert sorted(r["data"] for r in got.collect()) == sorted(payloads)
 
 
-def test_manifest_no_cross_shard_collision(spark, tmp_path):
+def test_manifest_no_cross_shard_collision(spark, tmp_path, count_jobs):
     """Two shards with the SAME sequence range on the same day: the
     shard-less '{first}-{last}' name would collide and the second write
     silently overwrote the first (ADVICE r02 — data loss); the per-shard
-    dir keeps both."""
+    dir keeps both. The write takes at most two jobs (shuffle, then
+    write; two on the pickled-RDD path it replaced) and its parquet
+    schema is MANIFEST_SCHEMA."""
     base = datetime(2024, 3, 5, 10, 0, 0)
     rows = [
         (b"payload-A", "001", "pk-a", "shard-A", base),
@@ -73,7 +75,11 @@ def test_manifest_no_cross_shard_collision(spark, tmp_path):
     records = spark.createDataFrame(rows, RECORD_SCHEMA)
     archive = str(tmp_path / "arch")
     manifest = str(tmp_path / "manifest")
-    write_archive_with_manifest(records, archive, manifest)
+    jobs, _ = count_jobs(
+        lambda: write_archive_with_manifest(records, archive, manifest)
+    )
+    assert jobs <= 2
+    assert spark.read.parquet(manifest).schema == MANIFEST_SCHEMA
 
     mrows = read_manifest(spark, manifest).collect()
     assert len(mrows) == 2

@@ -6,11 +6,10 @@ import base64
 from datetime import datetime, timedelta
 
 from pyspark.sql import Row
-from pyspark.sql import functions as F
 
 from kinesis_vcr_spark.config import VcrConfig
 from kinesis_vcr_spark.model import RECORD_SCHEMA
-from kinesis_vcr_spark.play import replay, replay_batch_plan
+from kinesis_vcr_spark.play import replay
 from kinesis_vcr_spark.sources.archive import read_archive
 from kinesis_vcr_spark.streaming.record import record_stream
 
@@ -81,49 +80,6 @@ def test_recorded_lines_are_ordered_base64(spark, tmp_path):
             lines += [ln for ln in fh.read().split("\n") if ln]
     assert lines[0] == base64.b64encode(b"String 1").decode()
     assert sorted(lines) == sorted(base64.b64encode(p).decode() for p in payloads)
-
-
-def test_replay_batch_plan_obeys_limits(spark):
-    """B2 at DataFrame level: 500-record / 1 MB caps hold per batch."""
-    df = spark.range(2300).select(
-        F.encode(F.lpad(F.col("id").cast("string"), 900, "x"), "utf-8").alias("data")
-    )
-    plan = replay_batch_plan(df.coalesce(2), max_count=500, max_bytes=1_000_000)
-    rows = plan.collect()
-    assert sum(r["record_count"] for r in rows) == 2300
-    assert all(r["record_count"] <= 500 for r in rows)
-    assert all(r["byte_count"] <= 1_000_000 for r in rows)
-
-
-def test_replay_batch_plan_matches_iter_batches(spark):
-    """The vectorized searchsorted plan must reproduce iter_batches'
-    greedy fold exactly — byte-cap flushes, count-cap flushes, oversize
-    drops interleaved, and the final partial batch (r06: the plan path
-    ships only octet_length to Python, so its equivalence to the
-    payload-driven generator is load-bearing)."""
-    import random
-
-    from kinesis_vcr_spark.operators.batching import iter_batches
-
-    rng = random.Random(99)
-    sizes = [rng.choice([1, 7, 40, 99, 100, 101, 250]) for _ in range(907)]
-    sizes[13] = 600   # oversize → dropped
-    sizes[500] = 600  # oversize mid-stream
-    payloads = [b"x" * s for s in sizes]
-    expected = [
-        (len(b), sum(len(p) for p in b))
-        for b in iter_batches(iter(payloads), max_count=7, max_bytes=500)
-    ]
-    df = spark.createDataFrame(
-        [(p,) for p in payloads], "data binary"
-    ).coalesce(1)
-    rows = (
-        replay_batch_plan(df, max_count=7, max_bytes=500)
-        .orderBy("batch_index")
-        .collect()
-    )
-    got = [(r["record_count"], r["byte_count"]) for r in rows]
-    assert got == expected
 
 
 def test_replay_foreachpartition_writer(spark, tmp_path):
