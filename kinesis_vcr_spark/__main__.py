@@ -42,7 +42,7 @@ def main(argv: list[str] | None = None) -> int:
 
     config = VcrConfig.from_env()
 
-    def get_session():
+    def get_session(archive: str):
         # deferred until arguments are validated: usage errors must not
         # spin up a JVM — and when an outer session already exists
         # (tests, notebooks), getOrCreate applies this builder's conf
@@ -51,11 +51,11 @@ def main(argv: list[str] | None = None) -> int:
         from kinesis_vcr_spark.session import get_spark
 
         spark = get_spark(f"kinesis-vcr-{verb}")
-        # X5: a mistyped bucket stops every verb before its first job,
-        # instead of recording nowhere or quoting an empty range
-        # (KinesisRecorder.java:38-40, KinesisPlayer.java:70-73)
+        # X5: a mistyped bucket or stream stops every verb before its
+        # first job, instead of recording nowhere or quoting an empty
+        # range (KinesisRecorder.java:38-40, KinesisPlayer.java:70-73)
         try:
-            config.preflight_archive(spark)
+            config.preflight_archive(spark, archive)
         except FileNotFoundError as exc:
             print(exc, file=sys.stderr)
             raise SystemExit(2) from exc
@@ -74,7 +74,10 @@ def main(argv: list[str] | None = None) -> int:
             manifest_path = args[i + 1]
             del args[i : i + 2]
         start, end = _parse_range(args, "estimate")
-        spark = get_session()
+        spark = get_session(
+            config.archive_root if manifest_path is not None
+            else config.archive_path
+        )
         from kinesis_vcr_spark.functions.estimate import (
             boto3_describe_stream_factory,
             count_open_shards,
@@ -131,7 +134,7 @@ def main(argv: list[str] | None = None) -> int:
                 f"target stream {config.target_stream}: {exc}", file=sys.stderr
             )
             return 2
-        spark = get_session()
+        spark = get_session(config.archive_path)
         writer = kinesis_partition_writer(
             config.target_stream, boto3_put_records_factory
         )
@@ -157,7 +160,7 @@ def main(argv: list[str] | None = None) -> int:
         )
 
         source = read_kinesis_stream(
-            get_session(),
+            get_session(config.archive_root),
             config.source_stream,
             region="us-east-1",
         )

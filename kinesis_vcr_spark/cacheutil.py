@@ -23,32 +23,43 @@ a read fails (``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``): consume a result
 before the next call of its scope. A frame consumed inside its function
 is held and then ended early by :func:`release`.
 
-**Rounds.** ``components``, ``kcore``, ``bfs`` and ``pagerank`` each
+**The posture.** Checkpoints are executor-memory ``localCheckpoint``
+blocks by default; they are lost with their executor, so on a
+multi-hour 100 TB run one executor loss kills the job (VERDICT r02).
+A deployment that wants the durable posture gives the context a
+checkpoint directory (``--conf spark.checkpoint.dir=…`` or
+``SparkContext.setCheckpointDir``); this module reads it there and
+never sets it. Then :func:`truncate` (and so every round) writes an
+eager reliable ``checkpoint()`` into it, and ``hold(…,
+checkpoint=True)`` persists, which a lost executor can recompute.
+Every loop gets the posture without code of its own.
+
+**Rounds.** ``components``, ``kcore``, ``bfs``, ``pagerank``, the
+chunked ``triangle_counts`` and ``semantic_dedup``'s verdict ids each
 keep their own algorithm and control flow and share one rule per round:
 
-- :func:`truncate` cuts the lineage. Without it iteration i re-plans
-  all i−1 predecessors and the job DAG explodes within ten rounds. The
-  default is an executor-memory ``localCheckpoint``; a
-  ``checkpoint_dir`` selects a reliable, executor-loss-safe
-  ``checkpoint()`` into that directory (the 100 TB multi-hour posture,
-  VERDICT r02), which stays eager because durability is its point.
-- :func:`settle` is one round's bookkeeping: a lazy truncate, then ONE
-  full count. The count computes every partition, so it is also the
-  job that materializes the checkpoint — one job per round instead of
-  a checkpoint job plus a probe. A ``limit(1)`` probe would be wrong:
-  it can stop with the checkpoint only partly materialized. The count
+- :func:`settle` is one round: a lazy truncate (eager on the durable
+  posture; without it iteration i re-plans all i−1 predecessors and
+  the job DAG explodes within ten rounds), then ONE full count. The
+  count computes every partition, so it is also the job that
+  materializes the checkpoint — one job per round instead of a
+  checkpoint job plus a probe. A ``limit(1)`` probe would be wrong: it
+  can stop with the checkpoint only partly materialized. The count
   runs on the checkpoint's internal row RDD: a DataFrame ``count()``
   adds an aggregation exchange, and so a second job, per round. On the
-  durable posture the eager checkpoint write is one more job per round.
-- :func:`release` frees the previous round's blocks (and, on the
-  durable posture, deletes its ``rdd-*`` directory) as soon as the new
-  round is materialized, instead of when GC happens to collect the
-  handle. ``DataFrame.unpersist()`` is a no-op on a checkpointed frame;
-  the blocks belong to the RDD behind the handle ``localCheckpoint``
-  returned (a ``select`` on that handle is a new plan). Reading a
-  released checkpoint fails (``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``), so
-  a loop releases only what neither its next round nor its returned
-  frame reads.
+  durable posture the checkpoint write is one more job per round.
+- The round is then held under the loop's scope, and the scope's
+  previous round is released (its blocks freed and, on the durable
+  posture, its ``rdd-*`` directory deleted) as soon as the new round is
+  materialized, instead of when GC happens to collect the handle. The
+  last round is what the returned frame reads, so it stays held until
+  the loop's next call: like any held result, consume it first.
+  ``DataFrame.unpersist()`` is a no-op on a checkpointed frame; the
+  blocks belong to the RDD behind the handle ``localCheckpoint``
+  returned (a ``select`` on that handle is a new plan).
+- :func:`truncate` alone is for temporaries a function releases before
+  it returns (components' edge list and start labels, pagerank's
+  weights).
 - :func:`broadcast_if_small` broadcasts a node-sized side while an
   exact row count (from :func:`settle`) is within
   :data:`BROADCAST_ROWS_MAX`, so the edge table never shuffles, and
@@ -76,47 +87,49 @@ BROADCAST_ROWS_MAX = 5_000_000
 _HELD: dict[str, DataFrame] = {}
 
 
-def hold(scope: str, df: DataFrame, checkpoint: bool = False) -> DataFrame:
-    """Release what ``scope`` held, then persist ``df`` (with
-    ``checkpoint`` a lazy ``localCheckpoint``, which also truncates the
-    plan of every consumer) and hold it until the scope's next call.
-    Returns the held frame."""
+def _durable(df: DataFrame) -> bool:
+    """The context has a checkpoint directory: the durable posture."""
+    return df.sparkSession.sparkContext.getCheckpointDir() is not None
+
+
+def _drop(scope: str) -> None:
+    """Release what ``scope`` held, if anything."""
     held = _HELD.pop(scope, None)
     if held is not None:
         try:
             release(held)
         except Exception:  # session already stopped — nothing to free
             pass
-    df = df.localCheckpoint(eager=False) if checkpoint else df.persist()
+
+
+def hold(scope: str, df: DataFrame, checkpoint: bool = False) -> DataFrame:
+    """Release what ``scope`` held, then persist ``df`` (with
+    ``checkpoint`` a lazy ``localCheckpoint``, which also truncates the
+    plan of every consumer; on the durable posture a persist) and hold
+    it until the scope's next call. Returns the held frame."""
+    _drop(scope)
+    if checkpoint and not _durable(df):
+        df = df.localCheckpoint(eager=False)
+    else:
+        df = df.persist()
     _HELD[scope] = df
     return df
 
 
-def truncate(
-    df: DataFrame, checkpoint_dir: str | None = None, eager: bool = True
-) -> DataFrame:
-    """``df`` with its lineage cut: ``localCheckpoint(eager)``, or with
-    ``checkpoint_dir`` an eager reliable ``checkpoint()`` into it."""
-    if checkpoint_dir is None:
-        return df.localCheckpoint(eager=eager)
-    sc = df.sparkSession.sparkContext
-    # every setCheckpointDir makes a new UUID directory under
-    # checkpoint_dir: set it only when the current one is elsewhere
-    Path = sc._jvm.org.apache.hadoop.fs.Path
-    want = Path(checkpoint_dir)
-    want = want.getFileSystem(sc._jsc.hadoopConfiguration()).makeQualified(want)
-    current = sc._jsc.sc().getCheckpointDir()
-    if not (current.isDefined() and want.equals(Path(current.get()).getParent())):
-        sc.setCheckpointDir(checkpoint_dir)
-    return df.checkpoint()
+def truncate(df: DataFrame, eager: bool = True) -> DataFrame:
+    """``df`` with its lineage cut: ``localCheckpoint(eager)``, or on
+    the durable posture an eager reliable ``checkpoint()``."""
+    if _durable(df):
+        return df.checkpoint()
+    return df.localCheckpoint(eager=eager)
 
 
 def release(df: DataFrame) -> None:
     """Free ``df``'s blocks now: unpersist a cached frame, and the RDD
-    behind a checkpoint handle (as returned by :func:`truncate` or
-    :func:`hold`), deleting a reliable checkpoint's directory. A scope
-    holding ``df`` drops it. ``df`` must not be read afterwards if it is
-    a checkpoint."""
+    behind a checkpoint handle (as returned by :func:`truncate`,
+    :func:`hold` or :func:`settle`), deleting a reliable checkpoint's
+    directory. A scope holding ``df`` drops it. ``df`` must not be read
+    afterwards if it is a checkpoint."""
     for scope in [s for s, h in _HELD.items() if h is df]:
         del _HELD[scope]
     if df.is_cached:
@@ -141,20 +154,19 @@ def settle(
     df: DataFrame,
     loop: str,
     round: int,
-    prev: DataFrame | None = None,
     where: Column | str | None = None,
-    checkpoint_dir: str | None = None,
 ) -> tuple[DataFrame, int]:
     """One round: truncate ``df`` (lazily, or eagerly on the durable
     posture), count it in full (only the rows matching ``where`` when
-    given), release ``prev`` and log one INFO JSON record (loop, round,
-    n, seconds). Returns the checkpoint handle and the count."""
+    given), hold it under scope ``loop`` in place of the scope's last
+    round, which is released, and log one INFO JSON record (loop,
+    round, n, seconds). Returns the checkpoint handle and the count."""
     t0 = time.perf_counter()
-    df = truncate(df, checkpoint_dir, eager=checkpoint_dir is not None)
+    df = truncate(df, eager=False)
     counted = df if where is None else df.where(where)
     n = counted._jdf.queryExecution().toRdd().count()
-    if prev is not None:
-        release(prev)
+    _drop(loop)
+    _HELD[loop] = df
     _LOG.info(json.dumps({
         "loop": loop, "round": round, "n": n,
         "seconds": time.perf_counter() - t0,

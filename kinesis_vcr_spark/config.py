@@ -59,18 +59,22 @@ class VcrConfig:
     def archive_path(self) -> str:
         return f"{self.archive_root.rstrip('/')}/{self.source_stream}"
 
-    def preflight_archive(self, spark) -> None:
-        """X5: the archive root must exist before starting (reference
-        checks bucket existence on both paths, KinesisRecorder.java:38-40,
-        KinesisPlayer.java:70-73). Uses the Hadoop FS of the path's
-        scheme, so local dirs and s3a:// buckets behave identically."""
+    @staticmethod
+    def preflight_archive(spark, path: str) -> None:
+        """X5: the archive must exist before starting. ``record`` checks
+        ``archive_root``, as the reference checks its bucket
+        (KinesisRecorder.java:38-40), because it creates the stream's
+        prefix; ``play`` and the listing ``estimate`` check
+        ``archive_path``, so a mistyped stream name fails instead of
+        quoting an empty range (the reference checks only the bucket
+        there too, KinesisPlayer.java:70-73). Uses the Hadoop FS of the
+        path's scheme, so local dirs and s3a:// buckets behave
+        identically."""
         jvm = spark.sparkContext._jvm
         conf = spark.sparkContext._jsc.hadoopConfiguration()
-        path = jvm.org.apache.hadoop.fs.Path(self.archive_root)
-        if not path.getFileSystem(conf).exists(path):
-            raise FileNotFoundError(
-                f"archive root does not exist: {self.archive_root}"
-            )
+        hpath = jvm.org.apache.hadoop.fs.Path(path)
+        if not hpath.getFileSystem(conf).exists(hpath):
+            raise FileNotFoundError(f"archive root does not exist: {path}")
 
     @staticmethod
     def preflight_stream(describe_stream, stream_name: str) -> None:

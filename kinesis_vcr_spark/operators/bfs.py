@@ -68,7 +68,7 @@ def bfs_distances(
             .withColumn("distance", F.lit(depth).cast("long"))
         )
         visited, n_new = settle(
-            visited.unionByName(fresh), "bfs", depth, prev=visited,
+            visited.unionByName(fresh), "bfs", depth,
             where=F.col("distance") == depth,
         )
         if n_new == 0:  # frontier exhausted: early exit

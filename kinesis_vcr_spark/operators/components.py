@@ -36,18 +36,11 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 25,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Labels every node reachable through ``edges`` with the MIN node
     id of its component (deterministic root). Returns ``(node, component)``
-    for nodes that appear in at least one edge.
-
-    ``checkpoint_dir``: when set, per-round lineage truncation writes
-    RELIABLE checkpoints into that directory instead of executor-memory
-    ``localCheckpoint`` blocks, which are lost with their executor — on
-    a 100 TB multi-hour run one executor loss would kill the whole job
-    (VERDICT r02); the durable path trades one checkpoint-write job per
-    round for restartable rounds. Local/test runs keep the default.
+    for nodes that appear in at least one edge. The labels are the last
+    round's checkpoint, held until the next call: consume them first.
 
     Raises if not converged within ``max_iter`` rounds (a near-dup
     graph needing 25 rounds indicates a pathological chain — see the
@@ -59,15 +52,14 @@ def connected_components(
     # LSH pair pipeline) would otherwise execute per branch — and again
     # every round
     edges = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    edges = truncate(edges, checkpoint_dir)
+    edges = truncate(edges)
     und = edges.unionByName(
         edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
     )
-    labels = full = truncate(
+    labels = start = truncate(
         und.select(F.col("a").alias("node"))
         .distinct()
-        .withColumn("component", F.col("node")),
-        checkpoint_dir,
+        .withColumn("component", F.col("node"))
     )
     comp_type = labels.schema["component"].dataType
     for i in range(1, max_iter + 1):
@@ -88,12 +80,12 @@ def connected_components(
                 F.min("component").alias("component"),
                 F.min("__old").alias("__old"),
             ),
-            "components", i, prev=full, checkpoint_dir=checkpoint_dir,
-            where=F.col("component") != F.col("__old"),
+            "components", i, where=F.col("component") != F.col("__old"),
         )
         labels = full.select("node", "component")
         if changed == 0:
             release(edges)
+            release(start)
             return labels
     raise RuntimeError(
         f"connected_components did not converge in {max_iter} rounds"

@@ -856,7 +856,6 @@ def lsh_band_components(
     num_hashes: int = 64,
     bands: int = 16,
     char_ngrams: bool = False,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Dedup components DIRECTLY from MinHash band groups — no
     candidate pairs, no exact-Jaccard verification: two documents land
@@ -939,9 +938,7 @@ def lsh_band_components(
         )
         .distinct()
     )
-    comp = connected_components(
-        edges, "src", "dst", checkpoint_dir=checkpoint_dir
-    )
+    comp = connected_components(edges, "src", "dst")
     # singletons (no shared band with anyone) are their own component
     return (
         df.select(F.col(id_col).alias("node"))

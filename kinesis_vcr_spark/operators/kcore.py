@@ -94,12 +94,12 @@ def kcore_edges(
         bad = _degrees(cur).where(F.col("deg") < k).select("node")
         # the cumulative peeled set is the round's checkpoint; bad is
         # disjoint from prior removals, so progress is the count delta
-        new_removed, total = settle(
+        removed, total = settle(
             bad if removed is None else removed.unionByName(bad), "kcore", i
         )
         if total == removed_count:
-            # cur reads `removed`, which new_removed only repeats. The
-            # lineage of cur is already shallow (source + two
+            # at the fixpoint the held round has cur's removed rows. The
+            # returned lineage is already shallow (source + two
             # anti-joins against the checkpointed node set) — no
             # edge-sized checkpoint of the result, which would
             # reintroduce the very materialization this shape exists
@@ -112,12 +112,9 @@ def kcore_edges(
             # one k-core per trigger) would be served this call's
             # stale cached edges — and accumulates an edge-sized cache
             # entry per call besides.
-            release(new_removed)
             release(base)
-            return cur
-        if removed is not None:
-            release(removed)
-        removed, removed_count = new_removed, total
+            return alive(removed, total)
+        removed_count = total
     release(base)  # out of peel budget and still not converged
     raise RuntimeError(
         f"{k}-core peeling did not converge within {max_iterations} "

@@ -88,14 +88,13 @@ def pagerank_micro(
         w.select(F.col("__src").alias("node"))
         .union(w.select(F.col("__dst").alias("node")))
         .distinct(),
-        "pagerank", 0,
+        "pagerank_nodes", 0,
     )
     outdeg = w.groupBy("__src").agg(F.sum("__w").alias("__od"))
     od_in = broadcast_if_small(outdeg, n_nodes)
 
     teleport = ((100 - damping_pct) * unit) // 100
     ranks = nodes.select("node", F.lit(unit).cast("long").alias("rank_micro"))
-    checkpointed = None
     for i in range(1, iterations + 1):
         r_in = broadcast_if_small(ranks, n_nodes)
         contrib = (
@@ -124,8 +123,7 @@ def pagerank_micro(
             ).alias("rank_micro"),
         )
         if i % CHECKPOINT_EVERY == 0 or i == iterations:
-            ranks, _ = settle(ranks, "pagerank", i, prev=checkpointed)
-            checkpointed = ranks
+            ranks, _ = settle(ranks, "pagerank", i)
     release(nodes)
     release(w)
     return ranks

@@ -41,7 +41,6 @@ def clean_corpus(
     jaccard_threshold: float = 0.6,
     quality_threshold: float = 0.6,
     shingle_size: int = 3,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """All ``docs`` columns + a ``status`` column:
     kept | dropped_exact | dropped_near_dup | dropped_quality.
@@ -89,9 +88,7 @@ def clean_corpus(
         shingle_size=shingle_size,
         threshold=jaccard_threshold,
     )
-    comp = connected_components(
-        pairs, "id_a", "id_b", checkpoint_dir=checkpoint_dir
-    )
+    comp = connected_components(pairs, "id_a", "id_b")
     near_drops = (
         comp.where(F.col("node") != F.col("component"))
         .select(F.col("node").alias(id_col))
@@ -147,7 +144,6 @@ def llm_prep_corpus(
     decontam_n: int = 5,
     min_hits: int = 1,
     split_seed: str = "e2e",
-    checkpoint_dir: str | None = None,
     near_dup: str = "verified",
     text_col: str | None = None,
     near_dup_candidate_budget: int | None = None,
@@ -206,6 +202,11 @@ def llm_prep_corpus(
     (min-id winners, md5 tickets) — the driver query's DuckDB oracle
     recomputes every stage relationally.
     """
+    if near_dup not in ("verified", "lsh_components"):
+        raise ValueError(
+            f"near_dup must be 'verified' or 'lsh_components', got "
+            f"{near_dup!r}"
+        )
     from kinesis_vcr_spark.functions.html import html_to_text
     from kinesis_vcr_spark.functions.text import (
         canonicalize_text,
@@ -277,25 +278,21 @@ def llm_prep_corpus(
     # branch — measured 5.2 s → 30 s median at sf0.1 from the
     # multiplicative recompute alone.
     exact_kept = dedup_exact(s1, ["__text"], id_col)
-    if near_dup in ("verified", "lsh_components"):
-        # Materialize the survivor set for its many lineage consumers.
-        # verified: breaker count, band join, verify sides, s2/labeled
-        # status joins — measured 2.06× at sf1 (r13, BASELINE addendum
-        # 2). lsh_components: the r12/r14 PERSIST A/Bs found no win
-        # (fewer consumers), but under the localCheckpoint seam the win
-        # is plan TRUNCATION — the band pipeline, singleton join and
-        # status joins stop re-analyzing the extract/URL-window tree per
-        # action: llm_prep_spans_lsh 14.96–17.3 s lazy vs 11.95–14.25 s
-        # materialized (r14, 4/4 adjacent pairs, parity-checked). A lazy
-        # localCheckpoint rather than persist (r14, interleaved A/B):
-        # the truncation also took llm_prep_spans 15.6→12.9 s med and
-        # llm_prep_pipeline 7.2→6.3 s. A lost executor cannot recompute
-        # a localCheckpointed partition, so the fault-prone posture that
-        # ``checkpoint_dir`` signals persists instead (recomputable, at
-        # the plan-analysis cost).
-        exact_kept = hold(
-            "llm_survivors", exact_kept, checkpoint=checkpoint_dir is None
-        )
+    # Materialize the survivor set for its many lineage consumers.
+    # verified: breaker count, band join, verify sides, s2/labeled
+    # status joins — measured 2.06× at sf1 (r13, BASELINE addendum
+    # 2). lsh_components: the r12/r14 PERSIST A/Bs found no win
+    # (fewer consumers), but under the localCheckpoint seam the win
+    # is plan TRUNCATION — the band pipeline, singleton join and
+    # status joins stop re-analyzing the extract/URL-window tree per
+    # action: llm_prep_spans_lsh 14.96–17.3 s lazy vs 11.95–14.25 s
+    # materialized (r14, 4/4 adjacent pairs, parity-checked). A lazy
+    # localCheckpoint rather than persist (r14, interleaved A/B): the
+    # truncation also took llm_prep_spans 15.6→12.9 s med and
+    # llm_prep_pipeline 7.2→6.3 s. A lost executor cannot recompute a
+    # localCheckpointed partition, so on the durable posture ``hold``
+    # persists instead (recomputable, at the plan-analysis cost).
+    exact_kept = hold("llm_survivors", exact_kept, checkpoint=True)
     exact_winners = exact_kept.select(id_col).withColumn(
         "__exact_keep", F.lit(True)
     )
@@ -326,21 +323,13 @@ def llm_prep_corpus(
             shingle_size=shingle_size, threshold=jaccard_threshold,
             candidate_budget=near_dup_candidate_budget,
         )
-        comp = connected_components(
-            pairs, "id_a", "id_b", checkpoint_dir=checkpoint_dir
-        )
-    elif near_dup == "lsh_components":
+        comp = connected_components(pairs, "id_a", "id_b")
+    else:
         from kinesis_vcr_spark.operators.dedup import lsh_band_components
 
         # exact_kept was materialized above, as in the verified branch.
         comp = lsh_band_components(
-            exact_kept, id_col, "__text",
-            shingle_size=shingle_size, checkpoint_dir=checkpoint_dir,
-        )
-    else:
-        raise ValueError(
-            f"near_dup must be 'verified' or 'lsh_components', got "
-            f"{near_dup!r}"
+            exact_kept, id_col, "__text", shingle_size=shingle_size
         )
     near_drops = (
         comp.where(F.col("node") != F.col("component"))

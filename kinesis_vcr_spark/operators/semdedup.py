@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 
 import math
 
-from kinesis_vcr_spark.cacheutil import hold, release, truncate
+from kinesis_vcr_spark.cacheutil import hold, settle
 from kinesis_vcr_spark.operators.components import connected_components
 from kinesis_vcr_spark.operators.ivf import assign_centroid, train_centroids
 from kinesis_vcr_spark.operators.similarity import pandas_cosine
@@ -83,7 +83,6 @@ def semantic_dedup(
     k_clusters: int | None = 16,
     refine_iterations: int = 1,
     max_cluster_members: int | None = 10_000,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Per-item dedup verdict: ``(id_col, cid, group, keep)``.
 
@@ -117,16 +116,18 @@ def semantic_dedup(
     pairs = intra_cluster_pairs(
         assigned, id_col, threshold, max_cluster_members
     )
-    comp = connected_components(
-        pairs, "id_a", "id_b", checkpoint_dir=checkpoint_dir
-    ).withColumnRenamed("node", id_col)
+    comp = connected_components(pairs, "id_a", "id_b").withColumnRenamed(
+        "node", id_col
+    )
     # connected_components materialized `comp` (per-round lineage
     # truncation), so the only live consumer of the fat `assigned`
     # cache (id + unit vector + cid) is the slim 2-column verdict
-    # input. Materialize that projection, then release the embeddings
-    # cache before returning — no session-lifetime leak (ADVICE r03).
-    ids = truncate(assigned.select(id_col, "cid"), checkpoint_dir)
-    release(assigned)
+    # input. One settle round counts that projection into a checkpoint
+    # (read from the cache), then releases `assigned`, the scope's
+    # previous frame, and holds the ids until the next call — a lazy
+    # checkpoint would materialize only after the release, re-running
+    # the scan and the assignment UDF.
+    ids, _ = settle(assigned.select(id_col, "cid"), "semantic_dedup", 0)
     return (
         ids
         .join(comp, id_col, "left")

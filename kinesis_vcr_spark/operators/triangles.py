@@ -41,7 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from kinesis_vcr_spark.cacheutil import hold, release, truncate
+from kinesis_vcr_spark.cacheutil import hold, release, settle
 
 
 def _simple_undirected(edges: DataFrame, src: str, dst: str) -> DataFrame:
@@ -152,8 +152,10 @@ def triangle_counts(
     triangle exactly ONE pivot, partitioning the pivot edge set into
     ``pivot_chunks`` hash chunks partitions the triangle set exactly:
     each chunk runs as its OWN job whose wedge shuffle is ~1/chunks of
-    the total, its node-sized partial counts are eagerly
-    ``localCheckpoint``-ed, and the final result sums the partials.
+    the total, its node-sized partial counts are appended to the
+    previous chunks' in one :func:`kinesis_vcr_spark.cacheutil.settle`
+    round (scope ``triangle_chunks``, held until the next chunked
+    call), and the final result sums the partials.
     Peak scratch disk is one chunk's shuffle instead of the whole wedge
     volume; total compute is unchanged (the oriented table is cached
     columnar once and each chunk re-reads it). On a real cluster the
@@ -187,25 +189,22 @@ def triangle_counts(
         )
     if pivot_chunks <= 1:
         return _counts_from(_close_wedges(oriented, oriented))
-    partials = []
+    out = None
     for i in range(pivot_chunks):
         chunk = oriented.where(
             F.pmod(F.xxhash64(F.col("lo")), F.lit(pivot_chunks)) == i
         )
-        # eager, node-sized: the chunk's wedge shuffle becomes garbage
-        # the moment the checkpoint materializes
-        partials.append(
-            truncate(_counts_from(_close_wedges(chunk, oriented)))
+        part = _counts_from(_close_wedges(chunk, oriented))
+        # one round per chunk, node-sized partials accumulated: the
+        # chunk's wedge shuffle becomes garbage the moment the round's
+        # count materializes it
+        out, _ = settle(
+            part if out is None else out.unionByName(part),
+            "triangle_chunks", i,
         )
         # nudge the JVM so the finished chunk's shuffle files are
         # eligible for ContextCleaner removal before the next chunk
         # piles its own on top — this is the whole point of chunking
         spark.sparkContext._jvm.System.gc()
-    out = partials[0]
-    for p in partials[1:]:
-        out = out.unionByName(p)
-    result = out.groupBy("node").agg(
-        F.sum("triangles").alias("triangles")
-    )
-    release(oriented)  # partials are checkpointed; safe to drop
-    return result
+    release(oriented)  # the rounds are checkpointed; safe to drop
+    return out.groupBy("node").agg(F.sum("triangles").alias("triangles"))

@@ -45,3 +45,17 @@ def count_jobs(spark):
         return len(sc.statusTracker().getJobIdsForGroup(group)), result
 
     return run
+
+
+@pytest.fixture
+def durable(spark, tmp_path):
+    """The durable posture for one test: the context checkpoints into
+    the yielded directory, and is reset to no checkpoint directory
+    afterwards, so later tests (and their job counts) run local."""
+    sc = spark.sparkContext
+    ckpt = tmp_path / "ckpt"
+    sc.setCheckpointDir(str(ckpt))
+    try:
+        yield ckpt
+    finally:
+        sc._jsc.sc().setCheckpointDir(None)

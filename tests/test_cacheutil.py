@@ -20,6 +20,8 @@ from kinesis_vcr_spark.operators.bfs import bfs_distances
 from kinesis_vcr_spark.operators.components import connected_components
 from kinesis_vcr_spark.operators.kcore import kcore_nodes
 from kinesis_vcr_spark.operators.pagerank import pagerank_micro
+from kinesis_vcr_spark.operators.semdedup import semantic_dedup
+from kinesis_vcr_spark.operators.triangles import triangle_counts
 
 
 def test_scopes_release_independently_and_results_survive(spark):
@@ -78,7 +80,11 @@ LIFETIME_CALL = re.compile(
 def test_only_cacheutil_persists_checkpoints_or_frees():
     """One module owns every frame's lifetime: a persist, checkpoint or
     free anywhere else in the engine bypasses the held scopes and the
-    round rule."""
+    round rule. The checkpoint posture is the context's: no engine
+    code sets the checkpoint directory (a deployment does, with
+    ``spark.checkpoint.dir``), and no operator or ``cacheutil``
+    function takes a ``checkpoint_dir`` (in ``streaming/`` that name is
+    a streaming query's ``checkpointLocation``, a different thing)."""
     own = Path(cacheutil.__file__).resolve()
     pkg = own.parent
     offenders = sorted(
@@ -87,6 +93,22 @@ def test_only_cacheutil_persists_checkpoints_or_frees():
         if p.resolve() != own and LIFETIME_CALL.search(p.read_text())
     )
     assert offenders == []
+    sets_dir, takes_dir = [], []
+    for p in sorted(pkg.rglob("*.py")):
+        source = p.read_text()
+        name = str(p.relative_to(pkg))
+        nodes = list(ast.walk(ast.parse(source)))
+        if any(
+            isinstance(n, ast.Attribute) and n.attr == "setCheckpointDir"
+            for n in nodes
+        ) or any("spark.checkpoint.dir" in c for c in _code_strings(source)):
+            sets_dir.append(name)
+        if (name.startswith("operators/") or name == "cacheutil.py") and any(
+            isinstance(n, ast.arg) and n.arg == "checkpoint_dir" for n in nodes
+        ):
+            takes_dir.append(name)
+    assert sets_dir == []
+    assert takes_dir == []
 
 
 RDD_DATA_PATH = re.compile(
@@ -183,28 +205,94 @@ LOOPS = {
 }
 
 
+def _stored(jsc, first):
+    """Ids of the RDDs with stored blocks created after ``first``."""
+    return {i.id() for i in jsc.getRDDStorageInfo() if i.id() > first}
+
+
+def _held(first):
+    """Ids of the RDDs behind the held checkpoint frames created after
+    ``first``."""
+    plans = (
+        df._jdf.queryExecution().analyzed() for df in cacheutil._HELD.values()
+    )
+    return {
+        p.rdd().id()
+        for p in plans
+        if p.getClass().getSimpleName() == "LogicalRDD"
+        and p.rdd().id() > first
+    }
+
+
 @pytest.mark.parametrize("loop", list(LOOPS))
 def test_loops_release_superseded_rounds(spark, count_jobs, loop):
     """After a collected call at most the returned frame's checkpoint
     stays held, whatever the round count (GC off, so nothing but the
     loop's own release frees a block), and the call launches no more
     jobs than before the round helper (15 / 9 / 21 / 5 RDDs were held
-    at the deeper fixtures then)."""
+    at the deeper fixtures then). After both calls the only blocks the
+    test left are the loop's held round: the previous call's result
+    went at the second call, not when GC collected its handle."""
     call, depths = LOOPS[loop]
     jsc = spark.sparkContext._jsc.sc()
+    start = jsc.newRddId()
     held = []
     gc.disable()
     try:
         for depth, jobs_before in depths:
             first = jsc.newRddId()
             jobs, _ = count_jobs(lambda: call(spark, depth).collect())
-            held.append(
-                sum(1 for i in jsc.getRDDStorageInfo() if i.id() > first)
-            )
+            held.append(len(_stored(jsc, first)))
             assert jobs <= jobs_before, (depth, jobs)
+        stored = _stored(jsc, start)
     finally:
         gc.enable()
     assert held[0] == held[1] <= 1, held
+    assert stored == _held(start) and len(stored) == 1, stored
+
+
+# op -> (call(spark), held frames a collected call leaves)
+RESULTS = {
+    # the verdict ids and the components round they join
+    "semantic_dedup": (
+        lambda spark: semantic_dedup(
+            spark.createDataFrame(
+                [(0, [1.0, 0.0]), (1, [1.0, 0.001]), (2, [0.0, 1.0])],
+                "vec_id long, embedding array<double>",
+            ),
+            threshold=0.999, k_clusters=1,
+        ),
+        2,
+    ),
+    "triangle_counts": (
+        lambda spark: triangle_counts(
+            spark.createDataFrame(
+                [(a, b) for a in range(5) for b in range(a + 1, 5)],
+                "s long, d long",
+            ),
+            "s", "d", pivot_chunks=2,
+        ),
+        1,
+    ),
+}
+
+
+@pytest.mark.parametrize("op", list(RESULTS))
+def test_results_read_only_held_rounds(spark, op):
+    """The checkpoints a returned frame reads are held, not left for
+    GC: after two collected calls (GC off) the only blocks stored are
+    the held frames of the last call."""
+    call, n = RESULTS[op]
+    jsc = spark.sparkContext._jsc.sc()
+    start = jsc.newRddId()
+    gc.disable()
+    try:
+        for _ in range(2):
+            call(spark).collect()
+        stored = _stored(jsc, start)
+    finally:
+        gc.enable()
+    assert stored == _held(start) and len(stored) == n, stored
 
 
 def test_settle_logs_one_record_per_round(spark, caplog):

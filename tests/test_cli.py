@@ -110,7 +110,30 @@ def test_play_missing_target_stream_exits_2(cli_env, tmp_path, count_jobs, capsy
     assert "Stream target not found" in capsys.readouterr().err
 
 
+@pytest.mark.parametrize(
+    "argv", [["estimate", "2024-01-01"], ["play", "2024-01-01"]],
+    ids=lambda a: a[0],
+)
+def test_missing_stream_prefix_exits_2_before_any_job(
+    cli_env, tmp_path, count_jobs, capsys, argv
+):
+    """An existing bucket without the source stream's prefix (a
+    mistyped VCR_SOURCE_STREAM) must not estimate or replay an empty
+    range: both verbs check the archive path, not just the bucket."""
+    cli_env.setenv("VCR_BUCKET", str(tmp_path))
+
+    def run():
+        with pytest.raises(SystemExit) as exit_:
+            main(argv)
+        return exit_.value.code
+
+    assert count_jobs(run) == (0, 2)
+    err = capsys.readouterr().err
+    assert "archive root does not exist" in err and "events" in err
+
+
 def test_estimate_runs_after_preflight(cli_env, tmp_path, capsys):
     cli_env.setenv("VCR_BUCKET", str(tmp_path))
+    (tmp_path / "events").mkdir()
     assert main(["estimate", "2024-01-01"]) == 0
     assert capsys.readouterr().out.startswith("Replaying 0 files (0 bytes)")

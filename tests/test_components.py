@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 
 from kinesis_vcr_spark.operators.components import connected_components
+from tests.test_cacheutil import LOOPS
 
 
 def _cc(spark, pairs):
@@ -72,37 +73,42 @@ def test_random_graphs_match_union_find(spark):
         assert got == expected, f"trial {trial}: {sorted(pairs)}"
 
 
-def test_durable_checkpoint_path(spark, tmp_path, count_jobs):
-    """checkpoint_dir switches per-round truncation to reliable
-    checkpoint() files (executor-loss-safe at cluster scale); results
-    must be identical to the localCheckpoint path, the durable posture
-    may cost no more jobs than before the round helper (25 on this
-    fixture: its extra job per round is the checkpoint write), and each
-    call leaves at most the one checkpoint directory its returned frame
-    reads: every superseded round's ``rdd-*`` directory is deleted."""
+# loop -> (depth of its tests.test_cacheutil fixture, jobs per call):
+# components at its count while the posture was a checkpoint_dir
+# argument, the rest as first measured on the context's posture
+DURABLE = {
+    "components": (6, 46),
+    "kcore": (2, 18),
+    "bfs": (6, 39),
+    "pagerank": (6, 36),
+}
+
+
+@pytest.mark.parametrize("loop", list(DURABLE))
+def test_durable_checkpoint_path(spark, count_jobs, request, loop):
+    """With a checkpoint directory on the context, every loop's rounds
+    are reliable checkpoint() files (executor-loss-safe at cluster
+    scale). Results must equal the local posture's, a call may cost no
+    more jobs than pinned (its extra job per round is the checkpoint
+    write), and three calls leave one ``rdd-*`` directory: each round
+    is deleted when the next one is materialized, the returned frame's
+    at the next call."""
     import os
 
-    ckpt = str(tmp_path / "cc_ckpt")
-    df = spark.createDataFrame(
-        [(1, 2), (2, 3), (5, 6)], "src long, dst long"
-    )
-    jobs, rows = count_jobs(
-        lambda: connected_components(df, checkpoint_dir=ckpt).collect()
-    )
-    labels = {r["node"]: r["component"] for r in rows}
-    assert labels == {1: 1, 2: 1, 3: 1, 5: 5, 6: 5}
-    local = connected_components(df).collect()
-    assert labels == {r["node"]: r["component"] for r in local}
-    assert jobs <= 25, jobs
-    again = connected_components(df, checkpoint_dir=ckpt).collect()
-    assert labels == {r["node"]: r["component"] for r in again}
-    # reliable checkpoint files actually landed in the directory, and
-    # only the returned frames' are left
+    call = LOOPS[loop][0]
+    depth, max_jobs = DURABLE[loop]
+
+    def rows():
+        return sorted(map(tuple, call(spark, depth).collect()))
+
+    local = rows()
+    ckpt = request.getfixturevalue("durable")
+    for _ in range(3):
+        jobs, got = count_jobs(rows)
+        assert got == local
+        assert jobs <= max_jobs, jobs
     rdd_dirs = [
         d for _, dirs, _ in os.walk(ckpt) for d in dirs
         if d.startswith("rdd-")
     ]
-    assert 1 <= len(rdd_dirs) <= 2, rdd_dirs
-    # both calls reuse one checkpoint directory instead of setting a new
-    # UUID directory per round
-    assert len(os.listdir(ckpt)) == 1, os.listdir(ckpt)
+    assert len(rdd_dirs) == 1, rdd_dirs
