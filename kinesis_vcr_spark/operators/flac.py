@@ -1,7 +1,6 @@
 """FLAC decode + spec-rule encode — pure Python/numpy, no
-soundfile/ffmpeg (the container has no audio libs; same in-repo-codec
-discipline as the image decoders and :mod:`~kinesis_vcr_spark.
-operators.adpcm`).
+soundfile/ffmpeg (no audio library is assumed; same in-repo-codec
+discipline as the PNG/BMP image decoders).
 
 Format per the public FLAC specification (RFC 9639 / xiph.org): a
 ``fLaC`` magic, metadata blocks (STREAMINFO required first), then
@@ -18,19 +17,18 @@ checks its own decoder — the strongest validation tier in the codec
 family. :func:`decode_flac` enforces it by default and raises on
 mismatch (the module-wide raise-instead-of-garbage contract).
 
-The encoder here is the test fixture source (the spec-rule-encoder
-discipline that landed GIF/TIFF/WebP/ADPCM first-try): it writes
-constant / verbatim / fixed subframes with per-partition Rice
-parameter search, raw-bits escapes when cheaper, wasted-bits
-detection, all four stereo decorrelations, and uncommon block-size /
-sample-rate header codes — wide enough to round-trip every decoder
-path, never used in the hot path.
+The encoder here is the test fixture source, written from the spec
+rules: it writes constant / verbatim / fixed subframes with
+per-partition Rice parameter search, raw-bits escapes when cheaper,
+wasted-bits detection, all four stereo decorrelations, and uncommon
+block-size / sample-rate header codes — wide enough to round-trip
+every decoder path, never used in the hot path.
 
 Scale shape: FLAC frames are independently decodable units (the frame
 header is byte-aligned and CRC-8 delimited), so the Pandas-UDF batch
 in :func:`~kinesis_vcr_spark.operators.multimodal.decode_audio` keeps
 whole files per row and the envelope stage never needs cross-row
-state — identical posture to the other audio codecs.
+state — the same posture as PCM WAV.
 
 Reference anchor: no counterpart in the reference (record/replay
 tool); SURVEY.md §2.5a multimodal family — formerly the one common
@@ -43,8 +41,6 @@ import hashlib
 import struct
 
 import numpy as np
-
-from kinesis_vcr_spark.operators.mp3 import _BitReader
 
 # ------------------------------------------------------------- CRCs
 
@@ -124,6 +120,30 @@ def is_flac(payload: bytes) -> bool:
 
 # ------------------------------------------------------- STREAMINFO
 
+class _BitReader:
+    """MSB-first bit reader over a byte string."""
+
+    def __init__(self, data: bytes):
+        self.data = data
+        self.pos = 0  # bit position
+
+    def read(self, n: int) -> int:
+        end = self.pos + n
+        if end > len(self.data) * 8:
+            raise ValueError("FLAC frame truncated mid-field")
+        v = 0
+        pos = self.pos
+        while n:
+            byte = self.data[pos >> 3]
+            avail = 8 - (pos & 7)
+            take = avail if avail < n else n
+            v = (v << take) | ((byte >> (avail - take)) & ((1 << take) - 1))
+            pos += take
+            n -= take
+        self.pos = pos
+        return v
+
+
 def parse_streaminfo(payload: bytes) -> dict:
     """Walk the metadata blocks; return the STREAMINFO fields plus the
     byte offset where frames begin. Raises on malformed structure."""
@@ -168,8 +188,7 @@ def parse_streaminfo(payload: bytes) -> dict:
 
 
 def flac_info(payload: bytes) -> dict:
-    """Metadata tier (the :func:`~kinesis_vcr_spark.operators.aac.
-    aac_info` shape): stream parameters without decoding frames."""
+    """Metadata tier: stream parameters without decoding frames."""
     si = parse_streaminfo(payload)
     return {
         "codec": "FLAC",
@@ -241,7 +260,7 @@ def _read_signed_array(
     ``pos`` — the bulk form of repeated ``_signed(br.read(nbits))``."""
     total = count * nbits
     if pos + total > fb.n:
-        raise ValueError("MPEG audio frame truncated mid-field")
+        raise ValueError("FLAC frame truncated mid-field")
     if count == 0:
         return np.empty(0, np.int64), pos
     seg = fb.bits[pos:pos + total].reshape(count, nbits).astype(np.int64)
@@ -274,7 +293,7 @@ def _read_rice_partition(
     j = int(np.searchsorted(ones, pos))
     if count == 0:
         if pos > fb.n:
-            raise ValueError("MPEG audio frame truncated mid-field")
+            raise ValueError("FLAC frame truncated mid-field")
         return np.empty(0, np.int64), pos
     # per code: 1 terminator + ≤param low-bit set bits → bounded slice
     window = ones[j:j + count * (param + 1)]
@@ -282,7 +301,7 @@ def _read_rice_partition(
     if param == 0:
         # no low bits to skip: terminators are consecutive set bits
         if count > nwin:
-            raise ValueError("MPEG audio frame truncated mid-field")
+            raise ValueError("FLAC frame truncated mid-field")
         ts = window[:count]
     else:
         # jump function with a self-looping end sentinel at index nwin
@@ -302,7 +321,7 @@ def _read_rice_partition(
         # seq is nondecreasing and absorbs at the sentinel, so the last
         # entry detects a run-off anywhere in the partition
         if nwin == 0 or seq[-1] >= nwin:
-            raise ValueError("MPEG audio frame truncated mid-field")
+            raise ValueError("FLAC frame truncated mid-field")
         ts = window[seq]
     qs = np.empty(count, np.int64)
     qs[0] = ts[0] - pos
@@ -310,7 +329,7 @@ def _read_rice_partition(
         qs[1:] = ts[1:] - ts[:-1] - (param + 1)
     pos = int(ts[-1]) + 1 + param
     if pos > fb.n:
-        raise ValueError("MPEG audio frame truncated mid-field")
+        raise ValueError("FLAC frame truncated mid-field")
     if param:
         idx = ts[:, None] + 1 + np.arange(param, dtype=np.int64)
         weights = np.int64(1) << np.arange(param - 1, -1, -1, dtype=np.int64)

@@ -8,15 +8,11 @@ records on the wire", README.md "Format") — so ingest/shuffle/dedup all
 work on media without decoding.
 
 Decoding: real codecs with numpy + the stdlib only (no PIL/ffmpeg):
-PPM, uncompressed BMP, full static PNG (every color type incl.
-palette, bit depths 1-16, all five scanline filters, Adam7
-interlace), baseline AND progressive Huffman JPEG, GIF, baseline
-TIFF, BOTH WebP codecs (lossless VP8L and lossy VP8 key frames —
-the latter pinned bit-exact against the reference decoder), PCM +
-IMA/MS ADPCM WAV audio, and MPEG-1 Layer I/II audio; the remaining
-formats (arithmetic/lossless/12-bit JPEG, MP3 Layer III/AAC, H.264)
-raise ``NotImplementedError`` slots where PIL/ffmpeg plug
-in. ``fake_decode``
+PPM, uncompressed BMP and full static PNG (every color type incl.
+palette, bit depths 1-16, all five scanline filters, Adam7 interlace)
+behind one magic-byte dispatch (:func:`decode_pixels`), plus PCM WAV
+and FLAC audio. Every other container raises ``NotImplementedError``:
+register a PIL/ffmpeg-backed :data:`Decoder` for it. ``fake_decode``
 remains the deterministic stand-in used by the oracle-checked driver
 queries, because its arithmetic is reproducible in SQL.
 
@@ -272,7 +268,10 @@ def _png_parse(payload: bytes):
         raise ValueError(f"invalid PNG interlace method {interlace}")
     if color_type == 3 and plte is None:
         raise ValueError("palette PNG missing PLTE chunk")
-    raw = zlib.decompress(b"".join(idat))
+    try:
+        raw = zlib.decompress(b"".join(idat))
+    except zlib.error as e:  # a cut or corrupt IDAT stream
+        raise ValueError(f"corrupt PNG pixel stream: {e}") from e
     if interlace == 0:
         px, end = _png_pass(raw, 0, w, h, channels, depth)
     else:  # Adam7: seven sequential passes, each its own filter context
@@ -303,190 +302,69 @@ def _png_parse(payload: bytes):
     return w, h, px
 
 
-def decode_image(payload: bytes) -> dict[str, Any]:
-    """Real image decode without PIL: P6 PPM, 24/32-bit BI_RGB BMP,
-    full static PNG — every color type incl. palette, depths 1-16,
-    Adam7 interlace (stdlib zlib + numpy unfilter —
-    :func:`_png_parse`), and Huffman JPEG — baseline sequential AND
-    progressive (:mod:`kinesis_vcr_spark.operators.jpeg` — gray or
-    YCbCr, any subsampling, restart markers, spectral selection +
-    successive approximation). Arithmetic-coded/lossless/hierarchical
-    JPEG remains the PIL slot — registering a PIL-backed Decoder
-    replaces only this function; the Spark plumbing is identical. GIF
-    (87a/89a LZW, interlace, transparency, first-frame compositing)
-    decodes via :mod:`kinesis_vcr_spark.operators.gif`."""
-    if payload[:2] == b"P6":
-        w, h, px = _ppm_parse(payload)
-        return {"width": w, "height": h, "mean_value": float(px.mean())}
-    if payload[:2] == b"BM":
-        w, h, px = _bmp_parse(payload)
-        return {"width": w, "height": h, "mean_value": float(px.mean())}
-    if payload[:8] == PNG_SIGNATURE:
-        w, h, px = _png_parse(payload)
-        return {"width": w, "height": h, "mean_value": float(px.mean())}
-    if payload[:2] == b"\xff\xd8":
-        from kinesis_vcr_spark.operators.jpeg import jpeg_decode  # noqa: PLC0415
+_IMAGE_PARSERS = (
+    (b"P6", _ppm_parse),
+    (b"BM", _bmp_parse),
+    (PNG_SIGNATURE, _png_parse),
+)
 
-        w, h, px = jpeg_decode(payload)
-        return {"width": w, "height": h, "mean_value": float(px.mean())}
-    if payload[:6] in (b"GIF87a", b"GIF89a"):
-        from kinesis_vcr_spark.operators.gif import gif_decode  # noqa: PLC0415
 
-        w, h, px = gif_decode(payload)
-        return {"width": w, "height": h, "mean_value": float(px.mean())}
-    if payload[:4] in (b"II*\x00", b"MM\x00*"):
-        from kinesis_vcr_spark.operators.tiff import tiff_decode  # noqa: PLC0415
-
-        w, h, px = tiff_decode(payload)
-        return {"width": w, "height": h, "mean_value": float(px.mean())}
-    if payload[:4] == b"RIFF" and payload[8:12] == b"WEBP":
-        from kinesis_vcr_spark.operators.webp import webp_decode  # noqa: PLC0415
-
-        w, h, px = webp_decode(payload)
-        return {"width": w, "height": h, "mean_value": float(px.mean())}
+def decode_pixels(payload: bytes):
+    """The one image dispatch: a payload's magic bytes pick the parser
+    → (width, height, pixels). P6 PPM, 24/32-bit BI_RGB BMP (pixel
+    bytes, row padding stripped) and static PNG (:func:`_png_parse`);
+    any other container is the PIL slot."""
+    for magic, parse in _IMAGE_PARSERS:
+        if payload.startswith(magic):
+            return parse(payload)
     raise NotImplementedError(
-        "unrecognized image container (PPM/BMP/PNG/JPEG/GIF/TIFF/"
-        "WebP supported); register a PIL-backed Decoder for "
-        "other formats"
+        "unrecognized image container (PPM/BMP/PNG supported); register "
+        "a PIL-backed Decoder for other formats"
     )
 
 
+def decode_image(payload: bytes) -> dict[str, Any]:
+    """Real image decode without PIL: the summary stats of
+    :func:`decode_pixels`. Registering a PIL-backed Decoder replaces
+    only this function; the Spark plumbing is identical."""
+    w, h, px = decode_pixels(payload)
+    return {"width": w, "height": h, "mean_value": float(px.mean())}
+
+
+def _audio_features(n_frames, n_channels, samples, full_scale):
+    """Envelope stats: mean absolute amplitude normalized to [0, 1]."""
+    import numpy as np  # noqa: PLC0415
+
+    mean = (
+        float(np.abs(samples.astype(np.float64)).mean() / full_scale)
+        if samples.size
+        else 0.0
+    )
+    return {"width": n_frames, "height": n_channels, "mean_value": mean}
+
+
 def decode_audio(payload: bytes) -> dict[str, Any]:
-    """Real audio decode for PCM WAV (stdlib ``wave`` + numpy) plus
-    IMA/MS ADPCM, IEEE-float and G.711 A-law/mu-law WAV
-    (:mod:`kinesis_vcr_spark.operators.adpcm` — the stdlib refuses
-    non-integer-PCM format tags, so those fall through to the in-repo
-    decoders): width = sample frames, height = channels,
-    mean_value = mean absolute amplitude normalized to [0, 1].
-    MPEG-1 Layer I/II decodes for real (operators/mp3.py polyphase
-    synthesis); Layer III decodes (MPEG-1 and MPEG-2 LSF) when the
-    stream's Huffman tables are among the validated set — gated-table
-    streams (typical music bitrates) and AAC stay the soundfile/
-    ffmpeg slot with the parsed stream shape in the error. FLAC
-    decodes for real (operators/flac.py, r13) with the STREAMINFO
-    PCM-MD5 self-check enforced; so does Ogg-FLAC (operators/ogg.py
-    native-stream reconstruction), while Ogg Vorbis/Opus/Speex raise
-    with the container-parsed shape."""
+    """Real audio decode for PCM WAV (stdlib ``wave`` + numpy) and FLAC
+    (:mod:`kinesis_vcr_spark.operators.flac`, STREAMINFO PCM-MD5
+    self-check enforced): width = sample frames, height = channels,
+    mean_value = mean absolute amplitude normalized to [0, 1]. Other
+    containers and non-PCM WAV format tags are the soundfile/ffmpeg
+    slot; a malformed WAV header raises ``ValueError``."""
     import io
     import wave
 
     import numpy as np
 
+    if payload[:4] == b"fLaC":
+        from kinesis_vcr_spark.operators.flac import decode_flac  # noqa: PLC0415
+
+        n_frames, n_channels, _sr, bits, samples = decode_flac(payload)
+        return _audio_features(n_frames, n_channels, samples,
+                               float(1 << (bits - 1)))
     if payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
-        if payload[:4] == b".snd" or (payload[:4] == b"FORM"
-                                      and payload[8:12] in (b"AIFF",
-                                                            b"AIFC")):
-            from kinesis_vcr_spark.operators.adpcm import (  # noqa: PLC0415
-                aiff_decode,
-                au_decode,
-            )
-
-            decode = au_decode if payload[:4] == b".snd" else aiff_decode
-            n_frames, n_channels, samples = decode(payload)
-            mean = (
-                float(np.abs(samples.astype(np.float64)).mean() / 32768.0)
-                if samples.size
-                else 0.0
-            )
-            return {"width": n_frames, "height": n_channels,
-                    "mean_value": mean}
-        if payload[:4] == b"fLaC":
-            # FLAC (r13): full in-repo decode, self-validated — the
-            # STREAMINFO MD5 of the decoded PCM is enforced, so every
-            # real-world file checks its own decoder
-            from kinesis_vcr_spark.operators.flac import (  # noqa: PLC0415
-                decode_flac,
-            )
-
-            n_frames, n_channels, _sr, bits, samples = decode_flac(payload)
-            full = float(1 << (bits - 1))
-            mean = (
-                float(np.abs(samples.astype(np.float64)).mean() / full)
-                if samples.size
-                else 0.0
-            )
-            return {"width": n_frames, "height": n_channels,
-                    "mean_value": mean}
-        from kinesis_vcr_spark.operators.aac import (  # noqa: PLC0415
-            aac_info,
-            is_adts,
-            is_mp4,
-        )
-
-        if is_adts(payload) or is_mp4(payload):
-            # AAC/M4A: metadata tier only (r11 item 6) — parse the
-            # shape into the error like Layer III / lossy WebP; the
-            # filterbank decode stays the soundfile/ffmpeg slot
-            try:
-                info = aac_info(payload)
-                shape = (
-                    f"{info['codec']}, {info['sample_rate']} Hz, "
-                    f"{info['channels']} ch, ~{info['duration_s']}s"
-                )
-            except ValueError:
-                shape = "unparseable AAC/MP4"
-            raise NotImplementedError(
-                f"AAC audio ({shape}) decode requires soundfile/"
-                "ffmpeg; aac_info covers the metadata tier"
-            ) from None
-        if payload[:4] == b"OggS":
-            # Ogg (r13): CRC-validated page walk + identification
-            # headers (operators/ogg.py). Ogg-FLAC decodes FOR REAL
-            # (native-stream reconstruction → decode_flac, MD5
-            # self-check inherited); Vorbis/Opus/Speex raise with the
-            # parsed shape — the AAC metadata-tier pattern
-            from kinesis_vcr_spark.operators.ogg import (  # noqa: PLC0415
-                decode_ogg,
-            )
-
-            n_frames, n_channels, _sr, bits, samples = decode_ogg(payload)
-            full = float(1 << (bits - 1))
-            mean = (
-                float(np.abs(samples.astype(np.float64)).mean() / full)
-                if samples.size
-                else 0.0
-            )
-            return {"width": n_frames, "height": n_channels,
-                    "mean_value": mean}
-        if payload[:3] == b"ID3" or (len(payload) > 1
-                                     and payload[0] == 0xFF
-                                     and payload[1] & 0xE0 == 0xE0):
-            from kinesis_vcr_spark.operators.mp3 import (
-                mp3_frame_info,
-                mpeg_audio_decode,
-            )
-
-            try:
-                n_frames, n_channels, samples = mpeg_audio_decode(payload)
-            except NotImplementedError:
-                # Layer III / LSF: the frame headers parse (version/
-                # bitrate/duration for metadata surfaces) but the DSP
-                # decode stays the documented slot; surface the parsed
-                # shape in the error like the lossy-WebP dispatch
-                try:
-                    info = mp3_frame_info(payload)
-                    shape = (
-                        f"{info['version']} layer {info['layer']}, "
-                        f"{info['sample_rate']} Hz, "
-                        f"{info['n_frames']} frames, "
-                        f"~{info['duration_s']}s"
-                    )
-                except ValueError:
-                    shape = "unparseable frames"
-                raise NotImplementedError(
-                    f"MPEG audio ({shape}) decode requires soundfile/"
-                    "ffmpeg; mp3_frame_info covers the metadata tier"
-                ) from None
-            mean = (
-                float(np.abs(samples.astype(np.float64)).mean() / 32768.0)
-                if samples.size
-                else 0.0
-            )
-            return {"width": n_frames, "height": n_channels,
-                    "mean_value": mean}
         raise NotImplementedError(
-            "non-WAV audio requires soundfile/ffmpeg; register a real "
-            "Decoder for compressed formats"
+            "unrecognized audio container (PCM WAV/FLAC supported); "
+            "register a soundfile/ffmpeg-backed Decoder for other formats"
         )
     try:
         with wave.open(io.BytesIO(payload)) as wav:
@@ -494,16 +372,15 @@ def decode_audio(payload: bytes) -> dict[str, Any]:
             sample_width = wav.getsampwidth()
             n_frames = wav.getnframes()
             raw = wav.readframes(n_frames)
-    except wave.Error:
-        from kinesis_vcr_spark.operators.adpcm import adpcm_wav_decode
-
-        n_frames, n_channels, samples = adpcm_wav_decode(payload)
-        mean = (
-            float(np.abs(samples.astype(np.float64)).mean() / 32768.0)
-            if samples.size
-            else 0.0
-        )
-        return {"width": n_frames, "height": n_channels, "mean_value": mean}
+    except wave.Error as e:  # the stdlib reads integer PCM only
+        if str(e).startswith("unknown format"):
+            raise NotImplementedError(
+                f"WAV {e} (only integer PCM supported); register a "
+                "soundfile/ffmpeg-backed Decoder for other formats"
+            ) from e
+        raise ValueError(f"malformed WAV header: {e}") from e
+    except RuntimeError as e:  # wave's chunk seek past the payload's end
+        raise ValueError("malformed WAV header: chunk past the end") from e
     dtype = {1: np.uint8, 2: np.int16, 4: np.int32}.get(sample_width)
     if dtype is None:
         raise NotImplementedError("only 8/16/32-bit PCM WAV supported")
@@ -511,67 +388,21 @@ def decode_audio(payload: bytes) -> dict[str, Any]:
     if sample_width == 1:  # 8-bit WAV is unsigned, centered at 128
         samples -= 128.0
     full_scale = {1: 128.0, 2: 32768.0, 4: 2147483648.0}[sample_width]
-    mean = float(np.abs(samples).mean() / full_scale) if samples.size else 0.0
-    return {"width": n_frames, "height": n_channels, "mean_value": mean}
+    return _audio_features(n_frames, n_channels, samples, full_scale)
 
 
 def real_decode(kind: str, payload: bytes) -> dict[str, Any]:
     """Decoder dispatching to the REAL codecs above by media kind.
-    Video decode stays the ffmpeg slot (MP4 and WebM raise with their
-    parsed metadata) — use ``fake_decode`` or the fixed-frame model for
-    plumbing tests."""
+    Video has no in-repo codec (the ffmpeg slot) — use ``fake_decode``
+    or the fixed-frame model for plumbing tests."""
     if kind == "image":
         return decode_image(payload)
     if kind == "audio":
         return decode_audio(payload)
-    if kind == "video":
-        from kinesis_vcr_spark.operators.aac import is_mp4  # noqa: PLC0415
-
-        if is_mp4(payload):
-            # MP4 video: metadata tier (operators/mp4video.py) — the
-            # AAC pattern: parse the shape into the error; the H.264/
-            # HEVC payload decode stays the documented ffmpeg slot
-            from kinesis_vcr_spark.operators.mp4video import (  # noqa: PLC0415
-                mp4_video_info,
-            )
-
-            try:
-                info = mp4_video_info(payload)
-                shape = (
-                    f"{info['codec']}, {info['width']}x{info['height']}, "
-                    f"{info['n_frames']} frames, ~{info['duration_s']}s"
-                )
-            except ValueError:
-                shape = "unparseable MP4 video"
-            raise NotImplementedError(
-                f"MP4 video ({shape}) decode requires ffmpeg; "
-                "mp4_video_info covers the metadata tier"
-            ) from None
-        if payload[:4] == b"\x1a\x45\xdf\xa3":
-            # WebM/Matroska: metadata tier (operators/webm.py)
-            from kinesis_vcr_spark.operators.webm import (  # noqa: PLC0415
-                webm_info,
-            )
-
-            try:
-                info = webm_info(payload)
-                vid = next(
-                    (t for t in info["tracks"] if t["type"] == "video"),
-                    None,
-                )
-                shape = (
-                    f"{vid['codec_id']}, {vid['width']}x{vid['height']}, "
-                    f"{vid['n_frames']} frames, ~{info['duration_s']}s"
-                    if vid
-                    else f"no video track, ~{info['duration_s']}s"
-                )
-            except ValueError:
-                shape = "unparseable WebM"
-            raise NotImplementedError(
-                f"WebM video ({shape}) decode requires ffmpeg; "
-                "webm_info covers the metadata tier"
-            ) from None
-    raise NotImplementedError(f"no real codec for kind={kind!r} (needs ffmpeg)")
+    raise NotImplementedError(
+        f"no real codec for kind={kind!r}; register an ffmpeg-backed "
+        "Decoder"
+    )
 
 
 def fake_decode(kind: str, payload: bytes) -> dict[str, Any]:

@@ -1,7 +1,8 @@
 """Perceptual image hashing (pHash / dHash) + Hamming near-dup pairs —
-image-level near-duplicate detection composed from the in-repo decoders
-(operators/multimodal.py E13 family) and the pigeonhole-blocked Hamming
-engine (operators/dedup.py ``near_dup_pairs_hash64``).
+image-level near-duplicate detection composed from the in-repo image
+dispatch (operators/multimodal.py ``decode_pixels``) and the
+pigeonhole-blocked Hamming engine (operators/dedup.py
+``near_dup_pairs_hash64``).
 
 Text near-dup catches re-posted articles; CRAWLED IMAGE corpora need
 the pixel-level analogue: the same photo re-encoded (PNG → JPEG),
@@ -20,8 +21,8 @@ formulation):
   brightness/contrast shifts (only the gradient SIGN is kept).
 
 Everything is deterministic integer/float math pinned by fixture
-tests (spec-rule style, like the ADPCM/VP8L work): the resize is exact
-area-weighted averaging (interval-overlap matrices — no library
+tests (spec-rule style): the resize is exact area-weighted averaging
+(interval-overlap matrices — no library
 resampler to drift against), grayscale is Rec.601, the DCT basis is
 the orthonormal closed form. The Spark surface is one Arrow-batched
 ``mapInPandas`` producing ``(media_id, phash, dhash)`` — numpy per
@@ -52,6 +53,7 @@ from pyspark.sql.types import LongType, StructField, StructType
 
 from kinesis_vcr_spark.cacheutil import hold
 from kinesis_vcr_spark.operators.dedup import near_dup_pairs_hash64
+from kinesis_vcr_spark.operators.multimodal import decode_pixels
 
 #: pHash DCT input size and kept low-frequency block (the standard
 #: 32→8 shape: 64 hash bits).
@@ -156,38 +158,10 @@ def dhash64(px: np.ndarray) -> int:
 
 
 def real_pixels(payload: bytes) -> np.ndarray:
-    """Decode an image payload to its pixel array via the in-repo
-    codecs (PPM/BMP/PNG/JPEG/GIF/TIFF/WebP-lossless — the
-    :func:`~kinesis_vcr_spark.operators.multimodal.decode_image`
-    dispatch, returning pixels instead of summary stats)."""
-    from kinesis_vcr_spark.operators import multimodal as mm
-
-    if payload[:2] == b"P6":
-        return mm._ppm_parse(payload)[2]
-    if payload[:2] == b"BM":
-        return mm._bmp_parse(payload)[2]
-    if payload[:8] == mm.PNG_SIGNATURE:
-        return mm._png_parse(payload)[2]
-    if payload[:2] == b"\xff\xd8":
-        from kinesis_vcr_spark.operators.jpeg import jpeg_decode
-
-        return jpeg_decode(payload)[2]
-    if payload[:6] in (b"GIF87a", b"GIF89a"):
-        from kinesis_vcr_spark.operators.gif import gif_decode
-
-        return gif_decode(payload)[2]
-    if payload[:4] in (b"II*\x00", b"MM\x00*"):
-        from kinesis_vcr_spark.operators.tiff import tiff_decode
-
-        return tiff_decode(payload)[2]
-    if payload[:4] == b"RIFF" and payload[8:12] == b"WEBP":
-        from kinesis_vcr_spark.operators.webp import webp_decode
-
-        return webp_decode(payload)[2]
-    raise NotImplementedError(
-        "unrecognized image container for perceptual hashing "
-        "(PPM/BMP/PNG/JPEG/GIF/TIFF/WebP supported)"
-    )
+    """Decode an image payload to its pixel array through the in-repo
+    image dispatch (:func:`~kinesis_vcr_spark.operators.multimodal.
+    decode_pixels`: PPM/BMP/PNG)."""
+    return decode_pixels(payload)[2]
 
 
 def fake_pixels(payload: bytes) -> np.ndarray:

@@ -276,7 +276,7 @@ def multimodal_real_codec_features(
     becomes a deterministic 8x8 P6 PPM whose 192 pixel bytes are the
     ascii hex of the text's sha256 repeated three times, decoded by the
     real PPM decoder through the same Arrow ``mapInPandas`` path the
-    PNG/JPEG/WebP codecs ride (``real_decode``). Header dims and the
+    BMP/PNG codecs ride (``real_decode``). Header dims and the
     mean pixel byte are reproducible in SQL from the same digest, and
     the mean is numerically EXACT on both engines: the 64-hex-char byte
     sum is an integer and /64 is a power-of-two division, so Spark's

@@ -12,24 +12,29 @@ from kinesis_vcr_spark.operators.multimodal import (
     documents_as_media,
     extract_media_features,
     fake_decode,
+    real_decode,
 )
 from kinesis_vcr_spark.tables import load_table
 
 
 def test_stub_decoders_raise():
-    # baseline JPEG is real now (tests/test_jpeg.py); a truncated
-    # stream must fail loudly, and unknown containers stay PIL slots
-    with pytest.raises(ValueError):
-        decode_image(b"\xff\xd8\xff\xe0 jpeg")  # no SOS scan
-    with pytest.raises(ValueError):
-        decode_image(b"GIF89a" + b"\x00" * 4)  # truncated header
-    with pytest.raises(ValueError):  # TIFF is real now (test_tiff.py);
-        decode_image(b"II*\x00 truncated tiff")  # malformed fails loud
-    with pytest.raises(ValueError):  # BOTH WebP codecs are real now
-        # (test_webp.py / test_vp8.py); an empty VP8 chunk fails loud
-        decode_image(b"RIFF1234WEBPVP8 \x00\x00\x00\x00")
-    with pytest.raises(NotImplementedError):
-        decode_audio(b"RIFF")
+    # only PPM/BMP/PNG images and PCM WAV/FLAC audio decode in-repo;
+    # every other container (JPEG, GIF, TIFF, WebP, MP3, Ogg, AU, AIFF,
+    # MP4 video...) is the Decoder seam and says so
+    for payload in (
+        b"\xff\xd8\xff\xe0 jpeg",
+        b"GIF89a" + b"\x00" * 4,
+        b"II*\x00 tiff",
+        b"RIFF1234WEBPVP8 \x00\x00\x00\x00",
+    ):
+        with pytest.raises(NotImplementedError, match="Decoder"):
+            decode_image(payload)
+    for payload in (b"RIFF", b"ID3\x04", b"OggS\x00", b".snd",
+                    b"FORM\x00\x00\x00\x04AIFF"):
+        with pytest.raises(NotImplementedError, match="Decoder"):
+            decode_audio(payload)
+    with pytest.raises(NotImplementedError, match="Decoder"):
+        real_decode("video", b"\x00\x00\x00\x18ftypisom")
 
 
 def test_fake_decode_deterministic():
@@ -558,22 +563,28 @@ def test_png_invalid_variants_raise():
         _png_parse(_truncate_idat(arr))
 
 
-def _truncate_idat(arr):
-    """Rebuild the PNG with an IDAT that inflates to too few bytes."""
+def _edit_idat(png, edit):
+    """The PNG with its IDAT chunk data replaced by ``edit(data)``
+    (length and CRC rewritten)."""
     import struct
     import zlib
 
-    full = _png_bytes(arr, (0,))
-    # locate IDAT and replace with a shorter valid zlib stream
-    i = full.index(b"IDAT") - 4
-    length = struct.unpack_from(">I", full, i)[0]
-    end = i + 12 + length
-    short = zlib.compress(b"\x00" * 5)
-    body = b"IDAT" + short
-    new_chunk = struct.pack(">I", len(short)) + body + struct.pack(
+    i = png.index(b"IDAT") - 4
+    length = struct.unpack_from(">I", png, i)[0]
+    data = edit(png[i + 8 : i + 8 + length])
+    body = b"IDAT" + data
+    new_chunk = struct.pack(">I", len(data)) + body + struct.pack(
         ">I", zlib.crc32(body) & 0xFFFFFFFF
     )
-    return full[:i] + new_chunk + full[end:]
+    return png[:i] + new_chunk + png[i + 12 + length :]
+
+
+def _truncate_idat(arr):
+    """Rebuild the PNG with an IDAT that inflates to too few bytes."""
+    import zlib
+
+    short = zlib.compress(b"\x00" * 5)
+    return _edit_idat(_png_bytes(arr, (0,)), lambda _: short)
 
 
 def test_extract_features_null_quarantine(spark):
@@ -612,43 +623,77 @@ def test_extract_features_null_quarantine(spark):
 
 
 def test_quarantine_catches_bitstream_truncation_artifacts(spark):
-    """ADVICE r10 regression: crawl-garbage payloads whose pure-Python
-    bitstream parse dies with IndexError/struct.error (empty ALPH
-    chunk; VP8 partition table truncation; AIFF short COMM) must null
-    under on_error='null' instead of killing the Spark task."""
-    import base64
+    """ADVICE r10 regression: crawl-garbage payloads whose parse dies
+    with a truncation artifact (struct.error on a BMP cut inside its
+    header) must null under on_error='null' instead of killing the
+    Spark task, while a valid row in the same batch still decodes."""
     import struct as _struct
 
-    from pyspark.sql import Row
-
-    from kinesis_vcr_spark.operators.multimodal import (
-        extract_media_features,
-        real_decode,
-    )
-    from vp8_fixtures import PYTHON_WEBP
-
-    webp = base64.b64decode("".join(PYTHON_WEBP))
-    # container with an EMPTY ALPH chunk ahead of the (valid) VP8 data
-    i = webp.index(b"VP8 ")
-    vp8_chunk = webp[i:]
-    inner = b"WEBPALPH" + _struct.pack("<I", 0) + vp8_chunk
-    empty_alph = b"RIFF" + _struct.pack("<I", len(inner)) + inner
-    aiff = (b"FORM" + _struct.pack(">I", 11)
-            + b"AIFFCOMM" + _struct.pack(">I", 3) + b"\x00\x01\x00")
+    cut_bmp = b"BM\x00\x00"
+    with pytest.raises(_struct.error):
+        decode_image(cut_bmp)
     rows = [
-        Row(media_id=1, kind="image", payload=empty_alph, meta=None),
-        Row(media_id=2, kind="image", payload=webp[:40], meta=None),
-        Row(media_id=3, kind="audio", payload=aiff, meta=None),
-        Row(media_id=4, kind="image", payload=webp, meta=None),
+        Row(media_id=1, kind="image", payload=cut_bmp, meta=None),
+        Row(media_id=2, kind="image", payload=b"P6 2 2 255\n" + bytes(12),
+            meta=None),
     ]
+    got = _features_null(spark, rows)
+    assert got[1]["width"] is None
+    assert got[2]["width"] == 2 and got[2]["height"] == 2
+
+
+def _features_null(spark, rows):
+    """media_id → feature row of real_decode under on_error='null'."""
     media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    got = {
+    return {
         r["media_id"]: r
         for r in extract_media_features(
             media, decoder=real_decode, on_error="null"
         ).collect()
     }
-    assert got[1]["width"] is None
+
+
+def test_corrupt_png_stream_is_malformed_and_quarantined(spark):
+    """A PNG whose IDAT deflate stream is cut short raises ValueError
+    (not zlib.error, which is outside MALFORMED_ERRORS), so it nulls
+    under on_error='null' next to a valid PNG row."""
+    import numpy as np
+
+    arr = (np.arange(6 * 8 * 3) % 251).astype(np.uint8).reshape(6, 8, 3)
+    png = _png_bytes(arr, (0,))
+    cut = _edit_idat(png, lambda d: d[:-6])  # deflate stream ends early
+    with pytest.raises(ValueError, match="corrupt PNG"):
+        decode_image(cut)
+    got = _features_null(spark, [
+        Row(media_id=1, kind="image", payload=png, meta=None),
+        Row(media_id=2, kind="image", payload=cut, meta=None),
+    ])
+    assert got[1]["width"] == 8 and got[1]["height"] == 6
+    assert got[2]["width"] is None and got[2]["mean_value"] is None
+
+
+def test_malformed_and_non_pcm_wav_are_quarantined(spark):
+    """The stdlib ``wave`` errors map onto the quarantine contract: a
+    ``fmt `` chunk size pointing past the payload (wave's chunk seek
+    raises a bare RuntimeError) is a ValueError, an IEEE-float format
+    tag is the NotImplementedError slot; both null under
+    on_error='null' next to a valid PCM WAV row."""
+    import struct
+
+    wav = _wav_bytes([0, 1000, -1000, 2000])
+    past_end = bytearray(wav)
+    past_end[18] = 0xCB  # fmt chunk size high byte
+    float_wav = bytearray(wav)
+    float_wav[20:22] = struct.pack("<H", 3)  # WAVE_FORMAT_IEEE_FLOAT
+    with pytest.raises(ValueError, match="malformed WAV"):
+        decode_audio(bytes(past_end))
+    with pytest.raises(NotImplementedError, match="Decoder"):
+        decode_audio(bytes(float_wav))
+    got = _features_null(spark, [
+        Row(media_id=1, kind="audio", payload=wav, meta=None),
+        Row(media_id=2, kind="audio", payload=bytes(past_end), meta=None),
+        Row(media_id=3, kind="audio", payload=bytes(float_wav), meta=None),
+    ])
+    assert got[1]["width"] == 4 and got[1]["height"] == 1
     assert got[2]["width"] is None
     assert got[3]["width"] is None
-    assert got[4]["width"] == 16 and got[4]["height"] == 16

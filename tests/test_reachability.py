@@ -20,11 +20,14 @@ ENTRIES = ["__spark_entry__", "bench", f"{PKG}.__main__"] + [
     f"{PKG}.queries.{m}" for m in _MODULE_ORDER
 ]
 
-# The streaming twins, the ingest harness they run on, their
-# window/metrics helpers, the Kinesis emulator and the state store are the
-# paper's streaming surface (record runs on a stream). Tests drive them,
-# not the batch query registry. Any other module under streaming/ must be
-# reachable like the rest of the engine.
+# The streaming twins, the ingest harness they run on, the Kinesis
+# emulator and the state store are the paper's streaming surface (record
+# runs on a stream). Tests drive them, not the batch query registry.
+# ``windows`` and ``metrics`` are imported by no twin: they stay exempt
+# only while their fate is open (``metrics`` waits on the run-record
+# work, ROADMAP direction 1; ``windows`` on the dead-code audit,
+# direction 4). Any other module under streaming/ must be reachable like
+# the rest of the engine.
 EXEMPT = {f"{PKG}.statefs"} | {
     f"{PKG}.streaming.{m}"
     for m in (
