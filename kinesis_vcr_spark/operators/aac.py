@@ -66,7 +66,7 @@ def parse_audio_specific_config(data: bytes) -> dict[str, Any]:
     HE profiles and report the post-SBR output rate. (ADTS cannot
     signal HE in its 2-bit profile field — implicit SBR there is
     detectable only by decoding; documented boundary.)"""
-    from kinesis_vcr_spark.operators.mp3 import _BitReader  # noqa: PLC0415
+    from kinesis_vcr_spark.operators.flac import _BitReader  # noqa: PLC0415
 
     br = _BitReader(data)
 

@@ -27,7 +27,7 @@ Tables and block layouts follow the public IMA ADPCM reference
 algorithm (IMA Digital Audio Focus/Technical Working Groups, 1992) and
 the public Microsoft WAVE format documentation; the tests encode with
 an INDEPENDENT spec-rule encoder written from the same documents (the
-fixture discipline that landed GIF/TIFF/WebP first-try).
+fixture discipline that landed GIF/TIFF first-try).
 
 Reference anchor: no counterpart in the reference (record/replay
 tool); SURVEY.md §2.5a multimodal family, formerly the lossy-audio

@@ -130,7 +130,7 @@ class _BitReader:
     def read(self, n: int) -> int:
         end = self.pos + n
         if end > len(self.data) * 8:
-            raise ValueError("FLAC frame truncated mid-field")
+            raise ValueError("bitstream truncated mid-field")
         v = 0
         pos = self.pos
         while n:

@@ -520,8 +520,7 @@ def _upsample(plane: np.ndarray, factor: int, axis: int) -> np.ndarray:
     through reconstruction and rounds once at the end — outputs may
     differ from libjpeg by ±1 LSB. The conformance harness is
     tolerance-based by design; this decoder does NOT claim bit parity
-    with libjpeg (unlike the VP8 path, which is pinned bit-exact
-    against libwebp)."""
+    with libjpeg."""
     if factor == 1:
         return plane
     if factor != 2:

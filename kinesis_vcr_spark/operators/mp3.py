@@ -11,11 +11,8 @@ Two tiers:
   versions (ISO/IEC 11172-3 §2.4.1.3 / 13818-3 header fields).
 
 - ``mpeg_audio_decode`` — real PCM decode for MPEG-1 Layer I and
-  Layer II, and (via operators/mp3l3.py) Layer III in both MPEG-1 and
-  MPEG-2 LSF flavors for streams restricted to the validated Huffman
-  tables; gated-table Layer III streams and MPEG-2 LSF Layer II (its
-  allocation table is untestable here) stay the documented ffmpeg
-  slot.
+  Layer II; Layer III and MPEG-2 LSF Layer II (its allocation table is
+  untestable here) stay the documented ffmpeg slot.
 
 Validation story for the one large tabulated constant — the 512-tap
 polyphase window (ISO 11172-3 Table B.3, stored here in its public
@@ -49,6 +46,8 @@ from __future__ import annotations
 from typing import Any
 
 import numpy as np
+
+from kinesis_vcr_spark.operators.flac import _BitReader
 
 #: bitrate tables in kbps, index = header bitrate_index (0 = free, 15
 #: = invalid). Keyed by (version_group, layer): version_group "1" =
@@ -319,30 +318,6 @@ def _l2_table_select(sample_rate: int, bitrate: int, channels: int) -> str:
     return "a" if sample_rate == 48000 else "b"
 
 
-class _BitReader:
-    """MSB-first bit reader over a frame's payload bytes."""
-
-    def __init__(self, data: bytes):
-        self.data = data
-        self.pos = 0  # bit position
-
-    def read(self, n: int) -> int:
-        end = self.pos + n
-        if end > len(self.data) * 8:
-            raise ValueError("MPEG audio frame truncated mid-field")
-        v = 0
-        pos = self.pos
-        while n:
-            byte = self.data[pos >> 3]
-            avail = 8 - (pos & 7)
-            take = avail if avail < n else n
-            v = (v << take) | ((byte >> (avail - take)) & ((1 << take) - 1))
-            pos += take
-            n -= take
-        self.pos = pos
-        return v
-
-
 def _requant(code: int, m: int, sf: float) -> float:
     """Uniform midtread requantization of an m-step code: the closed
     form (2d - m + 1)/m whose C/D split is the spec's Table B.4."""
@@ -480,15 +455,10 @@ def _decode_frame_subbands(payload: bytes, off: int,
 
 
 def mpeg_audio_decode(payload: bytes) -> tuple[int, int, np.ndarray]:
-    """PCM decode of an MPEG audio stream: Layer I/II fully; Layer
-    III (MPEG-1 and, r12, MPEG-2 LSF) only for streams restricted to
-    validated big-value Huffman tables (0-3/5-9 + count1) — typical
-    128-320 kbps music selects the gated ESC tables and raises
-    ``NotImplementedError``. Returns (sample_frames, channels, int16
-    samples of shape (n, channels)). Layer III dispatches to
-    :mod:`kinesis_vcr_spark.operators.mp3l3` (see its module
-    docstring for the honestly-tiered Huffman table validation and
-    the gated-table slots)."""
+    """PCM decode of an MPEG-1 Layer I/II stream. Returns
+    (sample_frames, channels, int16 samples of shape (n, channels)).
+    Layer III and MPEG-2/2.5 streams raise ``NotImplementedError``
+    (the ffmpeg/soundfile slot)."""
     off = _id3v2_size(payload)
     first = None
     while off + 4 <= len(payload):
@@ -499,13 +469,7 @@ def mpeg_audio_decode(payload: bytes) -> tuple[int, int, np.ndarray]:
         off += 1
     if first is None:
         raise ValueError("no MPEG audio frame sync found")
-    if first["layer"] == 3:
-        from kinesis_vcr_spark.operators.mp3l3 import (  # noqa: PLC0415
-            decode_layer3,
-        )
-
-        return decode_layer3(payload)
-    if first["version"] != "MPEG1":
+    if first["layer"] == 3 or first["version"] != "MPEG1":
         raise NotImplementedError(
             f"{first['version']} layer {first['layer']} decode requires "
             "ffmpeg/soundfile; MPEG-1 Layer I/II decode in-repo, "

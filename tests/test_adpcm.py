@@ -1,7 +1,7 @@
 """ADPCM WAV decode (operators/adpcm.py) against INDEPENDENT spec-rule
 encoders written in this file from the public IMA reference algorithm
 and the public Microsoft WAVE documentation — the same fixture
-discipline as the GIF/TIFF/WebP/JPEG suites: the encoder implements
+discipline as the GIF/TIFF/JPEG suites: the encoder implements
 the spec's quantize-and-track rules on its own, so any state-tracking
 error in the decoder breaks the roundtrip, and ADPCM roundtrips are
 BIT-exact by construction (the encoder reconstructs the same predictor

@@ -82,14 +82,3 @@ def test_no_sync_is_loud():
     with pytest.raises(ValueError, match="sync"):
         mp3_frame_info(bytes(64))
 
-
-def test_decode_audio_decodes_mp3_silence():
-    """r11: Layer III decodes in-repo now — a zero-filled frame body
-    is all-zero side info (table 0, empty spectrum) and must decode
-    to exact silence through decode_audio's MPEG fall-through."""
-    from kinesis_vcr_spark.operators.multimodal import decode_audio
-
-    payload = _frame(_header(), 417) * 3
-    out = decode_audio(payload)
-    assert out["width"] == 1152 * 3  # sample frames
-    assert out["mean_value"] == 0.0

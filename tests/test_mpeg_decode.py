@@ -463,21 +463,20 @@ def test_decode_audio_mpeg_layer2():
     assert 0.0 < out["mean_value"] < 1.0
 
 
-def test_decode_audio_layer3_decodes_in_repo_now():
-    """r11 (verdict item 2): a minimal MPEG-1 Layer III chain decodes
-    through operators/mp3l3.py — zero-filled side info is table 0 /
-    empty spectrum, i.e. exact silence. The metadata tier still
-    answers first."""
+def test_decode_audio_layer3_is_the_ffmpeg_slot():
+    """Layer III has no in-repo decoder: the metadata tier still
+    answers, and decode_audio raises the Decoder slot with the parsed
+    stream shape in the message."""
     hdr = (0x7FF << 21) | (3 << 19) | (1 << 17) | (1 << 16) | (9 << 12) | (0 << 10) | (3 << 6)
     frame_bytes = 144 * 128000 // 44100
     stream = (hdr.to_bytes(4, "big") + bytes(frame_bytes - 4)) * 3
     info = mp3_frame_info(stream)
     assert (info["layer"], info["n_frames"]) == (3, 3)
-    n, ch, pcm = mpeg_audio_decode(stream)
-    assert (n, ch) == (1152 * 3, 1)
-    assert not pcm.any()
-    out = decode_audio(stream)
-    assert out["width"] == 1152 * 3 and out["mean_value"] == 0.0
+    with pytest.raises(NotImplementedError, match="layer 3"):
+        mpeg_audio_decode(stream)
+    with pytest.raises(NotImplementedError,
+                       match="MPEG1 layer 3, 44100 Hz, 3 frames"):
+        decode_audio(stream)
 
 
 def test_mpeg_decode_skips_id3_and_truncated_tail():

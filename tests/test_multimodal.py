@@ -18,21 +18,20 @@ from kinesis_vcr_spark.tables import load_table
 
 
 def test_stub_decoders_raise():
-    # only PPM/BMP/PNG images and PCM WAV/FLAC audio decode in-repo;
-    # every other container (JPEG, GIF, TIFF, WebP, MP3, Ogg, AU, AIFF,
-    # MP4 video...) is the Decoder seam and says so
-    for payload in (
-        b"\xff\xd8\xff\xe0 jpeg",
-        b"GIF89a" + b"\x00" * 4,
-        b"II*\x00 tiff",
-        b"RIFF1234WEBPVP8 \x00\x00\x00\x00",
-    ):
-        with pytest.raises(NotImplementedError, match="Decoder"):
-            decode_image(payload)
-    for payload in (b"RIFF", b"ID3\x04", b"OggS\x00", b".snd",
-                    b"FORM\x00\x00\x00\x04AIFF"):
-        with pytest.raises(NotImplementedError, match="Decoder"):
-            decode_audio(payload)
+    # JPEG/GIF/TIFF decode in-repo (tests/test_jpeg.py, test_gif.py,
+    # test_tiff.py): a truncated stream must fail loudly
+    with pytest.raises(ValueError):
+        decode_image(b"\xff\xd8\xff\xe0 jpeg")  # no SOS scan
+    with pytest.raises(ValueError):
+        decode_image(b"GIF89a" + b"\x00" * 4)  # truncated header
+    with pytest.raises(ValueError):
+        decode_image(b"II*\x00 truncated tiff")
+    # WebP, unknown audio containers and all video are the Decoder seam
+    # and say so
+    with pytest.raises(NotImplementedError, match="Decoder"):
+        decode_image(b"RIFF1234WEBPVP8 \x00\x00\x00\x00")
+    with pytest.raises(NotImplementedError, match="Decoder"):
+        decode_audio(b"RIFF")
     with pytest.raises(NotImplementedError, match="Decoder"):
         real_decode("video", b"\x00\x00\x00\x18ftypisom")
 
@@ -675,24 +674,25 @@ def test_corrupt_png_stream_is_malformed_and_quarantined(spark):
 def test_malformed_and_non_pcm_wav_are_quarantined(spark):
     """The stdlib ``wave`` errors map onto the quarantine contract: a
     ``fmt `` chunk size pointing past the payload (wave's chunk seek
-    raises a bare RuntimeError) is a ValueError, an IEEE-float format
-    tag is the NotImplementedError slot; both null under
-    on_error='null' next to a valid PCM WAV row."""
+    raises a bare RuntimeError) is a ValueError, and a format tag no
+    in-repo decoder reads (MPEG-in-WAV) is the NotImplementedError
+    slot; both null under on_error='null' next to a valid PCM WAV
+    row."""
     import struct
 
     wav = _wav_bytes([0, 1000, -1000, 2000])
     past_end = bytearray(wav)
     past_end[18] = 0xCB  # fmt chunk size high byte
-    float_wav = bytearray(wav)
-    float_wav[20:22] = struct.pack("<H", 3)  # WAVE_FORMAT_IEEE_FLOAT
+    mpeg_wav = bytearray(wav)
+    mpeg_wav[20:22] = struct.pack("<H", 0x55)  # WAVE_FORMAT_MPEGLAYER3
     with pytest.raises(ValueError, match="malformed WAV"):
         decode_audio(bytes(past_end))
-    with pytest.raises(NotImplementedError, match="Decoder"):
-        decode_audio(bytes(float_wav))
+    with pytest.raises(NotImplementedError, match="0x0055"):
+        decode_audio(bytes(mpeg_wav))
     got = _features_null(spark, [
         Row(media_id=1, kind="audio", payload=wav, meta=None),
         Row(media_id=2, kind="audio", payload=bytes(past_end), meta=None),
-        Row(media_id=3, kind="audio", payload=bytes(float_wav), meta=None),
+        Row(media_id=3, kind="audio", payload=bytes(mpeg_wav), meta=None),
     ])
     assert got[1]["width"] == 4 and got[1]["height"] == 1
     assert got[2]["width"] is None
