@@ -305,49 +305,24 @@ def _png_parse(payload: bytes):
     return w, h, px
 
 
-def _jpeg_parse(payload: bytes):
-    from kinesis_vcr_spark.operators.jpeg import jpeg_decode  # noqa: PLC0415
-
-    return jpeg_decode(payload)
-
-
-def _gif_parse(payload: bytes):
-    from kinesis_vcr_spark.operators.gif import gif_decode  # noqa: PLC0415
-
-    return gif_decode(payload)
-
-
-def _tiff_parse(payload: bytes):
-    from kinesis_vcr_spark.operators.tiff import tiff_decode  # noqa: PLC0415
-
-    return tiff_decode(payload)
-
-
 _IMAGE_PARSERS = (
     (b"P6", _ppm_parse),
     (b"BM", _bmp_parse),
     (PNG_SIGNATURE, _png_parse),
-    (b"\xff\xd8", _jpeg_parse),
-    (b"GIF87a", _gif_parse),
-    (b"GIF89a", _gif_parse),
-    (b"II*\x00", _tiff_parse),
-    (b"MM\x00*", _tiff_parse),
 )
 
 
 def decode_pixels(payload: bytes):
     """The one image dispatch: a payload's magic bytes pick the parser
     → (width, height, pixels). P6 PPM, 24/32-bit BI_RGB BMP (pixel
-    bytes, row padding stripped), static PNG (:func:`_png_parse`),
-    Huffman JPEG (baseline and progressive), GIF and baseline TIFF
-    (:mod:`~kinesis_vcr_spark.operators.jpeg`, ``.gif``, ``.tiff``);
-    any other container (WebP included) is the PIL slot."""
+    bytes, row padding stripped) and static PNG (:func:`_png_parse`);
+    any other container (JPEG, GIF, TIFF, WebP, ...) is the PIL slot."""
     for magic, parse in _IMAGE_PARSERS:
         if payload.startswith(magic):
             return parse(payload)
     raise NotImplementedError(
-        "unrecognized image container (PPM/BMP/PNG/JPEG/GIF/TIFF "
-        "supported); register a PIL-backed Decoder for other formats"
+        "unrecognized image container (PPM/BMP/PNG supported); "
+        "register a PIL-backed Decoder for other formats"
     )
 
 
