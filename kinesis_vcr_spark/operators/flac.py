@@ -121,7 +121,8 @@ def is_flac(payload: bytes) -> bool:
 # ------------------------------------------------------- STREAMINFO
 
 class _BitReader:
-    """MSB-first bit reader over a byte string."""
+    """MSB-first bit reader over STREAMINFO and the frames; no other
+    codec shares it."""
 
     def __init__(self, data: bytes):
         self.data = data
@@ -130,7 +131,7 @@ class _BitReader:
     def read(self, n: int) -> int:
         end = self.pos + n
         if end > len(self.data) * 8:
-            raise ValueError("bitstream truncated mid-field")
+            raise ValueError("FLAC frame truncated mid-field")
         v = 0
         pos = self.pos
         while n:

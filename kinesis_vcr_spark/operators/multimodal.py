@@ -8,16 +8,15 @@ records on the wire", README.md "Format") — so ingest/shuffle/dedup all
 work on media without decoding.
 
 Decoding: real codecs with numpy + the stdlib only (no PIL/ffmpeg):
-PPM, uncompressed BMP, full static PNG (every color type incl.
-palette, bit depths 1-16, all five scanline filters, Adam7 interlace),
-Huffman JPEG, GIF and baseline TIFF behind one magic-byte dispatch
-(:func:`decode_pixels`); PCM/ADPCM/G.711 WAV, AU, AIFF, FLAC, Ogg-FLAC
-and MPEG-1 Layer I/II audio (:func:`decode_audio`). Every other
-container (WebP, MP3 Layer III, AAC, all video) raises
+PPM, uncompressed BMP and full static PNG (every color type incl.
+palette, bit depths 1-16, all five scanline filters, Adam7 interlace)
+behind one magic-byte dispatch (:func:`decode_pixels`); PCM WAV and
+FLAC audio (:func:`decode_audio`). Every other container (JPEG, GIF,
+TIFF, WebP, AU, AIFF, Ogg, MP3, AAC, all video) raises
 ``NotImplementedError``: register a PIL/ffmpeg-backed :data:`Decoder`
-for it. ``fake_decode``
-remains the deterministic stand-in used by the oracle-checked driver
-queries, because its arithmetic is reproducible in SQL.
+for it. ``fake_decode`` remains the deterministic stand-in used by the
+oracle-checked driver queries, because its arithmetic is reproducible
+in SQL.
 
 Scale posture: feature extraction is ``mapInPandas`` (one Arrow batch at
 a time, bounded memory via ``maxRecordsPerBatch``), a NARROW transform:
@@ -350,47 +349,30 @@ def decode_audio(payload: bytes) -> dict[str, Any]:
     """Real audio decode: width = sample frames, height = channels,
     mean_value = mean absolute amplitude normalized to [0, 1].
 
-    - PCM WAV via stdlib ``wave`` + numpy; IMA/MS ADPCM, IEEE-float and
-      G.711 WAV, AU and AIFF via :mod:`~kinesis_vcr_spark.operators.
-      adpcm` (the stdlib refuses non-integer-PCM format tags).
+    - PCM WAV via stdlib ``wave`` + numpy.
     - FLAC (:mod:`~kinesis_vcr_spark.operators.flac`, STREAMINFO
-      PCM-MD5 self-check enforced) and Ogg-FLAC
-      (:mod:`~kinesis_vcr_spark.operators.ogg`); Ogg Vorbis/Opus/Speex
-      raise with the container-parsed shape.
-    - MPEG-1 Layer I/II (:mod:`~kinesis_vcr_spark.operators.mp3`);
-      Layer III and AAC/M4A raise with the parsed stream shape.
+      PCM-MD5 self-check enforced).
 
-    Every ``NotImplementedError`` is the soundfile/ffmpeg slot: register
-    a real Decoder for those formats. A malformed header raises
-    ``ValueError``."""
+    Every other container (AU, AIFF, Ogg, MP3, AAC, ...) and every
+    non-PCM WAV format tag raises ``NotImplementedError``, the
+    soundfile/ffmpeg slot: register a real Decoder for those formats.
+    A malformed header raises ``ValueError``."""
     import io
     import wave
 
     import numpy as np
 
-    if payload[:4] == b".snd" or (payload[:4] == b"FORM"
-                                  and payload[8:12] in (b"AIFF", b"AIFC")):
-        from kinesis_vcr_spark.operators.adpcm import (  # noqa: PLC0415
-            aiff_decode,
-            au_decode,
-        )
-
-        decode = au_decode if payload[:4] == b".snd" else aiff_decode
-        return _audio_features(*decode(payload), 32768.0)
     if payload[:4] == b"fLaC":
         from kinesis_vcr_spark.operators.flac import decode_flac  # noqa: PLC0415
 
         n_frames, n_channels, _sr, bits, samples = decode_flac(payload)
         return _audio_features(n_frames, n_channels, samples,
                                float(1 << (bits - 1)))
-    if payload[:4] == b"OggS":
-        from kinesis_vcr_spark.operators.ogg import decode_ogg  # noqa: PLC0415
-
-        n_frames, n_channels, _sr, bits, samples = decode_ogg(payload)
-        return _audio_features(n_frames, n_channels, samples,
-                               float(1 << (bits - 1)))
     if payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
-        return _decode_compressed_audio(payload)
+        raise NotImplementedError(
+            "unrecognized audio container (PCM WAV/FLAC supported); "
+            "register a soundfile/ffmpeg-backed Decoder for other formats"
+        )
     try:
         with wave.open(io.BytesIO(payload)) as wav:
             n_channels = wav.getnchannels()
@@ -400,11 +382,11 @@ def decode_audio(payload: bytes) -> dict[str, Any]:
     except wave.Error as e:  # the stdlib reads integer PCM only
         if not str(e).startswith("unknown format"):
             raise ValueError(f"malformed WAV header: {e}") from e
-        from kinesis_vcr_spark.operators.adpcm import (  # noqa: PLC0415
-            adpcm_wav_decode,
-        )
-
-        return _audio_features(*adpcm_wav_decode(payload), 32768.0)
+        tag = int(str(e).rpartition(" ")[2])
+        raise NotImplementedError(
+            f"WAV format tag 0x{tag:04x} (only PCM is decoded); register "
+            "a soundfile/ffmpeg-backed Decoder for other formats"
+        ) from None
     except RuntimeError as e:  # wave's chunk seek past the payload's end
         raise ValueError("malformed WAV header: chunk past the end") from e
     dtype = {1: np.uint8, 2: np.int16, 4: np.int32}.get(sample_width)
@@ -415,59 +397,6 @@ def decode_audio(payload: bytes) -> dict[str, Any]:
         samples -= 128.0
     full_scale = {1: 128.0, 2: 32768.0, 4: 2147483648.0}[sample_width]
     return _audio_features(n_frames, n_channels, samples, full_scale)
-
-
-def _decode_compressed_audio(payload: bytes) -> dict[str, Any]:
-    """MPEG audio and AAC/M4A: MPEG-1 Layer I/II decode in-repo; for
-    everything else the frame/box walk's shape goes into the
-    ``NotImplementedError`` so a metadata surface can still see it."""
-    from kinesis_vcr_spark.operators.aac import (  # noqa: PLC0415
-        aac_info,
-        is_adts,
-        is_mp4,
-    )
-
-    if is_adts(payload) or is_mp4(payload):
-        try:
-            info = aac_info(payload)
-            shape = (
-                f"{info['codec']}, {info['sample_rate']} Hz, "
-                f"{info['channels']} ch, ~{info['duration_s']}s"
-            )
-        except ValueError:
-            shape = "unparseable AAC/MP4"
-        raise NotImplementedError(
-            f"AAC audio ({shape}) decode requires soundfile/ffmpeg; "
-            "aac_info covers the metadata tier"
-        )
-    if not (payload[:3] == b"ID3" or (len(payload) > 1
-                                      and payload[0] == 0xFF
-                                      and payload[1] & 0xE0 == 0xE0)):
-        raise NotImplementedError(
-            "unrecognized audio container; register a soundfile/"
-            "ffmpeg-backed Decoder for other formats"
-        )
-    from kinesis_vcr_spark.operators.mp3 import (  # noqa: PLC0415
-        mp3_frame_info,
-        mpeg_audio_decode,
-    )
-
-    try:
-        return _audio_features(*mpeg_audio_decode(payload), 32768.0)
-    except NotImplementedError:
-        try:
-            info = mp3_frame_info(payload)
-            shape = (
-                f"{info['version']} layer {info['layer']}, "
-                f"{info['sample_rate']} Hz, {info['n_frames']} frames, "
-                f"~{info['duration_s']}s"
-            )
-        except ValueError:
-            shape = "unparseable frames"
-        raise NotImplementedError(
-            f"MPEG audio ({shape}) decode requires soundfile/ffmpeg; "
-            "mp3_frame_info covers the metadata tier"
-        ) from None
 
 
 def real_decode(kind: str, payload: bytes) -> dict[str, Any]:

@@ -159,107 +159,3 @@ def test_png_exotic_color_types_conformance(jcodec):
             if got.shape[2] == 4:
                 got = got[..., :3]
             assert np.array_equal(got.reshape(ref.shape), ref), (name, tname)
-
-
-# --------------------------------------------------- audio containers
-
-class _JvmAudio:
-    def __init__(self, spark):
-        self.jvm = spark._jvm
-
-    def _ais(self, pcm: np.ndarray, rate: int = 8000):
-        """mono int16 numpy -> JVM AudioInputStream (PCM16 BE)."""
-        jvm = self.jvm
-        raw = pcm.astype(">i2").tobytes()
-        fmt = jvm.javax.sound.sampled.AudioFormat(float(rate), 16, 1,
-                                                  True, True)
-        bais = jvm.java.io.ByteArrayInputStream(raw)
-        return jvm.javax.sound.sampled.AudioInputStream(bais, fmt, len(pcm))
-
-    def write(self, pcm: np.ndarray, ftype: str,
-              encoding: str | None = None) -> bytes:
-        jvm = self.jvm
-        ais = self._ais(pcm)
-        if encoding:
-            enc = getattr(jvm.javax.sound.sampled.AudioFormat.Encoding,
-                          encoding)
-            target = jvm.javax.sound.sampled.AudioFormat(
-                enc, 8000.0, 8, 1, 1, 8000.0, True
-            )
-            ais = jvm.javax.sound.sampled.AudioSystem.getAudioInputStream(
-                target, ais
-            )
-        t = getattr(jvm.javax.sound.sampled.AudioFileFormat.Type, ftype)
-        baos = jvm.java.io.ByteArrayOutputStream()
-        jvm.javax.sound.sampled.AudioSystem.write(ais, t, baos)
-        return bytes(baos.toByteArray())
-
-    def decode_pcm16(self, payload: bytes) -> np.ndarray:
-        """Reference decode of any javax-readable audio file to mono
-        int16 via the JVM's own format conversion."""
-        jvm = self.jvm
-        bais = jvm.java.io.ByteArrayInputStream(payload)
-        ais = jvm.javax.sound.sampled.AudioSystem.getAudioInputStream(bais)
-        target = jvm.javax.sound.sampled.AudioFormat(8000.0, 16, 1, True,
-                                                     True)
-        conv = jvm.javax.sound.sampled.AudioSystem.getAudioInputStream(
-            target, ais
-        )
-        out = jvm.java.io.ByteArrayOutputStream()
-        # drain via AudioSystem.write to AU then strip the header
-        t = jvm.javax.sound.sampled.AudioFileFormat.Type.AU
-        jvm.javax.sound.sampled.AudioSystem.write(conv, t, out)
-        au = bytes(out.toByteArray())
-        off = int.from_bytes(au[4:8], "big")
-        return np.frombuffer(au[off:], ">i2").astype(np.int16)
-
-
-@pytest.fixture(scope="module")
-def jaudio(spark):
-    return _JvmAudio(spark)
-
-
-def _tone16(n=240):
-    t = np.arange(n)
-    return (12000 * np.sin(2 * np.pi * t / 48)
-            + 3000 * np.sin(2 * np.pi * t / 7)).astype(np.int16)
-
-
-def test_au_pcm16_conformance(jaudio):
-    from kinesis_vcr_spark.operators.adpcm import au_decode
-    from kinesis_vcr_spark.operators.multimodal import decode_audio
-
-    pcm = _tone16()
-    au = jaudio.write(pcm, "AU")
-    n, ch, got = au_decode(au)
-    assert (n, ch) == (len(pcm), 1)
-    np.testing.assert_array_equal(got[:, 0], pcm)
-    out = decode_audio(au)
-    assert out["width"] == len(pcm) and out["height"] == 1
-
-
-def test_aiff_pcm16_conformance(jaudio):
-    from kinesis_vcr_spark.operators.adpcm import aiff_decode
-    from kinesis_vcr_spark.operators.multimodal import decode_audio
-
-    pcm = _tone16()
-    aiff = jaudio.write(pcm, "AIFF")
-    n, ch, got = aiff_decode(aiff)
-    assert (n, ch) == (len(pcm), 1)
-    np.testing.assert_array_equal(got[:, 0], pcm)
-    assert decode_audio(aiff)["width"] == len(pcm)
-
-
-def test_g711_tables_match_reference_decoder(jaudio):
-    # ULAW/ALAW AU files written by the JVM, decoded BOTH ways: the
-    # repo's computed G.711 expansion tables must agree with the
-    # reference implementation's own expansion bit-for-bit
-    from kinesis_vcr_spark.operators.adpcm import au_decode
-
-    pcm = _tone16()
-    for encoding in ("ULAW", "ALAW"):
-        payload = jaudio.write(pcm, "AU", encoding)
-        ref = jaudio.decode_pcm16(payload)
-        n, ch, got = au_decode(payload)
-        np.testing.assert_array_equal(got[: len(ref), 0], ref,
-                                      err_msg=encoding)
