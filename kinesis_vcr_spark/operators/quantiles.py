@@ -114,11 +114,7 @@ def quantile_sketch(
     an oracle reproduces the sample — and therefore every quantile
     estimate — bit-for-bit. Merge of sketches over DISJOINT row sets =
     bottom-k of the concatenation (:func:`merge_quantile_sketches`),
-    associative and order-free; the streaming twin is
-    ``streaming_sample_k`` with the same seed (identical ticket
-    expression; tie-break differs only under 32-bit ticket collisions —
-    it keeps (t, id), the sketch keeps (t, v), so kept VALUES can
-    differ only when colliding tickets carry different values).
+    associative and order-free.
 
     Scale posture (mirrors kmv_sketch, ADVICE r03): one
     ``approx_count_distinct`` pass estimates per-key row counts, then

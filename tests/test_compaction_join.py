@@ -1,20 +1,14 @@
-"""Tests for archive compaction (operators/compaction.py) and the
-watermarked stream-stream interval join (streaming/windows.py)."""
+"""Tests for archive compaction (operators/compaction.py)."""
 
 from __future__ import annotations
 
 import datetime as dt
 import os
 
-import pytest
-from pyspark.sql import Row
-from pyspark.sql import functions as F
-
 from kinesis_vcr_spark.model import RECORD_SCHEMA
 from kinesis_vcr_spark.operators.compaction import compact_archive, plan_compaction
 from kinesis_vcr_spark.sources.archive import list_archive_files
 from kinesis_vcr_spark.streaming.record import write_archive_with_manifest
-from kinesis_vcr_spark.streaming.windows import interval_join_streams
 
 BASE = dt.datetime(2024, 3, 5, 10, 0, 0)
 
@@ -113,75 +107,3 @@ def test_compact_archive_noop_when_already_big(spark, tmp_path):
     out = compact_archive(spark, m, str(tmp_path / "c2"), target_bytes=1)
     assert sorted(r["file_path"] for r in out.select("file_path").collect()) == \
         sorted(r["file_path"] for r in m.select("file_path").collect())
-
-
-# ---------------------------------------------------------------------------
-# stream-stream interval join
-# ---------------------------------------------------------------------------
-
-
-def _emits_acks(spark):
-    emits = spark.createDataFrame(
-        [
-            ("u1", "e1", BASE),
-            ("u1", "e2", BASE + dt.timedelta(minutes=90)),
-            ("u2", "e3", BASE),
-        ],
-        "user string, emit_id string, emit_ts timestamp",
-    )
-    acks = spark.createDataFrame(
-        [
-            ("u1", "a1", BASE + dt.timedelta(minutes=10)),   # ↔ e1 only
-            ("u1", "a2", BASE + dt.timedelta(minutes=100)),  # ↔ e2 only
-            ("u2", "a3", BASE - dt.timedelta(minutes=5)),    # before e3 → no match
-        ],
-        "user string, ack_id string, ack_ts timestamp",
-    )
-    return emits, acks
-
-
-def test_interval_join_batch_semantics(spark):
-    emits, acks = _emits_acks(spark)
-    got = sorted(
-        (r["emit_id"], r["ack_id"])
-        for r in interval_join_streams(
-            acks, emits, ["user"],
-            left_ts="ack_ts", right_ts="emit_ts", within="1 hour",
-        ).collect()
-    )
-    # ack pairs with emits at most 1h BEFORE it
-    assert got == [("e1", "a1"), ("e2", "a2")]
-
-
-def test_interval_join_requires_distinct_ts_names(spark):
-    emits, acks = _emits_acks(spark)
-    with pytest.raises(ValueError, match="must differ"):
-        interval_join_streams(
-            emits, emits, ["user"], left_ts="emit_ts", right_ts="emit_ts"
-        )
-
-
-def test_interval_join_streaming_matches_batch(spark, tmp_path):
-    emits, acks = _emits_acks(spark)
-    e_src, a_src = str(tmp_path / "emits"), str(tmp_path / "acks")
-    emits.write.parquet(e_src)
-    acks.write.parquet(a_src)
-    e_stream = spark.readStream.schema(emits.schema).parquet(e_src)
-    a_stream = spark.readStream.schema(acks.schema).parquet(a_src)
-    q = (
-        interval_join_streams(
-            a_stream, e_stream, ["user"],
-            left_ts="ack_ts", right_ts="emit_ts", within="1 hour",
-        )
-        .writeStream.format("memory")
-        .queryName("ssjoin")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = sorted(
-        (r["emit_id"], r["ack_id"])
-        for r in spark.sql("SELECT * FROM ssjoin").collect()
-    )
-    assert got == [("e1", "a1"), ("e2", "a2")]

@@ -1,12 +1,10 @@
 """E86 mergeable quantile sketch: deterministic bottom-k ticket sample.
 
-Pins the three contracts the operator sells: (1) the sample is the
+Pins the two contracts the operator sells: (1) the sample is the
 exact bottom-k by the engine-portable md5 ticket (verified against an
 independent Python md5 reimplementation, which also exercises the
 HLL-cut prefilter's "exact result anyway" claim); (2) merge of
-sketches over disjoint row sets == rebuild over the union; (3) the
-streaming twin (streaming_sample_k, same seed) converges to the same
-sample, so streaming quantiles == batch sketch quantiles.
+sketches over disjoint row sets == rebuild over the union.
 """
 
 from __future__ import annotations
@@ -109,60 +107,3 @@ def test_quantile_error_bound_and_small_group_exact(spark):
         # small group: exact discrete quantile of 0..49
         expect = float(max(1, math.ceil(q * 50)) - 1)
         assert est[("small", q)] == expect
-
-
-def test_streaming_sample_quantiles_match_batch(spark, tmp_path):
-    from kinesis_vcr_spark.streaming.windows import streaming_sample_k
-
-    df = _fixture(spark, n=900, groups=3)
-    src = str(tmp_path / "qsk_src")
-    for j in range(3):
-        df.where(F.pmod("id", F.lit(3)) == j).coalesce(1).write.parquet(
-            f"{src}/f{j}.parquet"
-        )
-    k, q_probe = 32, 0.5
-    batch = {
-        r["grp"]: r["e"]
-        for r in quantile_sketch(df, ["grp"], "v", ["id"], k=k, seed=SEED)
-        .select(
-            "grp", quantile_from_sketch(F.col("qs"), q_probe).alias("e")
-        )
-        .collect()
-    }
-    stream = (
-        spark.readStream.schema("grp string, id long, v double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src + "/*")
-    )
-    q = (
-        streaming_sample_k(stream.select("grp", "id"), "grp", "id", k, seed=SEED)
-        .writeStream.format("memory")
-        .queryName("qsk_stream")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    sampled_ids = spark.sql("""
-        SELECT grp, id FROM qsk_stream s
-        WHERE version = (SELECT max(version) FROM qsk_stream m
-                         WHERE m.grp = s.grp)
-    """)
-    streamed = {
-        r["grp"]: r["e"]
-        for r in sampled_ids.join(df, ["grp", "id"])
-        .groupBy("grp")
-        .agg(F.sort_array(F.collect_list("v")).alias("vals"))
-        .select(
-            "grp",
-            F.element_at(
-                "vals",
-                F.greatest(
-                    F.lit(1),
-                    F.ceil(F.lit(q_probe) * F.size("vals")).cast("int"),
-                ),
-            ).alias("e"),
-        )
-        .collect()
-    }
-    assert streamed == batch

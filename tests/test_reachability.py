@@ -23,17 +23,16 @@ ENTRIES = ["__spark_entry__", "bench", f"{PKG}.__main__"] + [
 # The streaming twins, the ingest harness they run on, the Kinesis
 # emulator and the state store are the paper's streaming surface (record
 # runs on a stream). Tests drive them, not the batch query registry.
-# ``windows`` and ``metrics`` are imported by no twin: they stay exempt
-# only while their fate is open (``metrics`` waits on the run-record
-# work, ROADMAP direction 1; ``windows`` on the dead-code audit,
-# direction 4). Any other module under streaming/ must be reachable like
-# the rest of the engine.
+# ``metrics`` is imported by no twin: it stays exempt only while its
+# fate is open (it waits on the run-record work, ROADMAP direction 1).
+# Any other module under streaming/ must be reachable like the rest of
+# the engine.
 EXEMPT = {f"{PKG}.statefs"} | {
     f"{PKG}.streaming.{m}"
     for m in (
         "annstream", "graph", "htmlstream", "neardup", "searchstream",
         "seasonalstream", "spanstream", "tarstream", "urlstream",
-        "warcstream", "ingest", "windows", "metrics", "kinesis_emulator",
+        "warcstream", "ingest", "metrics", "kinesis_emulator",
     )
 }
 
@@ -74,3 +73,9 @@ def test_every_engine_module_is_reachable():
     }
     orphans = sorted(modules - seen - EXEMPT)
     assert not orphans, f"reached only from tests/ or tools/: {orphans}"
+
+
+def test_every_exemption_names_an_existing_module():
+    # an exemption must not outlive its module
+    stale = sorted(m for m in EXEMPT if _path(m) is None)
+    assert not stale, f"EXEMPT lists missing modules: {stale}"
