@@ -213,22 +213,6 @@ def jaccard(a: Column, b: Column) -> Column:
 # ---------------------------------------------------------------------------
 
 
-def minhash_signature(shingles: Column, num_hashes: int = 64) -> Column:
-    """k independent min-hashes: hash family h_i(s) = xxhash64(i, s), as
-    one (interpreted, HOF) column expression.
-
-    NOTE: fine for one-shot projection, but do NOT feed this into
-    generators/self-joins — downstream operators re-evaluate generator
-    children per output row, multiplying the O(k x |shingles|) cost.
-    The pair pipeline uses :func:`minhash_signature_agg` instead, where
-    the shuffle materializes the signature once.
-    """
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-        lambda i: F.array_min(F.transform(shingles, lambda s: F.xxhash64(i, s))),
-    )
-
-
 def minhash_signature_agg(
     with_shingles: DataFrame, id_col: str, num_hashes: int = 64
 ) -> DataFrame:
@@ -277,15 +261,6 @@ def minhash_signature_agg(
             F.min(F.pmod(F.col("__h") * a + b, F.lit(p))).alias(f"h{i}")
             for i, (a, b) in enumerate(coeffs)
         ]
-    )
-
-
-def lsh_band_hashes(signature: Column, bands: int, rows: int) -> Column:
-    """Hash each contiguous ``rows``-slice of the signature → one 64-bit
-    bucket key per band."""
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(bands - 1)),
-        lambda b: F.xxhash64(F.slice(signature, b * rows + 1, rows)),
     )
 
 

@@ -315,10 +315,15 @@ def decode_pixels(payload: bytes):
     """The one image dispatch: a payload's magic bytes pick the parser
     → (width, height, pixels). P6 PPM, 24/32-bit BI_RGB BMP (pixel
     bytes, row padding stripped) and static PNG (:func:`_png_parse`);
-    any other container (JPEG, GIF, TIFF, WebP, ...) is the PIL slot."""
+    any other container (JPEG, GIF, TIFF, WebP, ...) is the PIL slot.
+    A header that declares no pixels (width or height < 1) is
+    malformed."""
     for magic, parse in _IMAGE_PARSERS:
         if payload.startswith(magic):
-            return parse(payload)
+            w, h, px = parse(payload)
+            if w < 1 or h < 1:
+                raise ValueError(f"image declares no pixels ({w}x{h})")
+            return w, h, px
     raise NotImplementedError(
         "unrecognized image container (PPM/BMP/PNG supported); "
         "register a PIL-backed Decoder for other formats"

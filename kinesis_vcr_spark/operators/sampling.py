@@ -109,70 +109,6 @@ def train_val_test_split(
     return df.withColumn(split_col, split_assign(*key_cols, weights=weights, seed=seed))
 
 
-def temperature_mix(
-    df: DataFrame,
-    strata_cols: list[str],
-    key_cols: list[str],
-    alpha: float = 0.5,
-    coeff: float = 1.0,
-    seed: str = "",
-    salt_factor: int = 1,
-) -> DataFrame:
-    """Temperature-weighted source mixing: keep exactly
-    ``max(1, floor(coeff * n_s ** alpha))`` rows per stratum ``s`` —
-    the standard LLM data-mixing move (sampling rate ∝ n_s^(α−1))
-    that flattens a dominant source's share of the training mix while
-    keeping small sources intact. ``alpha=1`` reproduces natural
-    proportions scaled by ``coeff``; ``alpha=0`` gives every stratum
-    the same quota; ``alpha=0.5`` (the default, and the one engine-
-    portable-exact choice — IEEE ``sqrt`` is correctly rounded in both
-    Spark and DuckDB, ``pow`` is not) is the common sqrt-flattening.
-
-    Membership is deterministic: the quota-smallest md5 hash tickets
-    win, so the same row is kept on any engine / partitioning / run.
-
-    Scale: one tiny groupBy for the per-stratum counts (map-side
-    combined, broadcast back), then the same one-window-shuffle
-    machinery as :func:`stratified_topk_by_hash` — ``salt_factor > 1``
-    bounds any single task's sort for a mega-stratum (the exact reason
-    a web corpus's ``lang='en'`` needs the two-phase plan).
-    """
-    if coeff <= 0:
-        raise ValueError(f"coeff must be positive, got {coeff}")
-    if alpha < 0:
-        raise ValueError(f"alpha must be >= 0, got {alpha}")
-    n = F.col("__n").cast("double")
-    scaled = F.sqrt(n) if alpha == 0.5 else F.pow(n, F.lit(alpha))
-    quotas = (
-        df.groupBy(*strata_cols)
-        .agg(F.count("*").alias("__n"))
-        .select(
-            *strata_cols,
-            F.greatest(F.lit(1), F.floor(F.lit(coeff) * scaled)).alias("__quota"),
-        )
-    )
-    ticket = sample_ticket(*key_cols, seed=seed).alias("__ticket")
-    tie = [F.col(c) for c in key_cols]
-    work = df.withColumn("__ticket", ticket).join(
-        F.broadcast(quotas), on=strata_cols, how="inner"
-    )
-    if salt_factor > 1:
-        salt = F.pmod(
-            F.xxhash64(*[F.col(c).cast("string") for c in key_cols]),
-            F.lit(salt_factor),
-        )
-        w1 = Window.partitionBy(*strata_cols, salt).orderBy("__ticket", *tie)
-        work = work.withColumn("__rk1", F.row_number().over(w1)).where(
-            F.col("__rk1") <= F.col("__quota")
-        ).drop("__rk1")
-    w2 = Window.partitionBy(*strata_cols).orderBy("__ticket", *tie)
-    return (
-        work.withColumn("__rk", F.row_number().over(w2))
-        .where(F.col("__rk") <= F.col("__quota"))
-        .drop("__rk", "__ticket", "__quota")
-    )
-
-
 def stratified_topk_by_hash(
     df: DataFrame,
     strata_cols: list[str],

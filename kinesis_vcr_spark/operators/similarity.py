@@ -191,38 +191,6 @@ def hyperplanes(num_planes: int, dim: int, seed: int = 42) -> list[list[float]]:
     return planes
 
 
-def _planes_literal(planes: list[list[float]]) -> Column:
-    return F.array(*[F.array(*[F.lit(x) for x in p]) for p in planes])
-
-
-def sign_bits(unit_vec: Column, planes: list[list[float]]) -> Column:
-    """LSH signature: one sign bit per hyperplane (1 where dot ≥ 0)."""
-    return F.transform(
-        _planes_literal(planes),
-        lambda h: (dot(h, unit_vec) >= 0).cast("int"),
-    )
-
-
-def hyperplane_band_hashes(
-    unit_vec: Column, planes: int = 16, bands: int = 4, seed: int = 42, dim: int = 64
-) -> Column:
-    """Band the sign bits (planes/bands bits per band) → bucket keys.
-
-    Pure-Catalyst variant — correct but interpreted HOFs re-materialize
-    the (planes x dim) literal array per dot product, ~100ms/row at 48
-    planes. Pipelines use :func:`hyperplane_band_values` (vectorized
-    Pandas UDF) instead; this stays as the dependency-free reference.
-    """
-    if planes % bands:
-        raise ValueError("planes must be divisible by bands")
-    rows = planes // bands
-    bits = sign_bits(unit_vec, hyperplanes(planes, dim, seed))
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(bands - 1)),
-        lambda b: F.xxhash64(F.slice(bits, b * rows + 1, rows)),
-    )
-
-
 def hyperplane_band_values(
     vec: Column, planes: int = 16, bands: int = 4, seed: int = 42, dim: int = 64
 ) -> Column:

@@ -595,12 +595,34 @@ def test_extract_features_null_quarantine(spark):
         real_decode,
     )
 
+    import numpy as np
+
     ppm = b"P6 2 2 255\n" + bytes(range(12))
+    # headers that declare no pixels: each parser accepts them, so the
+    # dispatch must reject them instead of averaging an empty array
+    def px(x, y):
+        return (1, 2, 3)
+
+    zero_size = [
+        b"P6 0 0 255\n",
+        b"P6 4 0 255\n",
+        _bmp_bytes(0, 2, px),
+        _bmp_bytes(3, 0, px),
+        _bmp_bytes(-5, 2, px),
+        _png_bytes(np.zeros((2, 0, 3), np.uint8), (0,)),
+        _png_bytes(np.zeros((0, 2, 3), np.uint8), (0,)),
+    ]
+    for payload in zero_size:
+        with pytest.raises(ValueError, match="no pixels"):
+            decode_image(payload)
     rows = [
         Row(media_id=1, kind="image", payload=ppm, meta=None),
         Row(media_id=2, kind="image", payload=b"P6 garbage", meta=None),
         Row(media_id=3, kind="image", payload=b"RIFF1234WEBPVP8 \x00\x00\x00\x00",
             meta=None),
+    ] + [
+        Row(media_id=10 + i, kind="image", payload=p, meta=None)
+        for i, p in enumerate(zero_size)
     ]
     media = spark.createDataFrame(rows, MEDIA_SCHEMA)
     got = {
@@ -612,6 +634,9 @@ def test_extract_features_null_quarantine(spark):
     assert got[1]["width"] == 2 and got[1]["height"] == 2
     assert got[2]["width"] is None and got[2]["mean_value"] is None
     assert got[3]["width"] is None
+    for i in range(len(zero_size)):
+        assert got[10 + i]["width"] is None
+        assert got[10 + i]["mean_value"] is None
     assert got[2]["payload_bytes"] == 10  # provenance fields survive
     # default stays strict
     import pytest as _pytest
