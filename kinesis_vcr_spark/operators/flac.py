@@ -121,8 +121,7 @@ def is_flac(payload: bytes) -> bool:
 # ------------------------------------------------------- STREAMINFO
 
 class _BitReader:
-    """MSB-first bit reader over STREAMINFO and the frames; no other
-    codec shares it."""
+    """MSB-first bit reader over a byte string."""
 
     def __init__(self, data: bytes):
         self.data = data
