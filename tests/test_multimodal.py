@@ -18,9 +18,8 @@ from kinesis_vcr_spark.tables import load_table
 
 
 def test_stub_decoders_raise():
-    # every image container but PPM/BMP/PNG (JPEG, GIF, TIFF, WebP),
-    # unknown audio containers and all video are the Decoder seam and
-    # say so
+    # every image container but PPM/BMP/PNG, every audio container
+    # but PCM WAV/FLAC and all video are the Decoder seam and say so
     for image in (
         b"\xff\xd8\xff\xe0 jpeg",
         b"GIF89a" + b"\x00" * 4,
@@ -29,8 +28,16 @@ def test_stub_decoders_raise():
     ):
         with pytest.raises(NotImplementedError, match="Decoder"):
             decode_image(image)
-    with pytest.raises(NotImplementedError, match="Decoder"):
-        decode_audio(b"RIFF")
+    for audio in (
+        b"RIFF",
+        b".snd\x00\x00\x00\x18",  # AU
+        b"FORM\x00\x00\x00\x04AIFF",
+        b"OggS\x00\x02",
+        b"ID3\x04\x00",  # MP3
+        b"\xff\xf1\x50\x80",  # AAC ADTS
+    ):
+        with pytest.raises(NotImplementedError, match="Decoder"):
+            decode_audio(audio)
     with pytest.raises(NotImplementedError, match="Decoder"):
         real_decode("video", b"\x00\x00\x00\x18ftypisom")
 
