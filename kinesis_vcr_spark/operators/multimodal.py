@@ -9,10 +9,10 @@ work on media without decoding.
 
 Decoding: real codecs with numpy + the stdlib only (no PIL/ffmpeg):
 PPM, uncompressed BMP and full static PNG (every color type incl.
-palette, bit depths 1-16, all five scanline filters, Adam7 interlace)
-behind one magic-byte dispatch (:func:`decode_pixels`); PCM WAV and
-FLAC audio (:func:`decode_audio`). Every other container (JPEG, GIF,
-TIFF, WebP, AU, AIFF, Ogg, MP3, AAC, all video) raises
+palette, bit depths 1-16, all five scanline filters, Adam7 interlace),
+JPEG, GIF and TIFF behind one magic-byte dispatch
+(:func:`decode_pixels`); PCM WAV and FLAC audio (:func:`decode_audio`).
+Every other container (WebP, AU, AIFF, Ogg, MP3, AAC, all video) raises
 ``NotImplementedError``: register a PIL/ffmpeg-backed :data:`Decoder`
 for it. ``fake_decode`` remains the deterministic stand-in used by the
 oracle-checked driver queries, because its arithmetic is reproducible
@@ -304,20 +304,44 @@ def _png_parse(payload: bytes):
     return w, h, px
 
 
+def _jpeg_parse(payload: bytes):
+    from kinesis_vcr_spark.operators.jpeg import jpeg_decode  # noqa: PLC0415
+
+    return jpeg_decode(payload)
+
+
+def _gif_parse(payload: bytes):
+    from kinesis_vcr_spark.operators.gif import gif_decode  # noqa: PLC0415
+
+    return gif_decode(payload)
+
+
+def _tiff_parse(payload: bytes):
+    from kinesis_vcr_spark.operators.tiff import tiff_decode  # noqa: PLC0415
+
+    return tiff_decode(payload)
+
+
 _IMAGE_PARSERS = (
     (b"P6", _ppm_parse),
     (b"BM", _bmp_parse),
     (PNG_SIGNATURE, _png_parse),
+    (b"\xff\xd8", _jpeg_parse),
+    (b"GIF87a", _gif_parse),
+    (b"GIF89a", _gif_parse),
+    (b"II*\x00", _tiff_parse),
+    (b"MM\x00*", _tiff_parse),
 )
 
 
 def decode_pixels(payload: bytes):
     """The one image dispatch: a payload's magic bytes pick the parser
     → (width, height, pixels). P6 PPM, 24/32-bit BI_RGB BMP (pixel
-    bytes, row padding stripped) and static PNG (:func:`_png_parse`);
-    any other container (JPEG, GIF, TIFF, WebP, ...) is the PIL slot.
-    A header that declares no pixels (width or height < 1) is
-    malformed."""
+    bytes, row padding stripped), static PNG (:func:`_png_parse`),
+    Huffman JPEG (baseline and progressive), GIF and baseline TIFF
+    (:mod:`~kinesis_vcr_spark.operators.jpeg`, ``.gif``, ``.tiff``);
+    any other container (WebP included) is the PIL slot. A header that
+    declares no pixels (width or height < 1) is malformed."""
     for magic, parse in _IMAGE_PARSERS:
         if payload.startswith(magic):
             w, h, px = parse(payload)
@@ -325,8 +349,8 @@ def decode_pixels(payload: bytes):
                 raise ValueError(f"image declares no pixels ({w}x{h})")
             return w, h, px
     raise NotImplementedError(
-        "unrecognized image container (PPM/BMP/PNG supported); "
-        "register a PIL-backed Decoder for other formats"
+        "unrecognized image container (PPM/BMP/PNG/JPEG/GIF/TIFF "
+        "supported); register a PIL-backed Decoder for other formats"
     )
 
 

@@ -18,16 +18,18 @@ from kinesis_vcr_spark.tables import load_table
 
 
 def test_stub_decoders_raise():
-    # every image container but PPM/BMP/PNG, every audio container
-    # but PCM WAV/FLAC and all video are the Decoder seam and say so
-    for image in (
-        b"\xff\xd8\xff\xe0 jpeg",
-        b"GIF89a" + b"\x00" * 4,
-        b"II*\x00 truncated tiff",
-        b"RIFF1234WEBPVP8 \x00\x00\x00\x00",
-    ):
-        with pytest.raises(NotImplementedError, match="Decoder"):
-            decode_image(image)
+    # JPEG/GIF/TIFF decode in-repo (tests/test_jpeg.py, test_gif.py,
+    # test_tiff.py): a truncated stream must fail loudly
+    with pytest.raises(ValueError):
+        decode_image(b"\xff\xd8\xff\xe0 jpeg")  # no SOS scan
+    with pytest.raises(ValueError):
+        decode_image(b"GIF89a" + b"\x00" * 4)  # truncated header
+    with pytest.raises(ValueError):
+        decode_image(b"II*\x00 truncated tiff")
+    # WebP, every audio container but PCM WAV/FLAC and all video are
+    # the Decoder seam and say so
+    with pytest.raises(NotImplementedError, match="Decoder"):
+        decode_image(b"RIFF1234WEBPVP8 \x00\x00\x00\x00")
     for audio in (
         b"RIFF",
         b".snd\x00\x00\x00\x18",  # AU
