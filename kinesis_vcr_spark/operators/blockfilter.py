@@ -157,19 +157,3 @@ def flag_blocked_single_pass(
     ).withColumn(
         "blocked", (F.col("term_hits") > 0) | (F.col("domain_hits") > 0)
     )
-
-
-def filter_clean(
-    df: DataFrame,
-    spark: SparkSession,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    bad_terms: Sequence[str] = (),
-    bad_domains: Sequence[str] = (),
-) -> DataFrame:
-    """Documents surviving both denylists (C4 keep-side semantics)."""
-    verdict = flag_blocked(
-        df, spark, id_col, text_col, bad_terms, bad_domains
-    )
-    keep = verdict.where(~F.col("blocked")).select(id_col)
-    return df.join(keep, id_col, "left_semi")

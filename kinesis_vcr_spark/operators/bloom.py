@@ -76,8 +76,9 @@ def bloom_build(
     """Build the sparse filter: ``(word_idx, word_bits)`` rows, only
     non-zero words. One explode + one map-side-combined ``bit_or``
     aggregate — the result is ≤ m/32 rows regardless of corpus size,
-    and never touches the driver. Merge two filters (or incremental
-    batches) with :func:`bloom_merge`."""
+    and never touches the driver. Filters built with the same (m, h)
+    merge by a union and a re-OR of ``word_bits`` per ``word_idx``
+    (associative and commutative)."""
     pos = F.explode(
         _positions(F.col(key_col), m_bits, n_hashes)
     ).alias("pos")
@@ -94,17 +95,6 @@ def bloom_build(
         .groupBy("word_idx")
         .agg(F.bit_or("bit").alias("word_bits"))
     )
-
-
-def bloom_merge(*filters: DataFrame) -> DataFrame:
-    """OR together filters built with the same (m, h): union + re-OR.
-    Associative and commutative — the incremental/multi-corpus path."""
-    if not filters:
-        raise ValueError("need at least one filter")
-    out = filters[0]
-    for f in filters[1:]:
-        out = out.unionByName(f)
-    return out.groupBy("word_idx").agg(F.bit_or("word_bits").alias("word_bits"))
 
 
 def bloom_probe(

@@ -12,8 +12,8 @@ ONE shuffle on the key; no driver state; ties inside the change feed
 break deterministically (change beats base at equal order, then the
 explicit tiebreak). At warehouse scale the base side is the big one —
 the key-partitioned window shuffles it once, which is the floor for
-any merge; bases pre-bucketed on the key (operators/skew.py::
-write_bucketed) skip even that exchange.
+any merge; bases pre-bucketed on the key (Spark's ``bucketBy``) skip
+even that exchange.
 
 Deletes are markers IN the feed (``op_col`` == delete value), not
 anti-joins — so one pass handles insert, update, and delete without

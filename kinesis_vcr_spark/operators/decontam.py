@@ -76,23 +76,6 @@ def ngram_contamination(
     )
 
 
-def decontaminate(
-    docs: DataFrame,
-    bench: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int = 8,
-    min_hits: int = 1,
-) -> DataFrame:
-    """Return ``docs`` minus contaminated rows — the production verb.
-
-    Implemented as a broadcast-driven contamination report + semi-join
-    on the clean ids, preserving the full input schema."""
-    report = ngram_contamination(docs, bench, id_col, text_col, n, min_hits)
-    clean = report.where(~F.col("contaminated")).select(id_col)
-    return docs.join(clean, on=id_col, how="left_semi")
-
-
 def fuzzy_contamination(
     docs: DataFrame,
     bench: DataFrame,
@@ -160,8 +143,8 @@ def decontaminate_fuzzy(
     bands: int = 16,
 ) -> DataFrame:
     """Return ``docs`` minus fuzzy-contaminated rows — the production
-    keep-verb mirroring :func:`decontaminate` (r13, VERDICT r12 item
-    4): the :func:`fuzzy_contamination` report names the docs to drop,
+    keep-verb (r13, VERDICT r12 item 4): the
+    :func:`fuzzy_contamination` report names the docs to drop,
     and an ANTI-join on the flagged ids preserves the full input
     schema. Scale shape: the report's flagged set is
     contamination-sized (≪ corpus), so AQE broadcasts the anti-join

@@ -299,10 +299,10 @@ def adaptive_minhash_bands(
     1.0 — candidates are verified with exact Jaccard).
 
     ``j_noise`` is corpus physics, not geometry, so unlike the
-    hyperplane twin it must come from the caller — measure it once with
-    :func:`estimate_noise_jaccard` (a fixed-size sample, cost
-    independent of corpus size) and treat it as a property of the
-    (corpus family, shingling) pair.
+    hyperplane twin it must come from the caller: a measured constant
+    of the (corpus family, shingling) pair — the high quantile (not
+    the mean, since ``J^rows`` is convex) of exact pairwise Jaccard
+    over a fixed-size document sample.
 
     At the driver fixture sizes (n ≤ ~5000 documents, char-4-gram
     J_noise ≈ 0.45) this reduces exactly to the historical 8 bands ×
@@ -330,44 +330,6 @@ def adaptive_minhash_bands(
         1, math.ceil(math.log(1.0 - target_recall) / math.log(1.0 - p_band))
     )
     return rows * bands, bands
-
-
-def estimate_noise_jaccard(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    shingle_size: int,
-    char_ngrams: bool = False,
-    sample_docs: int = 256,
-    quantile: float = 0.95,
-) -> float:
-    """The corpus's noise-Jaccard level for
-    :func:`adaptive_minhash_bands`: the ``quantile`` of exact pairwise
-    Jaccard over a deterministic ``sample_docs``-document sample
-    (ordered by ``xxhash64(id)`` — stable across runs and executors).
-
-    Cost is independent of corpus size: the sample is fixed-width, the
-    pairwise join is sample² / 2 ≈ 33k pairs at the default, and only
-    the sampled documents are ever shingled. The high quantile (not the
-    mean) is what matters — candidate volume is driven by the upper
-    tail of the noise distribution, since ``J^rows`` is convex."""
-    sample = (
-        df.select(id_col, text_col)
-        .orderBy(F.xxhash64(F.col(id_col).cast("string")))
-        .limit(sample_docs)
-    )
-    with_sh = shingle_frame(sample, id_col, text_col, shingle_size, char_ngrams)
-    a = with_sh.select(
-        F.col(id_col).alias("__ia"), F.col("shingles").alias("__sa")
-    )
-    b = with_sh.select(
-        F.col(id_col).alias("__ib"), F.col("shingles").alias("__sb")
-    )
-    pairs = a.join(b, F.col("__ia") < F.col("__ib")).select(
-        jaccard(F.col("__sa"), F.col("__sb")).alias("j")
-    )
-    q = pairs.approxQuantile("j", [quantile], 0.001)
-    return float(q[0]) if q else 0.0
 
 
 def _candidate_pairs_from_bands(
@@ -548,8 +510,7 @@ def near_dup_pairs_minhash(
     (char-4-grams over a narrow vocabulary measured 69× candidates at
     10× docs, output ~flat). The implemented mitigation is
     :func:`adaptive_minhash_bands`: size ``(num_hashes, bands)`` from
-    the corpus count and a measured ``j_noise``
-    (:func:`estimate_noise_jaccard`) so noise candidates stay
+    the corpus count and a measured ``j_noise`` so noise candidates stay
     Θ(n·bands) — hash count grows O(log n) instead of shuffle volume
     growing n². Cheaper fallbacks when re-sizing is off the table:
     tighter ``band_member_cap``; higher threshold.
@@ -592,40 +553,6 @@ def near_dup_pairs_minhash(
 SIMHASH_BITS = 64
 
 
-def simhash64(toks: Column) -> Column:
-    """64-bit SimHash of a token array, as one Catalyst expression.
-
-    Classic sign-sum: for each bit position, sum +1/-1 over token hashes
-    (xxhash64), emit 1 where the sum is positive. ~64x|tokens| integer
-    ops per row, all inside whole-stage codegen.
-    """
-    zero = F.array_repeat(F.lit(0).cast("long"), SIMHASH_BITS)
-    bit_idx = F.sequence(F.lit(0), F.lit(SIMHASH_BITS - 1))
-    counts = F.aggregate(
-        toks,
-        zero,
-        lambda acc, t: F.zip_with(
-            acc,
-            bit_idx,
-            lambda a, b: a
-            + F.shiftright(F.xxhash64(t), b).bitwiseAND(F.lit(1)) * 2
-            - 1,
-        ),
-    )
-    # fold bit decisions back into one 64-bit value
-    return F.aggregate(
-        F.zip_with(
-            counts,
-            bit_idx,
-            lambda c, b: F.when(c > 0, F.shiftleft(F.lit(1).cast("long"), b)).otherwise(
-                F.lit(0).cast("long")
-            ),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc.bitwiseOR(x),
-    )
-
-
 def hamming64(a: Column, b: Column) -> Column:
     return F.bit_count(a.bitwiseXOR(b))
 
@@ -634,8 +561,8 @@ def simhash64_agg(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """SimHash via explode + groupBy — the scale path (same rationale as
     :func:`minhash_signature_agg`: map-side partial sums, one shuffle by
     id, shuffle output materializes the signature). Returns
-    ``(id_col, simhash)``. Bit-for-bit equal to ``simhash64(tokens(...))``
-    (the per-token ±1 sums run over the same token multiset)."""
+    ``(id_col, simhash)``: per bit, the sign of the ±1 sum over the
+    xxhash64 of every token."""
     tok_rows = df.select(
         F.col(id_col), F.explode(tokens(text_col)).alias("__t")
     ).select(F.col(id_col), F.xxhash64("__t").alias("__h"))

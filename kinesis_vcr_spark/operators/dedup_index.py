@@ -36,8 +36,7 @@ Scale posture:
   prunes to 1/bands of the files; at the very largest scales write the
   band table as a ``bucketBy(band_pos, band_hash)`` metastore table
   instead (:func:`build_near_dup_index_bucketed`) so the probe
-  shuffles ONLY the new batch (same escape-hatch style as setjoin's
-  dense_token_ids=False);
+  shuffles ONLY the new batch;
 - ids must be unique across index + batch (the caller's ingest key);
   probing a batch whose ids are already indexed would self-pair, so
   equal ids are excluded defensively.
@@ -272,8 +271,7 @@ def _one_file_per_bucket(spark: SparkSession, n_buckets: int):
     the duration of the write — same session-global caveat as any
     conf-scoped block; builds are batch operations, so this is the
     build's documented trade. Appends still add a file per bucket
-    (ordering lost, clustering kept) until
-    :func:`compact_near_dup_index_bucketed` restores the layout."""
+    (ordering lost, clustering kept)."""
     pins = {
         # the writer's required-distribution Exchange lands at conf
         # partitions...
@@ -326,9 +324,8 @@ def build_near_dup_index_bucketed(
     Tables written: ``{prefix}_bands`` (id, band_pos, band_hash),
     ``{prefix}_shingles`` (id, shingles), ``{prefix}_meta`` (the LSH
     parameters, 1 row). ``append=True`` inserts a new batch into the
-    existing tables (bucketed appends add files per bucket — compact
-    occasionally exactly like the scoped parquet layout) after the same
-    parameter check as the parquet append."""
+    existing tables (each append adds a file per bucket) after the
+    same parameter check as the parquet append."""
     if num_hashes % bands:
         raise ValueError("num_hashes must be divisible by bands")
     spark = df.sparkSession
@@ -554,52 +551,6 @@ def compact_near_dup_index(spark: SparkSession, index_path: str) -> None:
 
     compact_scoped_state(spark, f"{index_path}/bands", ("band_pos",))
     compact_scoped_state(spark, f"{index_path}/shingles")
-
-
-def compact_near_dup_index_bucketed(
-    spark: SparkSession, table_prefix: str
-) -> None:
-    """Restore the one-sorted-file-per-bucket layout of a bucketed
-    index after appends. Each append adds a file per bucket: bucket
-    CLUSTERING survives (probes stay in place) but the file count
-    grows with every batch, and a bucket holding more than one file
-    can never expose its sortBy order (see
-    :func:`_one_file_per_bucket` for the Sort-elision opt-in). This
-    rewrites each table through a ``__compacting`` sibling and swaps
-    it in via ``ALTER TABLE RENAME`` — run only while no append or
-    probe is in flight (same drained-stream contract as
-    :func:`~kinesis_vcr_spark.operators.compaction.compact_scoped_state`).
-    A crash between drop and rename leaves all rows in the
-    ``__compacting`` table to rename by hand; content is never
-    half-merged. Probe results are identical before/after
-    (test-pinned)."""
-    m = spark.table(f"{table_prefix}_meta").collect()[0]
-    n_buckets = m["n_buckets"]
-    for suffix, cols in (
-        ("_bands", ["band_pos", "band_hash"]),
-        ("_shingles", ["id"]),
-    ):
-        name, tmp = f"{table_prefix}{suffix}", f"{table_prefix}{suffix}__compacting"
-        _drop_managed_table(spark, tmp)
-        # read the table's FILES as plain parquet, not spark.table():
-        # on the bucketed relation Catalyst elides the explicit
-        # repartition as redundant (the table already "is" hash(cols,
-        # n)), then scans it UNBUCKETED in size-based partitions — the
-        # write would land multi-bucket task files, the exact layout
-        # this function exists to undo
-        loc = (
-            spark.sql(f"DESCRIBE FORMATTED {name}")
-            .where(F.col("col_name") == "Location")
-            .collect()[0]["data_type"]
-        )
-        with _one_file_per_bucket(spark, n_buckets):
-            (
-                spark.read.parquet(loc).repartition(n_buckets, *cols)
-                .write.bucketBy(n_buckets, *cols).sortBy(*cols)
-                .format("parquet").saveAsTable(tmp)
-            )
-        _drop_managed_table(spark, name)
-        spark.sql(f"ALTER TABLE {tmp} RENAME TO {name}")
 
 
 def near_dup_against_index(

@@ -13,7 +13,7 @@ columns (computed per side BEFORE the join, so the join carries a
 16-byte digest instead of full documents). At 100 TB this is one
 co-partitioned shuffle per side on the key — the minimum for exact
 set reconciliation; if both snapshots are bucketed on the key
-(operators/skew.py::write_bucketed) the exchanges vanish entirely.
+(Spark's ``bucketBy``) the exchanges vanish entirely.
 """
 
 from __future__ import annotations

@@ -187,23 +187,6 @@ def parse_streaminfo(payload: bytes) -> dict:
     return info
 
 
-def flac_info(payload: bytes) -> dict:
-    """Metadata tier: stream parameters without decoding frames."""
-    si = parse_streaminfo(payload)
-    return {
-        "codec": "FLAC",
-        "sample_rate": si["sample_rate"],
-        "channels": si["channels"],
-        "bits": si["bits"],
-        "total_samples": si["total_samples"],
-        "duration_s": (
-            round(si["total_samples"] / si["sample_rate"], 3)
-            if si["total_samples"] else None
-        ),
-        "md5": si["md5"].hex(),
-    }
-
-
 # --------------------------------------------------- frame decoding
 
 def _read_coded_number(payload: bytes, pos: int) -> tuple[int, int]:
@@ -700,15 +683,10 @@ def _encode_coded_number(value: int) -> bytes:
     return bytes(out)
 
 
-def _rice_cost(resid: np.ndarray, param: int) -> int:
-    z = (resid.astype(np.int64) << 1) ^ (resid >> 63)  # zigzag
-    return int(np.sum(z >> param)) + len(resid) * (param + 1)
-
-
 def _best_rice_param(resid: np.ndarray, max_param: int = 14) -> tuple[int, int]:
     """argmin over Rice params 0..max_param of
     ``sum(zigzag >> p) + n*(p+1)`` — one broadcast shift-sum instead of
-    ``max_param + 1`` :func:`_rice_cost` passes. ``argmin`` keeps the
+    ``max_param + 1`` per-parameter cost passes. ``argmin`` keeps the
     FIRST minimum, exactly like the strict-``<`` scan it replaces, so
     parameter choice (and thus every encoded byte) is unchanged."""
     z = (resid.astype(np.int64) << 1) ^ (resid >> 63)  # zigzag

@@ -99,39 +99,15 @@ def assign_centroid(vec, centroids: np.ndarray):
     return nearest(vec)
 
 
-def probe_centroids(vec, centroids: np.ndarray, nprobe: int,
-                    ring_margin: float = 0.0):
-    """Array of the ``nprobe`` nearest centroid ids per query vector.
-
-    ``ring_margin`` (r13, VERDICT r12 item 2 — multi-probe): also
-    include every centroid whose cosine to the query is within
-    ``ring_margin`` of the ``nprobe``-th nearest. A trained coarse
-    router sometimes splits one tight cluster across two lists; a
-    query near that boundary then sees both centroids at nearly the
-    same similarity, and a FIXED nprobe cut drops the twin list — the
-    exact failure behind the IVF-PQ 0.9781 strict-recall residual
-    (BASELINE r12 addendum 1). The ring is data-adaptive: far from
-    any boundary it adds nothing (probe count stays nprobe); on a
-    straddle it picks up precisely the tied lists. Probe count stays
-    ≤ k_centroids, so the candidate bound Θ(nq·n·probes/k_centroids)
-    and the partition-pruning contract are unchanged in shape."""
+def probe_centroids(vec, centroids: np.ndarray, nprobe: int):
+    """Array of the ``nprobe`` nearest centroid ids per query vector."""
     cmat = centroids.T
 
     @pandas_udf("array<int>")
     def probes(vecs: pd.Series) -> pd.Series:
         mat = _normalize_rows(np.vstack(vecs.to_numpy()).astype(np.float64))
-        sims = mat @ cmat
-        order = np.argsort(-sims, axis=1)
-        if ring_margin <= 0.0:
-            return pd.Series(list(order[:, :nprobe].astype(np.int32)))
-        out = []
-        for i in range(len(mat)):
-            row = order[i]
-            srow = sims[i, row]  # descending
-            cut = srow[min(nprobe, len(row)) - 1] - ring_margin
-            n_take = int(np.searchsorted(-srow, -cut, side="right"))
-            out.append(row[:max(nprobe, n_take)].astype(np.int32))
-        return pd.Series(out)
+        order = np.argsort(-(mat @ cmat), axis=1)
+        return pd.Series(list(order[:, :nprobe].astype(np.int32)))
 
     return probes(vec)
 
@@ -147,7 +123,6 @@ def ivf_topk(
     query_id_col: str = "query_id",
     exclude_self: bool = True,
     centroids: np.ndarray | None = None,
-    ring_margin: float = 0.0,
 ) -> DataFrame:
     """IVF ANN top-k: probe the ``nprobe`` nearest inverted lists per
     query, exact-cosine-rank within the candidates. Same output shape
@@ -170,8 +145,7 @@ def ivf_topk(
         F.col(query_id_col),
         unit_double(F.col(vec_col)).alias("__q_unit"),
         F.explode(
-            probe_centroids(F.col(vec_col), centroids, nprobe,
-                            ring_margin)
+            probe_centroids(F.col(vec_col), centroids, nprobe)
         ).alias("cid"),
     )
     cand = q.join(v, "cid")
@@ -335,7 +309,6 @@ def ivf_topk_indexed(
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
     exclude_self: bool = True,
-    ring_margin: float = 0.0,
 ) -> DataFrame:
     """ANN top-k against a persisted index (:func:`build_ivf_index` /
     :func:`load_ivf_index`) — no training, no re-assignment; the
@@ -346,60 +319,8 @@ def ivf_topk_indexed(
         F.col(query_id_col),
         unit_double(F.col(vec_col)).alias("__q_unit"),
         F.explode(
-            probe_centroids(F.col(vec_col), centroids, nprobe,
-                            ring_margin)
+            probe_centroids(F.col(vec_col), centroids, nprobe)
         ).alias("cid"),
     )
     cand = q.join(lists, "cid")
     return _rank_candidates(cand, query_id_col, id_col, k, exclude_self)
-
-
-def ivf_list_balance(
-    spark,
-    index_path: str,
-    skew_threshold: float = 4.0,
-) -> dict:
-    """Per-list sizes + a drift verdict for a persisted IVF-family
-    index (:func:`build_ivf_index` or ivfpq's ``build_ivfpq_index`` —
-    both store ``lists/`` partitioned by ``cid`` beside
-    ``centroids/``). This is the operator behind the "monitor list
-    sizes and re-train when the largest list outgrows the probe
-    budget" contract that :func:`append_ivf_index` /
-    ``append_ivfpq_index`` document: frozen-centroid appends are
-    O(batch), but data far from every centroid piles into its nearest
-    list, and a probe's cost is the size of the lists it touches.
-
-    Cost: ONE metadata-sized aggregation — a count per cid (k rows
-    collected, k = centroid count), no vector payload read; column
-    pruning means the scan touches only the ``cid`` partition values.
-
-    Verdict: ``needs_retrain`` is true when the largest list exceeds
-    ``skew_threshold ×`` the balanced size n/k — i.e. the worst-case
-    probed list costs ``skew_threshold ×`` its budgeted share. 4× is a
-    conservative default; tune to the probe latency SLO. Empty lists
-    are reported too (they waste nprobe slots without contributing
-    candidates — the complementary drift direction).
-    """
-    k = spark.read.parquet(f"{index_path}/centroids").count()
-    sizes = {
-        r["cid"]: r["size"]
-        for r in spark.read.parquet(f"{index_path}/lists")
-        .groupBy("cid")
-        .agg(F.count(F.lit(1)).alias("size"))
-        .collect()
-    }
-    per_list = [int(sizes.get(c, 0)) for c in range(k)]
-    n = sum(per_list)
-    mean = n / k if k else 0.0
-    largest = max(per_list) if per_list else 0
-    skew = (largest / mean) if mean else 0.0
-    return {
-        "n_vectors": n,
-        "k_centroids": k,
-        "list_sizes": per_list,
-        "largest_list": largest,
-        "mean_list": mean,
-        "empty_lists": sum(1 for s in per_list if s == 0),
-        "skew": skew,
-        "needs_retrain": bool(mean and skew > skew_threshold),
-    }

@@ -25,11 +25,12 @@ built indexes are bit-comparable and the planted-twin driver query
 (queries/similarity.py ``similarity_ivfpq_planted``) carries an EXACT
 oracle.
 
-100 TB posture: the persisted artifact is ``(cid, vec_id, codes)`` —
-m small ints per vector (the ivf.py ``_write_lists`` layout applies
-unchanged: partitioned by list id, probes prune to nprobe/k_centroids
-of the files). Training collects only centroid/codebook-sized tables;
-encode is one Arrow-batched UDF pass; the probe keeps queries
+100 TB posture: the index is ``(cid, vec_id, codes)`` — m small ints
+per vector, 8-32× smaller than the float lists the plain IVF index
+stores; stored partitioned by list id (the ivf.py ``_write_lists``
+layout), probes prune to nprobe/k_centroids of the files. Training
+collects only centroid/codebook-sized tables; encode is one
+Arrow-batched UDF pass; the probe keeps queries
 DISTRIBUTED — (query, cid) probes equi-join the code lists and a
 scalar vectorized UDF scores each candidate (no driver collect of the
 query set, unlike pq_adc_topk's broadcast-probes contract) — and
@@ -44,11 +45,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from kinesis_vcr_spark.operators.ivf import (
-    _rm_recursive,
-    probe_centroids,
-    train_centroids,
-)
+from kinesis_vcr_spark.operators.ivf import probe_centroids, train_centroids
 from kinesis_vcr_spark.operators.similarity import unit_double
 from kinesis_vcr_spark.operators.pq import _encode_batch, _normalize_rows
 from kinesis_vcr_spark.operators.topk import topk_per_group
@@ -158,7 +155,7 @@ def ivfpq_encode_table(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """(id, cid, codes) — the persisted IVF-PQ artifact: list
+    """(id, cid, codes) — the IVF-PQ index table: list
     assignment + residual PQ codes in one Arrow pass."""
     cmat = centroids
     cb = codebook
@@ -241,14 +238,9 @@ def ivfpq_topk(
     shortlist: int | None = None,
     rerank_vec_col: str = "embedding",
     exclude_self: bool = False,
-    ring_margin: float = 0.0,
 ) -> DataFrame:
     """Approximate top-k over the IVF-PQ index: each query scans ONLY
-    its nprobe nearest lists (plus the multi-probe ring when
-    ``ring_margin`` > 0 — see ``ivf.probe_centroids``: centroids tied
-    with the nprobe-th within the margin are probed too, closing the
-    strict-recall residual when the trained router splits a cluster
-    across lists). Returns (query_id, vec_id, adc_sim) on
+    its nprobe nearest lists. Returns (query_id, vec_id, adc_sim) on
     the skew-safe two-phase top-k.
 
     **Exact re-rank** (``rerank_vectors`` — the FAISS-refine second
@@ -272,19 +264,18 @@ def ivfpq_topk(
     at 10× data on the planted fixture (whose probe set grows with the
     corpus); this join shape is the fix. The stored side is
     pre-filtered to the union of probed lists (a ≤ k_centroids-sized
-    collect) so a persisted index scans only the probed partition
-    dirs."""
+    collect) so a codes table stored partitioned by ``cid`` scans only
+    the probed partition dirs."""
     q = queries.select(
         F.col(query_id_col).alias("query_id"),
         unit_double(F.col(query_vec_col)).alias("__q_unit"),
         F.explode(
-            probe_centroids(F.col(query_vec_col), centroids, nprobe,
-                            ring_margin)
+            probe_centroids(F.col(query_vec_col), centroids, nprobe)
         ).alias("cid"),
     )
     probed = sorted(
         r["cid"] for r in q.select("cid").distinct().collect()
-    )  # ≤ k_centroids values — partition pruning for persisted lists
+    )  # ≤ k_centroids values — partition pruning for stored lists
     if not probed:
         raise ValueError("ivfpq_topk: queries DataFrame is empty")
     cand = q.join(codes.where(F.col("cid").isin(probed)), "cid")
@@ -324,161 +315,5 @@ def ivfpq_topk(
         vec_col=rerank_vec_col,
         query_id_col=query_id_col,
         query_vec_col=query_vec_col,
-        exclude_self=exclude_self,
-    )
-
-
-# ---------------------------------------------------------------------------
-# persisted artifact (same layout + ingest-scope contract as the IVF
-# index — operators/ivf.py — with the codebook stored beside the
-# centroids; probes prune to the probed cid partitions)
-# ---------------------------------------------------------------------------
-
-
-def _write_code_lists(
-    codes: DataFrame, index_path: str, ingest_label: str,
-    mode: str = "overwrite",
-) -> None:
-    (
-        codes.repartition("cid")  # cluster lists on disk, one dir per cid
-        .write.mode(mode)
-        .partitionBy("cid")
-        .parquet(f"{index_path}/lists/ingest={ingest_label}")
-    )
-
-
-def build_ivfpq_index(
-    vectors: DataFrame,
-    index_path: str,
-    k_centroids: int = 16,
-    m: int = 8,
-    ksub: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    refine_iterations: int = 1,
-) -> None:
-    """Train and PERSIST the IVF-PQ index: centroids + residual
-    codebook + the encoded lists ``(vec_id, codes)`` partitioned by
-    ``cid`` under ``ingest=<label>`` scopes. Build once, probe many —
-    the artifact is m small ints per vector, 8-32× smaller than the
-    float lists the plain IVF index stores, which is the entire reason
-    this index exists at corpus scale."""
-    spark = vectors.sparkSession
-    centroids, codebook, codes = build_ivfpq(
-        vectors, k_centroids, m, ksub, id_col, vec_col, refine_iterations
-    )
-    spark.createDataFrame(
-        [(i, [float(x) for x in row]) for i, row in enumerate(centroids)],
-        "cid int, centroid array<double>",
-    ).write.mode("overwrite").parquet(f"{index_path}/centroids")
-    mm, kk, dsub = codebook.shape
-    spark.createDataFrame(
-        [
-            (s, c, [float(x) for x in codebook[s, c]])
-            for s in range(mm)
-            for c in range(kk)
-        ],
-        "sub int, code int, vals array<double>",
-    ).write.mode("overwrite").parquet(f"{index_path}/codebook")
-    # fresh build replaces the artifact — stale ingest scopes from a
-    # previous build must not leak into partition discovery
-    _rm_recursive(spark, f"{index_path}/lists")
-    _write_code_lists(codes, index_path, "_base")
-
-
-def load_ivfpq_index(
-    spark, index_path: str
-) -> tuple[np.ndarray, np.ndarray, DataFrame]:
-    """(centroids, codebook, lists DataFrame) from
-    :func:`build_ivfpq_index` output; the ``ingest`` provenance column
-    is dropped from the probe-facing frame."""
-    crows = (
-        spark.read.parquet(f"{index_path}/centroids").orderBy("cid").collect()
-    )
-    centroids = np.array([r["centroid"] for r in crows], dtype=np.float64)
-    brows = (
-        spark.read.parquet(f"{index_path}/codebook")
-        .orderBy("sub", "code")
-        .collect()
-    )
-    m = max(r["sub"] for r in brows) + 1
-    ksub = max(r["code"] for r in brows) + 1
-    dsub = len(brows[0]["vals"])
-    codebook = np.zeros((m, ksub, dsub), dtype=np.float64)
-    for r in brows:
-        codebook[r["sub"], r["code"]] = r["vals"]
-    lists = spark.read.parquet(f"{index_path}/lists").drop("ingest")
-    return centroids, codebook, lists
-
-
-def append_ivfpq_index(
-    vectors: DataFrame,
-    index_path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    ingest_label: str = "_appends",
-) -> None:
-    """Extend a persisted IVF-PQ index WITHOUT retraining: encode the
-    batch against the FROZEN stored centroids + codebook, write it as
-    its own ``ingest`` scope. O(batch); probe parity with a
-    same-artifact full re-encode is exact because encoding is a pure
-    function of (centroids, codebook, vector).
-
-    Write-mode contract mirrors the IVF/near-dup indexes: an explicit
-    label overwrites only its own scope (orchestrator replay
-    idempotence); the default ``_appends`` scope ACCUMULATES
-    (mode=append) and idempotence is the caller's problem. Frozen
-    artifacts drift in QUALITY as the corpus shifts (residuals of
-    far-from-centroid data quantize worse, lists unbalance) — monitor
-    and rebuild, exactly like production IVFPQ systems."""
-    spark = vectors.sparkSession
-    centroids, codebook, _ = load_ivfpq_index(spark, index_path)
-    codes = ivfpq_encode_table(vectors, centroids, codebook, id_col, vec_col)
-    mode = "append" if ingest_label == "_appends" else "overwrite"
-    _write_code_lists(codes, index_path, ingest_label, mode=mode)
-
-
-def compact_ivfpq_index(spark, index_path: str) -> None:
-    """Collapse accumulated ingest scopes into one compacted scope,
-    preserving the ``cid`` clustering — probe results identical
-    before/after; run only while no ingest is writing."""
-    from kinesis_vcr_spark.operators.compaction import (  # noqa: PLC0415
-        compact_scoped_state,
-    )
-
-    compact_scoped_state(spark, f"{index_path}/lists", ("cid",))
-
-
-def ivfpq_topk_indexed(
-    index: tuple[np.ndarray, np.ndarray, DataFrame],
-    queries: DataFrame,
-    k: int = 10,
-    nprobe: int = 4,
-    query_id_col: str = "query_id",
-    query_vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    rerank_vectors: DataFrame | None = None,
-    shortlist: int | None = None,
-    rerank_vec_col: str = "embedding",
-    exclude_self: bool = False,
-    ring_margin: float = 0.0,
-) -> DataFrame:
-    """Top-k against a persisted index — no training, no re-encode;
-    the ``cid isin(probed)`` filter prunes the scan to the probed
-    partition directories (plan-pinned in tests).
-
-    ``rerank_vectors`` enables the exact second stage (same contract
-    as :func:`ivfpq_topk`). The index itself stores only codes — by
-    design, that is its entire size advantage — so the caller passes
-    the ORIGINAL vector table; the re-rank fetches just the nq·R
-    shortlist rows from it (a narrow id join, the FAISS-refine access
-    pattern over the source-of-truth table)."""
-    centroids, codebook, lists = index
-    return ivfpq_topk(
-        lists, centroids, codebook, queries, k=k, nprobe=nprobe,
-        query_id_col=query_id_col, query_vec_col=query_vec_col,
-        id_col=id_col, rerank_vectors=rerank_vectors,
-        shortlist=shortlist, rerank_vec_col=rerank_vec_col,
-        ring_margin=ring_margin,
         exclude_self=exclude_self,
     )

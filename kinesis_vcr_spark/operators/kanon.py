@@ -1,22 +1,16 @@
-"""k-anonymity / l-diversity profiling and suppression.
+"""k-anonymity profiling.
 
 Privacy governance for training corpora: before a table with
 quasi-identifiers (QI — attributes that are individually harmless but
 jointly re-identifying: location × segment × balance-bracket) ships into
-a training set, the pipeline needs (a) a MEASURE of re-identification
-risk — how many rows sit in QI-groups smaller than k — and (b) the two
-standard mechanisms to repair it: GENERALIZATION (coarsen a QI column
-until groups merge) and SUPPRESSION (drop the rows whose groups stay
-small). l-diversity is the companion check on a sensitive attribute:
-a large group is still leaky if everyone in it shares the same
-sensitive value.
+a training set, the pipeline needs a MEASURE of re-identification risk
+— how many rows sit in QI-groups smaller than k — and GENERALIZATION
+(coarsen a QI column until groups merge) to repair it.
 
 Scale shape: everything reduces to one hash aggregation on the QI key
-(map-side combined, shuffle = |distinct QI groups|) followed by either a
-tiny driver-free profile agg or a join of per-group sizes back to the
-rows. The size join shuffles on the same QI key the agg just used, so
-with AQE the exchange is reused/locally planned; no window-over-raw-rows
-anywhere (a window would sort every row — same shuffle, extra sort).
+(map-side combined, shuffle = |distinct QI groups|) followed by a tiny
+driver-free profile agg; no window-over-raw-rows anywhere (a window
+would sort every row — same shuffle, extra sort).
 
 No reference counterpart (scopely/kinesis-vcr has no analytics
 surface); additive engine layer beside operators/validate.py (the
@@ -112,75 +106,9 @@ def k_anonymity_profile(
     )
 
 
-def suppress_below_k(
-    df: DataFrame, qi_cols: Sequence[str], k: int
-) -> DataFrame:
-    """Suppression mechanism: keep only rows whose QI-group has ≥ k
-    members — the table is k-anonymous on these QIs afterwards (dropping
-    rows only shrinks groups that are already gone entirely: a group is
-    either kept whole or dropped whole, so surviving group sizes are
-    unchanged). Inner join on the QI key; same key as the size agg, AQE
-    broadcast when the surviving-group list is small."""
-    keep = group_sizes(df, qi_cols).where(F.col("group_size") >= int(k)).select(
-        *qi_cols
-    )
-    return df.join(keep, on=list(qi_cols), how="inner")
-
-
-def l_diversity_profile(
-    df: DataFrame,
-    qi_cols: Sequence[str | Column],
-    sensitive_col: str,
-    ls: Sequence[int] = (2, 3),
-) -> DataFrame:
-    """Distinct-l-diversity: per l, how many rows sit in QI-groups with
-    fewer than l DISTINCT sensitive values. Exact countDistinct inside
-    the QI hash-agg (two-phase under the hood); same single-reduction
-    shape as the k profile."""
-    cols = [F.col(c) if isinstance(c, str) else c for c in qi_cols]
-    groups = df.groupBy(*cols).agg(
-        F.count("*").alias("group_size"),
-        F.countDistinct(sensitive_col).alias("diversity"),
-    )
-    ladder = F.array(*[F.lit(int(l)) for l in ls])
-    rows_below = F.array(
-        *[
-            F.sum(
-                F.when(F.col("diversity") < int(l), F.col("group_size")).otherwise(
-                    F.lit(0)
-                )
-            )
-            for l in ls
-        ]
-    )
-    g = groups.agg(
-        F.sum("group_size").alias("n_rows"),
-        F.min("diversity").alias("min_diversity"),
-        rows_below.alias("_rb"),
-    )
-    return g.select(
-        "n_rows",
-        "min_diversity",
-        F.posexplode(ladder).alias("_pos", "l"),
-        "_rb",
-    ).select(
-        F.col("l").cast("long").alias("l"),
-        "n_rows",
-        "min_diversity",
-        F.element_at("_rb", F.col("_pos") + 1).cast("long").alias("rows_below"),
-        F.round(
-            F.element_at("_rb", F.col("_pos") + 1).cast("double")
-            / F.col("n_rows").cast("double"),
-            6,
-        ).alias("pct_rows_below"),
-    )
-
-
 __all__ = [
     "DEFAULT_KS",
     "generalize_numeric",
     "group_sizes",
     "k_anonymity_profile",
-    "l_diversity_profile",
-    "suppress_below_k",
 ]

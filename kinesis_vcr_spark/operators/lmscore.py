@@ -228,25 +228,19 @@ def score_documents_bigram(
     text_col: str = "text",
     lam: float = LAMBDA_BIGRAM,
     alpha: float = 1.0,
-    broadcast_lm: bool = True,
 ) -> DataFrame:
     """Per-document interpolated-bigram score: ``id_col, n_tokens,
     nll_micro_total`` (exact bigint) + ``avg_nll`` (nats/token, 6 dp).
 
     Self-scoring (CCNet "score the corpus by its own statistics" mode):
     every scored bigram exists in the table by construction, so the
-    join is total — no OOV path. ``broadcast_lm=False`` routes the
-    lookup through a shuffle join co-partitioned on (prev, token) for
-    corpora whose bigram vocabulary outgrows the broadcast threshold
-    (web-scale: billions of distinct bigrams); the per-document
-    aggregate stays map-side combinable either way.
+    join is total — no OOV path. The table broadcasts onto the pairs,
+    and the per-document aggregate is map-side combinable.
     """
     lm = bigram_nll_table(df, id_col, text_col, lam=lam, alpha=alpha)
-    if broadcast_lm:
-        lm = F.broadcast(lm)
     pairs = bigram_pairs(df, id_col, text_col)
     agg = (
-        pairs.join(lm, ["prev", "token"])
+        pairs.join(F.broadcast(lm), ["prev", "token"])
         .groupBy(id_col)
         .agg(
             F.count("*").alias("n_tokens"),

@@ -90,15 +90,3 @@ def weighted_mix(
         )
         .drop("__n", "__drop")
     )
-
-
-def expected_rows(
-    n_per_stratum: dict[str, int],
-    weights: dict[str, float],
-    default_weight: float = 1.0,
-) -> float:
-    """Expected output size of :func:`weighted_mix` — the audit number
-    to compare a materialized mix against."""
-    return sum(
-        n * weights.get(s, default_weight) for s, n in n_per_stratum.items()
-    )

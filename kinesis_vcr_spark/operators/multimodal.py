@@ -277,13 +277,21 @@ def _png_parse(payload: bytes):
     if interlace == 0:
         px, end = _png_pass(raw, 0, w, h, channels, depth)
     else:  # Adam7: seven sequential passes, each its own filter context
+        passes = [
+            (x0, y0, dx, dy, (w - x0 + dx - 1) // dx, (h - y0 + dy - 1) // dy)
+            for x0, y0, dx, dy in _ADAM7
+        ]
+        # check the inflated length before the canvas is allocated from
+        # the header's dimensions
+        need = sum(ph * (1 + (pw * channels * depth + 7) // 8)
+                   for *_, pw, ph in passes if pw > 0 and ph > 0)
+        if len(raw) < need:
+            raise ValueError("PNG pixel data truncated")
         px = np.zeros(
             (h, w, channels), dtype=np.uint16 if depth == 16 else np.uint8
         )
         end = 0
-        for x0, y0, dx, dy in _ADAM7:
-            pw = (w - x0 + dx - 1) // dx
-            ph = (h - y0 + dy - 1) // dy
+        for x0, y0, dx, dy, pw, ph in passes:
             if pw <= 0 or ph <= 0:
                 continue  # pass empty at this image size
             sub, end = _png_pass(raw, end, pw, ph, channels, depth)
@@ -563,59 +571,6 @@ def sample_frames(media: DataFrame, every_n: int = 4) -> DataFrame:
             )
 
     return media.mapInPandas(explode_frames, FRAME_SCHEMA)
-
-
-def ppm_resize(payload: bytes, width: int, height: int) -> bytes:
-    """REAL nearest-neighbor resize for P6 PPM images (numpy row/column
-    index sampling — vectorized, no PIL), re-encoded as P6. Drop-in
-    ``resizer`` for :func:`resize_media`."""
-    import numpy as np
-
-    src_w, src_h, px = _ppm_parse(payload)
-    ys = (np.arange(height) * src_h) // height
-    xs = (np.arange(width) * src_w) // width
-    out = px[ys][:, xs]
-    header = f"P6\n{width} {height}\n255\n".encode()
-    return header + out.tobytes()
-
-
-def fake_resize(payload: bytes, width: int, height: int) -> bytes:
-    """Deterministic stand-in resizer: tiles/truncates the source bytes
-    to exactly ``width*height``. A real implementation (PIL) replaces
-    this function only — the Spark plumbing is identical."""
-    target = width * height
-    if not payload:
-        return b"\x00" * target
-    reps = -(-target // len(payload))
-    return (payload * reps)[:target]
-
-
-def resize_media(
-    media: DataFrame,
-    width: int,
-    height: int,
-    resizer: Callable[[bytes, int, int], bytes] = fake_resize,
-) -> DataFrame:
-    """Batch resize: MEDIA_SCHEMA in → MEDIA_SCHEMA out (payload
-    replaced, ``meta['resized']`` stamped) — composable with every other
-    media operator since the schema round-trips."""
-
-    def do_resize(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf["payload"] = [
-                resizer(bytes(p) if p is not None else b"", width, height)
-                for p in pdf["payload"]
-            ]
-            pdf["meta"] = [
-                {**(m if m is not None else {}), "resized": f"{width}x{height}"}
-                for m in pdf["meta"]
-            ]
-            yield pdf
-
-    return media.mapInPandas(do_resize, MEDIA_SCHEMA)
 
 
 def documents_as_media(docs: DataFrame) -> DataFrame:

@@ -138,28 +138,8 @@ def novelty_by_group(
     )
 
 
-def most_derivative_docs(
-    docs: DataFrame,
-    k: int = 20,
-    min_ngrams: int = 10,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-) -> DataFrame:
-    """The k docs with the LOWEST novelty (≥ ``min_ngrams`` distinct
-    n-grams so one-liners don't dominate) — the curation review queue.
-    Deterministic total order: novelty asc, then id."""
-    per_doc = doc_ngram_novelty(docs, id_col, text_col, n)
-    return (
-        per_doc.where(F.col("total_ngrams") >= int(min_ngrams))
-        .orderBy("novelty", id_col)
-        .limit(k)
-    )
-
-
 __all__ = [
     "doc_ngram_novelty",
-    "most_derivative_docs",
     "ngram_first_seen",
     "novelty_by_group",
     "shingle_edges",

@@ -2,27 +2,20 @@
 windows (context-length bins), the last step of an LLM data pipeline
 before tokenized examples are written.
 
-Two packing disciplines, both deterministic and partition-independent:
-
-- **chunk** (default): GPT-style concatenate-then-split.  Documents are
-  laid out in a deterministic order inside ``num_streams`` independent
-  streams; the token stream is cut every ``capacity`` tokens.  A
-  document belongs to the bin where its span *starts* (it may straddle
-  into the next bin — exactly what real pipelines do, the straddled
-  tail becomes the next example's head).  Pure Catalyst: one window
-  cumulative sum per stream, no Python — and SQL-expressible, so the
-  DuckDB oracle checks it end-to-end.
-- **greedy**: first-fit-sequential *without* straddling — a document
-  that does not fit the open bin closes it and starts the next.  This
-  is inherently sequential per stream, so it runs as one
-  ``applyInPandas`` per stream key: parallel across streams, a tight
-  numpy loop within.  Unit-tested against a pure-Python reference.
+GPT-style concatenate-then-split, deterministic and
+partition-independent: documents are laid out in a deterministic order
+inside ``num_streams`` independent streams; the token stream is cut
+every ``capacity`` tokens.  A document belongs to the bin where its
+span *starts* (it may straddle into the next bin — exactly what real
+pipelines do, the straddled tail becomes the next example's head).
+Pure Catalyst: one window cumulative sum per stream, no Python — and
+SQL-expressible, so the DuckDB oracle checks it end-to-end.
 
 Scale posture: streams are hash-of-id buckets, so a 100 TB corpus packs
 as ``num_streams`` independent, evenly-sized sequential problems — set
-``num_streams`` ≳ executor-core count and the window/applyInPandas
-stage is embarrassingly parallel with bounded per-task state.  One
-shuffle on the stream key either way.
+``num_streams`` ≳ executor-core count and the window stage is
+embarrassingly parallel with bounded per-task state.  One shuffle on
+the stream key.
 """
 
 from __future__ import annotations
@@ -61,49 +54,6 @@ def pack_chunk(
             "bin_id", F.floor(F.col("start_tok") / F.lit(capacity)).cast("long")
         )
     )
-
-
-def pack_greedy(
-    df: DataFrame,
-    id_col: str,
-    tokens_col: str,
-    capacity: int,
-    num_streams: int = 8,
-) -> DataFrame:
-    """First-fit-sequential packing (no straddle).  Documents longer
-    than ``capacity`` get a bin of their own (never dropped — the
-    caller decides whether to truncate).  Output schema: ``id_col,
-    stream, bin_id, n_tokens``."""
-    import pandas as pd  # noqa: PLC0415
-
-    out_schema = f"{id_col} long, stream int, bin_id long, n_tokens long"
-
-    def _pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(id_col)
-        bins, fill, cur = [], 0, 0
-        for n in pdf["n_tokens_in"]:
-            if fill > 0 and fill + n > capacity:
-                cur += 1
-                fill = 0
-            bins.append(cur)
-            fill += n
-            if fill >= capacity:  # full (or oversized single doc): close it
-                cur += 1
-                fill = 0
-        return pd.DataFrame(
-            {
-                id_col: pdf[id_col].values,
-                "stream": pdf["stream"].values,
-                "bin_id": bins,
-                "n_tokens": pdf["n_tokens_in"].values,
-            }
-        )
-
-    prepared = (
-        with_stream(df, id_col, num_streams)
-        .select(id_col, "stream", F.col(tokens_col).cast("long").alias("n_tokens_in"))
-    )
-    return prepared.groupBy("stream").applyInPandas(_pack, out_schema)
 
 
 def bin_stats(packed: DataFrame, tokens_col: str) -> DataFrame:

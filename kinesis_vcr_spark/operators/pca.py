@@ -6,7 +6,8 @@ before product quantization (the OPQ preprocessing step), and plain
 "which dimensions carry signal" audits of an encoder. The expensive part
 at 100 TB is a single associative reduction: the d×d Gram matrix
 ``Xᵀ X`` plus the column sums. Everything after (eigendecomposition,
-component selection) is O(d³) on d≤a few hundred — driver-side numpy.
+component selection) is O(d³) on d≤a few hundred — driver-side numpy
+over the collected covariance rows, left to the caller.
 
 Scale shape
 -----------
@@ -44,7 +45,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 DEFAULT_SCALE = 1_000_000
@@ -232,121 +233,12 @@ def covariance_topk(
     )
 
 
-def pca_fit(
-    df: DataFrame,
-    col: str = "embedding",
-    dim: int = 64,
-    n_components: int = 8,
-    scale: int = DEFAULT_SCALE,
-    use_pandas: bool = True,
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Fit PCA from the distributed Gram reduction.
-
-    Returns ``(components, eigvals, mean)`` — components is
-    (n_components, dim) row-major, eigvals the matching population
-    variances (descending), mean the de-quantized column means. Only
-    d² + d rows are collected; the data never leaves the executors.
-    """
-    q = quantize_embeddings(df, col, scale).select("q")
-    gram_rows = (
-        gramian_partial_pandas(q, "q", dim)
-        if use_pandas
-        else gramian_long(q, "q", dim)
-    ).collect()
-    sum_rows = component_sums(q, "q", dim).collect()
-    if not sum_rows:
-        raise ValueError("pca_fit: empty input")
-    n = sum_rows[0]["n"]
-    s = np.zeros(dim, dtype=np.float64)
-    for r in sum_rows:
-        s[r["i"] - 1] = float(r["s"])
-    g = np.zeros((dim, dim), dtype=np.float64)
-    for r in gram_rows:
-        g[r["i"] - 1, r["j"] - 1] = float(r["s_ij"])
-        g[r["j"] - 1, r["i"] - 1] = float(r["s_ij"])
-    sc2 = float(scale) * float(scale)
-    cov = (g - np.outer(s, s) / n) / n / sc2
-    eigvals, eigvecs = np.linalg.eigh(cov)  # ascending
-    order = np.argsort(eigvals)[::-1][:n_components]
-    comps = eigvecs[:, order].T.copy()
-    # Sign convention: largest-|loading| coordinate positive, so the
-    # basis is deterministic (eigh's sign is arbitrary).
-    for row in comps:
-        pivot = np.argmax(np.abs(row))
-        if row[pivot] < 0:
-            row *= -1.0
-    return comps, eigvals[order], s / n / float(scale)
-
-
-def pca_project(
-    df: DataFrame,
-    components: np.ndarray,
-    mean: np.ndarray,
-    col: str = "embedding",
-    out: str = "pca",
-) -> DataFrame:
-    """Project onto fitted components: ``(x − mean) · Cᵀ``.
-
-    One Arrow-batched pandas UDF (k×d matmul per batch); the component
-    matrix rides the closure — a few KB broadcast with the task binary,
-    no join, no shuffle.
-    """
-    comp = np.ascontiguousarray(components, dtype=np.float64)
-    mu = np.ascontiguousarray(mean, dtype=np.float64)
-
-    @F.pandas_udf("array<double>")
-    def proj(s: pd.Series) -> pd.Series:
-        x = np.array(s.to_list(), dtype=np.float64)
-        if x.size == 0:
-            return pd.Series([], dtype=object)
-        y = (x - mu) @ comp.T
-        return pd.Series(list(y))
-
-    return df.withColumn(out, proj(F.col(col)))
-
-
-def explained_variance(eigvals: np.ndarray, total_var: float) -> np.ndarray:
-    """Fraction of total variance captured per component."""
-    if total_var <= 0:
-        return np.zeros_like(eigvals)
-    return eigvals / total_var
-
-
-def reconstruction_error(
-    df: DataFrame,
-    components: np.ndarray,
-    mean: np.ndarray,
-    col: str = "embedding",
-) -> DataFrame:
-    """Per-row squared reconstruction error after k-component PCA —
-    the SemDeDup-style "how much of this vector the subspace misses"
-    signal. Arrow-batched; no shuffle."""
-    comp = np.ascontiguousarray(components, dtype=np.float64)
-    mu = np.ascontiguousarray(mean, dtype=np.float64)
-
-    @F.pandas_udf("double")
-    def err(s: pd.Series) -> pd.Series:
-        x = np.array(s.to_list(), dtype=np.float64)
-        if x.size == 0:
-            return pd.Series([], dtype=np.float64)
-        c = x - mu
-        y = c @ comp.T
-        resid = c - y @ comp
-        return pd.Series(np.einsum("ij,ij->i", resid, resid))
-
-    return df.withColumn("recon_err", err(F.col(col)))
-
-
 __all__ = [
     "DEFAULT_SCALE",
     "component_sums",
     "covariance_long",
     "covariance_topk",
-    "explained_variance",
     "gramian_long",
     "gramian_partial_pandas",
-    "pca_fit",
-    "pca_project",
     "quantize_embeddings",
-    "reconstruction_error",
 ]

@@ -110,12 +110,6 @@ def clean_corpus(
     return labeled.select(*docs.columns, status.alias("status"))
 
 
-def kept_corpus(docs: DataFrame, **kwargs) -> DataFrame:
-    """Just the surviving documents — the pipeline's production output."""
-    out = clean_corpus(docs, **kwargs)
-    return out.where(F.col("status") == STATUS_KEPT).drop("status")
-
-
 # ---------------------------------------------------------------------------
 # full LLM-prep pipeline (r08): URL dedup → HTML extract → NFC →
 # langid/quality filter → exact+near dedup → decontam → split

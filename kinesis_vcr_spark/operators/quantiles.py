@@ -1,26 +1,15 @@
-"""Approximate quantile bucketing — the 100 TB replacement for a
-global NTILE.
+"""Quantiles without a single-partition sort: a mergeable per-key
+quantile sketch and an exact distributed NTILE.
 
-``order_value_deciles`` (queries/windowed.py) ranks with an
-unpartitioned window: a deliberate single-partition total sort, correct
-for reporting output but not a cluster plan. At scale the right shape
-is the one implemented here:
-
-1. one pass computes the ``num_buckets - 1`` boundary values with
-   ``percentile_approx`` (a mergeable KLL-style sketch: map-side
-   partial sketches, one small merge — no sort, no shuffle of data
-   rows);
-2. the O(num_buckets) boundary scalars come back to the driver and are
-   folded into the assignment expression (a broadcast of constants —
-   the ONLY driver-side data, and it is tiny by construction);
-3. every row gets its bucket with pure column arithmetic — a narrow
-   projection, parallel by input split.
-
-Accuracy: ``percentile_approx(accuracy=a)`` bounds the rank error at
-``1/a`` of the row count, so bucket populations deviate from N/k by at
-most N/a per boundary (a=10^4 → ±0.01 %). Ties land in the lower
-bucket on the boundary value, matching ``value <= boundary`` semantics
-in both this operator and an exact cume_dist cut.
+- :func:`quantile_sketch` keeps a deterministic uniform bottom-k sample
+  per key (map-side ticket cut, one small ``collect_list``), and
+  :func:`quantile_from_sketch` reads a quantile off it as a column
+  expression.
+- :func:`exact_ntile` is ``NTILE(k) OVER (ORDER BY …)`` value for value.
+  ``order_value_deciles`` (queries/windowed.py) ranks with it: a plain
+  window on small inputs, and above ``SMALL_RANK_ROWS`` the two-pass
+  block rank of :func:`exact_global_rank`, whose per-block sorts run in
+  parallel instead of one total sort on one partition.
 """
 
 from __future__ import annotations
@@ -32,49 +21,6 @@ from kinesis_vcr_spark.operators.sampling import (
     TICKET_DIGITS,
     sample_ticket,
 )
-
-
-def quantile_boundaries(
-    df: DataFrame,
-    value_col: str,
-    num_buckets: int = 10,
-    accuracy: int = 10_000,
-) -> list[float]:
-    """The ``num_buckets - 1`` interior boundary values of
-    ``value_col``, from one sketch pass (no sort)."""
-    if num_buckets < 2:
-        raise ValueError("num_buckets must be >= 2")
-    probs = [i / num_buckets for i in range(1, num_buckets)]
-    row = df.select(
-        F.percentile_approx(
-            F.col(value_col).cast("double"),
-            F.array(*[F.lit(p) for p in probs]),
-            F.lit(accuracy),
-        ).alias("bounds")
-    ).first()
-    return list(row["bounds"] or [])
-
-
-def assign_quantile_buckets(
-    df: DataFrame,
-    value_col: str,
-    num_buckets: int = 10,
-    accuracy: int = 10_000,
-    bucket_col: str = "bucket",
-) -> DataFrame:
-    """``df`` + a 1-based ``bucket_col`` ≈ NTILE(num_buckets) over
-    ``value_col`` ascending — without a global sort.
-
-    bucket = 1 + #(boundaries strictly below the value): a value equal
-    to a boundary stays in the lower bucket. Plan: one sketch aggregate
-    + one narrow projection; nothing ever shuffles on the value.
-    """
-    bounds = quantile_boundaries(df, value_col, num_buckets, accuracy)
-    v = F.col(value_col).cast("double")
-    expr: Column = F.lit(1)
-    for b in bounds:
-        expr = expr + (v > F.lit(float(b))).cast("int")
-    return df.withColumn(bucket_col, expr)
 
 
 # ---------------------------------------------------------------------------
@@ -112,9 +58,8 @@ def quantile_sketch(
     sample_ticket` — fixed-width lowercase hex, lexicographic ==
     numeric, identical in DuckDB): no RNG, no partition dependence, so
     an oracle reproduces the sample — and therefore every quantile
-    estimate — bit-for-bit. Merge of sketches over DISJOINT row sets =
-    bottom-k of the concatenation (:func:`merge_quantile_sketches`),
-    associative and order-free.
+    estimate — bit-for-bit. Sketches over DISJOINT row sets merge as the
+    bottom-k of their concatenation, associative and order-free.
 
     Scale posture (mirrors kmv_sketch, ADVICE r03): one
     ``approx_count_distinct`` pass estimates per-key row counts, then
@@ -174,23 +119,10 @@ def quantile_from_sketch(qs: Column, q: float) -> Column:
     return F.element_at(vals, rank)
 
 
-def merge_quantile_sketches(a: Column, b: Column, k: int = QSK_K) -> Column:
-    """Column-level merge of two sketches built over DISJOINT row sets:
-    bottom-k of the concatenation. No dedup — a (t, v) pair present in
-    both inputs is two genuinely different rows that collided on a
-    32-bit ticket and an equal value, and the full-data build would
-    keep both too (merge == rebuild, pinned in tests). Overlapping row
-    sets are OUT of contract (same row twice would double-weight it) —
-    partial sketches over partitions of the data, like every sketch in
-    this engine."""
-    return F.slice(F.sort_array(F.concat(a, b)), 1, k)
-
-
 def exact_global_rank(
     df: DataFrame,
     order_cols: list[str],
     rank_col: str = "rank",
-    num_partitions: int | None = None,
 ) -> tuple[DataFrame, int]:
     """EXACT ``row_number() OVER (ORDER BY order_cols)`` without a
     single-partition total sort. Returns ``(df + rank_col, total_rows)``.
@@ -216,8 +148,8 @@ def exact_global_rank(
     block, so offset + local rank IS the exact global row_number over
     ``order_cols``. Value-skewed data degrades block balance (an
     equal-value run must sit in one block to be ranked contiguously),
-    never correctness. ``num_partitions`` is accepted for API
-    compatibility; block granularity is fixed by the static function."""
+    never correctness. Block granularity is fixed by the static
+    function."""
     from pyspark.sql import Window  # noqa: PLC0415
 
     spark = df.sparkSession
@@ -269,7 +201,6 @@ def exact_ntile(
     order_cols: list[str],
     num_buckets: int,
     ntile_col: str = "ntile",
-    num_partitions: int | None = None,
     small_input_rows: int = SMALL_RANK_ROWS,
 ) -> DataFrame:
     """EXACT ``NTILE(num_buckets) OVER (ORDER BY order_cols)`` — same
@@ -291,9 +222,7 @@ def exact_ntile(
     if total <= small_input_rows:
         w = Window.orderBy(*[F.col(c) for c in order_cols])
         return df.withColumn(ntile_col, F.ntile(num_buckets).over(w))
-    ranked, total = exact_global_rank(
-        df, order_cols, "__rank", num_partitions
-    )
+    ranked, total = exact_global_rank(df, order_cols, "__rank")
     q, rem = divmod(total, num_buckets)
     cut = rem * (q + 1)
     r = F.col("__rank")

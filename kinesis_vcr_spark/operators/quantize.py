@@ -12,9 +12,8 @@ Two stages, both engine-portable:
   (narrow 1→dim flatMap) + one groupBy(dim) with map-side combine; the
   result is `dim` rows (64 here), broadcast-sized by construction.
 - **apply**: codes = round((x − min) / (max − min) · 255) per element.
-  Join the per-dim ranges (broadcast) onto exploded elements, or bake
-  them into an `F.transform` literal array for the array-in/array-out
-  form — both stay in whole-stage codegen, no Python.
+  Join the per-dim ranges (broadcast) onto exploded elements — whole-
+  stage codegen, no Python.
 
 Exactness discipline: elements are cast float→double (exact) before
 arithmetic; reconstruction errors are summed as DECIMAL (exact,
@@ -66,33 +65,3 @@ def quantize_elements(
         code.alias("code"),
         F.abs(F.col("x") - recon).alias("abs_err"),
     )
-
-
-def quantize_vectors(
-    df: DataFrame,
-    ranges_rows: list[tuple[int, float, float]],
-    vec_col: str = "embedding",
-    out_col: str = "codes",
-) -> DataFrame:
-    """Array-in/array-out form: adds an ``array<int>`` codes column.
-
-    ``ranges_rows`` = collected (pos, vmin, vmax) — dim-sized, the same
-    accepted driver-side footprint as IVF centroids (operators/ivf.py).
-    Pure `F.transform` over literal arrays: whole-stage codegen, no
-    shuffle, no Python.
-    """
-    ordered = sorted(ranges_rows)
-    mins = F.array(*[F.lit(float(v)) for _, v, _ in ordered])
-    scales = F.array(
-        *[
-            F.lit((vmax - vmin) / float(LEVELS) if vmax > vmin else 1.0)
-            for _, vmin, vmax in ordered
-        ]
-    )
-    def _q(x, i):
-        return F.round(
-            (x.cast("double") - F.element_at(mins, i + 1))
-            / F.element_at(scales, i + 1)
-        ).cast("int")
-
-    return df.withColumn(out_col, F.transform(F.col(vec_col), _q))

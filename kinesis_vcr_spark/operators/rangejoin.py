@@ -15,7 +15,8 @@ superset filtered by the exact predicate.
 Scale posture:
 
 - The join becomes a hash/sort-merge equi-join on ``__bucket`` (or a
-  broadcast join when the exploded interval side is small) — shuffle
+  broadcast join when Catalyst sizes the exploded interval side under
+  the broadcast threshold) — shuffle
   volume = points + exploded intervals, never N·M.
 - ``bucket_width`` trades explode factor against candidate density:
   pick it near the median interval length so intervals explode to ~2
@@ -86,7 +87,6 @@ def interval_join(
     bucket_width: int,
     on: list[str] | None = None,
     max_buckets_per_interval: int = 4096,
-    broadcast_intervals: bool = False,
     num_partitions: int | None = None,
 ) -> DataFrame:
     """Inner-join each point row to every interval row whose
@@ -94,11 +94,6 @@ def interval_join(
     (plus optional ``on`` equi-keys). Column sets must be disjoint
     apart from ``on``; bound columns must be non-negative integers,
     non-null on the interval side.
-
-    ``broadcast_intervals=True`` broadcasts the exploded interval side
-    — the right call when intervals are small (campaign windows,
-    maintenance windows) and the point side is the 100 TB one: the
-    point scan then never shuffles at all.
 
     ``num_partitions`` pins the join's parallelism. Set it when the
     join OUTPUT is much larger than its inputs (dense domains: many
@@ -117,15 +112,8 @@ def interval_join(
     exploded = _explode_buckets(
         intervals, start_col, end_col, bucket_width, max_buckets_per_interval
     )
-    if broadcast_intervals:
-        exploded = F.broadcast(exploded)
     tagged = points.withColumn(_BUCKET, _bucket_of(point_col, bucket_width))
     if num_partitions is not None:
-        if broadcast_intervals:
-            raise ValueError(
-                "num_partitions only applies to the shuffle join path; "
-                "drop it or broadcast_intervals"
-            )
         keys = [*on, _BUCKET]
         exploded = exploded.repartition(num_partitions, *keys)
         tagged = tagged.repartition(num_partitions, *keys)

@@ -170,25 +170,6 @@ def append_search_index(
     )
 
 
-def _term_buckets(
-    spark: SparkSession, terms: list[str], n_buckets: int
-) -> list[int]:
-    """The ≤ len(terms) partition buckets a probe must read — computed
-    with the SAME engine expression that laid the postings out (a
-    terms-sized collect, not data-sized)."""
-    rows = (
-        spark.createDataFrame([(t,) for t in terms], "term string")
-        .select(
-            F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int").alias(
-                "tb"
-            )
-        )
-        .distinct()
-        .collect()
-    )
-    return [r["tb"] for r in rows]
-
-
 def _meta_and_buckets(
     spark: SparkSession, index_path: str, terms: list[str]
 ) -> tuple[int, list[int]]:

@@ -70,8 +70,6 @@ def jaccard_join_exact(
     id_col: str,
     tokens_col: str,
     threshold_pct: int,
-    broadcast_sets: bool = True,
-    dense_token_ids: bool = True,
 ) -> DataFrame:
     """All pairs ``(id_a < id_b)`` with token-set Jaccard ≥
     ``threshold_pct``/100 — exact, guaranteed-complete.
@@ -81,19 +79,12 @@ def jaccard_join_exact(
     bigint intersection/union sizes and ``jaccard`` rounded to 6 dp.
     Empty token sets never pair (Jaccard undefined).
 
-    ``broadcast_sets=True`` (default) broadcasts the id→token-array
-    table onto the candidate pairs for verification — measured 10×
-    at sf0.1 (left to itself Catalyst broadcast the much larger
-    candidate side). Set False when the corpus's token arrays exceed
-    broadcast size; verification then runs as id-keyed shuffle joins.
-
-    ``dense_token_ids=True`` (default) remaps tokens to dense int64
-    ids for verification via one vocabulary-sized single-partition
-    sort — any per-run bijection preserves intersection counts, and a
-    deterministic one is safe under stage retry. Set False when the
-    token vocabulary itself is beyond single-node sort size (e.g.
-    shingles over web-scale corpora); verification then intersects
-    the original token strings.
+    Verification broadcasts the id→token-array table onto the
+    candidate pairs — measured 10× at sf0.1 (left to itself Catalyst
+    broadcast the much larger candidate side) — and intersects dense
+    int64 token ids from one vocabulary-sized single-partition sort:
+    any per-run bijection preserves intersection counts, and a
+    deterministic one is safe under stage retry.
     """
     if not 0 < threshold_pct <= 100:
         raise ValueError(f"threshold_pct in (0, 100], got {threshold_pct}")
@@ -163,37 +154,31 @@ def jaccard_join_exact(
         >= alpha
     ).select("id_a", "id_b")
 
-    # verification sets: per-doc arrays of dense int token ids (or the
-    # original strings — see dense_token_ids); element order is
-    # irrelevant to array_intersect, duplicates impossible (exploded
-    # from a distinct array)
-    if dense_token_ids:
-        tokid = dfreq.select(
-            "__tok",
-            F.row_number()
-            .over(Window.orderBy("__df", "__tok"))
-            .alias("__tid"),
-        )
-        elems = toks.join(F.broadcast(tokid), "__tok").select(
-            "__id", F.col("__tid").alias("__e"), "__sz"
-        )
-    else:
-        elems = toks.select("__id", F.col("__tok").alias("__e"), "__sz")
+    # verification sets: per-doc arrays of dense int token ids; element
+    # order is irrelevant to array_intersect, duplicates impossible
+    # (exploded from a distinct array)
+    tokid = dfreq.select(
+        "__tok",
+        F.row_number()
+        .over(Window.orderBy("__df", "__tok"))
+        .alias("__tid"),
+    )
+    elems = toks.join(F.broadcast(tokid), "__tok").select(
+        "__id", F.col("__tid").alias("__e"), "__sz"
+    )
     iset = elems.groupBy("__id").agg(
         F.collect_list("__e").alias("__set"), F.max("__sz").alias("__n")
     )
-    ta = iset.select(
+    ta = F.broadcast(iset.select(
         F.col("__id").alias("id_a"),
         F.col("__set").alias("__ta"),
         F.col("__n").alias("__na"),
-    )
-    tb = iset.select(
+    ))
+    tb = F.broadcast(iset.select(
         F.col("__id").alias("id_b"),
         F.col("__set").alias("__tb"),
         F.col("__n").alias("__nb"),
-    )
-    if broadcast_sets:
-        ta, tb = F.broadcast(ta), F.broadcast(tb)
+    ))
     inter = F.size(F.array_intersect("__ta", "__tb")).cast("long")
     return (
         cands.join(ta, "id_a")

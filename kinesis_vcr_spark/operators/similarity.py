@@ -4,8 +4,8 @@ Two strategies over the same primitives:
 
 - :func:`cosine_topk` — exact brute-force top-k. The per-(query, vector)
   work is a broadcast of the (small) query set against the (huge) vector
-  table: a BroadcastNestedLoopJoin whose inner expression is a fully
-  codegen'd zip_with/aggregate dot product — no shuffle of the vector
+  table: a BroadcastNestedLoopJoin scored by an Arrow-batched dot
+  product (:func:`pandas_cosine_unit`) — no shuffle of the vector
   table at all, and the top-k is a per-query window (no global sort).
   This is the correctness baseline and the right plan when |queries| is
   small (the common "probe" shape).
@@ -14,7 +14,7 @@ Two strategies over the same primitives:
   queries probe only their own buckets via an equi-join. Sub-linear
   candidate sets at 100 TB; recall < 1 by design (measured in tests).
 
-Everything is Catalyst expressions in double precision; cosines exposed
+Everything is computed in double precision; cosines exposed
 to outputs are rounded to 6 dp so results are stable across summation
 orders and engines (floats differ in the last ulp, ranks don't).
 """
@@ -36,14 +36,6 @@ def as_double(vec: Column) -> Column:
     return F.transform(vec, lambda x: x.cast("double"))
 
 
-def dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
 def l2_norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
 
@@ -55,28 +47,23 @@ def unit_double(vec: Column) -> Column:
     return F.when(n > 0, F.transform(v, lambda x: x / n)).otherwise(v)
 
 
-def cosine(unit_a: Column, unit_b: Column) -> Column:
-    """Cosine of two ALREADY-normalized vectors = dot product."""
-    return dot(unit_a, unit_b)
-
-
 def round_cosine(c: Column) -> Column:
     return F.round(c, COSINE_DECIMALS)
 
 
 def pandas_cosine(vec_a: Column, vec_b: Column) -> Column:
-    """Cosine of two RAW vectors, bit-identical to
-    ``cosine(unit_double(a), unit_double(b))`` but vectorized per Arrow
-    batch (~10-50× the interpreted-HOF throughput on wide candidate
-    sets — the near-dup verify join was the top cost in the r05 sf1.0
-    scale run).
+    """Cosine of two RAW vectors, normalized as :func:`unit_double`
+    does, vectorized per Arrow batch (~10-50× the throughput of an
+    interpreted ``zip_with``/``aggregate`` dot on wide candidate sets —
+    the near-dup verify join was the top cost in the r05 sf1.0 scale
+    run).
 
     Bit-identity matters because outputs are hash-compared against a
     DuckDB oracle that sums sequentially: numpy's pairwise ``np.sum``
     associates differently in the last ulp, so this accumulates with an
     explicit left-to-right loop over dimensions (each step one
     vectorized op across the batch) — the exact operation sequence of
-    the HOF ``aggregate`` and of DuckDB's ``list_reduce``. Zero vectors
+    DuckDB's ``list_reduce``. Zero vectors
     stay zero (same contract as :func:`unit_double`).
     """
     from pyspark.sql.functions import pandas_udf
@@ -103,17 +90,15 @@ def pandas_cosine(vec_a: Column, vec_b: Column) -> Column:
 
 
 def pandas_cosine_unit(unit_a: Column, unit_b: Column) -> Column:
-    """Cosine of two ALREADY-normalized vectors, bit-identical to
-    ``cosine(unit_a, unit_b)`` (the interpreted-HOF dot) but vectorized
-    per Arrow batch.
+    """Cosine of two ALREADY-normalized vectors (their dot product),
+    vectorized per Arrow batch.
 
     Same bit-identity argument as :func:`pandas_cosine`: the dot is an
     explicit left-to-right accumulation over dimensions (each step one
     vectorized IEEE-double op across the batch) — the exact operation
-    sequence of the HOF ``aggregate`` and of DuckDB's sequential sum.
-    No normalization happens here, so unit columns persisted in an
-    index (IVF lists store ``__v_unit``) score identically whether the
-    dot runs JVM-side or through this UDF. This is the hot-path scorer
+    sequence of DuckDB's sequential sum. No normalization happens here,
+    so unit columns persisted in an index (IVF lists store
+    ``__v_unit``) score as they were stored. This is the hot-path scorer
     for the exact re-rank in :func:`cosine_topk` / :func:`ann_topk` /
     ``ivf_topk`` — the interpreted HOF was the measured linear constant
     behind ``similarity_ivf_planted``'s 11.6×/decade growth (r07

@@ -1,5 +1,4 @@
-"""Skew- and shuffle-management operators: salted joins for hot keys,
-bucketed tables for shuffle-free co-located joins.
+"""Skew-management operators: salted joins and aggregates for hot keys.
 
 When to reach for each (the 100 TB decision tree):
 
@@ -13,9 +12,11 @@ When to reach for each (the 100 TB decision tree):
    side once per salt value. Costs a ``salt_factor``x blow-up of the
    small side — use only when the small side is broadcast-small but the
    big side's key distribution is pathological.
-3. **Bucketed tables**: pre-shuffle once at write time; every later
-   equi-join/aggregation on the bucket key is exchange-free. The right
-   call for dimension/fact tables joined repeatedly on the same key.
+3. **Bucketed tables** (Spark's ``bucketBy``): pre-shuffle once at
+   write time; every later equi-join/aggregation on the bucket key is
+   exchange-free. The right call for dimension/fact tables joined
+   repeatedly on the same key (operators/dedup_index.py's bucketed
+   near-dup index is the in-repo case).
 """
 
 from __future__ import annotations
@@ -100,21 +101,3 @@ def salted_aggregate(
         F.sum(f"__sum_{c}").alias(alias) for c, alias in sum_cols.items()
     ]
     return partial.groupBy(*keys).agg(*final_aggs)
-
-
-def write_bucketed(
-    df: DataFrame,
-    table_name: str,
-    bucket_col: str,
-    num_buckets: int = 32,
-    sort_col: str | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Persist as a bucketed (+ optionally sorted) table: the one-time
-    shuffle that makes every later equi-join/groupBy on ``bucket_col``
-    exchange-free (asserted in tests/test_skew.py). Both sides of a
-    join must share ``num_buckets``."""
-    writer = df.write.mode(mode).bucketBy(num_buckets, bucket_col)
-    if sort_col:
-        writer = writer.sortBy(sort_col)
-    writer.saveAsTable(table_name)

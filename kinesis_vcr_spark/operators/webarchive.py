@@ -2,8 +2,8 @@
 the container formats large crawl/training corpora actually arrive in
 (Common Crawl WARC/WET files; tar shards of grouped sample files).
 
-Both readers ride Spark's ``binaryFile`` source: one input row per
-archive file, exploded to one output row per record/sample inside a
+``warc_records`` rides Spark's ``binaryFile`` source: one input row per
+archive file, exploded to one output row per record inside a
 ``mapInPandas`` stage — a NARROW transform (no shuffle; parallelism =
 file count, which at crawl scale is tens of thousands of ~1 GB shards,
 far above any executor count). Record payloads stay opaque ``binary``
@@ -18,9 +18,9 @@ archives (the Common Crawl layout: each record its own gzip member,
 members concatenated) decompress through stdlib zlib member-walking.
 
 Tar shards follow the WebDataset convention: member files that share a
-basename (``key.ext``) form one training sample; ``tar_samples``
-groups them into (key, {ext: payload}) rows via the stdlib ``tarfile``
-reader over an in-memory shard.
+basename (``key.ext``) form one training sample. ``tar_members`` reads
+a shard's members with the stdlib ``tarfile`` reader over an in-memory
+shard; ``streaming/tarstream.py`` groups them into samples.
 
 Reference anchor: no counterpart in the reference (record/replay
 tool); SURVEY.md §2.5a E100.
@@ -34,11 +34,10 @@ import zlib
 from collections.abc import Iterator
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     BinaryType,
     LongType,
-    MapType,
     StringType,
     StructField,
     StructType,
@@ -58,16 +57,6 @@ WARC_SCHEMA = StructType(
         StructField("payload_bytes", LongType(), False),
     ]
 )
-
-TAR_SCHEMA = StructType(
-    [
-        StructField("source_file", StringType(), False),
-        StructField("key", StringType(), False),
-        StructField("parts", MapType(StringType(), BinaryType()), False),
-        StructField("total_bytes", LongType(), False),
-    ]
-)
-
 
 def gunzip_members(payload: bytes) -> bytes:
     """Decompress a stream of CONCATENATED gzip members (the Common
@@ -174,14 +163,6 @@ def warc_records(files: DataFrame) -> DataFrame:
     return files.select("path", "content").mapInPandas(explode, WARC_SCHEMA)
 
 
-def read_warc(spark: SparkSession, path: str) -> DataFrame:
-    """WARC ingestion entry point: ``binaryFile`` scan → record rows.
-    Parallelism = archive-file count (Common Crawl ships ~64k files
-    per snapshot — far above any executor count, so no intra-file
-    split is needed; a file is one task)."""
-    return warc_records(spark.read.format("binaryFile").load(path))
-
-
 def tar_members(payload: bytes) -> list[tuple[str, bytes]]:
     """All regular-file members of an (optionally gzipped) in-memory
     tar shard, in archive order."""
@@ -192,46 +173,3 @@ def tar_members(payload: bytes) -> list[tuple[str, bytes]]:
                 f = tf.extractfile(m)
                 out.append((m.name, f.read() if f else b""))
         return out
-
-
-def tar_samples(files: DataFrame) -> DataFrame:
-    """WebDataset-style sample grouping over ``binaryFile`` tar
-    shards: members sharing a sample key become one (key, {ext:
-    payload}) row, in first-seen order — one mapInPandas stage.
-
-    The key is the FULL member path up to the basename's first dot
-    (the WebDataset convention), so ``a/0001.jpg`` and ``b/0001.jpg``
-    stay distinct samples rather than silently merging."""
-    import pandas as pd  # noqa: PLC0415
-
-    def explode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows: dict[str, list] = {f.name: [] for f in TAR_SCHEMA.fields}
-            for path, content in zip(pdf["path"], pdf["content"]):
-                groups: dict[str, dict[str, bytes]] = {}
-                order: list[str] = []
-                for name, data in tar_members(bytes(content)):
-                    dirpart, _, base = name.rpartition("/")
-                    stem, _, ext = base.partition(".")
-                    key = f"{dirpart}/{stem}" if dirpart else stem
-                    if key not in groups:
-                        groups[key] = {}
-                        order.append(key)
-                    groups[key][ext] = data
-                for key in order:
-                    parts = groups[key]
-                    rows["source_file"].append(path)
-                    rows["key"].append(key)
-                    rows["parts"].append(parts)
-                    rows["total_bytes"].append(
-                        sum(len(v) for v in parts.values())
-                    )
-            yield pd.DataFrame(rows)
-
-    return files.select("path", "content").mapInPandas(explode, TAR_SCHEMA)
-
-
-def read_tar_shards(spark: SparkSession, path: str) -> DataFrame:
-    """Tar-shard ingestion entry point (WebDataset layout): one task
-    per shard file, one output row per sample key."""
-    return tar_samples(spark.read.format("binaryFile").load(path))

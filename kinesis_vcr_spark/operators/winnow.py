@@ -41,9 +41,7 @@ gets a full value-hash row, not a rows-only check.
 stage (projection before the window shuffle carries only doc_id, pos,
 and the 16+k-byte key); the only exchanges are the per-doc window
 hash (uniform on doc_id) and the fingerprint equi-join (capped).
-For production throughput swap ``md5`` for ``xxhash64`` (JVM-side,
-no hex string) via ``portable=False`` — same guarantees, oracle
-parity only holds for the portable flavor. A pathological single-doc
+A pathological single-doc
 skew (one 1 GB document) would pin one task in the window stage; at
 that scale chunk documents upstream (``pack_training_sequences``
 handles re-chunking) before winnowing.
@@ -61,13 +59,11 @@ def winnow_fingerprints(
     text_col: str = "text",
     k: int = 50,
     w: int = 16,
-    portable: bool = True,
 ) -> DataFrame:
     """Distinct content-defined fingerprints per document.
 
     Returns ``(id_col, fp)`` where ``fp`` is the window-min key
-    ``hash_hex || gram`` (portable) or ``hash_dec || gram`` (fast
-    path). Documents shorter than ``k`` chars emit their whole text
+    ``md5_hex || gram``. Documents shorter than ``k`` chars emit their whole text
     as one fingerprint (mirrors the whole-text-shingle convention of
     the other dedup operators — no empty fingerprint sets).
     """
@@ -86,20 +82,7 @@ def winnow_fingerprints(
         (F.col("pos0") + F.lit(1)).alias("pos"),
         "gram",
     )
-    if portable:
-        key = F.concat(F.md5(F.col("gram")), F.col("gram"))
-    else:
-        # xxhash64 is signed; offset to keep lexicographic == numeric.
-        key = F.concat(
-            F.lpad(
-                F.conv(
-                    F.hex(F.xxhash64(F.col("gram"))), 16, 10
-                ),
-                20,
-                "0",
-            ),
-            F.col("gram"),
-        )
+    key = F.concat(F.md5(F.col("gram")), F.col("gram"))
     win = Window.partitionBy(id_col).orderBy("pos").rowsBetween(0, w - 1)
     # valid window starts only: pos ≤ n_pos − w + 1 (shrunken tail
     # windows would select position-dependent, non-content-defined
@@ -125,7 +108,6 @@ def shared_substring_pairs(
     k: int = 50,
     w: int = 16,
     max_docs_per_fp: int = 1000,
-    portable: bool = True,
 ) -> DataFrame:
     """Document pairs sharing ≥ 1 winnowed fingerprint — i.e. strong
     evidence of a verbatim common substring of length ≥ k (guaranteed
@@ -137,7 +119,7 @@ def shared_substring_pairs(
     """
     from kinesis_vcr_spark.operators.dedup import cap_group_size
 
-    fps = winnow_fingerprints(df, id_col, text_col, k=k, w=w, portable=portable)
+    fps = winnow_fingerprints(df, id_col, text_col, k=k, w=w)
     # boilerplate guard: drop corpus-viral fingerprints pre-join
     capped = cap_group_size(fps, ["fp"], max_docs_per_fp)
     a = capped.select(F.col(id_col).alias("id_a"), "fp")
@@ -148,8 +130,7 @@ def shared_substring_pairs(
         .groupBy("id_a", "id_b")
         .agg(
             F.count("*").alias("n_shared_fp"),
-            F.substring(
-                F.min("fp"), 33 if portable else 21, 10_000
-            ).alias("sample_gram"),
+            # the 32 hex digits of md5 prefix every key
+            F.substring(F.min("fp"), 33, 10_000).alias("sample_gram"),
         )
     )

@@ -2,9 +2,7 @@
 line dedup, and sequence packing.
 
 The driver-checkable surface of :mod:`operators.repetition`,
-:mod:`operators.linededup` and :mod:`operators.packing` (chunk mode —
-the greedy mode is sequential-by-design and property-tested in
-``tests/test_packing.py`` instead).
+:mod:`operators.linededup` and :mod:`operators.packing`.
 
 The fixture corpus has no physical newlines, so "lines" are
 deterministic fixed-width token chunks (``chunk_lines``) — the SQL

@@ -219,9 +219,9 @@ NGRAM_THRESHOLD = 0.7
 
 
 #: char-4-grams of same-vocabulary docs run J≈0.35-0.45 between
-#: UNRELATED pairs (measured once via estimate_noise_jaccard on the
-#: documents fixture, p95 ≈ 0.45; pinned in tests/test_dedup.py) — the
-#: corpus-physics input the adaptive band sizing needs.
+#: UNRELATED pairs: a measured corpus constant (p95 of exact pairwise
+#: Jaccard over a 256-document sample of the documents fixture ≈ 0.45)
+#: — the corpus-physics input the adaptive band sizing needs.
 NGRAM_J_NOISE = 0.45
 
 

@@ -336,10 +336,10 @@ def warc_ingest_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     source's documents are packed into a deterministic in-memory WARC
     file (one HTTP response record per document, doc_id-ordered), the
     file goes through the REAL parser (`operators/webarchive.py` —
-    the same mapInPandas explosion `read_warc` runs on binaryFile
-    scans), and per-source record counts / payload bytes / distinct
-    payload digests / HTTP-status accounting must reproduce what
-    DuckDB computes from the documents table directly."""
+    the same `warc_records` mapInPandas explosion the WARC stream
+    runs on binaryFile scans), and per-source record counts / payload
+    bytes / distinct payload digests / HTTP-status accounting must
+    reproduce what DuckDB computes from the documents table directly."""
     import hashlib
 
     import pandas as pd

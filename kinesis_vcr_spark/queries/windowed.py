@@ -17,9 +17,7 @@ Scale posture:
 - ``order_value_deciles`` ranks via ``operators/quantiles.exact_ntile``
   — adaptive between a plain window (small inputs, one cheap sort) and
   a fully distributed static-log-block rank with an O(blocks) offset
-  prefix-sum (large inputs) — exact NTILE semantics on both paths; the
-  approximate sketch-boundary variant lives in the same module for
-  boundary-only products.
+  prefix-sum (large inputs) — exact NTILE semantics on both paths.
 - the views-before-purchase join is an equi-join on ``user_id`` with a
   range residual — shuffles both sides once on the key; the range
   predicate filters inside the joined partition (no cross join, no
@@ -94,9 +92,7 @@ def order_value_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     cheapest), switching to the fully distributed static-log-block +
     offset-prefix-sum rank above ~4M rows, value-identical on both
     paths. r01-r03 used an unconditional global window (the one
-    non-distributed plan left in the registry by r03's verdict);
-    ``assign_quantile_buckets`` in the same module remains the
-    sketch-based approximate variant for boundary-only products."""
+    non-distributed plan left in the registry by r03's verdict)."""
     from kinesis_vcr_spark.operators.quantiles import exact_ntile
 
     od = load_table(spark, sf_dir, "orders")

@@ -5,9 +5,9 @@ WARC got its streaming loop in r11 (streaming/warcstream.py); this is
 the tar-shard twin, so a landing directory of WebDataset shards rides
 the same ingest discipline as every other loop in the family. Each
 micro-batch of ``binaryFile`` shard rows ``(path, content)`` is
-exploded into samples (operators/webarchive.py:tar_samples — the batch
-operator, E100), each sample's media part is decoded through the SAME
-in-repo codecs the batch feature path uses
+exploded into samples (members read by
+operators/webarchive.py:tar_members, E100), each sample's media part
+is decoded through the SAME in-repo codecs the batch feature path uses
 (operators/multimodal.py:real_decode under the shared
 MALFORMED_ERRORS quarantine contract), and every sample is routed:
 
@@ -109,10 +109,10 @@ def tar_sample_verdicts(files: DataFrame, decoder=real_decode) -> DataFrame:
     construction — decoding is per-sample, no cross-batch state).
 
     One mapInPandas stage per shard file: tar member walk
-    (:func:`tar_members` — the same reader tar_samples uses), sample
-    grouping by the WebDataset key convention, media-part probe in
-    :data:`EXT_KINDS` order, decode through ``decoder`` under the
-    :data:`MALFORMED_ERRORS` quarantine contract. Output =
+    (:func:`tar_members`), sample grouping by the WebDataset key
+    convention, media-part probe in :data:`EXT_KINDS` order, decode
+    through ``decoder`` under the :data:`MALFORMED_ERRORS` quarantine
+    contract. Output =
     :data:`VERDICT_SCHEMA` rows, one per sample.
     """
     import pandas as pd  # noqa: PLC0415

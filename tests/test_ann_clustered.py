@@ -353,107 +353,3 @@ def test_manifold_pq_rerank_equals_ivf_manifold(spark):
     }
     b = {tuple(r) for r in similarity_ivf_manifold(spark, sf).collect()}
     assert a == b
-
-
-# ---------------------------------------------------------------------------
-# multi-probe ring (r13, VERDICT r12 item 2)
-# ---------------------------------------------------------------------------
-
-
-def test_probe_ring_includes_tied_centroids(spark):
-    """probe_centroids with ring_margin: a query equidistant from two
-    centroids probes BOTH even at nprobe=1; a query far from any
-    boundary stays at exactly nprobe probes (the ring is adaptive,
-    not a blanket nprobe bump)."""
-    from kinesis_vcr_spark.operators.ivf import probe_centroids
-    from pyspark.sql import Row
-
-    c0 = np.zeros(DIM); c0[0] = 1.0
-    c1 = np.zeros(DIM); c1[1] = 1.0
-    c2 = np.zeros(DIM); c2[2] = 1.0
-    centroids = np.stack([c0, c1, c2])
-    between = _unit(c0 + c1)          # cos = 0.707 to BOTH c0 and c1
-    near0 = _unit(c0 + 0.05 * c2)     # clearly c0's
-    df = spark.createDataFrame([
-        Row(query_id=0, embedding=[float(x) for x in between]),
-        Row(query_id=1, embedding=[float(x) for x in near0]),
-    ])
-    got = {
-        r["query_id"]: list(r["p"])
-        for r in df.select(
-            "query_id",
-            probe_centroids(F.col("embedding"), centroids, 1,
-                            ring_margin=0.05).alias("p"),
-        ).collect()
-    }
-    assert set(got[0]) == {0, 1}   # straddle: both tied lists probed
-    assert len(got[1]) == 1 and got[1][0] == 0  # no boundary: nprobe=1
-    # margin 0 reproduces the fixed-nprobe cut exactly
-    got0 = {
-        r["query_id"]: list(r["p"])
-        for r in df.select(
-            "query_id",
-            probe_centroids(F.col("embedding"), centroids, 1).alias("p"),
-        ).collect()
-    }
-    assert all(len(v) == 1 for v in got0.values())
-
-
-def test_ivfpq_ring_recovers_straddled_cluster(spark):
-    """The r12 residual, reproduced deterministically: a tight cluster
-    whose members split across two inverted lists (the query sits on
-    the boundary). Fixed nprobe=1 can only return the probed list's
-    half (strict recall@5 = 2/5 here); the ring probes the tied twin
-    list and the exact re-rank restores recall to 1.0."""
-    from pyspark.sql import Row
-
-    from kinesis_vcr_spark.operators.ivfpq import (
-        ivfpq_encode_table,
-        ivfpq_topk,
-    )
-    from kinesis_vcr_spark.operators.pq import train_pq
-
-    rng = np.random.default_rng(11)
-    c0 = np.zeros(DIM); c0[0] = 1.0
-    c1 = np.zeros(DIM); c1[1] = 1.0
-    c2 = np.zeros(DIM); c2[2] = 1.0
-    centroids = np.stack([c0, c1, c2])
-    mid = _unit(c0 + c1)
-    rows = []
-    # 6 cluster members alternating JUST to either side of the boundary
-    for i in range(6):
-        side = c0 if i % 2 == 0 else c1
-        v = _unit(mid + 0.02 * side + rng.normal(0, 0.004, DIM))
-        rows.append(Row(vec_id=i, embedding=[float(x) for x in v]))
-    # distractors owned by c2
-    for i in range(6, 30):
-        v = _unit(c2 + rng.normal(0, 0.05, DIM))
-        rows.append(Row(vec_id=i, embedding=[float(x) for x in v]))
-    df = spark.createDataFrame(rows).coalesce(2).cache()
-    codebook = train_pq(df, m=32, ksub=16, refine_iterations=1)
-    codes = ivfpq_encode_table(df, centroids, codebook).cache()
-    # the straddle is real: the cluster occupies both lists
-    assigned = {
-        r["vec_id"]: r["cid"] for r in codes.where("vec_id < 6").collect()
-    }
-    assert set(assigned.values()) == {0, 1}, assigned
-    probe = df.where("vec_id = 0").select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    expect = {1, 2, 3, 4, 5}  # the 5 cluster mates
-
-    def got(**kw):
-        return {
-            r["vec_id"]
-            for r in ivfpq_topk(
-                codes, centroids, codebook, probe, k=5, nprobe=1,
-                rerank_vectors=df, shortlist=20, exclude_self=True, **kw
-            ).collect()
-        }
-
-    fixed = got()
-    ring = got(ring_margin=0.05)
-    assert fixed != expect          # the fixed cut drops the twin half
-    assert len(fixed & expect) < 5
-    assert ring == expect           # the ring restores strict recall 1.0
-    df.unpersist(); codes.unpersist()

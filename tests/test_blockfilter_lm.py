@@ -8,7 +8,7 @@ import math
 import pytest
 from pyspark.sql import Row
 
-from kinesis_vcr_spark.operators.blockfilter import filter_clean, flag_blocked
+from kinesis_vcr_spark.operators.blockfilter import flag_blocked
 from kinesis_vcr_spark.operators.lmscore import (
     MICRO,
     score_documents_lm,
@@ -53,16 +53,6 @@ def test_domain_matching_case_insensitive(spark):
     assert not v[1].blocked
     assert v[2].blocked
     assert not v[3].blocked
-
-
-def test_filter_clean_keeps_survivors(spark):
-    df = _docs(spark, [
-        (0, "fine"), (1, "has spamword"), (2, "see https://evil.test/a"),
-    ])
-    kept = filter_clean(
-        df, spark, bad_terms=["spamword"], bad_domains=["evil.test"]
-    )
-    assert {r.doc_id for r in kept.collect()} == {0}
 
 
 def test_empty_denylists_block_nothing(spark):
@@ -235,8 +225,7 @@ def test_bigram_nll_hand_computed(spark):
 
 def test_bigram_score_totals(spark):
     """Self-scoring joins are total: n_tokens equals the token count of
-    each doc, totals are the exact sum of table entries, and the
-    shuffle-join path (broadcast_lm=False) is value-identical."""
+    each doc and totals are the exact sum of table entries."""
     from kinesis_vcr_spark.operators.lmscore import (
         bigram_nll_table, bigram_pairs, score_documents_bigram,
     )
@@ -254,9 +243,8 @@ def test_bigram_score_totals(spark):
         n, t = want.get(doc_id, (0, 0))
         want[doc_id] = (n + 1, t + table[(prev, token)])
 
-    for bc in (True, False):
-        got = {
-            r.doc_id: (r.n_tokens, r.nll_micro_total)
-            for r in score_documents_bigram(df, broadcast_lm=bc).collect()
-        }
-        assert got == want, f"broadcast_lm={bc}"
+    got = {
+        r.doc_id: (r.n_tokens, r.nll_micro_total)
+        for r in score_documents_bigram(df).collect()
+    }
+    assert got == want

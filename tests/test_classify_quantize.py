@@ -12,7 +12,6 @@ from kinesis_vcr_spark.operators.quantize import (
     LEVELS,
     embedding_ranges,
     quantize_elements,
-    quantize_vectors,
 )
 
 # ---------------------------------------------------------------------------
@@ -96,17 +95,6 @@ def test_ranges_and_codes(spark):
     assert all(
         r["abs_err"] <= step0 / 2 + 1e-12 for r in qel if r["pos"] == 0
     )
-
-
-def test_quantize_vectors_roundtrip_error_bounded(spark):
-    df = _emb_df(spark)
-    rows = [(r["pos"], r["vmin"], r["vmax"]) for r in embedding_ranges(df).collect()]
-    out = quantize_vectors(df, rows).collect()
-    by_id = {r["vec_id"]: r["codes"] for r in out}
-    assert by_id[1] == [0, 0]
-    assert by_id[3] == [255, 255]
-    # all codes in range
-    assert all(0 <= c <= 255 for codes in by_id.values() for c in codes)
 
 
 def test_constant_dimension_codes_zero(spark):

@@ -8,7 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from kinesis_vcr_spark.operators.linededup import dedup_lines
-from kinesis_vcr_spark.operators.packing import bin_stats, pack_chunk, pack_greedy
+from kinesis_vcr_spark.operators.packing import bin_stats, pack_chunk
 from kinesis_vcr_spark.operators.repetition import chunk_lines, repetition_signals
 
 
@@ -111,19 +111,6 @@ def test_dedup_lines_below_threshold_untouched(spark):
 # ---------------------------------------------------------------------------
 
 
-def _greedy_reference(sizes: list[tuple[int, int]], capacity: int):
-    """(id, n) pairs in id order → {id: bin} first-fit-sequential."""
-    bins, fill, cur = {}, 0, 0
-    for i, n in sorted(sizes):
-        if fill > 0 and fill + n > capacity:
-            cur, fill = cur + 1, 0
-        bins[i] = cur
-        fill += n
-        if fill >= capacity:
-            cur, fill = cur + 1, 0
-    return bins
-
-
 def test_pack_chunk_straddles_at_exact_offsets(spark):
     # one stream; sizes 100,100,100 with capacity 256 → starts 0,100,200
     # → bins 0,0,0; fourth doc starts at 300 → bin 1.
@@ -133,36 +120,6 @@ def test_pack_chunk_straddles_at_exact_offsets(spark):
     packed = pack_chunk(df, "doc_id", "n_tok", 256, num_streams=1)
     got = {r["doc_id"]: (r["start_tok"], r["bin_id"]) for r in packed.collect()}
     assert got == {0: (0, 0), 8: (100, 0), 16: (200, 0), 24: (300, 1)}
-
-
-def test_pack_greedy_matches_reference_and_respects_capacity(spark):
-    rows = [(i, (i * 37) % 120 + 1) for i in range(200)]
-    df = spark.createDataFrame(rows, ["doc_id", "n_tok"])
-    packed = pack_greedy(df, "doc_id", "n_tok", 128, num_streams=4).toPandas()
-    # per-stream reference comparison
-    for s, grp in packed.groupby("stream"):
-        sizes = [(i, n) for i, n in rows if i % 4 == s]
-        ref = _greedy_reference(sizes, 128)
-        got = dict(zip(grp["doc_id"], grp["bin_id"]))
-        assert got == ref
-    # no bin overfilled except by a single oversized doc
-    fills = packed.groupby(["stream", "bin_id"]).agg(
-        tot=("n_tokens", "sum"), n=("doc_id", "count")
-    )
-    over = fills[fills["tot"] > 128]
-    assert (over["n"] == 1).all()
-
-
-def test_pack_greedy_oversized_doc_gets_own_bin(spark):
-    df = spark.createDataFrame(
-        [(0, 10), (1, 500), (2, 10)], ["doc_id", "n_tok"]
-    )
-    packed = pack_greedy(df, "doc_id", "n_tok", 128, num_streams=1).toPandas()
-    by_id = dict(zip(packed["doc_id"], packed["bin_id"]))
-    assert by_id[1] not in (by_id[0], by_id[2])
-    assert by_id[0] != by_id[2] or by_id[0] == by_id[2]  # structural sanity
-    # the oversized doc shares its bin with nobody
-    assert (packed["bin_id"] == by_id[1]).sum() == 1
 
 
 def test_bin_stats_totals(spark):

@@ -174,20 +174,6 @@ def test_adaptive_bands_validation():
         adaptive_minhash_bands(1000, j_noise=0.45, target_recall=1.0)
 
 
-def test_noise_jaccard_estimate_on_fixture(spark, sf_dir):
-    """The measured char-4-gram noise level on the documents fixture
-    must sit in the documented 0.3-0.55 band (NGRAM_J_NOISE = 0.45),
-    and the estimator must be deterministic."""
-    from kinesis_vcr_spark.operators.dedup import estimate_noise_jaccard
-    from kinesis_vcr_spark.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    j1 = estimate_noise_jaccard(docs, "doc_id", "text", 4, char_ngrams=True)
-    j2 = estimate_noise_jaccard(docs, "doc_id", "text", 4, char_ngrams=True)
-    assert j1 == j2
-    assert 0.30 <= j1 <= 0.55, j1
-
-
 def test_dedup_exact_null_and_empty_keys_stay_distinct(spark):
     """content_key is null-safe: a NULL key and an empty-string key are
     different groups (concat_ws alone would merge them)."""

@@ -277,79 +277,3 @@ def test_bucketed_probe_smj_reads_stored_in_place(spark, sf_dir):
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
         spark.conf.set("spark.sql.shuffle.partitions", parts_before)
-
-
-def test_bucketed_compaction_restores_sorted_layout(spark, sf_dir):
-    """Appends add a file per bucket: clustering survives but the scan
-    stops exposing sortBy order, so SMJ probes re-sort the stored side.
-    compact_near_dup_index_bucketed restores one sorted file per bucket:
-    pair results identical, stored-side Sorts gone."""
-    from kinesis_vcr_spark.operators.dedup_index import (
-        build_near_dup_index_bucketed,
-        compact_near_dup_index_bucketed,
-        near_dup_against_bucketed_index,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    base = docs.where(F.col("doc_id") % 4 == 1)
-    extra = docs.where(F.col("doc_id") % 4 == 2)
-    new = docs.where(F.col("doc_id") % 4 == 0)
-    build_near_dup_index_bucketed(
-        base, "ndidx_compact_t", "doc_id", "text",
-        shingle_size=5, num_hashes=64, bands=16,
-    )
-    build_near_dup_index_bucketed(
-        extra, "ndidx_compact_t", "doc_id", "text",
-        shingle_size=5, num_hashes=64, bands=16, append=True,
-    )
-
-    def probe_plan_and_rows():
-        q = near_dup_against_bucketed_index(
-            new, spark, "ndidx_compact_t", "doc_id", "text",
-            threshold=THRESHOLD,
-        )
-        plan = q._jdf.queryExecution().executedPlan().toString()
-        return plan, sorted((r.id_a, r.id_b) for r in q.collect())
-
-    def stored_sorts(plan):
-        lines = plan.splitlines()
-        n = 0
-        for i, line in enumerate(lines):
-            if "FileScan" in line and "ndidx_compact_t_" in line:
-                ctx = "\n".join(lines[max(0, i - 2) : i])
-                assert "Exchange hashpartitioning" not in ctx, ctx
-                n += ctx.count("Sort [")
-        return n
-
-    def files_per_table(suffix):
-        import glob
-
-        loc = (
-            spark.sql(f"DESCRIBE FORMATTED ndidx_compact_t{suffix}")
-            .where(F.col("col_name") == "Location")
-            .collect()[0]["data_type"]
-        ).removeprefix("file:")
-        return len(glob.glob(f"{loc}/*.parquet"))
-
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    # opt into sorted bucketed scans (plan-time file listing) so the
-    # Sort-elision payoff of the compacted layout is observable
-    spark.conf.set(
-        "spark.sql.legacy.bucketedTableScan.outputOrdering", "true"
-    )
-    try:
-        assert files_per_table("_bands") > 32  # appends multiplied files
-        before_plan, before_rows = probe_plan_and_rows()
-        # multi-file buckets cannot expose sort order -> stored re-sorts
-        assert stored_sorts(before_plan) > 0
-        compact_near_dup_index_bucketed(spark, "ndidx_compact_t")
-        assert files_per_table("_bands") == 32  # one file per bucket
-        assert files_per_table("_shingles") == 32
-        after_plan, after_rows = probe_plan_and_rows()
-        assert stored_sorts(after_plan) == 0, after_plan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-        spark.conf.set(
-            "spark.sql.legacy.bucketedTableScan.outputOrdering", "false"
-        )
-    assert after_rows == before_rows and len(after_rows) > 0

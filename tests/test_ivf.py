@@ -122,44 +122,3 @@ def test_append_ivf_index_matches_rebuild(spark, tmp_path):
     persisted = ivf_topk_indexed(index, probes, k=5, nprobe=3)
     assert sorted(map(tuple, live.collect()), key=lambda t: (t[0], t[3])) == \
         sorted(map(tuple, persisted.collect()), key=lambda t: (t[0], t[3]))
-
-
-def test_list_balance_monitor(spark, tmp_path):
-    """ivf_list_balance closes the append contract's 'monitor and
-    rebuild' loop: balanced index → no retrain; a pile-up of appends
-    into one list → needs_retrain flips, and the reported sizes are
-    the exact per-cid counts."""
-    from pyspark.sql import Row
-
-    from kinesis_vcr_spark.operators.ivf import (
-        append_ivf_index,
-        build_ivf_index,
-        ivf_list_balance,
-    )
-
-    emb = load_table(spark, "/root/testdata/sf0.01", "embeddings").select(
-        "vec_id", "embedding"
-    )
-    path = str(tmp_path / "ivf")
-    build_ivf_index(emb, path, k_centroids=8)
-    report = ivf_list_balance(spark, path)
-    assert report["k_centroids"] == 8
-    assert report["n_vectors"] == emb.count()
-    assert sum(report["list_sizes"]) == report["n_vectors"]
-    assert report["skew"] >= 1.0
-
-    # slam 5x the corpus into a single list: near-duplicates of one
-    # stored vector all assign to the same frozen centroid
-    seed = emb.limit(1).collect()[0]["embedding"]
-    n_extra = emb.count() * 5
-    pile = spark.createDataFrame(
-        [
-            Row(vec_id=10_000_000 + i, embedding=[float(x) for x in seed])
-            for i in range(n_extra)
-        ]
-    )
-    append_ivf_index(pile, path, ingest_label="pile")
-    report2 = ivf_list_balance(spark, path)
-    assert report2["n_vectors"] == report["n_vectors"] + n_extra
-    assert report2["needs_retrain"] is True
-    assert report2["largest_list"] >= n_extra

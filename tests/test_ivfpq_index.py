@@ -1,7 +1,6 @@
-"""Persisted IVF-PQ index (operators/ivfpq.py build/append/load/
-compact): probe parity with the in-memory operator, frozen-artifact
-append parity, labeled-replay idempotence, compaction invariance, and
-the partition-pruning plan pin."""
+"""IVF-PQ probes (operators/ivfpq.py) over a codes table stored
+partitioned by list id: the partition-pruning plan pin and the exact
+re-rank contract."""
 
 from __future__ import annotations
 
@@ -10,15 +9,7 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from kinesis_vcr_spark.operators.ivfpq import (
-    append_ivfpq_index,
-    build_ivfpq,
-    build_ivfpq_index,
-    compact_ivfpq_index,
-    ivfpq_topk,
-    ivfpq_topk_indexed,
-    load_ivfpq_index,
-)
+from kinesis_vcr_spark.operators.ivfpq import build_ivfpq, ivfpq_topk
 
 DIM = 32
 
@@ -56,90 +47,21 @@ def _probes(df, n=5):
     )
 
 
-def _pairs(res):
-    return {(r["query_id"], r["vec_id"], r["adc_sim"]) for r in res.collect()}
-
-
-def test_build_load_probe_matches_inmemory(spark, corpus, tmp_path):
-    path = str(tmp_path / "idx")
-    build_ivfpq_index(corpus, path, k_centroids=8, m=8, ksub=16)
-    centroids, codebook, lists = load_ivfpq_index(spark, path)
-    # the artifact round-trips the training exactly
-    c2, cb2, codes2 = build_ivfpq(corpus, k_centroids=8, m=8, ksub=16)
-    np.testing.assert_array_equal(centroids, c2)
-    np.testing.assert_array_equal(codebook, cb2)
-    got = _pairs(
-        ivfpq_topk_indexed((centroids, codebook, lists), _probes(corpus),
-                           k=5, nprobe=3)
-    )
-    want = _pairs(
-        ivfpq_topk(codes2, c2, cb2, _probes(corpus), k=5, nprobe=3)
-    )
-    assert got == want
-
-
-def test_append_frozen_parity_and_replay(spark, corpus, tmp_path):
-    """Probe over build(old) + append(new) == probe over a full
-    re-encode of old ∪ new with the SAME frozen artifacts (encoding is
-    a pure function of centroids+codebook+vector); a replayed labeled
-    append overwrites only itself (idempotent)."""
-    path = str(tmp_path / "idx")
-    old = corpus.where(F.col("vec_id") < 64)
-    new = spark.createDataFrame(_vectors(24, seed=11, start_id=1000))
-    build_ivfpq_index(old, path, k_centroids=8, m=8, ksub=16)
-    append_ivfpq_index(new, path, ingest_label="b1")
-    append_ivfpq_index(new, path, ingest_label="b1")  # replay — no dup
-    centroids, codebook, lists = load_ivfpq_index(spark, path)
-    assert lists.count() == 64 + 24  # replay did not double
-    got = _pairs(
-        ivfpq_topk_indexed((centroids, codebook, lists),
-                           _probes(corpus), k=5, nprobe=3)
-    )
-    from kinesis_vcr_spark.operators.ivfpq import ivfpq_encode_table
-
-    full = ivfpq_encode_table(old.unionByName(new), centroids, codebook)
-    want = _pairs(
-        ivfpq_topk(full, centroids, codebook, _probes(corpus), k=5, nprobe=3)
-    )
-    assert got == want
-
-
-def test_compaction_preserves_probe(spark, corpus, tmp_path):
-    path = str(tmp_path / "idx")
-    old = corpus.where(F.col("vec_id") < 64)
-    build_ivfpq_index(old, path, k_centroids=8, m=8, ksub=16)
-    append_ivfpq_index(
-        spark.createDataFrame(_vectors(16, seed=13, start_id=2000)),
-        path, ingest_label="b1",
-    )
-    before = _pairs(
-        ivfpq_topk_indexed(load_ivfpq_index(spark, path),
-                           _probes(corpus), k=5, nprobe=3)
-    )
-    compact_ivfpq_index(spark, path)
-    after_idx = load_ivfpq_index(spark, path)
-    assert _pairs(
-        ivfpq_topk_indexed(after_idx, _probes(corpus), k=5, nprobe=3)
-    ) == before
-    # compaction actually collapsed the scopes
-    import os
-
-    scopes = [
-        d for d in os.listdir(os.path.join(str(tmp_path), "idx", "lists"))
-        if d.startswith("ingest=")
-    ]
-    assert len(scopes) == 1
+def _stored(spark, corpus, path):
+    """(centroids, codebook, codes read back from parquet partitioned
+    by ``cid``)."""
+    centroids, codebook, codes = build_ivfpq(corpus, k_centroids=8, m=8, ksub=16)
+    codes.write.partitionBy("cid").parquet(path)
+    return centroids, codebook, spark.read.parquet(path)
 
 
 def test_probe_prunes_to_probed_partitions(spark, corpus, tmp_path):
     """The cid isin(probed) filter must reach the scan as a partition
     filter — the probe reads nprobe/k_centroids of the files, which is
     the IVF half of the index's 100 TB story."""
-    path = str(tmp_path / "idx")
-    build_ivfpq_index(corpus, path, k_centroids=8, m=8, ksub=16)
-    centroids, codebook, lists = load_ivfpq_index(spark, path)
-    res = ivfpq_topk_indexed((centroids, codebook, lists),
-                             _probes(corpus, n=1), k=5, nprobe=2)
+    centroids, codebook, lists = _stored(spark, corpus, str(tmp_path / "idx"))
+    res = ivfpq_topk(lists, centroids, codebook, _probes(corpus, n=1),
+                     k=5, nprobe=2)
     plan = res._jdf.queryExecution().executedPlan().toString()
     pf_lines = [
         ln for ln in plan.splitlines() if "PartitionFilters" in ln
@@ -150,19 +72,18 @@ def test_probe_prunes_to_probed_partitions(spark, corpus, tmp_path):
     assert any("PartitionFilters: [ci" in ln for ln in pf_lines), pf_lines
 
 
-def test_indexed_rerank_equals_exact_within_probed_lists(spark, corpus, tmp_path):
-    """r12: the persisted-index probe with rerank_vectors= must return
+def test_stored_rerank_equals_exact_within_probed_lists(spark, corpus, tmp_path):
+    """A probe with rerank_vectors= over the stored codes must return
     the exact-cosine ordering of its shortlist — equal to cosine_topk
     restricted to the probed lists' members when the shortlist covers
     them (here: shortlist = corpus size, nprobe = all lists)."""
     from kinesis_vcr_spark.operators.similarity import cosine_topk
 
-    path = str(tmp_path / "idx_rr")
-    build_ivfpq_index(corpus, path, k_centroids=8, m=8, ksub=16)
+    centroids, codebook, lists = _stored(spark, corpus, str(tmp_path / "idx_rr"))
     got = {
         (r["query_id"], r["vec_id"], r["cosine"], r["rank"])
-        for r in ivfpq_topk_indexed(
-            load_ivfpq_index(spark, path), _probes(corpus),
+        for r in ivfpq_topk(
+            lists, centroids, codebook, _probes(corpus),
             k=5, nprobe=8, rerank_vectors=corpus, shortlist=96,
             exclude_self=True,
         ).collect()

@@ -1,4 +1,4 @@
-"""operators/kanon.py — k-anonymity / l-diversity profiling + suppression."""
+"""operators/kanon.py — k-anonymity profiling and generalization."""
 
 from __future__ import annotations
 
@@ -11,8 +11,6 @@ from kinesis_vcr_spark.operators.kanon import (
     generalize_numeric,
     group_sizes,
     k_anonymity_profile,
-    l_diversity_profile,
-    suppress_below_k,
 )
 
 
@@ -54,24 +52,6 @@ def test_k_anonymity_profile_manual(people):
     assert prof[3]["rows_below"] == 3 and prof[3]["groups_below"] == 2
     assert prof[5]["rows_below"] == 10 and prof[5]["groups_below"] == 4
     assert prof[3]["pct_rows_below"] == pytest.approx(0.3)
-
-
-def test_suppression_makes_table_k_anonymous(people):
-    kept = suppress_below_k(people, QI, k=2)
-    sizes = [r["group_size"] for r in group_sizes(kept, QI).collect()]
-    assert sizes and min(sizes) >= 2
-    assert kept.count() == 9  # only the singleton dropped
-    prof = {r["k"]: r for r in k_anonymity_profile(kept, QI, ks=(2,)).collect()}
-    assert prof[2]["rows_below"] == 0
-
-
-def test_l_diversity_profile(people):
-    prof = {r["l"]: r for r in l_diversity_profile(people, QI, "disease", ls=(2, 3)).collect()}
-    # diversities: (10001,20)=2, (10001,30)=1, (10002,20)=1, (10003,40)=3
-    assert prof[2]["rows_below"] == 3          # the two diversity-1 groups
-    assert prof[3]["rows_below"] == 3 + 3      # + the diversity-2 group of 3
-    assert prof[2]["min_diversity"] == 1
-    assert prof[2]["pct_rows_below"] == pytest.approx(0.3)
 
 
 def test_generalization_merges_groups(spark):

@@ -7,7 +7,6 @@ import pyspark.sql.functions as F
 import pytest
 
 from kinesis_vcr_spark.operators.decontam import (
-    decontaminate,
     ngram_contamination,
 )
 from kinesis_vcr_spark.operators.sampling import (
@@ -127,12 +126,6 @@ def test_ngram_contamination_flags_overlap(corpus, bench):
     assert rep[3].n_hits >= 1 and rep[3].contaminated
     assert rep[2].n_hits == 0 and not rep[2].contaminated
     assert 0 < rep[1].hit_frac <= 1.0
-
-
-def test_decontaminate_drops_flagged(corpus, bench):
-    clean = decontaminate(corpus, bench, "doc_id", "text", n=3)
-    assert {r.doc_id for r in clean.collect()} == {2}
-    assert clean.columns == corpus.columns  # schema preserved
 
 
 def test_decontamination_short_doc_whole_text_gram(spark, bench):

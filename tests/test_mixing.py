@@ -5,7 +5,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import Row
 
-from kinesis_vcr_spark.operators.mixing import expected_rows, weighted_mix
+from kinesis_vcr_spark.operators.mixing import weighted_mix
 
 
 def _corpus(spark, n=1200, n_sources=4):
@@ -38,8 +38,7 @@ def test_fractional_weight_close_to_expectation(spark):
     # 300 docs/source: expectations 750 / 75; hash-uniform within ~20%
     assert abs(counts["s0"] - 750) < 150
     assert abs(counts["s1"] - 75) < 40
-    exp = expected_rows({"s0": 300, "s1": 300, "s2": 300, "s3": 300},
-                        {"s0": 2.5, "s1": 0.25})
+    exp = 300 * 2.5 + 300 * 0.25 + 300 + 300  # s2, s3 at weight 1
     assert abs(mixed.count() - exp) < 200
 
 

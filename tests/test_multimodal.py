@@ -102,26 +102,6 @@ def test_sample_frames_geometry(spark):
     assert rows[(2, 4)]["frame"] == b"y" * 32
 
 
-def test_resize_media_schema_roundtrip(spark):
-    from kinesis_vcr_spark.operators.multimodal import (
-        resize_media,
-        sample_frames,
-    )
-
-    media = spark.createDataFrame(
-        [(1, "image", b"abc", {"k": "v"}), (2, "image", None, None)],
-        "media_id long, kind string, payload binary, meta map<string,string>",
-    )
-    out = resize_media(media, 4, 4)
-    rows = {r["media_id"]: r for r in out.collect()}
-    assert bytes(rows[1]["payload"]) == (b"abc" * 6)[:16]
-    assert rows[1]["meta"]["resized"] == "4x4"
-    assert rows[1]["meta"]["k"] == "v"
-    assert bytes(rows[2]["payload"]) == b"\x00" * 16
-    # output schema round-trips into other media operators
-    assert sample_frames(out, every_n=1).count() == 2
-
-
 def _ppm_bytes(w, h, pixel_fn):
     """Hand-rolled P6 PPM: pixel_fn(x, y) -> (r, g, b)."""
     body = bytearray()
@@ -196,21 +176,6 @@ def test_real_wav_decode():
     assert (got["width"], got["height"]) == (4, 1)  # frames, channels
     expected = (0 + 16384 + 16384 + 32767) / 4 / 32768.0
     assert abs(got["mean_value"] - expected) < 1e-12
-
-
-def test_real_ppm_resize_roundtrip():
-    from kinesis_vcr_spark.operators.multimodal import decode_image, ppm_resize
-
-    # left half red, right half blue; nearest-neighbor downscale keeps
-    # exactly one pixel of each
-    img = _ppm_bytes(
-        4, 2, lambda x, y: (255, 0, 0) if x < 2 else (0, 0, 255)
-    )
-    small = ppm_resize(img, 2, 1)
-    got = decode_image(small)
-    assert (got["width"], got["height"]) == (2, 1)
-    body = small.split(b"\n", 3)[3]
-    assert body == bytes((255, 0, 0, 0, 0, 255))
 
 
 def test_real_decoders_through_map_in_pandas(spark):
@@ -702,6 +667,30 @@ def test_corrupt_png_stream_is_malformed_and_quarantined(spark):
     ])
     assert got[1]["width"] == 8 and got[1]["height"] == 6
     assert got[2]["width"] is None and got[2]["mean_value"] is None
+
+
+def test_huge_interlaced_png_header_is_malformed(spark):
+    """A 69-byte Adam7 PNG that declares 2^30 x 2^30 RGB is rejected as
+    truncated before any canvas is allocated from the header, so it
+    nulls under on_error='null' instead of raising MemoryError."""
+    import struct
+    import zlib
+
+    def chunk(ctype, data):
+        return struct.pack(">I", len(data)) + ctype + data + struct.pack(
+            ">I", zlib.crc32(ctype + data) & 0xFFFFFFFF
+        )
+
+    ihdr = struct.pack(">IIBBBBB", 1 << 30, 1 << 30, 8, 2, 0, 0, 1)
+    png = (b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
+           + chunk(b"IDAT", zlib.compress(b"\x00" * 4)) + chunk(b"IEND", b""))
+    assert len(png) == 69
+    with pytest.raises(ValueError, match="truncated"):
+        decode_image(png)
+    got = _features_null(spark, [
+        Row(media_id=1, kind="image", payload=png, meta=None),
+    ])
+    assert got[1]["width"] is None and got[1]["mean_value"] is None
 
 
 def test_malformed_and_non_pcm_wav_are_quarantined(spark):

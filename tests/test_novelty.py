@@ -7,7 +7,6 @@ from pyspark.sql import functions as F
 
 from kinesis_vcr_spark.operators.novelty import (
     doc_ngram_novelty,
-    most_derivative_docs,
     ngram_first_seen,
     novelty_by_group,
     shingle_edges,
@@ -79,11 +78,6 @@ def test_group_rollup_sums_integers(corpus):
     assert g["srcB"]["novel_ngrams"] == 0 + 4 + 1
     assert g["srcB"]["total_ngrams"] == 7 + 4 + 1
     assert g["srcB"]["novelty"] == pytest.approx(round(5 / 12, 6))
-
-
-def test_most_derivative_docs_orders_low_first(corpus):
-    worst = most_derivative_docs(corpus, k=2, min_ngrams=2).collect()
-    assert [r["doc_id"] for r in worst] == [2, 1]  # dup first, then the 0.5
 
 
 def test_partition_invariance(corpus):

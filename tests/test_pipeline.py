@@ -12,7 +12,6 @@ from kinesis_vcr_spark.operators.pipeline import (
     STATUS_NEAR,
     STATUS_QUALITY,
     clean_corpus,
-    kept_corpus,
 )
 
 GOOD = (
@@ -59,16 +58,6 @@ def test_exact_dup_never_reaches_near_stage(spark):
     assert out.where(
         (F.col("doc_id") == 1) & (F.col("status") != STATUS_EXACT)
     ).count() == 0
-
-
-def test_kept_corpus_is_clean(spark):
-    kept = kept_corpus(_corpus(spark), quality_threshold=0.6)
-    ids = sorted(r["doc_id"] for r in kept.collect())
-    assert ids == [0, 4]
-    # no status column leaks into the production output
-    assert "status" not in kept.columns
-    # no duplicate texts survive
-    assert kept.count() == kept.select("text").distinct().count()
 
 
 def test_every_doc_gets_exactly_one_status(spark):

@@ -1,80 +1,11 @@
-"""Approximate quantile bucketing: boundary correctness, assignment
-monotonicity, and population balance vs exact NTILE."""
+"""Exact distributed rank and NTILE: value-identical to the window
+functions, with no single-partition sort."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
-
-from kinesis_vcr_spark.operators.quantiles import (
-    assign_quantile_buckets,
-    quantile_boundaries,
-)
-
-
-def test_boundaries_on_uniform_values(spark):
-    df = spark.range(1, 1001).select(F.col("id").cast("double").alias("v"))
-    bounds = quantile_boundaries(df, "v", num_buckets=4, accuracy=10_000)
-    assert len(bounds) == 3
-    # uniform 1..1000: quartile cuts near 250/500/750
-    for got, want in zip(bounds, (250, 500, 750)):
-        assert abs(got - want) <= 2
-
-
-def test_assignment_matches_exact_ntile_populations(spark):
-    df = spark.range(0, 2000).select(
-        (F.col("id") * 37 % 1999).cast("double").alias("v"), "id"
-    )
-    approx = assign_quantile_buckets(df, "v", num_buckets=10)
-    sizes = {
-        r["bucket"]: r["n"]
-        for r in approx.groupBy("bucket").agg(F.count("*").alias("n")).collect()
-    }
-    assert set(sizes) == set(range(1, 11))
-    # rank error 1/accuracy -> populations within a few rows of N/k
-    assert all(abs(n - 200) <= 5 for n in sizes.values())
-    # monotone: every value in bucket b is <= every value in bucket b+1
-    exact = df.withColumn(
-        "nt", F.ntile(10).over(Window.orderBy("v", "id"))
-    )
-    joined = (
-        assign_quantile_buckets(df, "v", num_buckets=10)
-        .join(exact.select("id", "nt"), "id")
-    )
-    # approx bucket never disagrees with exact ntile by more than 1
-    assert joined.where(
-        F.abs(F.col("bucket") - F.col("nt")) > 1
-    ).count() == 0
-
-
-def test_ties_stay_in_lower_bucket(spark):
-    df = spark.createDataFrame(
-        [(float(v),) for v in [1, 1, 1, 1, 2, 2, 2, 2]], "v double"
-    )
-    out = assign_quantile_buckets(df, "v", num_buckets=2)
-    got = {r["v"]: r["bucket"] for r in out.distinct().collect()}
-    assert got[1.0] == 1 and got[2.0] == 2
-
-
-def test_rejects_single_bucket(spark):
-    df = spark.range(5).select(F.col("id").cast("double").alias("v"))
-    with pytest.raises(ValueError):
-        quantile_boundaries(df, "v", num_buckets=1)
-
-
-def test_no_shuffle_of_data_rows(spark):
-    """The assignment stage must be a narrow projection: no Exchange in
-    the plan after the boundaries are folded in as literals."""
-    df = spark.range(0, 1000).select(F.col("id").cast("double").alias("v"))
-    out = assign_quantile_buckets(df, "v", num_buckets=10)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
-
-
-# ---------------------------------------------------------------------------
-# exact distributed NTILE (no single-partition sort)
-# ---------------------------------------------------------------------------
 
 
 def test_exact_global_rank_is_dense_and_ordered(spark):
@@ -83,7 +14,7 @@ def test_exact_global_rank_is_dense_and_ordered(spark):
     df = spark.range(0, 997).select(
         (F.col("id") * 7919 % 997).alias("v"), "id"
     )
-    ranked, total = exact_global_rank(df, ["v", "id"], num_partitions=7)
+    ranked, total = exact_global_rank(df, ["v", "id"])
     assert total == 997
     rows = ranked.orderBy("rank").collect()
     assert [r["rank"] for r in rows] == list(range(1, 998))
@@ -100,7 +31,7 @@ def test_exact_ntile_matches_window_ntile(spark, n, k):
     df = spark.range(0, n).select((F.col("id") * 37 % 1999).alias("v"), "id")
     # small_input_rows=0 forces the distributed path; the small path
     # IS the window function, so equivalence there is trivial
-    got = exact_ntile(df, ["v", "id"], k, num_partitions=5, small_input_rows=0)
+    got = exact_ntile(df, ["v", "id"], k, small_input_rows=0)
     want = df.withColumn("nt", F.ntile(k).over(Window.orderBy("v", "id")))
     diff = (
         got.join(want.select("id", "nt"), "id")

@@ -101,16 +101,6 @@ def test_interval_join_nanos_precision(spark):
     assert [(r.pid, r.iid) for r in out.collect()] == [(1, 7)]
 
 
-def test_interval_join_broadcast_same_result(pts, ivs):
-    plain = _pairs(interval_join(pts, ivs, "t", "s", "e", bucket_width=16))
-    bc = _pairs(
-        interval_join(
-            pts, ivs, "t", "s", "e", bucket_width=16, broadcast_intervals=True
-        )
-    )
-    assert bc == plain
-
-
 # ---------------------------------------------------------------------------
 # count-min sketch
 # ---------------------------------------------------------------------------
@@ -178,11 +168,8 @@ def test_interval_join_num_partitions_pins_parallelism(pts, ivs):
     """num_partitions is the explosive-output escape hatch: AQE sizes
     the join stage from INPUT bytes, so a dense domain can run a
     huge-output join on a handful of tasks (r05 sf1.0 finding). An
-    explicit count must (a) not change results, (b) plant
-    REPARTITION_BY_NUM exchanges AQE won't coalesce away, and (c) be
-    rejected on the broadcast path where it has no meaning."""
-    import pytest
-
+    explicit count must (a) not change results and (b) plant
+    REPARTITION_BY_NUM exchanges AQE won't coalesce away."""
     base = _pairs(interval_join(pts, ivs, "t", "s", "e", bucket_width=16))
     pinned = interval_join(
         pts, ivs, "t", "s", "e", bucket_width=16, num_partitions=8
@@ -190,9 +177,3 @@ def test_interval_join_num_partitions_pins_parallelism(pts, ivs):
     assert _pairs(pinned) == base
     plan = pinned._jdf.queryExecution().executedPlan().toString()
     assert "REPARTITION_BY_NUM" in plan
-
-    with pytest.raises(ValueError, match="num_partitions"):
-        interval_join(
-            pts, ivs, "t", "s", "e", bucket_width=16,
-            broadcast_intervals=True, num_partitions=8,
-        )

@@ -1,10 +1,15 @@
-"""Every engine module must be reachable from a shipped entry point.
+"""Every engine module and operator def must be reachable from a shipped
+entry point.
 
 Walks the static import graph (``ast``; imports inside functions count)
 from ``__spark_entry__.py``, the CLI, the bench and every registered query
 module. A ``kinesis_vcr_spark`` module that only ``tests/`` or ``tools/``
 import fails here: wire it into a query, the CLI or the bench, or delete
 it together with its tests.
+
+A module reached that way can still carry defs only tests call, so a
+second walk goes one level down: every top-level def and class under
+``operators/`` must be named by shipped code outside its own body.
 """
 
 from __future__ import annotations
@@ -45,6 +50,11 @@ def _path(name: str) -> Path | None:
     return None
 
 
+def _module_name(path: Path) -> str:
+    parts = path.relative_to(ROOT).with_suffix("").parts
+    return ".".join(parts).removesuffix(".__init__")
+
+
 def _imports(name: str) -> set[str]:
     # absolute imports only (the package uses no relative ones; one
     # would show up here as a false orphan, never hide a real one)
@@ -59,7 +69,7 @@ def _imports(name: str) -> set[str]:
     return mods | {m.rsplit(".", i)[0] for m in mods for i in range(1, m.count(".") + 1)}
 
 
-def test_every_engine_module_is_reachable():
+def _reached() -> set[str]:
     seen: set[str] = set()
     todo = list(ENTRIES)
     while todo:
@@ -67,10 +77,12 @@ def test_every_engine_module_is_reachable():
         if name not in seen:
             seen.add(name)
             todo += _imports(name) - seen
-    modules = {
-        ".".join(p.relative_to(ROOT).with_suffix("").parts).removesuffix(".__init__")
-        for p in (ROOT / PKG).rglob("*.py")
-    }
+    return seen
+
+
+def test_every_engine_module_is_reachable():
+    seen = _reached()
+    modules = {_module_name(p) for p in (ROOT / PKG).rglob("*.py")}
     orphans = sorted(modules - seen - EXEMPT)
     assert not orphans, f"reached only from tests/ or tools/: {orphans}"
 
@@ -79,3 +91,107 @@ def test_every_exemption_names_an_existing_module():
     # an exemption must not outlive its module
     stale = sorted(m for m in EXEMPT if _path(m) is None)
     assert not stale, f"EXEMPT lists missing modules: {stale}"
+
+
+# Operator defs that stay although no shipped path names them -> why.
+EXEMPT_DEFS = {
+    f"{PKG}.operators.compaction.compact_archive":
+        "the archive's small-file maintenance, run between record runs",
+    f"{PKG}.operators.compaction.plan_compaction":
+        "the archive's small-file maintenance, run between record runs",
+    f"{PKG}.operators.triangles.triangles":
+        "reference the streaming triangle loop is tested against",
+    f"{PKG}.operators.blockfilter.flag_blocked":
+        "reference its single-pass twin is tested against",
+    f"{PKG}.operators.pq.pq_decode":
+        "reference the quantization error is measured against",
+}
+
+
+def _refs(nodes: list[ast.AST], bind: dict[str, str], mod: str) -> set[str]:
+    """Qualified names that ``nodes`` mention through a ``Name``, an
+    ``Attribute`` chain or an import alias. Strings never count."""
+    out: set[str] = set()
+    for top in nodes:
+        for node in ast.walk(top):
+            if isinstance(node, ast.ImportFrom) and node.module:
+                out |= {f"{node.module}.{a.name}" for a in node.names}
+            elif isinstance(node, (ast.Name, ast.Attribute)):
+                chain = []
+                while isinstance(node, ast.Attribute):
+                    chain.append(node.attr)
+                    node = node.value
+                if isinstance(node, ast.Name):
+                    q = bind.get(node.id, f"{mod}.{node.id}")
+                    for attr in reversed(chain):
+                        out.add(q)
+                        q = f"{q}.{attr}"
+                    out.add(q)
+    return out
+
+
+def _scan(path: Path):
+    """(module, top-level defs → the names each body mentions, names
+    the module-level code mentions)."""
+    mod = _module_name(path)
+    tree = ast.parse(path.read_text())
+    bind: dict[str, str] = {}
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            for a in node.names:
+                # ``import a.b`` binds ``a``; ``import a.b as x`` binds a.b
+                target = a.name if a.asname else a.name.split(".")[0]
+                bind[a.asname or target] = target
+        elif isinstance(node, ast.ImportFrom) and node.module:
+            for a in node.names:
+                bind[a.asname or a.name] = f"{node.module}.{a.name}"
+    defs: dict[str, set[str]] = {}
+    top: list[ast.AST] = []
+    for node in tree.body:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            # decorators and class bases run at import, with the module
+            top += node.decorator_list + getattr(node, "bases", [])
+            body = [n for n in ast.iter_child_nodes(node)
+                    if n not in node.decorator_list + getattr(node, "bases", [])]
+            defs[f"{mod}.{node.name}"] = _refs(body, bind, mod)
+        else:
+            top.append(node)
+    return mod, defs, _refs(top, bind, mod)
+
+
+def _unreached_defs() -> list[str]:
+    """Operator defs that no shipped code names, closed transitively: a
+    def named only from unreached defs is itself unreached."""
+    shipped = [_path(m) for m in _reached() | EXEMPT if _path(m)]
+    bench = sorted((ROOT / "perfbench").glob("*.py"))
+    body: dict[str, set[str]] = {}
+    live: set[str] = set()
+    todo: list[str] = list(EXEMPT_DEFS)
+    for path in shipped + bench:
+        mod, defs, top = _scan(path)
+        body |= defs
+        todo += top
+        # the streaming surface, the entry points and the bench are
+        # called by the driver, tests and the command line, not by name
+        if mod in EXEMPT or mod == f"{PKG}.__main__" or not mod.startswith(PKG):
+            todo += defs
+    while todo:
+        name = todo.pop()
+        if name in body and name not in live:
+            live.add(name)
+            todo += body[name]
+    ops = f"{PKG}.operators."
+    return sorted(d for d in body if d.startswith(ops) and d not in live)
+
+
+def test_every_operator_def_is_reachable():
+    dead = _unreached_defs()
+    assert not dead, (
+        "operator defs reached only from tests/ or tools/:\n  " + "\n  ".join(dead)
+    )
+
+
+def test_every_def_exemption_names_an_existing_def():
+    names = {d for p in (ROOT / PKG / "operators").glob("*.py") for d in _scan(p)[1]}
+    stale = sorted(EXEMPT_DEFS.keys() - names)
+    assert not stale, f"EXEMPT_DEFS lists missing defs: {stale}"

@@ -99,7 +99,7 @@ def test_probe_prunes_term_buckets(spark, sf_dir, tmp_path):
     the probe's cost model, so pin it."""
     import os
 
-    from kinesis_vcr_spark.operators.searchindex import _term_buckets
+    from kinesis_vcr_spark.operators.searchindex import _meta_and_buckets
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     idx = str(tmp_path / "idx")
@@ -119,7 +119,8 @@ def test_probe_prunes_term_buckets(spark, sf_dir, tmp_path):
         for d in os.listdir(f"{idx}/postings/ingest=_base")
         if d.startswith("tb=")
     }
-    hit = _term_buckets(spark, TERMS, 16)
+    n_buckets, hit = _meta_and_buckets(spark, idx, TERMS)
+    assert n_buckets == 16
     assert len(hit) <= len(TERMS)
     assert len(on_disk) > len(hit)
 

@@ -1,19 +1,11 @@
-"""Skew/shuffle operators: salted join & aggregate correctness,
-bucketed-join exchange elimination."""
+"""Skew operators: salted join & aggregate correctness."""
 
 from __future__ import annotations
-
-import io
-from contextlib import redirect_stdout
 
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from kinesis_vcr_spark.operators.skew import (
-    salted_aggregate,
-    salted_join,
-    write_bucketed,
-)
+from kinesis_vcr_spark.operators.skew import salted_aggregate, salted_join
 
 
 def _skewed_df(spark, n=1000):
@@ -55,38 +47,3 @@ def test_salted_aggregate_matches_plain(spark):
         ).collect()
     }
     assert salted == plain
-
-
-def test_bucketed_join_has_no_exchange(spark, tmp_path):
-    import shutil
-
-    spark.sql("DROP TABLE IF EXISTS bt_orders")
-    spark.sql("DROP TABLE IF EXISTS bt_lines")
-    warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    for t in ("bt_orders", "bt_lines"):
-        shutil.rmtree(f"{warehouse}/{t}", ignore_errors=True)
-    orders = spark.range(500).select(
-        F.col("id").alias("k"), (F.col("id") * 2).alias("o")
-    )
-    lines = spark.range(1500).select(
-        (F.col("id") % 500).alias("k"), F.col("id").alias("l")
-    )
-    write_bucketed(orders, "bt_orders", "k", num_buckets=8)
-    write_bucketed(lines, "bt_lines", "k", num_buckets=8)
-    # force a shuffle-shaped join (not auto-broadcast of the tiny table)
-    # to show bucketing removed the exchanges a sort-merge join needs
-    threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = spark.table("bt_lines").join(spark.table("bt_orders"), "k")
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            joined.explain(mode="formatted")
-        plan = buf.getvalue()
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan
-        assert joined.count() == 1500
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
-    spark.sql("DROP TABLE IF EXISTS bt_orders")
-    spark.sql("DROP TABLE IF EXISTS bt_lines")

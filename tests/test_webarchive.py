@@ -1,7 +1,9 @@
 """WARC / tar-shard ingestion (operators/webarchive.py) against
 INDEPENDENT in-test writers (hand-built WARC bytes per the public ISO
 28500 layout; stdlib tarfile as the tar reference), plus gzip
-member-concatenation and the Spark binaryFile→mapInPandas path."""
+member-concatenation and the Spark binaryFile→mapInPandas path. Tar
+samples are grouped by the tar-shard stream's single projection
+(streaming/tarstream.py:tar_sample_verdicts)."""
 
 from __future__ import annotations
 
@@ -15,10 +17,17 @@ import pytest
 from kinesis_vcr_spark.operators.webarchive import (
     gunzip_members,
     parse_warc,
-    read_tar_shards,
-    read_warc,
     tar_members,
+    warc_records,
 )
+from kinesis_vcr_spark.streaming.tarstream import (
+    VERDICT_NON_MEDIA,
+    tar_sample_verdicts,
+)
+
+
+def shard_files(spark, path):
+    return spark.read.format("binaryFile").load(str(path))
 
 
 def warc_record(rtype: str, uri: str, block: bytes,
@@ -103,7 +112,7 @@ def test_read_warc_spark_path(spark, tmp_path):
         else:
             name.write_bytes(data)
         files.append(name)
-    df = read_warc(spark, str(tmp_path))
+    df = warc_records(shard_files(spark, tmp_path))
     rows = df.collect()
     assert len(rows) == 12
     assert all(r["http_status"] == 200 for r in rows)
@@ -137,14 +146,13 @@ def test_tar_members_and_webdataset_grouping(spark, tmp_path):
 
     for i in range(2):
         (tmp_path / f"shard-{i}.tar").write_bytes(shard(i))
-    df = read_tar_shards(spark, str(tmp_path))
-    rows = df.collect()
+    rows = tar_sample_verdicts(shard_files(spark, tmp_path)).collect()
     assert len(rows) == 6  # 3 samples x 2 shards
     by_key = {r["key"]: r for r in rows}
     s = by_key["s01k02"]
-    assert set(s["parts"].keys()) == {"txt", "cls", "bin"}
-    assert bytes(s["parts"]["cls"]) == b"2"
-    assert s["total_bytes"] == len(b"text 1/2") + 1 + 7
+    assert s["source_file"].endswith("shard-1.tar")
+    assert s["verdict"] == VERDICT_NON_MEDIA
+    assert s["payload_bytes"] == len(b"text 1/2") + 1 + 7
 
 
 def test_tar_samples_key_includes_directories(spark, tmp_path):
@@ -160,9 +168,9 @@ def test_tar_samples_key_includes_directories(spark, tmp_path):
                 info.size = len(data)
                 tf.addfile(info, io.BytesIO(data))
     (tmp_path / "dirs.tar").write_bytes(buf.getvalue())
-    rows = read_tar_shards(spark, str(tmp_path)).collect()
+    rows = tar_sample_verdicts(shard_files(spark, tmp_path)).collect()
     assert len(rows) == 2
     by_key = {r["key"]: r for r in rows}
     assert set(by_key) == {"a/0001", "b/0001"}
-    assert bytes(by_key["a/0001"]["parts"]["cls"]) == b"a"
-    assert bytes(by_key["b/0001"]["parts"]["txt"]) == b"b-text"
+    assert by_key["a/0001"]["payload_bytes"] == len(b"a-text") + 1
+    assert by_key["b/0001"]["payload_bytes"] == len(b"b-text") + 1

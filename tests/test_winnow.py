@@ -106,27 +106,6 @@ def test_hot_fingerprint_cap(spark):
     assert capped.count() == 0
 
 
-def test_fast_path_matches_portable(spark):
-    """portable=False (xxhash64 keys) finds the same pair set — only
-    the fingerprint encoding differs."""
-    rng = random.Random(19)
-    span = _rand_text(rng, GUARANTEE + 10)
-    rows = [
-        (0, _rand_text(rng, 70) + span),
-        (1, span + _rand_text(rng, 90)),
-        (2, _rand_text(rng, 130)),
-    ]
-    portable = shared_substring_pairs(_docs(spark, rows), k=K, w=W)
-    fast = shared_substring_pairs(
-        _docs(spark, rows), k=K, w=W, portable=False
-    )
-    assert (
-        {(r.id_a, r.id_b) for r in portable.collect()}
-        == {(r.id_a, r.id_b) for r in fast.collect()}
-        == {(0, 1)}
-    )
-
-
 def test_randomized_planted_spans_all_recovered(spark):
     """Randomized sweep of the winnowing guarantee in ONE job: 40 doc
     pairs, each sharing a random-length span (≥ w+k−1) at random

@@ -126,17 +126,6 @@ def main() -> None:
             rerank_vectors=corpus, shortlist=r_short, exclude_self=True,
         ).collect()
     )
-    # multi-probe ring (r13, VERDICT r12 item 2): centroids tied with
-    # the nprobe-th within the margin are probed too — closes the
-    # fixed-nprobe strict-recall residual (0.9781) when the trained
-    # router splits a planted cluster across two lists
-    approx["ivfpq_ring_rerank"] = _pairs(
-        ivfpq_topk(
-            icodes, centroids, icb, probes, k=MAN_TOP_K, nprobe=2,
-            rerank_vectors=corpus, shortlist=r_short, exclude_self=True,
-            ring_margin=0.05,
-        ).collect()
-    )
     print(json.dumps({
         "sf_dir": sf_dir,
         "n_corpus": n,
