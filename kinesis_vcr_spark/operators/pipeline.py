@@ -119,10 +119,6 @@ STATUS_INVALID = "dropped_invalid"
 STATUS_URL = "dropped_url_dup"
 STATUS_LANG = "dropped_lang"
 STATUS_CONTAM = "dropped_contaminated"
-LLM_PREP_STATUS_ORDER = (
-    STATUS_INVALID, STATUS_URL, STATUS_LANG, STATUS_QUALITY, STATUS_EXACT,
-    STATUS_NEAR, STATUS_CONTAM, STATUS_KEPT,
-)
 
 
 def llm_prep_corpus(

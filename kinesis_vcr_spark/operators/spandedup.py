@@ -272,7 +272,7 @@ def remove_duplicated_spans(
 # The daily-ingest shape of span dedup, mirroring the near-dup band
 # index (operators/dedup_index.py) and the IVF lists (operators/
 # ivf.py): the corpus's L-gram occurrence counts are persisted ONCE as
-# ``{index_path}/grams/ingest=<label>/gb=<bucket>`` scopes; a new
+# ``{index_path}/grams/ingest=<label>`` scopes; a new
 # batch appends its own aggregated counts (O(batch) work) and a probe
 # computes the batch's duplicated spans against the UNION of
 # everything stored.
@@ -287,34 +287,12 @@ def remove_duplicated_spans(
 # exact for the >= 2 test: two sightings in one scope give 2, one
 # sighting in each of two scopes gives 1 + 1.
 #
-# ``gb = pmod(xxhash64(gram), n_buckets)`` is an OPT-IN partition
-# directory column (the searchindex.py ``tb`` layout, off by default).
-# Be precise about what it buys — this is NOT the search index's
-# query-bucket pruning story, and it was considered as the default and
-# REJECTED on measurement (r10, BASELINE addendum):
-#
-# - a DAY-SIZED probe batch cannot prune, as a matter of arithmetic,
-#   not tuning. Every document longer than ~L + n_buckets chars
-#   carries more distinct grams than there are buckets, so the
-#   expected bucket coverage of even ONE document is
-#   B·(1 − (1 − 1/B)^k) ≈ B. Exact membership of uniformly-hashed
-#   keys against an immutable columnar store is a linear pass over the
-#   stored digests whenever probe keys ≫ partitions — no directory,
-#   metastore-bucket, row-group or bloom layout changes that. The
-#   probe's stored side therefore stays one exchange-free scan, and
-#   its at-scale budget is the index's digest bytes (measured decades
-#   in BASELINE.md).
-# - measured cost of the layout when pruning can't fire: +0.3-0.9 s
-#   per probe at sf0.1-sf1 (64 bucket dirs × scopes of partition
-#   discovery + small-file scan) and one extra scope-sized exchange
-#   per append — pure overhead for the daily-batch workload, which is
-#   why FLAT scopes stay the default.
-# - a SHORT probe (few grams: decontamination-style "is this snippet
-#   memorized anywhere?" lookups against the accumulated corpus) DOES
-#   prune: k grams touch ≤ k buckets, and the probe pushes an
-#   ``isin`` PartitionFilter when the batch's bucket set is a strict
-#   subset (plan-pinned in tests). Opt in (``n_buckets=``) when the
-#   workload is lookup-heavy rather than ingest-heavy.
+# The stored side of a probe is one exchange-free scan of the flat
+# scopes: a day-sized batch carries more distinct grams than any
+# directory layout has partitions, so exact membership against the
+# stored digests is a linear pass whatever the layout (BASELINE r10
+# addendum 1). Its at-scale budget is the index's digest bytes
+# (measured decades in BASELINE.md).
 #
 # PREFIX SEMANTICS, exactly like streaming ANN ingest: a probe answers
 # "which parts of THIS batch are duplicated against everything seen so
@@ -324,40 +302,6 @@ def remove_duplicated_spans(
 # any time, but emitted batch results are not retroactively patched —
 # re-probe affected docs offline if the use case needs it.
 
-#: suggested gram-digest bucket count for OPT-IN bucketing — sized for
-#: one-file-per-bucket scopes that still split a 100 TB corpus's
-#: compacted index into ~GB-sized files (19 GB of digests at the sf100
-#: rung / 64 ≈ 300 MB). The default layout is FLAT (see the layout
-#: comment above for the measurement that rejected default-on).
-DEFAULT_GRAM_BUCKETS = 64
-
-_GRAM_META_SCHEMA = "n_buckets int"
-
-
-def _gram_bucket(n_buckets: int):
-    return F.pmod(F.xxhash64("gram"), F.lit(n_buckets)).cast("int")
-
-
-def _path_exists(spark, path: str) -> bool:
-    from kinesis_vcr_spark.fsutil import path_exists
-
-    return path_exists(spark, path)
-
-
-def _load_gram_meta(spark, index_path: str) -> int | None:
-    """``n_buckets`` the index was laid out with; ``None`` for a
-    legacy (pre-bucket) artifact, which stays readable un-pruned."""
-    # existence-probe first — quiet first-build miss (no JVM
-    # AnalysisException stack trace in the driver log)
-    if not _path_exists(spark, f"{index_path}/meta"):
-        return None
-    try:
-        return spark.read.parquet(f"{index_path}/meta").collect()[0][
-            "n_buckets"
-        ]
-    except Exception:
-        return None
-
 
 def append_gram_index(
     df: DataFrame,
@@ -366,48 +310,18 @@ def append_gram_index(
     text_col: str = "text",
     min_len: int = DEFAULT_MIN_SPAN,
     ingest_label: str = "_base",
-    n_buckets: int | None = None,
 ) -> None:
     """Aggregate the batch's L-gram counts (capped at 2) and write them
     as their own ``ingest`` scope — overwrite-idempotent, so an
     orchestrator replay of the same labeled batch replaces its rows
-    instead of double-counting them.
-
-    ``n_buckets`` opts the artifact into the gb bucket layout (see the
-    layout comment for when that is worth paying for); the FIRST
-    append stamps ``{index_path}/meta`` and later appends reuse the
-    stamped layout, ignoring the argument — a scope hashed with a
-    different bucket count would break short-probe pruning, and mixing
-    bucketed and flat scopes in one partition discovery would make gb
-    null-ridden. Exchanges: one combining aggregation on the gram
-    digest (map-side partials absorb viral-gram skew BEFORE anything
-    crosses the wire) plus, when bucketed, one re-key of the
-    aggregated counts to the bucket layout — both scope-sized."""
-    spark = df.sparkSession
-    stamped = _load_gram_meta(spark, index_path)
-    if stamped is not None:
-        n_buckets = stamped
-    elif _path_exists(spark, f"{index_path}/grams"):
-        n_buckets = None  # meta-less artifact: stay flat
-    elif n_buckets is not None:
-        spark.createDataFrame([(n_buckets,)], _GRAM_META_SCHEMA).write.mode(
-            "overwrite"
-        ).parquet(f"{index_path}/meta")
+    instead of double-counting them. One exchange: a combining
+    aggregation on the gram digest (map-side partials absorb
+    viral-gram skew BEFORE anything crosses the wire), scope-sized."""
     grams = _gram_positions(df, id_col, text_col, min_len)
-    counts = grams.groupBy("gram").agg(
+    grams.groupBy("gram").agg(
         F.least(F.count(F.lit(1)), F.lit(2)).cast("int").alias("n")
-    )
-    if n_buckets is None:
-        counts.write.mode("overwrite").parquet(
-            f"{index_path}/grams/ingest={ingest_label}"
-        )
-        return
-    (
-        counts.withColumn("gb", _gram_bucket(n_buckets))
-        .repartition("gb")  # whole buckets per task → 1 file per gb dir
-        .write.mode("overwrite")
-        .partitionBy("gb")
-        .parquet(f"{index_path}/grams/ingest={ingest_label}")
+    ).write.mode("overwrite").parquet(
+        f"{index_path}/grams/ingest={ingest_label}"
     )
 
 
@@ -429,12 +343,9 @@ def span_probe_index(
     Plan shape (one gate-count job + one linear pipeline; every
     shuffle and broadcast is BATCH-sized):
 
-    - the stored side is one exchange-free pass over the gram scopes —
-      pruned to the batch's ``gb`` buckets when the artifact is
-      bucketed AND the batch is short enough for pruning to exist (see
-      the layout comment above for why a day-sized batch mathematically
-      cannot prune) — filtered by a broadcast semi-join on the batch's
-      raw position grams, then aggregated to batch-sized dup rows;
+    - the stored side is one exchange-free pass over the gram scopes,
+      filtered by a broadcast semi-join on the batch's raw position
+      grams, then aggregated to batch-sized dup rows;
     - the dup set is bounded by the BATCH's digests, so the
       position-tagging join broadcasts it under the same
       position-count gate.
@@ -452,25 +363,6 @@ def span_probe_index(
     n_positions = grams.count()  # the gate's one extra job
     stored = spark.read.parquet(f"{index_path}/grams").drop("ingest")
     _require_binary_grams(stored, index_path)
-    n_buckets = _load_gram_meta(spark, index_path)
-    if (
-        n_buckets is not None
-        and "gb" in stored.columns
-        # pruning can only exist for SHORT probes (layout comment
-        # above); don't pay the bucket-collect job when the batch
-        # obviously covers every bucket
-        and n_positions < 4 * n_buckets
-    ):
-        gbs = [
-            r["gb"]
-            for r in grams.select(_gram_bucket(n_buckets).alias("gb"))
-            .distinct()
-            .collect()
-        ]
-        if len(gbs) < n_buckets:  # short probe: directory pruning
-            stored = stored.where(F.col("gb").isin(gbs))
-    if "gb" in stored.columns:
-        stored = stored.drop("gb")
     # count only grams present in the batch: the semi-join prunes the
     # aggregation's input to batch-relevant grams. The batch side is
     # broadcast explicitly — day-sized by this probe's O(batch)
@@ -537,15 +429,10 @@ def compact_gram_index(spark, index_path: str) -> None:
 
     stored = spark.read.parquet(f"{index_path}/grams")
     _require_binary_grams(stored, index_path)
-    bucketed = "gb" in stored.columns
     compact_scoped_state(
         spark,
         f"{index_path}/grams",
-        # gb is a pure function of gram, so grouping by (gram, gb) is
-        # grouping by gram — and carrying gb through preserves the
-        # bucket-directory layout across the swap
-        partition_cols=("gb",) if bucketed else (),
-        aggregate_fn=lambda df: df.groupBy(
-            *(["gram", "gb"] if bucketed else ["gram"])
-        ).agg(F.least(F.sum("n"), F.lit(2)).cast("int").alias("n")),
+        aggregate_fn=lambda df: df.groupBy("gram").agg(
+            F.least(F.sum("n"), F.lit(2)).cast("int").alias("n")
+        ),
     )

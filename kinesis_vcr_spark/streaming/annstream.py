@@ -40,7 +40,6 @@ every scoped state dir in this engine).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kinesis_vcr_spark.operators.ivf import (
@@ -50,16 +49,6 @@ from kinesis_vcr_spark.operators.ivf import (
     load_ivf_index,
 )
 from kinesis_vcr_spark.streaming import ingest
-
-_DEFAULT_PROGRESS = {"last_batch_id": -1, "results_emitted": 0, "vecs_indexed": 0}
-
-
-def read_ann_progress(
-    state_dir: str, spark: SparkSession | None = None
-) -> dict:
-    """Cumulative counters: last applied batch id, result rows emitted,
-    vectors indexed."""
-    return ingest.read_progress(state_dir, _DEFAULT_PROGRESS, spark)
 
 
 def compact_ann_state(spark, state_dir: str, results_path: str) -> None:
@@ -76,9 +65,7 @@ def compact_ann_state(spark, state_dir: str, results_path: str) -> None:
     compact_scoped_state(spark, results_path)
 
 
-def apply_ann_batch(
-    batch_df: DataFrame,
-    batch_id: int,
+def ann_step(
     state_dir: str,
     results_path: str,
     *,
@@ -87,13 +74,16 @@ def apply_ann_batch(
     k_centroids: int = 16,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-) -> None:
-    """Apply one micro-batch: append to the index (first batch also
-    trains the centroids), probe the accumulated index for the batch's
-    top-k neighbors, write results into the batch's own overwrite
-    scope, then bump the progress watermark. Public so a replay after
-    a simulated crash can be driven directly in tests — every step
-    before the watermark bump is idempotent by overwrite scope."""
+):
+    """The append-then-probe step: append a batch to the index under
+    ``{state_dir}/index`` (the first applied batch also trains the
+    centroids), probe the accumulated index for the batch's top-k
+    neighbors and write the rows ``(query_id, vec_id, cosine, rank)``
+    into the batch's own overwrite scope of ``results_path``. Vector
+    ids must be unique across the whole stream (the ingest key);
+    duplicate ids ACROSS batches are the caller's contract, exactly as
+    for the batch index. Counters: ``results_emitted``,
+    ``vecs_indexed``."""
     index_path = f"{state_dir}/index"
 
     def step(batch_df, label, progress):
@@ -123,30 +113,4 @@ def apply_ann_batch(
         n_rows = ingest.write_scope(results, results_path, label)["rows"]
         return {"results_emitted": n_rows, "vecs_indexed": batch_df.count()}
 
-    ingest.apply(batch_df, batch_id, state_dir, _DEFAULT_PROGRESS, step)
-
-
-def streaming_ann_ingest(
-    vectors: DataFrame,
-    state_dir: str,
-    checkpoint_dir: str,
-    results_path: str,
-    *,
-    k: int = 10,
-    nprobe: int = 4,
-    k_centroids: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-):
-    """Start the append-then-probe loop over a streaming vector frame.
-    The index lives under ``{state_dir}/index``; per-vector top-k rows
-    ``(query_id, vec_id, cosine, rank)`` append to ``results_path``
-    (parquet, one overwrite scope per micro-batch). Vector ids must be
-    unique across the whole stream (the ingest key) — a re-delivered
-    batch is skipped whole via the batch-id watermark, duplicate ids
-    ACROSS batches are the caller's contract, exactly as for the batch
-    index."""
-    return ingest.start(vectors, checkpoint_dir, lambda b, i: apply_ann_batch(
-        b, i, state_dir, results_path, k=k, nprobe=nprobe,
-        k_centroids=k_centroids, id_col=id_col, vec_col=vec_col,
-    ))
+    return step

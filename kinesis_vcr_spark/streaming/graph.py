@@ -6,13 +6,14 @@ item 8): components / PageRank / BFS / triangles were batch-only while
 the sketch operators already had pinned streaming twins. Triangle
 counting is the one with a genuinely incremental formulation, so it
 gets the real streaming operator; for the ITERATIVE graph ops
-(components, PageRank, BFS) the honest Structured Streaming answer is
-re-run-per-window — their fixpoints are not incrementally maintainable
-with bounded per-key state (a single far-away edge can relabel an
-entire component), so wrap the batch operator in ``foreachBatch`` over
-the accumulated edge table exactly as this module does for triangles,
-paying one batch run per trigger. That guidance is part of the module
-contract, mirroring E31's batch/stream parity note.
+(components, PageRank, BFS, k-core) the honest Structured Streaming
+answer is re-run-per-window — their fixpoints are not incrementally
+maintainable with bounded per-key state (a single far-away edge can
+relabel an entire component), so :func:`snapshot_step` runs the batch
+operator, given as its ``batch_fn``, over the accumulated edge table
+the triangle step also keeps, paying one batch run per trigger. That
+guidance is part of the module contract, mirroring E31's batch/stream
+parity note.
 
 Why ``foreachBatch`` and not ``applyInPandasWithState``: a triangle's
 three nodes land in three different state groups, and closing an edge
@@ -45,15 +46,12 @@ handles (the per-batch join is sized by the batch, not the graph).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from kinesis_vcr_spark import cacheutil, statefs
 from kinesis_vcr_spark.operators.triangles import _simple_undirected
 from kinesis_vcr_spark.streaming import ingest
-
-_DEFAULT_PROGRESS = {"last_batch_id": -1, "triangles": 0}
-
 
 def _read_edges(spark, edges_path: str, exclude_label: str | None = None):
     """The accumulated canonical edge table ``(a, b)``, or None before
@@ -102,21 +100,14 @@ def triangle_delta(batch: DataFrame, old: DataFrame) -> DataFrame:
     )
 
 
-def streaming_triangle_count(
-    edges: DataFrame,
-    src_col: str,
-    dst_col: str,
-    state_dir: str,
-    checkpoint_dir: str,
-):
-    """Maintain the exact global triangle count over an edge stream.
-
-    Returns the started StreamingQuery. After it drains,
-    :func:`read_triangle_count` returns the running total, equal to
-    ``operators.triangles.triangle_counts`` global count over every
-    edge ever streamed (batch/stream parity, pinned in
-    tests/test_streaming_graph.py).
-    """
+def triangle_step(state_dir: str, *, src_col: str, dst_col: str):
+    """Maintain the exact global triangle count over an edge stream:
+    each batch's new canonical edges append to ``{state_dir}/edges``
+    and the counter ``triangles`` grows by the triangles they close.
+    After a drain, ``ingest.read_progress(state_dir)["triangles"]``
+    equals ``operators.triangles.triangle_counts``' global count over
+    every edge ever streamed (batch/stream parity, pinned in
+    tests/test_streaming_graph.py)."""
     edges_path = f"{state_dir}/edges"
 
     def step(batch_df, label, progress):
@@ -134,7 +125,7 @@ def streaming_triangle_count(
         else:
             fresh = canon.join(old, ["a", "b"], "left_anti")
         # one pass computes the delta AND materializes the new edges
-        fresh = cacheutil.hold("streaming_triangle_count", fresh)
+        fresh = cacheutil.hold("triangle_step", fresh)
         try:
             row = triangle_delta(fresh, old).collect()[0]
             ingest.write_scope(fresh, edges_path, label)
@@ -142,18 +133,7 @@ def streaming_triangle_count(
             cacheutil.release(fresh)
         return {"triangles": row["delta"]}
 
-    return ingest.start(edges, checkpoint_dir, lambda b, i: ingest.apply(
-        b, i, state_dir, _DEFAULT_PROGRESS, step
-    ))
-
-
-def read_triangle_count(
-    state_dir: str, spark: SparkSession | None = None
-) -> int:
-    """The maintained global triangle count (0 before any batch)."""
-    return ingest.read_progress(state_dir, _DEFAULT_PROGRESS, spark)[
-        "triangles"
-    ]
+    return step
 
 
 def compact_edge_state(spark, state_dir: str, target_files: int = 1) -> None:
@@ -171,23 +151,16 @@ def compact_edge_state(spark, state_dir: str, target_files: int = 1) -> None:
     )
 
 
-def streaming_graph_snapshot(
-    edges: DataFrame,
-    src_col: str,
-    dst_col: str,
-    state_dir: str,
-    checkpoint_dir: str,
-    out_path: str,
-    batch_fn,
+def snapshot_step(
+    state_dir: str, out_path: str, *, src_col: str, dst_col: str, batch_fn
 ):
-    """The GENERIC re-run-per-window shape for the iterative graph ops
+    """The GENERIC re-run-per-window step for the iterative graph ops
     (the module-docstring guidance as executable code): per
     micro-batch, fold the new edges into the accumulated canonical
-    edge table (same state layout as :func:`streaming_triangle_count`)
-    and re-run ``batch_fn(edges_df) -> DataFrame`` — any batch graph
-    operator over canonical ``(a, b)`` edges: components, PageRank,
-    BFS, k-core, … — overwriting ``out_path`` with the CURRENT
-    snapshot.
+    edge table (same state layout as :func:`triangle_step`) and re-run
+    ``batch_fn(edges_df) -> DataFrame`` — any batch graph operator over
+    canonical ``(a, b)`` edges: components, PageRank, BFS, k-core, … —
+    overwriting ``out_path`` with the CURRENT snapshot.
 
     This is honest about the asymptotics: these operators' fixpoints
     are not boundedly-incremental (one edge can relabel an entire
@@ -195,12 +168,15 @@ def streaming_graph_snapshot(
     over the accumulated graph — the right trade when triggers are
     minutes apart and the graph fits the batch operator's envelope.
     After a drain, ``out_path`` equals ``batch_fn`` over every edge
-    ever streamed (test-pinned for components and PageRank); replayed
-    batches are skipped via the same batch-id watermark, and the
-    overwrite means a replayed batch regenerates the identical
-    snapshot. Use a DEDICATED ``state_dir`` per streaming query — the
-    batch-id watermark is per-query state, so sharing one edge store
-    across queries would cross their replay accounting.
+    ever streamed (test-pinned for components, k-core and PageRank);
+    the overwrite means a replayed batch regenerates the identical
+    snapshot. The accumulated edges are UNDIRECTED: an operator that
+    reads direction (PageRank) sees each stored edge once, so a
+    ``batch_fn`` that wants the undirected graph unions both
+    directions. Use a DEDICATED ``state_dir`` per streaming query —
+    the batch-id watermark is per-query state, so sharing one edge
+    store across queries would cross their replay accounting. The
+    step bumps no counter.
     """
     edges_path = f"{state_dir}/edges"
 
@@ -216,78 +192,4 @@ def streaming_graph_snapshot(
         batch_fn(all_edges).write.mode("overwrite").parquet(out_path)
         return {}
 
-    return ingest.start(edges, checkpoint_dir, lambda b, i: ingest.apply(
-        b, i, state_dir, _DEFAULT_PROGRESS, step
-    ))
-
-
-def streaming_connected_components(
-    edges: DataFrame,
-    src_col: str,
-    dst_col: str,
-    state_dir: str,
-    checkpoint_dir: str,
-    labels_path: str,
-    max_iter: int = 25,
-):
-    """Components over an edge stream — the thin
-    :func:`streaming_graph_snapshot` instantiation (see that docstring
-    for the contract)."""
-    from kinesis_vcr_spark.operators.components import connected_components
-
-    return streaming_graph_snapshot(
-        edges, src_col, dst_col, state_dir, checkpoint_dir, labels_path,
-        lambda e: connected_components(e, "a", "b", max_iter=max_iter),
-    )
-
-
-def streaming_kcore(
-    edges: DataFrame,
-    src_col: str,
-    dst_col: str,
-    state_dir: str,
-    checkpoint_dir: str,
-    nodes_path: str,
-    k: int,
-    max_iterations: int = 50,
-):
-    """k-core membership snapshots over an edge stream — the
-    :func:`streaming_graph_snapshot` instantiation for the peeling
-    family (completes the graph ops' streaming story now that batch
-    k-core exists): after each drain ``nodes_path`` holds
-    ``kcore_nodes`` over every edge ever streamed."""
-    from kinesis_vcr_spark.operators.kcore import kcore_nodes
-
-    return streaming_graph_snapshot(
-        edges, src_col, dst_col, state_dir, checkpoint_dir, nodes_path,
-        lambda e: kcore_nodes(e, "a", "b", k, max_iterations),
-    )
-
-
-def streaming_pagerank(
-    edges: DataFrame,
-    src_col: str,
-    dst_col: str,
-    state_dir: str,
-    checkpoint_dir: str,
-    ranks_path: str,
-    iterations: int = 10,
-):
-    """Exact-integer PageRank snapshots over an edge stream — the
-    :func:`streaming_graph_snapshot` instantiation for the rank
-    family. NOTE: the accumulated state is the CANONICAL UNDIRECTED
-    simple edge set (shared wrapper contract), so ranks are those of
-    the undirected graph — each stored edge contributes both
-    directions via the operator's multi-edge semantics."""
-    from kinesis_vcr_spark.operators.pagerank import pagerank_micro
-
-    def fn(e: DataFrame) -> DataFrame:
-        both = e.unionByName(
-            e.select(F.col("b").alias("a"), F.col("a").alias("b"))
-        )
-        return pagerank_micro(both, "a", "b", iterations=iterations)
-
-    return streaming_graph_snapshot(
-        edges, src_col, dst_col, state_dir, checkpoint_dir, ranks_path,
-        fn,
-    )
+    return step

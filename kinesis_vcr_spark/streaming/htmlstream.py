@@ -36,7 +36,7 @@ loop is the corpus-prep instance of that shape.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from kinesis_vcr_spark.functions.html import html_to_text
@@ -51,21 +51,6 @@ VERDICT_KEPT = "kept"
 VERDICT_INVALID = "quarantined_invalid"
 VERDICT_LANG = "quarantined_lang"
 VERDICT_QUALITY = "quarantined_quality"
-
-_DEFAULT_PROGRESS = {
-    "last_batch_id": -1,
-    "docs_seen": 0,
-    "docs_kept": 0,
-    "docs_quarantined": 0,
-}
-
-
-def read_html_progress(
-    state_dir: str, spark: SparkSession | None = None
-) -> dict:
-    """Cumulative counters: last applied batch id, docs scored, docs
-    kept, docs quarantined."""
-    return ingest.read_progress(state_dir, _DEFAULT_PROGRESS, spark)
 
 
 def html_quality_verdicts(
@@ -144,21 +129,20 @@ def route_verdicts(
     return n_kept, n_quar
 
 
-def apply_html_batch(
-    batch_df: DataFrame,
-    batch_id: int,
-    state_dir: str,
+def html_step(
     out_dir: str,
     *,
     id_col: str = "doc_id",
     html_col: str = "html",
     keep_lang: str = "en",
     quality_threshold: float = 0.6,
-) -> None:
-    """Apply one micro-batch: score every doc, write kept docs to the
-    clean scope and rejected docs (with reason) to the quarantine
-    scope — both ``ingest=b{batch_id}`` overwrites — then bump the
-    watermark. Public so tests can drive crash-replays directly."""
+):
+    """The extract→score→quarantine step: score every doc of a batch
+    of raw crawl rows, write kept docs to ``{out_dir}/clean`` and
+    rejected docs (with reason) to ``{out_dir}/quarantine``, both in
+    the batch's ``ingest=b{id}`` scope; the loop keeps no state beside
+    the watermark. Counters: ``docs_seen``, ``docs_kept``,
+    ``docs_quarantined``."""
 
     def step(batch_df, label, progress):
         verdicts = html_quality_verdicts(
@@ -176,7 +160,7 @@ def apply_html_batch(
             "docs_quarantined": n_quar,
         }
 
-    ingest.apply(batch_df, batch_id, state_dir, _DEFAULT_PROGRESS, step)
+    return step
 
 
 def compact_html_state(spark, out_dir: str) -> None:
@@ -189,24 +173,3 @@ def compact_html_state(spark, out_dir: str) -> None:
 
     compact_scoped_state(spark, f"{out_dir}/clean")
     compact_scoped_state(spark, f"{out_dir}/quarantine")
-
-
-def streaming_html_ingest(
-    docs: DataFrame,
-    state_dir: str,
-    checkpoint_dir: str,
-    out_dir: str,
-    *,
-    id_col: str = "doc_id",
-    html_col: str = "html",
-    keep_lang: str = "en",
-    quality_threshold: float = 0.6,
-):
-    """Start the extract→score→quarantine loop over a streaming crawl
-    frame. Clean docs land under ``{out_dir}/clean``, rejects under
-    ``{out_dir}/quarantine``; a re-delivered batch is skipped whole via
-    the batch-id watermark."""
-    return ingest.start(docs, checkpoint_dir, lambda b, i: apply_html_batch(
-        b, i, state_dir, out_dir, id_col=id_col, html_col=html_col,
-        keep_lang=keep_lang, quality_threshold=quality_threshold,
-    ))

@@ -1,9 +1,14 @@
 """The idempotent-ingest harness every streaming ingest loop runs on.
 
-A loop is a ``step(batch_df, label, progress) -> increments`` function;
-this module supplies everything around it. The replay contract is stated
-here once, and each loop's module docstring states only its own write
-ordering and semantics:
+A loop is one step factory, ``<x>_step(paths…, *, params)``, that
+returns the closure ``step(batch_df, label, progress) -> increments``;
+this module supplies everything around it. ``apply(batch_df, batch_id,
+state_dir, step)`` runs one micro-batch (tests drive crash-replays with
+it), ``start(df, checkpoint_dir, state_dir, step)`` runs a streaming
+frame through ``apply`` and ``read_progress(state_dir)`` reads the
+watermark and counters. The replay contract is stated here once, and
+each loop's module docstring states only its own write ordering and
+semantics:
 
 - **Watermark skip.** ``{state_dir}/progress.json`` holds the last
   applied batch id next to the loop's cumulative counters.
@@ -47,38 +52,34 @@ from kinesis_vcr_spark import statefs
 _LOG = logging.getLogger(__name__)
 
 
-def read_progress(
-    state_dir: str, default: dict, spark: SparkSession | None = None
-) -> dict:
-    """The loop's watermark and cumulative counters (``default`` before
-    the first applied batch)."""
+def read_progress(state_dir: str, spark: SparkSession | None = None) -> dict:
+    """The loop's watermark and cumulative counters:
+    ``{"last_batch_id": -1}`` before the first applied batch, and a
+    counter appears with the first increment a step returns for it."""
     spark = spark or SparkSession.getActiveSession()
     if spark is None:
         raise RuntimeError("ingest progress needs an active SparkSession")
     return statefs.read_json_state(
-        spark, f"{state_dir}/progress.json", default
+        spark, f"{state_dir}/progress.json", {"last_batch_id": -1}
     )
 
 
-def apply(
-    batch_df: DataFrame, batch_id: int, state_dir: str, default: dict, step
-) -> None:
+def apply(batch_df: DataFrame, batch_id: int, state_dir: str, step) -> None:
     """Apply one micro-batch: skip it if the watermark already covers
     ``batch_id``, else run ``step`` under the label ``b{batch_id}`` and
     bump the watermark by the increments it returns. The log record
-    names the loop after the step's module and enclosing function."""
+    names the loop after the step's module and its factory."""
     t0 = time.perf_counter()
     spark = batch_df.sparkSession
-    path = f"{state_dir}/progress.json"
-    progress = statefs.read_json_state(spark, path, default)
+    progress = read_progress(state_dir, spark)
     skipped = batch_id <= progress["last_batch_id"]
     increments = {}
     if not skipped:
         increments = step(batch_df, f"b{batch_id}", progress)
-        statefs.write_json_state(spark, path, {
+        statefs.write_json_state(spark, f"{state_dir}/progress.json", {
             **progress,
             "last_batch_id": batch_id,
-            **{k: progress[k] + v for k, v in increments.items()},
+            **{k: progress.get(k, 0) + v for k, v in increments.items()},
         })
     _LOG.info(json.dumps({
         "loop": f"{step.__module__.rsplit('.', 1)[-1]}."
@@ -104,11 +105,13 @@ def write_scope(
     return obs.get
 
 
-def start(df: DataFrame, checkpoint_dir: str, process):
-    """Start ``process(batch_df, batch_id)`` over the streaming frame
-    ``df``, draining what is available and then stopping."""
+def start(df: DataFrame, checkpoint_dir: str, state_dir: str, step):
+    """Start ``step`` over the streaming frame ``df``, one :func:`apply`
+    per micro-batch, draining what is available and then stopping."""
     return (
-        df.writeStream.foreachBatch(process)
+        df.writeStream.foreachBatch(
+            lambda batch_df, batch_id: apply(batch_df, batch_id, state_dir, step)
+        )
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("update")
         .trigger(availableNow=True)

@@ -31,8 +31,6 @@ exactly the batch, and nothing ever re-hashes the accumulated corpus.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
 from kinesis_vcr_spark.fsutil import path_exists
 from kinesis_vcr_spark.operators.dedup import (
     DEFAULT_BAND_MEMBER_CAP,
@@ -44,16 +42,6 @@ from kinesis_vcr_spark.operators.dedup_index import (
     near_dup_against_index,
 )
 from kinesis_vcr_spark.streaming import ingest
-
-_DEFAULT_PROGRESS = {"last_batch_id": -1, "pairs_emitted": 0, "docs_indexed": 0}
-
-
-def read_neardup_progress(
-    state_dir: str, spark: SparkSession | None = None
-) -> dict:
-    """Cumulative counters: last applied batch id, pairs emitted, docs
-    indexed."""
-    return ingest.read_progress(state_dir, _DEFAULT_PROGRESS, spark)
 
 
 def compact_neardup_state(spark, state_dir: str, pairs_path: str) -> None:
@@ -75,14 +63,12 @@ def compact_neardup_state(spark, state_dir: str, pairs_path: str) -> None:
     compact_scoped_state(spark, pairs_path)
 
 
-def streaming_near_dup(
-    docs: DataFrame,
-    id_col: str,
-    text_col: str,
+def neardup_step(
     state_dir: str,
-    checkpoint_dir: str,
     pairs_path: str,
     *,
+    id_col: str,
+    text_col: str,
     threshold: float = 0.6,
     shingle_size: int = 3,
     num_hashes: int = 64,
@@ -90,13 +76,14 @@ def streaming_near_dup(
     char_ngrams: bool = False,
     band_member_cap: int | None = DEFAULT_BAND_MEMBER_CAP,
 ):
-    """Start the probe-then-append loop over a streaming document
-    frame. The index lives under ``{state_dir}/index``; emitted pairs
-    ``(id_a, id_b, jaccard)`` append to ``pairs_path`` (parquet).
-    Document ids must be unique across the whole stream (the ingest
-    key) — a re-delivered batch is skipped whole via the batch-id
-    watermark, but duplicate ids ACROSS batches are the caller's
-    contract, exactly as for the batch index."""
+    """The probe-then-append step: probe a batch against the index
+    under ``{state_dir}/index`` (the first batch pairs within itself
+    and builds the index), write the emitted pairs
+    ``(id_a, id_b, jaccard)`` into the batch's own overwrite scope of
+    ``pairs_path``, then append the batch to the index. Document ids
+    must be unique across the whole stream (the ingest key); duplicate
+    ids ACROSS batches are the caller's contract, exactly as for the
+    batch index. Counters: ``pairs_emitted``, ``docs_indexed``."""
     index_path = f"{state_dir}/index"
     params = dict(
         shingle_size=shingle_size, num_hashes=num_hashes,
@@ -133,6 +120,4 @@ def streaming_near_dup(
         )
         return {"pairs_emitted": n_pairs, "docs_indexed": batch_df.count()}
 
-    return ingest.start(docs, checkpoint_dir, lambda b, i: ingest.apply(
-        b, i, state_dir, _DEFAULT_PROGRESS, step
-    ))
+    return step

@@ -27,7 +27,6 @@ index-family contract).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kinesis_vcr_spark.operators.searchindex import (
@@ -38,16 +37,6 @@ from kinesis_vcr_spark.operators.searchindex import (
     search_index_topk,
 )
 from kinesis_vcr_spark.streaming import ingest
-
-_DEFAULT_PROGRESS = {"last_batch_id": -1, "docs_indexed": 0, "snapshots": 0}
-
-
-def read_search_progress(
-    state_dir: str, spark: SparkSession | None = None
-) -> dict:
-    """Cumulative counters: last applied batch id, documents indexed,
-    snapshots written."""
-    return ingest.read_progress(state_dir, _DEFAULT_PROGRESS, spark)
 
 
 def compact_search_state(spark, state_dir: str, results_path: str) -> None:
@@ -64,9 +53,7 @@ def compact_search_state(spark, state_dir: str, results_path: str) -> None:
     compact_scoped_state(spark, results_path)
 
 
-def apply_search_batch(
-    batch_df: DataFrame,
-    batch_id: int,
+def search_step(
     state_dir: str,
     results_path: str,
     terms: list[str],
@@ -77,12 +64,14 @@ def apply_search_batch(
     k1: float = BM25_K1,
     b: float = BM25_B,
     n_buckets: int = 16,
-) -> None:
-    """Apply one micro-batch: append its postings, re-rank the standing
-    query over the accumulated index, write the snapshot into the
-    batch's own overwrite scope, bump the watermark. Batch 0 performs
-    the fresh build (meta + first scope). Public so tests can drive
-    crash-replays directly."""
+):
+    """The append-then-rank step: append a batch's postings to the
+    inverted index under ``{state_dir}/index`` (the first applied batch
+    performs the fresh build: meta + first scope), re-rank the standing
+    query ``terms`` over the accumulated index and write the BM25
+    snapshot ``(doc_id, bm25, n_terms_hit, batch_id)`` into the batch's
+    own overwrite scope of ``results_path``. Counters:
+    ``docs_indexed``, ``snapshots``."""
     index_path = f"{state_dir}/index"
 
     def step(batch_df, label, progress):
@@ -97,30 +86,8 @@ def apply_search_batch(
             )
         snap = search_index_topk(
             batch_df.sparkSession, index_path, terms, k=k, k1=k1, b=b
-        ).withColumn("batch_id", F.lit(batch_id).cast("long"))
+        ).withColumn("batch_id", F.lit(int(label[1:])).cast("long"))
         ingest.write_scope(snap, results_path, label)
         return {"docs_indexed": batch_df.count(), "snapshots": 1}
 
-    ingest.apply(batch_df, batch_id, state_dir, _DEFAULT_PROGRESS, step)
-
-
-def streaming_search_ingest(
-    docs: DataFrame,
-    state_dir: str,
-    checkpoint_dir: str,
-    results_path: str,
-    terms: list[str],
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 20,
-    n_buckets: int = 16,
-):
-    """Start the append-then-rank loop over a streaming document frame.
-    The inverted index lives under ``{state_dir}/index``; per-batch
-    BM25 snapshots ``(doc_id, bm25, n_terms_hit, batch_id)`` land under
-    ``results_path/ingest=b{batch_id}``."""
-    return ingest.start(docs, checkpoint_dir, lambda b, i: apply_search_batch(
-        b, i, state_dir, results_path, terms,
-        id_col=id_col, text_col=text_col, k=k, n_buckets=n_buckets,
-    ))
+    return step

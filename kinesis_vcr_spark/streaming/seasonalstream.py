@@ -42,17 +42,6 @@ from pyspark.sql import functions as F
 from kinesis_vcr_spark.operators.seasonal import EPOCH, scores_from_daily
 from kinesis_vcr_spark.streaming import ingest
 
-_DEFAULT_PROGRESS = {
-    "last_batch_id": -1,
-    "events_ingested": 0,
-}
-
-
-def read_seasonal_progress(
-    state_dir: str, spark: SparkSession | None = None
-) -> dict:
-    return ingest.read_progress(state_dir, _DEFAULT_PROGRESS, spark)
-
 
 def _daily_path(state_dir: str) -> str:
     return f"{state_dir}/state/daily"
@@ -113,21 +102,20 @@ def compact_seasonal_state(spark: SparkSession, state_dir: str) -> None:
     compact_scoped_state(spark, _daily_path(state_dir), aggregate_fn=merge)
 
 
-def streaming_seasonal(
-    events: DataFrame,
-    key_cols: Sequence[str],
+def seasonal_step(
     state_dir: str,
-    checkpoint_dir: str,
     scores_path: str,
     *,
+    key_cols: Sequence[str],
     ts_col: str = "ts",
     value_col: str = "value",
 ):
-    """Start the merge-then-score seasonal loop over a streaming event
-    frame. Delta state lives under ``{state_dir}/state/daily``
-    (ingest-scoped parquet of unrounded decimal day sums); per-batch
-    full score snapshots ``(keys…, d, dow, total, med, mad, dev)``
-    land under ``{scores_path}/ingest=b{N}``."""
+    """The merge-then-score step: append a batch's per-(key, day)
+    unrounded decimal delta sums as a scope of
+    ``{state_dir}/state/daily``, merge the accumulated deltas and write
+    the full score snapshot ``(keys…, d, dow, total, med, mad, dev)``
+    under ``{scores_path}/ingest=b{N}``. Counter:
+    ``events_ingested``."""
     keys = list(key_cols)
     daily_path = _daily_path(state_dir)
 
@@ -149,15 +137,12 @@ def streaming_seasonal(
         ingest.write_scope(scores, scores_path, label)
         return {"events_ingested": batch_df.count()}
 
-    return ingest.start(events, checkpoint_dir, lambda b, i: ingest.apply(
-        b, i, state_dir, _DEFAULT_PROGRESS, step
-    ))
+    return step
 
 
 __all__ = [
     "compact_seasonal_state",
     "merged_daily",
     "read_current_scores",
-    "read_seasonal_progress",
-    "streaming_seasonal",
+    "seasonal_step",
 ]

@@ -27,24 +27,12 @@ retroactively patch (same contract as the ANN ingest results).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
 from kinesis_vcr_spark.operators.spandedup import (
     DEFAULT_MIN_SPAN,
     append_gram_index,
     span_probe_index,
 )
 from kinesis_vcr_spark.streaming import ingest
-
-_DEFAULT_PROGRESS = {"last_batch_id": -1, "spans_emitted": 0, "docs_indexed": 0}
-
-
-def read_span_progress(
-    state_dir: str, spark: SparkSession | None = None
-) -> dict:
-    """Cumulative counters: last applied batch id, span rows emitted,
-    documents indexed."""
-    return ingest.read_progress(state_dir, _DEFAULT_PROGRESS, spark)
 
 
 def compact_span_state(spark, state_dir: str, spans_path: str) -> None:
@@ -63,20 +51,20 @@ def compact_span_state(spark, state_dir: str, spans_path: str) -> None:
     compact_scoped_state(spark, spans_path)
 
 
-def apply_span_batch(
-    batch_df: DataFrame,
-    batch_id: int,
+def span_step(
     state_dir: str,
     spans_path: str,
     *,
     id_col: str = "doc_id",
     text_col: str = "text",
     min_len: int = DEFAULT_MIN_SPAN,
-) -> None:
-    """Apply one micro-batch: append its capped gram counts, probe the
-    accumulated index for the batch's duplicated spans, write them into
-    the batch's own overwrite scope, bump the watermark. Public so
-    tests can drive crash-replays directly."""
+):
+    """The append-then-probe step: append a batch's capped gram counts
+    to the index under ``{state_dir}/index``, probe the accumulated
+    index for the batch's duplicated spans and write them
+    ``(id, span_start, span_end)`` into the batch's own overwrite scope
+    of ``spans_path``. Document ids must be unique across the whole
+    stream. Counters: ``spans_emitted``, ``docs_indexed``."""
     index_path = f"{state_dir}/index"
 
     def step(batch_df, label, progress):
@@ -90,25 +78,4 @@ def apply_span_batch(
         n_spans = ingest.write_scope(spans, spans_path, label)["rows"]
         return {"spans_emitted": n_spans, "docs_indexed": batch_df.count()}
 
-    ingest.apply(batch_df, batch_id, state_dir, _DEFAULT_PROGRESS, step)
-
-
-def streaming_span_dedup(
-    docs: DataFrame,
-    state_dir: str,
-    checkpoint_dir: str,
-    spans_path: str,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_len: int = DEFAULT_MIN_SPAN,
-):
-    """Start the append-then-probe loop over a streaming document
-    frame. The gram index lives under ``{state_dir}/index``; per-batch
-    spans ``(id, span_start, span_end)`` append to ``spans_path``.
-    Document ids must be unique across the whole stream — a
-    re-delivered batch is skipped whole via the batch-id watermark."""
-    return ingest.start(docs, checkpoint_dir, lambda b, i: apply_span_batch(
-        b, i, state_dir, spans_path,
-        id_col=id_col, text_col=text_col, min_len=min_len,
-    ))
+    return step

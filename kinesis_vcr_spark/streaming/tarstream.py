@@ -39,7 +39,7 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     DoubleType,
     LongType,
@@ -53,7 +53,6 @@ from kinesis_vcr_spark.operators.multimodal import (
     real_decode,
 )
 from kinesis_vcr_spark.operators.webarchive import tar_members
-from kinesis_vcr_spark.streaming import ingest
 from kinesis_vcr_spark.streaming.htmlstream import route_verdicts
 
 VERDICT_KEPT = "kept"
@@ -86,21 +85,6 @@ VERDICT_SCHEMA = StructType(
         StructField("verdict", StringType(), False),
     ]
 )
-
-_DEFAULT_PROGRESS = {
-    "last_batch_id": -1,
-    "samples_seen": 0,
-    "samples_kept": 0,
-    "samples_quarantined": 0,
-}
-
-
-def read_tar_progress(
-    state_dir: str, spark: SparkSession | None = None
-) -> dict:
-    """Cumulative counters: last applied batch id, samples seen /
-    kept / quarantined."""
-    return ingest.read_progress(state_dir, _DEFAULT_PROGRESS, spark)
 
 
 def tar_sample_verdicts(files: DataFrame, decoder=real_decode) -> DataFrame:
@@ -172,19 +156,20 @@ def tar_sample_verdicts(files: DataFrame, decoder=real_decode) -> DataFrame:
     )
 
 
-def apply_tar_batch(
-    batch_df: DataFrame,
-    batch_id: int,
-    state_dir: str,
-    out_dir: str,
-    *,
-    decoder=real_decode,
-) -> None:
-    """Apply one micro-batch of shard files: explode + decode every
-    sample, write decodable media features to the features scope and
-    everything else (with reason) to the quarantine scope — both
-    ``ingest=b{id}`` overwrites — then bump the watermark. Public so
-    tests can drive crash-replays directly."""
+def tar_step(out_dir: str, *, decoder=real_decode):
+    """The shards→samples→decode→quarantine step: explode and decode
+    every sample of a batch of ``binaryFile`` shard rows, write
+    decodable media features to ``{out_dir}/features`` and everything
+    else (with reason) to ``{out_dir}/quarantine``, both in the batch's
+    ``ingest=b{id}`` scope; the loop keeps no state beside the
+    watermark. A streaming file source needs the schema spelled out::
+
+        spark.readStream.format("binaryFile").schema(
+            "path string, modificationTime timestamp, "
+            "length long, content binary").load(landing_dir)
+
+    Counters: ``samples_seen``, ``samples_kept``,
+    ``samples_quarantined``."""
 
     def step(batch_df, label, progress):
         verdicts = tar_sample_verdicts(batch_df, decoder=decoder)
@@ -200,7 +185,7 @@ def apply_tar_batch(
             "samples_quarantined": n_quar,
         }
 
-    ingest.apply(batch_df, batch_id, state_dir, _DEFAULT_PROGRESS, step)
+    return step
 
 
 def compact_tar_state(spark, out_dir: str) -> None:
@@ -213,28 +198,3 @@ def compact_tar_state(spark, out_dir: str) -> None:
 
     compact_scoped_state(spark, f"{out_dir}/features")
     compact_scoped_state(spark, f"{out_dir}/quarantine")
-
-
-def streaming_tar_ingest(
-    files: DataFrame,
-    state_dir: str,
-    checkpoint_dir: str,
-    out_dir: str,
-    *,
-    decoder=real_decode,
-):
-    """Start the shards→samples→decode→quarantine loop over a
-    streaming ``binaryFile`` frame watching a landing directory for
-    new .tar shards — note streaming file sources require the schema
-    spelled out::
-
-        spark.readStream.format("binaryFile").schema(
-            "path string, modificationTime timestamp, "
-            "length long, content binary").load(landing_dir)
-
-    Decoded features land under ``{out_dir}/features``, every other
-    sample under ``{out_dir}/quarantine``; a re-delivered batch is
-    skipped whole via the batch-id watermark."""
-    return ingest.start(files, checkpoint_dir, lambda b, i: apply_tar_batch(
-        b, i, state_dir, out_dir, decoder=decoder
-    ))

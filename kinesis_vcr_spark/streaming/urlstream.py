@@ -29,21 +29,11 @@ later batch with a smaller id does NOT retro-patch earlier verdicts
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kinesis_vcr_spark import statefs
 from kinesis_vcr_spark.operators.urldedup import url_occurrences
 from kinesis_vcr_spark.streaming import ingest
-
-_DEFAULT_PROGRESS = {"last_batch_id": -1, "urls_seen": 0, "dups_emitted": 0}
-
-
-def read_url_progress(state_dir: str, spark: SparkSession | None = None) -> dict:
-    """Cumulative counters: last applied batch id, URL occurrences
-    processed, duplicate occurrences emitted."""
-    return ingest.read_progress(state_dir, _DEFAULT_PROGRESS, spark)
-
 
 def compact_url_state(spark, state_dir: str, verdicts_path: str) -> None:
     """Collapse the per-batch seen-set and verdict scopes of a drained
@@ -57,20 +47,20 @@ def compact_url_state(spark, state_dir: str, verdicts_path: str) -> None:
     compact_scoped_state(spark, verdicts_path)
 
 
-def apply_url_batch(
-    batch_df: DataFrame,
-    batch_id: int,
+def url_step(
     state_dir: str,
     verdicts_path: str,
     *,
     id_col: str = "doc_id",
     text_col: str = "text",
-) -> None:
-    """Apply one micro-batch: probe canonical URLs against everything
-    seen in PRIOR batches plus this batch's own groups, write the
-    verdict rows and the batch's (canon, keep) groups into the batch's
-    own overwrite scopes, bump the watermark. Public so tests can
-    drive crash-replays directly."""
+):
+    """The probe-then-append step: probe a batch's canonical URLs
+    against everything seen in PRIOR batches plus the batch's own
+    groups, write the verdict rows and the batch's (canon, keep) groups
+    into the batch's own overwrite scopes. Seen-set scopes live under
+    ``{state_dir}/seen``; per-batch verdicts append to
+    ``verdicts_path``. Document ids must be unique across the stream.
+    Counters: ``urls_seen`` (URL occurrences), ``dups_emitted``."""
 
     def step(batch_df, label, progress):
         occ = url_occurrences(batch_df, id_col, text_col)
@@ -111,23 +101,4 @@ def apply_url_batch(
         )
         return {"urls_seen": n["rows"], "dups_emitted": n["dups"]}
 
-    ingest.apply(batch_df, batch_id, state_dir, _DEFAULT_PROGRESS, step)
-
-
-def streaming_url_dedup(
-    docs: DataFrame,
-    state_dir: str,
-    checkpoint_dir: str,
-    verdicts_path: str,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-):
-    """Start the probe-then-append loop over a streaming document
-    frame. Seen-set scopes live under ``{state_dir}/seen``; per-batch
-    verdicts append to ``verdicts_path``. Document ids must be unique
-    across the stream — a re-delivered batch is skipped whole via the
-    batch-id watermark."""
-    return ingest.start(docs, checkpoint_dir, lambda b, i: apply_url_batch(
-        b, i, state_dir, verdicts_path, id_col=id_col, text_col=text_col
-    ))
+    return step

@@ -35,11 +35,10 @@ loop is the web-archive instance of that shape.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from kinesis_vcr_spark.operators.webarchive import warc_records
-from kinesis_vcr_spark.streaming import ingest
 from kinesis_vcr_spark.streaming.htmlstream import (
     html_quality_verdicts,
     route_verdicts,
@@ -48,21 +47,6 @@ from kinesis_vcr_spark.streaming.htmlstream import (
 #: quarantine vocabulary beyond htmlstream's (which this module reuses
 #: for the extract/lang/quality stages)
 VERDICT_NON_DOCUMENT = "quarantined_non_document"
-
-_DEFAULT_PROGRESS = {
-    "last_batch_id": -1,
-    "records_seen": 0,
-    "docs_kept": 0,
-    "records_quarantined": 0,
-}
-
-
-def read_warc_progress(
-    state_dir: str, spark: SparkSession | None = None
-) -> dict:
-    """Cumulative counters: last applied batch id, WARC records seen,
-    documents kept, records quarantined."""
-    return ingest.read_progress(state_dir, _DEFAULT_PROGRESS, spark)
 
 
 def warc_clean_verdicts(
@@ -121,20 +105,25 @@ def warc_clean_verdicts(
     )
 
 
-def apply_warc_batch(
-    batch_df: DataFrame,
-    batch_id: int,
-    state_dir: str,
+def warc_step(
     out_dir: str,
     *,
     keep_lang: str = "en",
     quality_threshold: float = 0.6,
-) -> None:
-    """Apply one micro-batch of archive files: explode + score every
-    record, write kept docs to the clean scope and everything else
-    (with reason) to the quarantine scope — both ``ingest=b{id}``
-    overwrites — then bump the watermark. Public so tests can drive
-    crash-replays directly."""
+):
+    """The archives→records→extract→quarantine step: explode and score
+    every record of a batch of ``binaryFile`` archive rows, write kept
+    docs to ``{out_dir}/clean`` and everything else (with reason) to
+    ``{out_dir}/quarantine``, both in the batch's ``ingest=b{id}``
+    scope; the loop keeps no state beside the watermark. A streaming
+    file source needs the schema spelled out::
+
+        spark.readStream.format("binaryFile").schema(
+            "path string, modificationTime timestamp, "
+            "length long, content binary").load(landing_dir)
+
+    Counters: ``records_seen``, ``docs_kept``,
+    ``records_quarantined``."""
 
     def step(batch_df, label, progress):
         verdicts = warc_clean_verdicts(
@@ -153,7 +142,7 @@ def apply_warc_batch(
             "records_quarantined": n_quar,
         }
 
-    ingest.apply(batch_df, batch_id, state_dir, _DEFAULT_PROGRESS, step)
+    return step
 
 
 def compact_warc_state(spark, out_dir: str) -> None:
@@ -166,30 +155,3 @@ def compact_warc_state(spark, out_dir: str) -> None:
 
     compact_scoped_state(spark, f"{out_dir}/clean")
     compact_scoped_state(spark, f"{out_dir}/quarantine")
-
-
-def streaming_warc_ingest(
-    files: DataFrame,
-    state_dir: str,
-    checkpoint_dir: str,
-    out_dir: str,
-    *,
-    keep_lang: str = "en",
-    quality_threshold: float = 0.6,
-):
-    """Start the archives→records→extract→quarantine loop over a
-    streaming ``binaryFile`` frame watching a landing directory for
-    new archive files — note streaming file sources require the
-    schema spelled out::
-
-        spark.readStream.format("binaryFile").schema(
-            "path string, modificationTime timestamp, "
-            "length long, content binary").load(landing_dir)
-
-    Clean docs land under ``{out_dir}/clean``, every other record
-    under ``{out_dir}/quarantine``; a re-delivered batch is skipped
-    whole via the batch-id watermark."""
-    return ingest.start(files, checkpoint_dir, lambda b, i: apply_warc_batch(
-        b, i, state_dir, out_dir,
-        keep_lang=keep_lang, quality_threshold=quality_threshold,
-    ))

@@ -9,16 +9,15 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from kinesis_vcr_spark import statefs
+from kinesis_vcr_spark.streaming import ingest
 from kinesis_vcr_spark.streaming.htmlstream import (
     VERDICT_INVALID,
     VERDICT_KEPT,
     VERDICT_LANG,
     VERDICT_QUALITY,
-    apply_html_batch,
     compact_html_state,
     html_quality_verdicts,
-    read_html_progress,
-    streaming_html_ingest,
+    html_step,
 )
 
 GOOD = (
@@ -86,9 +85,9 @@ def test_prefix_parity_and_progress(spark, tmp_path):
     projection over everything streamed; counters are exact."""
     state, out = str(tmp_path / "state"), str(tmp_path / "out")
     for bid, rows in enumerate([CORPUS[:2], CORPUS[2:4], CORPUS[4:]]):
-        apply_html_batch(_docs(spark, rows), bid, state, out)
+        ingest.apply(_docs(spark, rows), bid, state, html_step(out))
     assert _landed(spark, out) == EXPECT
-    prog = read_html_progress(state)
+    prog = ingest.read_progress(state)
     assert prog == {
         "last_batch_id": 2, "docs_seen": 6,
         "docs_kept": 2, "docs_quarantined": 4,
@@ -105,9 +104,9 @@ def test_empty_quarantine_scope_reads_back(spark, tmp_path):
     """A batch with zero rejects still lands a readable (empty)
     quarantine scope — the union read must not break on it."""
     state, out = str(tmp_path / "state"), str(tmp_path / "out")
-    apply_html_batch(_docs(spark, [CORPUS[0]]), 0, state, out)
+    ingest.apply(_docs(spark, [CORPUS[0]]), 0, state, html_step(out))
     assert _landed(spark, out) == {1: VERDICT_KEPT}
-    assert read_html_progress(state)["docs_quarantined"] == 0
+    assert ingest.read_progress(state)["docs_quarantined"] == 0
 
 
 def test_watermark_and_crash_replay(spark, tmp_path):
@@ -115,26 +114,27 @@ def test_watermark_and_crash_replay(spark, tmp_path):
     half-applied batch (scopes landed, watermark not bumped) overwrites
     into identical bytes."""
     state, out = str(tmp_path / "state"), str(tmp_path / "out")
-    apply_html_batch(_docs(spark, CORPUS[:3]), 0, state, out)
+    ingest.apply(_docs(spark, CORPUS[:3]), 0, state, html_step(out))
     before = _landed(spark, out)
-    apply_html_batch(_docs(spark, CORPUS[:3]), 0, state, out)  # watermark
+    # watermark
+    ingest.apply(_docs(spark, CORPUS[:3]), 0, state, html_step(out))
     assert _landed(spark, out) == before
-    apply_html_batch(_docs(spark, CORPUS[3:]), 1, state, out)
+    ingest.apply(_docs(spark, CORPUS[3:]), 1, state, html_step(out))
     after = _landed(spark, out)
     # crash between writes: rewind the watermark through statefs (a
     # plain open() hand-edit would strand the .crc sidecar)
     prog = statefs.read_json_state(spark, f"{state}/progress.json", {})
     prog["last_batch_id"] = 0
     statefs.write_json_state(spark, f"{state}/progress.json", prog)
-    apply_html_batch(_docs(spark, CORPUS[3:]), 1, state, out)  # replay
+    ingest.apply(_docs(spark, CORPUS[3:]), 1, state, html_step(out))  # replay
     assert _landed(spark, out) == after
-    assert read_html_progress(state)["last_batch_id"] == 1
+    assert ingest.read_progress(state)["last_batch_id"] == 1
 
 
 def test_compaction_preserves_outputs(spark, tmp_path):
     state, out = str(tmp_path / "state"), str(tmp_path / "out")
     for bid, rows in enumerate([CORPUS[:3], CORPUS[3:]]):
-        apply_html_batch(_docs(spark, rows), bid, state, out)
+        ingest.apply(_docs(spark, rows), bid, state, html_step(out))
     before = _landed(spark, out)
     compact_html_state(spark, out)
     assert _landed(spark, out) == before
@@ -145,13 +145,13 @@ def test_streaming_end_to_end(spark, tmp_path):
     src = str(tmp_path / "src")
     _docs(spark, CORPUS).coalesce(1).write.parquet(src)
     stream = spark.readStream.schema("doc_id long, html string").parquet(src)
-    q = streaming_html_ingest(
-        stream, str(tmp_path / "state"), str(tmp_path / "ckpt"),
-        str(tmp_path / "out"),
+    q = ingest.start(
+        stream, str(tmp_path / "ckpt"), str(tmp_path / "state"),
+        html_step(str(tmp_path / "out")),
     )
     q.awaitTermination(300)
     assert _landed(spark, str(tmp_path / "out")) == EXPECT
-    prog = read_html_progress(str(tmp_path / "state"))
+    prog = ingest.read_progress(str(tmp_path / "state"))
     assert prog["docs_seen"] == 6 and prog["docs_kept"] == 2
 
 

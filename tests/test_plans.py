@@ -442,57 +442,6 @@ def test_span_probe_stored_side_never_shuffled(spark, tmp_path):
     assert len(scan_sections) >= 2  # batch side is an in-memory relation
 
 
-def test_span_probe_short_batch_prunes_gb_buckets(spark, tmp_path):
-    """The gram index's OPT-IN gb directory layout (r10): a SHORT
-    probe (fewer distinct grams than buckets) pushes a PartitionFilter
-    on gb, and the pruned probe result is exactly the batch-restricted
-    duplicated_spans answer. Day-sized probes cannot prune (every doc
-    longer than ~L+n_buckets chars covers all buckets — documented in
-    operators/spandedup.py, which is why flat scopes are the default)
-    — this pin is the SHORT-probe contract of the opt-in layout."""
-    from kinesis_vcr_spark.operators.spandedup import (
-        DEFAULT_GRAM_BUCKETS,
-        append_gram_index,
-        duplicated_spans,
-        span_probe_index,
-    )
-
-    L = 20
-    corpus = spark.createDataFrame(
-        [(i, ("shared boilerplate sentence here " * 3) + str(i))
-         for i in range(8)],
-        "doc_id long, text string",
-    )
-    # 3 grams only: L+2 chars of the shared boilerplate prefix
-    tiny = spark.createDataFrame(
-        [(100, "shared boilerplate sen")], "doc_id long, text string"
-    )
-    idx = str(tmp_path / "gramidx")
-    append_gram_index(
-        corpus, idx, min_len=L, ingest_label="_base",
-        n_buckets=DEFAULT_GRAM_BUCKETS,
-    )
-    # the second append must follow the STAMPED layout (arg ignored)
-    append_gram_index(tiny, idx, min_len=L, ingest_label="tiny")
-    probe = span_probe_index(tiny, idx, min_len=L)
-    plan = _formatted_plan(probe)
-    pf_lines = [
-        ln for ln in plan.splitlines() if "PartitionFilters" in ln
-    ]
-    assert any("gb#" in ln and " IN " in ln for ln in pf_lines), plan
-    got = {(r["doc_id"], r["span_start"], r["span_end"])
-           for r in probe.collect()}
-    expected = {
-        (r["doc_id"], r["span_start"], r["span_end"])
-        for r in duplicated_spans(
-            corpus.unionByName(tiny), min_len=L
-        ).collect()
-        if r["doc_id"] == 100
-    }
-    assert expected, "fixture degenerated: tiny doc has no dup span"
-    assert got == expected
-
-
 def test_span_probe_conf_robustness(spark, tmp_path):
     """The probe's stored side stays exchange-free and results stay
     identical at shuffle-partition confs far from the writer's (the

@@ -8,8 +8,9 @@ import fails here: wire it into a query, the CLI or the bench, or delete
 it together with its tests.
 
 A module reached that way can still carry defs only tests call, so a
-second walk goes one level down: every top-level def and class under
-``operators/`` must be named by shipped code outside its own body.
+second walk goes one level down: every top-level def, class and
+assigned constant under ``operators/`` must be named by shipped code
+outside its own body.
 """
 
 from __future__ import annotations
@@ -21,6 +22,7 @@ from kinesis_vcr_spark.queries import _MODULE_ORDER
 
 ROOT = Path(__file__).resolve().parents[1]
 PKG = "kinesis_vcr_spark"
+OPS = f"{PKG}.operators."
 ENTRIES = ["__spark_entry__", "bench", f"{PKG}.__main__"] + [
     f"{PKG}.queries.{m}" for m in _MODULE_ORDER
 ]
@@ -105,6 +107,9 @@ EXEMPT_DEFS = {
         "reference its single-pass twin is tested against",
     f"{PKG}.operators.pq.pq_decode":
         "reference the quantization error is measured against",
+    f"{PKG}.operators.multimodal.MEDIA_SCHEMA":
+        "the input schema the media operators document; tests build "
+        "frames with it",
 }
 
 
@@ -154,9 +159,27 @@ def _scan(path: Path):
             body = [n for n in ast.iter_child_nodes(node)
                     if n not in node.decorator_list + getattr(node, "bases", [])]
             defs[f"{mod}.{node.name}"] = _refs(body, bind, mod)
+        elif mod.startswith(OPS) and (names := _assigned(node)):
+            # an operator module's constant counts like a def: its value
+            # is live only if shipped code names the constant
+            refs = _refs([node.value], bind, mod) if node.value else set()
+            defs |= {f"{mod}.{n}": refs for n in names}
         else:
             top.append(node)
     return mod, defs, _refs(top, bind, mod)
+
+
+def _assigned(node: ast.AST) -> list[str]:
+    """Plain names a module-level assignment binds (dunders aside)."""
+    if isinstance(node, ast.Assign):
+        targets = node.targets
+    elif isinstance(node, ast.AnnAssign):
+        targets = [node.target]
+    else:
+        return []
+    if not all(isinstance(t, ast.Name) for t in targets):
+        return []
+    return [t.id for t in targets if not t.id.startswith("__")]
 
 
 def _unreached_defs() -> list[str]:
@@ -180,8 +203,7 @@ def _unreached_defs() -> list[str]:
         if name in body and name not in live:
             live.add(name)
             todo += body[name]
-    ops = f"{PKG}.operators."
-    return sorted(d for d in body if d.startswith(ops) and d not in live)
+    return sorted(d for d in body if d.startswith(OPS) and d not in live)
 
 
 def test_every_operator_def_is_reachable():

@@ -9,11 +9,10 @@ import json
 from pyspark.sql import functions as F
 
 from kinesis_vcr_spark.operators.searchindex import search_index_topk
+from kinesis_vcr_spark.streaming import ingest
 from kinesis_vcr_spark.streaming.searchstream import (
-    apply_search_batch,
     compact_search_state,
-    read_search_progress,
-    streaming_search_ingest,
+    search_step,
 )
 from kinesis_vcr_spark.tables import load_table
 from tests.test_searchindex import TERMS, _bm25_over, _rows
@@ -36,16 +35,17 @@ def test_streaming_prefix_parity_and_compaction(spark, sf_dir, tmp_path):
     state = str(tmp_path / "state")
     ckpt = str(tmp_path / "ckpt")
     results = str(tmp_path / "results")
+    step = search_step(state, results, TERMS, k=20)
 
     stream = (
         spark.readStream.schema("doc_id long, text string")
         .option("maxFilesPerTrigger", 1)
         .parquet(src + "/*")
     )
-    q = streaming_search_ingest(stream, state, ckpt, results, TERMS, k=20)
+    q = ingest.start(stream, ckpt, state, step)
     q.awaitTermination(600)
 
-    progress = read_search_progress(state)
+    progress = ingest.read_progress(state)
     assert progress["docs_indexed"] == docs.count()
     assert progress["last_batch_id"] == 2
     assert progress["snapshots"] == 3
@@ -83,9 +83,9 @@ def test_streaming_prefix_parity_and_compaction(spark, sf_dir, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src + "/*")
     )
-    q2 = streaming_search_ingest(stream2, state, ckpt, results, TERMS, k=20)
+    q2 = ingest.start(stream2, ckpt, state, step)
     q2.awaitTermination(600)
-    assert read_search_progress(state) == progress
+    assert ingest.read_progress(state) == progress
 
     # compaction: the full-index probe is identical before/after, and
     # the snapshot history survives (scope column collapsed)
@@ -103,11 +103,12 @@ def test_crash_replay_is_idempotent(spark, sf_dir, tmp_path):
     b1 = docs.where(F.col("doc_id") % 2 == 1)
     state = str(tmp_path / "state")
     results = str(tmp_path / "results")
+    step = search_step(state, results, TERMS)
 
-    apply_search_batch(b0, 0, state, results, TERMS)
-    apply_search_batch(b1, 1, state, results, TERMS)
+    ingest.apply(b0, 0, state, step)
+    ingest.apply(b1, 1, state, step)
     snap1 = _snap_rows(spark.read.parquet(f"{results}/ingest=b1"))
-    progress1 = read_search_progress(state)
+    progress1 = ingest.read_progress(state)
     n_posts = spark.read.parquet(f"{state}/index/postings").count()
 
     # crash-replay batch 1: all writes done, progress bump lost
@@ -119,12 +120,12 @@ def test_crash_replay_is_idempotent(spark, sf_dir, tmp_path):
     saved["docs_indexed"] -= b1.count()
     saved["snapshots"] -= 1
     statefs.write_json_state(spark, p, saved)
-    apply_search_batch(b1, 1, state, results, TERMS)
+    ingest.apply(b1, 1, state, step)
 
     assert spark.read.parquet(f"{state}/index/postings").count() == n_posts
     assert _snap_rows(spark.read.parquet(f"{results}/ingest=b1")) == snap1
-    assert read_search_progress(state) == progress1
+    assert ingest.read_progress(state) == progress1
 
     # fully-committed replay (watermark hit): a plain no-op
-    apply_search_batch(b1, 1, state, results, TERMS)
-    assert read_search_progress(state) == progress1
+    ingest.apply(b1, 1, state, step)
+    assert ingest.read_progress(state) == progress1

@@ -1,6 +1,6 @@
 """streaming/seasonalstream.py — streamed seasonal scores == batch
 seasonal_scores over the ingested union; out-of-order merge; restart
-idempotence; state compaction."""
+and crash-replay idempotence; state compaction."""
 
 from __future__ import annotations
 
@@ -10,12 +10,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from kinesis_vcr_spark.operators.seasonal import seasonal_scores
+from kinesis_vcr_spark.streaming import ingest
 from kinesis_vcr_spark.streaming.seasonalstream import (
     compact_seasonal_state,
     merged_daily,
     read_current_scores,
-    read_seasonal_progress,
-    streaming_seasonal,
+    seasonal_step,
 )
 
 KEYS = ["event_type"]
@@ -72,7 +72,9 @@ def _run(spark, src, state, ckpt, scores):
         .option("maxFilesPerTrigger", 1)
         .parquet(src + "/*")
     )
-    q = streaming_seasonal(stream, KEYS, state, ckpt, scores)
+    q = ingest.start(
+        stream, ckpt, state, seasonal_step(state, scores, key_cols=KEYS)
+    )
     q.awaitTermination(600)
 
 
@@ -86,7 +88,7 @@ def test_streamed_snapshot_equals_batch(spark, events, tmp_path):
     got = _rows(read_current_scores(spark, scores))
     want = _rows(seasonal_scores(events, KEYS))
     assert got == want
-    prog = read_seasonal_progress(state, spark)
+    prog = ingest.read_progress(state, spark)
     assert prog["events_ingested"] == events.count()
     assert prog["last_batch_id"] >= 2
 
@@ -114,12 +116,27 @@ def test_restart_is_idempotent(spark, events, tmp_path):
     _write_batches(events, src, [(0, 14), (14, 31)])
     _run(spark, src, state, ckpt, scores)
     before = _rows(read_current_scores(spark, scores))
-    prog_before = read_seasonal_progress(state, spark)
+    prog_before = ingest.read_progress(state, spark)
 
     # restart over the same checkpoint: no new files -> no new scopes
     _run(spark, src, state, ckpt, scores)
     assert _rows(read_current_scores(spark, scores)) == before
-    assert read_seasonal_progress(state, spark) == prog_before
+    assert ingest.read_progress(state, spark) == prog_before
+
+
+def test_crash_replay_is_idempotent(
+    spark, events, tmp_path, replays_identically
+):
+    """A committed batch replayed and a half-applied one re-run both
+    land the uncrashed run's delta scopes, snapshots and progress."""
+    state = f"{tmp_path}/state"
+    rows, progress = replays_identically(
+        tmp_path, seasonal_step(state, f"{tmp_path}/scores", key_cols=KEYS),
+        events.where(F.dayofmonth("ts") <= 14),
+        events.where(F.dayofmonth("ts") > 14),
+    )
+    assert "scores/ingest=b1" in rows
+    assert progress["events_ingested"] == events.count()
 
 
 def test_intermediate_snapshot_is_prefix_answer(spark, events, tmp_path):

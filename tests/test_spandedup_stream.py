@@ -14,11 +14,10 @@ from kinesis_vcr_spark.operators.spandedup import (
     duplicated_spans,
     span_probe_index,
 )
+from kinesis_vcr_spark.streaming import ingest
 from kinesis_vcr_spark.streaming.spanstream import (
-    apply_span_batch,
     compact_span_state,
-    read_span_progress,
-    streaming_span_dedup,
+    span_step,
 )
 from kinesis_vcr_spark.tables import load_table
 
@@ -53,16 +52,17 @@ def test_streaming_prefix_parity_and_compaction(spark, sf_dir, tmp_path):
     state = str(tmp_path / "state")
     ckpt = str(tmp_path / "ckpt")
     spans_path = str(tmp_path / "spans")
+    step = span_step(state, spans_path, min_len=L)
 
     stream = (
         spark.readStream.schema("doc_id long, text string")
         .option("maxFilesPerTrigger", 1)
         .parquet(src + "/*")
     )
-    q = streaming_span_dedup(stream, state, ckpt, spans_path, min_len=L)
+    q = ingest.start(stream, ckpt, state, step)
     q.awaitTermination(600)
 
-    progress = read_span_progress(state)
+    progress = ingest.read_progress(state)
     assert progress["docs_indexed"] == docs.count()
     assert progress["last_batch_id"] == 2
 
@@ -107,9 +107,9 @@ def test_streaming_prefix_parity_and_compaction(spark, sf_dir, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src + "/*")
     )
-    q2 = streaming_span_dedup(stream2, state, ckpt, spans_path, min_len=L)
+    q2 = ingest.start(stream2, ckpt, state, step)
     q2.awaitTermination(600)
-    assert read_span_progress(state)["spans_emitted"] == total
+    assert ingest.read_progress(state)["spans_emitted"] == total
 
     # compaction: a full-corpus probe is identical before/after
     before = _spans(span_probe_index(docs, f"{state}/index", min_len=L))
@@ -125,11 +125,12 @@ def test_crash_replay_is_idempotent(spark, sf_dir, tmp_path):
     b1 = docs.where(F.col("doc_id") % 2 == 1)
     state = str(tmp_path / "state")
     spans_path = str(tmp_path / "spans")
+    step = span_step(state, spans_path, min_len=L)
 
-    apply_span_batch(b0, 0, state, spans_path, min_len=L)
-    apply_span_batch(b1, 1, state, spans_path, min_len=L)
+    ingest.apply(b0, 0, state, step)
+    ingest.apply(b1, 1, state, step)
     spans1 = _spans(spark.read.parquet(f"{spans_path}/ingest=b1"))
-    progress1 = read_span_progress(state)
+    progress1 = ingest.read_progress(state)
     idx_rows = spark.read.parquet(f"{state}/index/grams").count()
 
     # crash-replay batch 1: progress bump lost, all writes done
@@ -141,11 +142,11 @@ def test_crash_replay_is_idempotent(spark, sf_dir, tmp_path):
     saved["spans_emitted"] -= len(spans1)
     saved["docs_indexed"] -= b1.count()
     statefs.write_json_state(spark, p, saved)
-    apply_span_batch(b1, 1, state, spans_path, min_len=L)
+    ingest.apply(b1, 1, state, step)
 
     assert spark.read.parquet(f"{state}/index/grams").count() == idx_rows
     assert _spans(spark.read.parquet(f"{spans_path}/ingest=b1")) == spans1
-    assert read_span_progress(state) == progress1
+    assert ingest.read_progress(state) == progress1
 
 
 def test_semantic_gram_compaction_shrinks_rows_probe_identical(

@@ -25,15 +25,9 @@ from kinesis_vcr_spark.operators.triangles import (
     _simple_undirected,
     triangles,
 )
-from kinesis_vcr_spark.streaming.graph import (
-    compact_edge_state,
-    read_triangle_count,
-    streaming_triangle_count,
-)
-from kinesis_vcr_spark.streaming.neardup import (
-    read_neardup_progress,
-    streaming_near_dup,
-)
+from kinesis_vcr_spark.streaming import ingest
+from kinesis_vcr_spark.streaming.graph import compact_edge_state, triangle_step
+from kinesis_vcr_spark.streaming.neardup import neardup_step
 
 # ---------------------------------------------------------------------------
 # rigs
@@ -54,7 +48,9 @@ def _run_triangles(spark, src, state, ckpt):
         .option("maxFilesPerTrigger", 1)
         .parquet(src + "/*")
     )
-    q = streaming_triangle_count(stream, "a", "b", state, ckpt)
+    q = ingest.start(
+        stream, ckpt, state, triangle_step(state, src_col="a", dst_col="b")
+    )
     q.awaitTermination(300)
 
 
@@ -88,10 +84,10 @@ def _run_neardup(spark, src, state, ckpt, pairs):
         .option("maxFilesPerTrigger", 1)
         .parquet(src + "/*")
     )
-    q = streaming_near_dup(
-        stream, "doc_id", "text", state, ckpt, pairs,
+    q = ingest.start(stream, ckpt, state, neardup_step(
+        state, pairs, id_col="doc_id", text_col="text",
         threshold=THRESHOLD, band_member_cap=None, **KW,
-    )
+    ))
     q.awaitTermination(300)
 
 
@@ -118,7 +114,7 @@ def test_triangle_replay_after_partial_edge_commit(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     _write_chunk(spark, [(1, 2), (2, 3)], f"{src}/f0.parquet")
     _run_triangles(spark, src, state, ckpt)
-    assert read_triangle_count(state) == 0
+    assert ingest.read_progress(state)["triangles"] == 0
 
     # simulate the crashed batch 1: its edges landed, progress did not
     batch1 = [(1, 3), (3, 4)]
@@ -132,7 +128,7 @@ def test_triangle_replay_after_partial_edge_commit(spark, tmp_path):
         _edges(spark, [(1, 2), (2, 3)] + batch1), "a", "b"
     ).count()
     assert expected == 1
-    assert read_triangle_count(state) == expected
+    assert ingest.read_progress(state)["triangles"] == expected
 
 
 def test_neardup_replay_after_partial_index_append(spark, tmp_path):
@@ -148,7 +144,7 @@ def test_neardup_replay_after_partial_index_append(spark, tmp_path):
 
     _docs(spark, DOCS_B0).coalesce(1).write.parquet(f"{src}/f0.parquet")
     _run_neardup(spark, src, state, ckpt, pairs)
-    assert read_neardup_progress(state)["last_batch_id"] == 0
+    assert ingest.read_progress(state)["last_batch_id"] == 0
 
     # simulate the crashed batch 1: pairs scope + index append landed
     # (some with garbage rows to prove the scope overwrite), progress
@@ -175,7 +171,7 @@ def test_neardup_replay_after_partial_index_append(spark, tmp_path):
     assert expected, "fixture produced no cross-batch near-dup pairs"
     got = sorted(_pairs_rows(spark, pairs))
     assert got == expected  # exact multiset: no dup rows, no garbage
-    assert read_neardup_progress(state)["pairs_emitted"] == len(expected)
+    assert ingest.read_progress(state)["pairs_emitted"] == len(expected)
 
 
 # ---------------------------------------------------------------------------
@@ -196,7 +192,7 @@ def test_compact_edge_state_preserves_stream(spark, tmp_path):
     before = {
         (r.a, r.b) for r in spark.read.parquet(f"{state}/edges").collect()
     }
-    count_before = read_triangle_count(state)
+    count_before = ingest.read_progress(state)["triangles"]
     assert count_before == 1
 
     compact_edge_state(spark, state)
@@ -208,7 +204,7 @@ def test_compact_edge_state_preserves_stream(spark, tmp_path):
         (r.a, r.b) for r in spark.read.parquet(f"{state}/edges").collect()
     }
     assert after == before
-    assert read_triangle_count(state) == count_before
+    assert ingest.read_progress(state)["triangles"] == count_before
 
     # the stream keeps going against the compacted state
     _write_chunk(spark, [(2, 4)], f"{src}/f2.parquet")
@@ -216,7 +212,7 @@ def test_compact_edge_state_preserves_stream(spark, tmp_path):
     expected = triangles(
         _edges(spark, [(1, 2), (2, 3), (1, 3), (3, 4), (2, 4)]), "a", "b"
     ).count()
-    assert read_triangle_count(state) == expected
+    assert ingest.read_progress(state)["triangles"] == expected
 
 
 def test_compact_near_dup_index_probe_identical(spark, tmp_path):
@@ -312,12 +308,12 @@ def test_compact_neardup_state_preserves_stream(spark, tmp_path):
     b1.coalesce(1).write.parquet(f"{src}/f1.parquet")
     _run_neardup(spark, src, state, ckpt, pairs)
     before = sorted(_pairs_rows(spark, pairs))
-    progress_before = read_neardup_progress(state)
+    progress_before = ingest.read_progress(state)
     assert before and progress_before["pairs_emitted"] == len(before)
 
     compact_neardup_state(spark, state, pairs)
     assert sorted(_pairs_rows(spark, pairs)) == before
-    assert read_neardup_progress(state) == progress_before
+    assert ingest.read_progress(state) == progress_before
 
     # stream a late twin batch against the compacted state
     late = _docs(spark, [(31, _BASE_B.replace("inside", "indoors"))])

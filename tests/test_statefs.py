@@ -53,10 +53,8 @@ def test_streaming_loop_over_file_uri_state(spark, tmp_path):
     """A full ingest loop (URL dedup) with its state root and verdict
     sink addressed by ``file://`` URIs — scope discovery, probe
     exclusion, and the watermark all through the Hadoop FS layer."""
-    from kinesis_vcr_spark.streaming.urlstream import (
-        apply_url_batch,
-        read_url_progress,
-    )
+    from kinesis_vcr_spark.streaming import ingest
+    from kinesis_vcr_spark.streaming.urlstream import url_step
 
     docs = [
         (1, "see http://A.com/x?utm_source=t and http://b.com/y"),
@@ -68,9 +66,10 @@ def test_streaming_loop_over_file_uri_state(spark, tmp_path):
     )
     state = f"file://{tmp_path}/state"
     out = f"file://{tmp_path}/verdicts"
-    apply_url_batch(frame.where("doc_id <= 2"), 0, state, out)
-    apply_url_batch(frame.where("doc_id = 3"), 1, state, out)
-    progress = read_url_progress(state)
+    step = url_step(state, out)
+    ingest.apply(frame.where("doc_id <= 2"), 0, state, step)
+    ingest.apply(frame.where("doc_id = 3"), 1, state, step)
+    progress = ingest.read_progress(state)
     assert progress["last_batch_id"] == 1
     rows = {
         (r.doc_id, r.canon_url): (r.keep_doc_id, r.is_dup)
@@ -85,7 +84,7 @@ def test_streaming_loop_over_file_uri_state(spark, tmp_path):
     statefs.write_json_state(
         spark, f"{state}/progress.json", {**progress, "last_batch_id": 0}
     )
-    apply_url_batch(frame.where("doc_id = 3"), 1, state, out)
+    ingest.apply(frame.where("doc_id = 3"), 1, state, step)
     rows2 = {
         (r.doc_id, r.canon_url): (r.keep_doc_id, r.is_dup)
         for r in spark.read.parquet(

@@ -13,12 +13,8 @@ from kinesis_vcr_spark.operators.ivf import (
     ivf_topk_indexed,
     load_ivf_index,
 )
-from kinesis_vcr_spark.streaming.annstream import (
-    apply_ann_batch,
-    compact_ann_state,
-    read_ann_progress,
-    streaming_ann_ingest,
-)
+from kinesis_vcr_spark.streaming import ingest
+from kinesis_vcr_spark.streaming.annstream import ann_step, compact_ann_state
 from kinesis_vcr_spark.tables import load_table
 
 KW = dict(k=5, nprobe=3, k_centroids=8)
@@ -53,10 +49,10 @@ def test_streaming_ann_matches_prefix_probes(spark, sf_dir, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src + "/*")
     )
-    q = streaming_ann_ingest(stream, state, ckpt, results, **KW)
+    q = ingest.start(stream, ckpt, state, ann_step(state, results, **KW))
     q.awaitTermination(600)
 
-    progress = read_ann_progress(state)
+    progress = ingest.read_progress(state)
     assert progress["vecs_indexed"] == vecs.count()
     assert progress["last_batch_id"] == 2
 
@@ -106,9 +102,9 @@ def test_streaming_ann_matches_prefix_probes(spark, sf_dir, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src + "/*")
     )
-    q2 = streaming_ann_ingest(stream2, state, ckpt, results, **KW)
+    q2 = ingest.start(stream2, ckpt, state, ann_step(state, results, **KW))
     q2.awaitTermination(600)
-    assert read_ann_progress(state)["results_emitted"] == total_emitted
+    assert ingest.read_progress(state)["results_emitted"] == total_emitted
 
     # compaction: probe results identical before/after the scope swap
     probe_q = vecs.limit(20).select(
@@ -148,12 +144,12 @@ def test_crash_replay_is_idempotent(spark, sf_dir, tmp_path):
     state = str(tmp_path / "state")
     results = str(tmp_path / "results")
 
-    apply_ann_batch(b0, 0, state, results, **KW)
-    apply_ann_batch(b1, 1, state, results, **KW)
+    ingest.apply(b0, 0, state, ann_step(state, results, **KW))
+    ingest.apply(b1, 1, state, ann_step(state, results, **KW))
     idx_count = spark.read.parquet(f"{state}/index/lists").count()
     assert idx_count == vecs.count()
     res1 = _probe_rows(spark.read.parquet(f"{results}/ingest=b1"))
-    progress1 = read_ann_progress(state)
+    progress1 = ingest.read_progress(state)
 
     # crash-replay batch 1: progress bump lost, everything else done
     from kinesis_vcr_spark import statefs
@@ -164,11 +160,11 @@ def test_crash_replay_is_idempotent(spark, sf_dir, tmp_path):
     saved["results_emitted"] -= len(res1)
     saved["vecs_indexed"] -= b1.count()
     statefs.write_json_state(spark, p, saved)
-    apply_ann_batch(b1, 1, state, results, **KW)
+    ingest.apply(b1, 1, state, ann_step(state, results, **KW))
 
     assert spark.read.parquet(f"{state}/index/lists").count() == idx_count
     assert _probe_rows(spark.read.parquet(f"{results}/ingest=b1")) == res1
-    assert read_ann_progress(state) == progress1
+    assert ingest.read_progress(state) == progress1
 
     # crash-replay batch 0 (first batch): must REBUILD, not append a
     # second copy of the batch under a b0 scope
@@ -176,7 +172,7 @@ def test_crash_replay_is_idempotent(spark, sf_dir, tmp_path):
         spark, p,
         {"last_batch_id": -1, "results_emitted": 0, "vecs_indexed": 0},
     )
-    apply_ann_batch(b0, 0, state, results, **KW)
+    ingest.apply(b0, 0, state, ann_step(state, results, **KW))
     assert (
         spark.read.parquet(f"{state}/index/lists").count() == b0.count()
     )

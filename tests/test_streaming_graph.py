@@ -1,6 +1,7 @@
 """Streaming incremental triangle counting (streaming/graph.py):
-batch/stream parity, multi-edge-per-triangle exactness, restart
-idempotence."""
+batch/stream parity, multi-edge-per-triangle exactness, restart and
+crash-replay idempotence; the re-run-per-window snapshot step with
+components, PageRank and k-core as its ``batch_fn``."""
 
 from __future__ import annotations
 
@@ -9,10 +10,11 @@ import json
 from pyspark.sql import Row
 
 from kinesis_vcr_spark.operators.triangles import triangles
+from kinesis_vcr_spark.streaming import ingest
 from kinesis_vcr_spark.streaming.graph import (
-    read_triangle_count,
-    streaming_triangle_count,
+    snapshot_step,
     triangle_delta,
+    triangle_step,
 )
 
 
@@ -74,16 +76,24 @@ def _batch_count(spark, pairs):
 
 
 def _run_stream(spark, src_dir, state_dir, ckpt_dir):
-    stream = (
-        spark.readStream.schema("a long, b long")
-        .option("maxFilesPerTrigger", 1)  # force multiple micro-batches
-        .parquet(src_dir + "/*")
-    )
-    q = streaming_triangle_count(
-        stream, "a", "b", state_dir, ckpt_dir
+    q = ingest.start(
+        _stream(spark, src_dir), ckpt_dir, state_dir,
+        triangle_step(state_dir, src_col="a", dst_col="b"),
     )
     q.awaitTermination(300)
     return q
+
+
+def _count(state_dir):
+    return ingest.read_progress(state_dir)["triangles"]
+
+
+def _stream(spark, src):
+    return (
+        spark.readStream.schema("a long, b long")
+        .option("maxFilesPerTrigger", 1)  # force multiple micro-batches
+        .parquet(src + "/*")
+    )
 
 
 def test_stream_matches_batch_and_survives_restart(spark, tmp_path):
@@ -100,16 +110,16 @@ def test_stream_matches_batch_and_survives_restart(spark, tmp_path):
     _run_stream(spark, src, state, ckpt)
     expected = _batch_count(spark, GRAPH)
     assert expected == 11  # C(5,3)·1 + disjoint triangle
-    assert read_triangle_count(state) == expected
+    assert _count(state) == expected
 
     # restart with no new data: counts must not move (replay-safe)
     _run_stream(spark, src, state, ckpt)
-    assert read_triangle_count(state) == expected
+    assert _count(state) == expected
 
     # late file closes new triangles against months-old edges
     _write_chunk(spark, [(10, 11), (4, 11)], f"{src}/f9.parquet")
     _run_stream(spark, src, state, ckpt)
-    assert read_triangle_count(state) == _batch_count(
+    assert _count(state) == _batch_count(
         spark, GRAPH + [(4, 11)]
     )
 
@@ -125,6 +135,19 @@ def test_progress_file_is_json_with_batch_id(spark, tmp_path):
     assert progress["last_batch_id"] >= 0
 
 
+def test_triangle_crash_replay_is_idempotent(
+    spark, tmp_path, replays_identically
+):
+    """A committed batch replayed and a half-applied one re-run both
+    land the uncrashed run's edge scopes and count: the replay must not
+    see its own edges as old (fresh=∅ would lose its triangles)."""
+    _, progress = replays_identically(
+        tmp_path, triangle_step(f"{tmp_path}/state", src_col="a", dst_col="b"),
+        _edges(spark, GRAPH[:6]), _edges(spark, GRAPH[6:] + [(2, 1)]),
+    )
+    assert progress["triangles"] == _batch_count(spark, GRAPH)
+
+
 def test_streaming_components_snapshot_matches_batch(spark, tmp_path):
     """Re-run-per-window components: after each drain, labels_path is
     the batch labeling of every edge ever streamed; merges across
@@ -132,9 +155,6 @@ def test_streaming_components_snapshot_matches_batch(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from kinesis_vcr_spark.operators.components import connected_components
-    from kinesis_vcr_spark.streaming.graph import (
-        streaming_connected_components,
-    )
 
     src = str(tmp_path / "src")
     state = str(tmp_path / "state")
@@ -146,13 +166,12 @@ def test_streaming_components_snapshot_matches_batch(spark, tmp_path):
     _write_chunk(spark, [(20, 21), (3, 1)], f"{src}/f1.parquet")
 
     def run():
-        stream = (
-            spark.readStream.schema("a long, b long")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src + "/*")
-        )
-        q = streaming_connected_components(
-            stream, "a", "b", state, ckpt, labels
+        q = ingest.start(
+            _stream(spark, src), ckpt, state,
+            snapshot_step(
+                state, labels, src_col="a", dst_col="b",
+                batch_fn=lambda e: connected_components(e, "a", "b"),
+            ),
         )
         q.awaitTermination(300)
 
@@ -192,19 +211,24 @@ def test_streaming_pagerank_snapshot_matches_batch(spark, tmp_path):
 
     from kinesis_vcr_spark.operators.pagerank import pagerank_micro
     from kinesis_vcr_spark.operators.triangles import _simple_undirected
-    from kinesis_vcr_spark.streaming.graph import streaming_pagerank
+
+    def undirected_pagerank(e):
+        both = e.unionByName(
+            e.select(F.col("b").alias("a"), F.col("a").alias("b"))
+        )
+        return pagerank_micro(both, "a", "b", iterations=10)
 
     src = str(tmp_path / "src")
     _write_chunk(spark, GRAPH[:6], f"{src}/f0.parquet")
     _write_chunk(spark, GRAPH[6:] + [(2, 1)], f"{src}/f1.parquet")
 
-    q = streaming_pagerank(
-        spark.readStream.schema("a long, b long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src + "/*"),
-        "a", "b",
-        str(tmp_path / "state"), str(tmp_path / "ckpt"),
-        str(tmp_path / "ranks"),
+    state = str(tmp_path / "state")
+    q = ingest.start(
+        _stream(spark, src), str(tmp_path / "ckpt"), state,
+        snapshot_step(
+            state, str(tmp_path / "ranks"), src_col="a", dst_col="b",
+            batch_fn=undirected_pagerank,
+        ),
     )
     q.awaitTermination(300)
 
@@ -213,12 +237,9 @@ def test_streaming_pagerank_snapshot_matches_batch(spark, tmp_path):
         for r in spark.read.parquet(str(tmp_path / "ranks")).collect()
     }
     canon = _simple_undirected(_edges(spark, GRAPH), "a", "b")
-    both = canon.unionByName(
-        canon.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    )
     expected = {
         (r.node, r.rank_micro)
-        for r in pagerank_micro(both, "a", "b", iterations=10).collect()
+        for r in undirected_pagerank(canon).collect()
     }
     assert got == expected
 
@@ -228,20 +249,19 @@ def test_streaming_kcore_snapshot_matches_batch(spark, tmp_path):
     a drain, nodes_path equals batch kcore_nodes over every edge ever
     streamed."""
     from kinesis_vcr_spark.operators.kcore import kcore_nodes
-    from kinesis_vcr_spark.streaming.graph import streaming_kcore
 
     src = str(tmp_path / "src")
     # K5 arrives in two batches plus a pendant tail that peels away
     _write_chunk(spark, GRAPH[:6], f"{src}/f0.parquet")
     _write_chunk(spark, GRAPH[6:], f"{src}/f1.parquet")
 
-    q = streaming_kcore(
-        spark.readStream.schema("a long, b long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src + "/*"),
-        "a", "b",
-        str(tmp_path / "state"), str(tmp_path / "ckpt"),
-        str(tmp_path / "nodes"), k=3,
+    state = str(tmp_path / "state")
+    q = ingest.start(
+        _stream(spark, src), str(tmp_path / "ckpt"), state,
+        snapshot_step(
+            state, str(tmp_path / "nodes"), src_col="a", dst_col="b",
+            batch_fn=lambda e: kcore_nodes(e, "a", "b", 3),
+        ),
     )
     q.awaitTermination(300)
 

@@ -1,16 +1,15 @@
 """Streaming near-dup against the persisted index
 (streaming/neardup.py): union of per-batch emissions == full-corpus
-batch dedup, restart idempotence, progress accounting."""
+batch dedup, restart idempotence, crash-replay idempotence, progress
+accounting."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from kinesis_vcr_spark.operators.dedup import near_dup_pairs_minhash
-from kinesis_vcr_spark.streaming.neardup import (
-    read_neardup_progress,
-    streaming_near_dup,
-)
+from kinesis_vcr_spark.streaming import ingest
+from kinesis_vcr_spark.streaming.neardup import neardup_step
 from kinesis_vcr_spark.tables import load_table
 
 KW = dict(shingle_size=3, num_hashes=64, bands=16, char_ngrams=False)
@@ -24,16 +23,20 @@ def _pairs_set(df):
     }
 
 
+def _step(state, pairs):
+    return neardup_step(
+        state, pairs, id_col="doc_id", text_col="text",
+        threshold=THRESHOLD, band_member_cap=None, **KW,
+    )
+
+
 def _run(spark, src, state, ckpt, pairs):
     stream = (
         spark.readStream.schema("doc_id long, text string")
         .option("maxFilesPerTrigger", 1)
         .parquet(src + "/*")
     )
-    q = streaming_near_dup(
-        stream, "doc_id", "text", state, ckpt, pairs,
-        threshold=THRESHOLD, band_member_cap=None, **KW,
-    )
+    q = ingest.start(stream, ckpt, state, _step(state, pairs))
     q.awaitTermination(600)
 
 
@@ -64,7 +67,7 @@ def test_streamed_corpus_equals_batch_dedup(spark, sf_dir, tmp_path):
     assert expected, "fixture produced no near-dup pairs"
     assert got == expected
 
-    progress = read_neardup_progress(state)
+    progress = ingest.read_progress(state)
     assert progress["pairs_emitted"] == len(expected)
     assert progress["docs_indexed"] == docs.count()
     assert progress["last_batch_id"] >= 2  # three triggers
@@ -72,7 +75,7 @@ def test_streamed_corpus_equals_batch_dedup(spark, sf_dir, tmp_path):
     # restart with no new data: nothing re-emitted, index unchanged
     _run(spark, src, state, ckpt, pairs_path)
     assert _pairs_set(spark.read.parquet(pairs_path)) == expected
-    assert read_neardup_progress(state)["docs_indexed"] == docs.count()
+    assert ingest.read_progress(state)["docs_indexed"] == docs.count()
 
     # a late batch containing an edited clone of an old doc links back
     late = (
@@ -93,3 +96,18 @@ def test_streamed_corpus_equals_batch_dedup(spark, sf_dir, tmp_path):
     )
     assert len(expected_full) > len(expected)
     assert _pairs_set(spark.read.parquet(pairs_path)) == expected_full
+
+
+def test_crash_replay_is_idempotent(
+    spark, sf_dir, tmp_path, replays_identically
+):
+    """A committed batch replayed and a half-applied one re-run both
+    land the uncrashed run's pairs, index scopes and progress."""
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    rows, progress = replays_identically(
+        tmp_path, _step(f"{tmp_path}/state", f"{tmp_path}/pairs"),
+        docs.where(F.col("doc_id") % 2 == 0),
+        docs.where(F.col("doc_id") % 2 == 1),
+    )
+    assert "pairs/ingest=b1" in rows
+    assert progress["docs_indexed"] == docs.count()

@@ -12,15 +12,14 @@ import tarfile
 import wave
 
 from kinesis_vcr_spark import statefs
+from kinesis_vcr_spark.streaming import ingest
 from kinesis_vcr_spark.streaming.tarstream import (
     VERDICT_KEPT,
     VERDICT_NON_MEDIA,
     VERDICT_UNDECODABLE,
-    apply_tar_batch,
     compact_tar_state,
-    read_tar_progress,
-    streaming_tar_ingest,
     tar_sample_verdicts,
+    tar_step,
 )
 
 
@@ -120,8 +119,8 @@ def test_prefix_parity_progress_and_replay(spark, tmp_path):
     state, out = str(tmp_path / "state"), str(tmp_path / "out")
     fa = _files(spark, tmp_path / "x1", [("a.tar", _shard_a())])
     fb = _files(spark, tmp_path / "x2", [("b.tar", _shard_b())])
-    apply_tar_batch(fa, 0, state, out)
-    apply_tar_batch(fb, 1, state, out)
+    ingest.apply(fa, 0, state, tar_step(out))
+    ingest.apply(fb, 1, state, tar_step(out))
     both = _files(
         spark, tmp_path / "x3",
         [("a.tar", _shard_a()), ("b.tar", _shard_b())],
@@ -131,22 +130,22 @@ def test_prefix_parity_progress_and_replay(spark, tmp_path):
         for r in tar_sample_verdicts(both).collect()
     }
     assert _landed(spark, out) == batch  # prefix parity with the batch op
-    prog = read_tar_progress(state, spark)
+    prog = ingest.read_progress(state, spark)
     assert prog == {
         "last_batch_id": 1, "samples_seen": 5,
         "samples_kept": 3, "samples_quarantined": 2,
     }
     # watermark: replaying an applied batch is a no-op
     before = _landed(spark, out)
-    apply_tar_batch(fa, 0, state, out)
+    ingest.apply(fa, 0, state, tar_step(out))
     assert _landed(spark, out) == before
     # crash between writes and the bump: rewind watermark, re-apply
     p = statefs.read_json_state(spark, f"{state}/progress.json", {})
     p["last_batch_id"] = 0
     statefs.write_json_state(spark, f"{state}/progress.json", p)
-    apply_tar_batch(fb, 1, state, out)
+    ingest.apply(fb, 1, state, tar_step(out))
     assert _landed(spark, out) == before
-    assert read_tar_progress(state, spark)["last_batch_id"] == 1
+    assert ingest.read_progress(state, spark)["last_batch_id"] == 1
     # compaction is row-preserving
     compact_tar_state(spark, out)
     assert _landed(spark, out) == before
@@ -165,12 +164,12 @@ def test_streaming_end_to_end(spark, tmp_path):
         )
         .load(str(src))
     )
-    q = streaming_tar_ingest(
-        stream, str(tmp_path / "state"), str(tmp_path / "ckpt"),
-        str(tmp_path / "out"),
+    q = ingest.start(
+        stream, str(tmp_path / "ckpt"), str(tmp_path / "state"),
+        tar_step(str(tmp_path / "out")),
     )
     q.awaitTermination(300)
     landed = _landed(spark, str(tmp_path / "out"))
     assert landed == EXPECT
-    prog = read_tar_progress(str(tmp_path / "state"), spark)
+    prog = ingest.read_progress(str(tmp_path / "state"), spark)
     assert prog["samples_seen"] == 5 and prog["samples_kept"] == 3

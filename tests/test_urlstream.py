@@ -10,12 +10,8 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from kinesis_vcr_spark.operators.urldedup import url_dedup_groups
-from kinesis_vcr_spark.streaming.urlstream import (
-    apply_url_batch,
-    compact_url_state,
-    read_url_progress,
-    streaming_url_dedup,
-)
+from kinesis_vcr_spark.streaming import ingest
+from kinesis_vcr_spark.streaming.urlstream import compact_url_state, url_step
 
 
 def _docs(spark, rows):
@@ -47,9 +43,10 @@ def test_prefix_parity_with_batch_operator(spark, tmp_path):
     non-keep occurrence is flagged dup."""
     state = str(tmp_path / "state")
     out = str(tmp_path / "verdicts")
+    step = url_step(state, out)
     batches = [CORPUS[:2], CORPUS[2:4], CORPUS[4:]]
     for bid, rows in enumerate(batches):
-        apply_url_batch(_docs(spark, rows), bid, state, out)
+        ingest.apply(_docs(spark, rows), bid, state, step)
     got = _verdicts(spark, out)
     assert len(got) == 6
     batch_keep = {
@@ -59,7 +56,7 @@ def test_prefix_parity_with_batch_operator(spark, tmp_path):
     for (doc_id, canon), (keep, is_dup) in got.items():
         assert keep == batch_keep[canon], (doc_id, canon)
         assert is_dup == (doc_id != keep)
-    prog = read_url_progress(state)
+    prog = ingest.read_progress(state)
     assert prog == {"last_batch_id": 2, "urls_seen": 6, "dups_emitted": 3}
 
 
@@ -69,16 +66,17 @@ def test_within_batch_dedup_and_crash_replay(spark, tmp_path):
     a half-applied one (scope overwrite) both land identical bytes."""
     state = str(tmp_path / "state")
     out = str(tmp_path / "verdicts")
-    apply_url_batch(_docs(spark, CORPUS[:2]), 0, state, out)
+    step = url_step(state, out)
+    ingest.apply(_docs(spark, CORPUS[:2]), 0, state, step)
     before = _verdicts(spark, out)
     assert before[(2, "a.com/x")] == (1, True)  # within-batch dup
     # watermark replay: no change
-    apply_url_batch(_docs(spark, CORPUS[:2]), 0, state, out)
+    ingest.apply(_docs(spark, CORPUS[:2]), 0, state, step)
     assert _verdicts(spark, out) == before
     # crash between writes: simulate by re-applying batch 1 after its
     # seen-scope landed but progress did not (force by resetting the
     # progress file to batch 0's state)
-    apply_url_batch(_docs(spark, CORPUS[2:4]), 1, state, out)
+    ingest.apply(_docs(spark, CORPUS[2:4]), 1, state, step)
     after_b1 = _verdicts(spark, out)
     from kinesis_vcr_spark import statefs
 
@@ -87,7 +85,7 @@ def test_within_batch_dedup_and_crash_replay(spark, tmp_path):
     prog = statefs.read_json_state(spark, f"{state}/progress.json", {})
     prog["last_batch_id"] = 0
     statefs.write_json_state(spark, f"{state}/progress.json", prog)
-    apply_url_batch(_docs(spark, CORPUS[2:4]), 1, state, out)  # replay
+    ingest.apply(_docs(spark, CORPUS[2:4]), 1, state, step)  # replay
     assert _verdicts(spark, out) == after_b1
 
 
@@ -97,11 +95,12 @@ def test_out_of_order_prefix_semantics(spark, tmp_path):
     contract."""
     state = str(tmp_path / "state")
     out = str(tmp_path / "verdicts")
-    apply_url_batch(
-        _docs(spark, [(10, "x https://c.com/z")]), 0, state, out
+    step = url_step(state, out)
+    ingest.apply(
+        _docs(spark, [(10, "x https://c.com/z")]), 0, state, step
     )
-    apply_url_batch(
-        _docs(spark, [(7, "x http://www.c.com/z/")]), 1, state, out
+    ingest.apply(
+        _docs(spark, [(7, "x http://www.c.com/z/")]), 1, state, step
     )
     got = _verdicts(spark, out)
     assert got[(10, "c.com/z")] == (10, False)  # batch-0 verdict stands
@@ -111,14 +110,15 @@ def test_out_of_order_prefix_semantics(spark, tmp_path):
 def test_compaction_preserves_probe_and_verdicts(spark, tmp_path):
     state = str(tmp_path / "state")
     out = str(tmp_path / "verdicts")
+    step = url_step(state, out)
     for bid, rows in enumerate([CORPUS[:3], CORPUS[3:]]):
-        apply_url_batch(_docs(spark, rows), bid, state, out)
+        ingest.apply(_docs(spark, rows), bid, state, step)
     before = _verdicts(spark, out)
     compact_url_state(spark, state, out)
     assert _verdicts(spark, out) == before
     # a post-compaction batch still probes the collapsed seen-set
-    apply_url_batch(
-        _docs(spark, [(9, "x https://a.com/x")]), 7, state, out
+    ingest.apply(
+        _docs(spark, [(9, "x https://a.com/x")]), 7, state, step
     )
     assert _verdicts(spark, out)[(9, "a.com/x")] == (1, True)
 
@@ -129,11 +129,10 @@ def test_streaming_end_to_end(spark, tmp_path):
     src = str(tmp_path / "src")
     _docs(spark, CORPUS).coalesce(1).write.parquet(src)
     stream = spark.readStream.schema("doc_id long, text string").parquet(src)
-    q = streaming_url_dedup(
-        stream,
-        str(tmp_path / "state"),
-        str(tmp_path / "ckpt"),
-        str(tmp_path / "verdicts"),
+    state = str(tmp_path / "state")
+    q = ingest.start(
+        stream, str(tmp_path / "ckpt"), state,
+        url_step(state, str(tmp_path / "verdicts")),
     )
     q.awaitTermination(300)
     got = _verdicts(spark, str(tmp_path / "verdicts"))

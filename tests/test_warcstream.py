@@ -6,6 +6,7 @@ and the foreachBatch end-to-end drive over a binaryFile stream."""
 from __future__ import annotations
 
 from kinesis_vcr_spark import statefs
+from kinesis_vcr_spark.streaming import ingest
 from kinesis_vcr_spark.streaming.htmlstream import (
     VERDICT_INVALID,
     VERDICT_KEPT,
@@ -14,11 +15,9 @@ from kinesis_vcr_spark.streaming.htmlstream import (
 )
 from kinesis_vcr_spark.streaming.warcstream import (
     VERDICT_NON_DOCUMENT,
-    apply_warc_batch,
     compact_warc_state,
-    read_warc_progress,
-    streaming_warc_ingest,
     warc_clean_verdicts,
+    warc_step,
 )
 from test_webarchive import http_block, warc_record
 
@@ -118,8 +117,8 @@ def test_prefix_parity_progress_and_replay(spark, tmp_path):
     state, out = str(tmp_path / "state"), str(tmp_path / "out")
     fa = _files(spark, tmp_path / "x1", [("a.warc", _archive_a())])
     fb = _files(spark, tmp_path / "x2", [("b.warc", _archive_b())])
-    apply_warc_batch(fa, 0, state, out)
-    apply_warc_batch(fb, 1, state, out)
+    ingest.apply(fa, 0, state, warc_step(out))
+    ingest.apply(fb, 1, state, warc_step(out))
     both = _files(
         spark, tmp_path / "x3",
         [("a.warc", _archive_a()), ("b.warc", _archive_b())],
@@ -129,22 +128,22 @@ def test_prefix_parity_progress_and_replay(spark, tmp_path):
         for r in warc_clean_verdicts(both).collect()
     }
     assert _landed(spark, out) == batch  # prefix parity with the batch op
-    prog = read_warc_progress(state, spark)
+    prog = ingest.read_progress(state, spark)
     assert prog == {
         "last_batch_id": 1, "records_seen": 8,
         "docs_kept": 2, "records_quarantined": 6,
     }
     # watermark: replaying an applied batch is a no-op
     before = _landed(spark, out)
-    apply_warc_batch(fa, 0, state, out)
+    ingest.apply(fa, 0, state, warc_step(out))
     assert _landed(spark, out) == before
     # crash between writes and the bump: rewind watermark, re-apply
     p = statefs.read_json_state(spark, f"{state}/progress.json", {})
     p["last_batch_id"] = 0
     statefs.write_json_state(spark, f"{state}/progress.json", p)
-    apply_warc_batch(fb, 1, state, out)
+    ingest.apply(fb, 1, state, warc_step(out))
     assert _landed(spark, out) == before
-    assert read_warc_progress(state, spark)["last_batch_id"] == 1
+    assert ingest.read_progress(state, spark)["last_batch_id"] == 1
     # compaction is row-preserving
     compact_warc_state(spark, out)
     assert _landed(spark, out) == before
@@ -163,13 +162,13 @@ def test_streaming_end_to_end(spark, tmp_path):
         )
         .load(str(src))
     )
-    q = streaming_warc_ingest(
-        stream, str(tmp_path / "state"), str(tmp_path / "ckpt"),
-        str(tmp_path / "out"),
+    q = ingest.start(
+        stream, str(tmp_path / "ckpt"), str(tmp_path / "state"),
+        warc_step(str(tmp_path / "out")),
     )
     q.awaitTermination(300)
     landed = _landed(spark, str(tmp_path / "out"))
     assert len(landed) == 8
     assert sum(1 for v in landed.values() if v == VERDICT_KEPT) == 2
-    prog = read_warc_progress(str(tmp_path / "state"), spark)
+    prog = ingest.read_progress(str(tmp_path / "state"), spark)
     assert prog["records_seen"] == 8 and prog["docs_kept"] == 2
